@@ -1,4 +1,4 @@
-"""Benchmark for smartpipeline_spark: four workloads behind one command.
+"""Benchmark for smartpipeline_spark: two workloads behind one command.
 
 Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
 --trace <0|1>`` from the repository root; see ``perfbench/METRICS.md``.

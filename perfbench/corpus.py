@@ -166,12 +166,12 @@ class RowHash:
         return self.rows, self.value
 
 
-def expected(corpus: Corpus, dedup: bool = False) -> tuple[int, int]:
-    """(rows, hash) of the chain's output; ``dedup`` keeps only the first
-    doc of each normalized text, as the streaming workload does."""
+def expected(corpus: Corpus) -> tuple[int, int]:
+    """(rows, hash) of the chain's output after the streaming workload's
+    dedup, which keeps only the first doc of each normalized text."""
     h = RowHash()
     for i in range(corpus.n):
-        if dedup and corpus.dup_of[i] >= 0:
+        if corpus.dup_of[i] >= 0:
             continue
         s = corpus.norm[i]
         errors = (

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its metrics.
 
-    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload query_mix --seed 1 --seconds 22 --trace 0
 
 Run from the repository root. ``--trace 0`` measures the end-to-end
 metrics; ``--trace 1`` measures them untraced, then again traced, and
@@ -24,7 +24,7 @@ import sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
-WORKLOAD_NAMES = ("stage_chain", "item_drain", "query_mix", "stream_ingest")
+WORKLOAD_NAMES = ("query_mix", "stream_ingest")
 
 
 def _spec() -> dict:
@@ -50,6 +50,15 @@ def _environment(work: str) -> None:
     logging.getLogger().addHandler(logging.NullHandler())
 
 
+def _cpu_jiffies() -> tuple[int, int]:
+    """(steal, total) CPU time of the whole machine so far, from
+    /proc/stat. Steal is time a virtual machine's CPUs waited for the
+    host; it is recorded, never used to filter runs."""
+    with open("/proc/stat") as f:
+        fields = [int(x) for x in f.readline().split()[1:]]
+    return (fields[7] if len(fields) > 7 else 0), sum(fields)
+
+
 def _table(title: str, rows: list[tuple[str, float, str]]) -> None:
     print(f"# {title}")
     for name, value, unit in rows:
@@ -66,6 +75,7 @@ def run_one(args, spec: dict) -> dict:
     try:
         _environment(work)
         load_before = os.getloadavg()
+        cpu_before = _cpu_jiffies()
         wl = WORKLOADS[args.workload](args.seed, args.seconds, bool(args.trace), work)
         setup_s = wl.setup()
         calls = wl.phase(traced=False)
@@ -73,15 +83,17 @@ def run_one(args, spec: dict) -> dict:
         wl.tracer.enabled = bool(args.trace)
         with wl.tracer.span("check"):
             wl.check(calls + traced)
-        snap = StatusApi(wl.spark).snapshot()
-        layers = wl.layers(traced, snap) if args.trace else {}
-        e2e = {"setup_s": setup_s, **wl.e2e(calls, snap)}
+        layers = wl.layers(traced, StatusApi(wl.spark).snapshot()) if args.trace else {}
+        e2e = {"setup_s": setup_s, **wl.e2e(calls)}
         attempted = wl.attempted(calls + traced)
         failed = wl.failures(calls + traced)
         load_after = os.getloadavg()
+        steal, total = (a - b for a, b in zip(_cpu_jiffies(), cpu_before))
+        steal_share = steal / total if total else 0.0
         units = {m["name"]: m["unit"] for m in spec["end_to_end"] + spec["per_layer"]}
         print(f"# workload {args.workload}  seed {args.seed}  calls {len(calls)}"
-              f"  cores {wl.cores}  loadavg {load_before[0]:.2f} -> {load_after[0]:.2f}")
+              f"  cores {wl.cores}  loadavg {load_before[0]:.2f} -> {load_after[0]:.2f}"
+              f"  cpu steal {steal_share:.3f}")
         for i, c in enumerate(calls + traced):
             print(f"  call {i:2d}{' traced' if i >= len(calls) else '       '}"
                   f" wall {c.wall:8.3f} s  first {c.first_ms:9.1f} ms  items {c.items}"
@@ -92,7 +104,7 @@ def run_one(args, spec: dict) -> dict:
         print(f"  {'failed_share':34s} {failed / attempted:14.4f} ratio"
               f"  ({failed} of {attempted} calls)")
         if args.trace:
-            t_e2e = wl.e2e(traced, snap)
+            t_e2e = wl.e2e(traced)
             for m in E2E[1:]:
                 layers[f"overhead.{m}"] = t_e2e[m] - e2e[m]
             _table("end-to-end (traced)", [(m, t_e2e[m], units[m]) for m in E2E[1:]])
@@ -112,6 +124,7 @@ def run_one(args, spec: dict) -> dict:
         print(json.dumps({
             "detail": args.workload,
             "loadavg_before": load_before, "loadavg_after": load_after,
+            "cpu_steal_share": steal_share,
             "setup_parts_s": wl.setup_parts, "calls": len(calls),
             "traced_calls": len(traced), "failed_share": failed / attempted,
             "corpus": wl.corpus.counts(),

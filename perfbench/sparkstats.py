@@ -18,7 +18,6 @@ import urllib.request
 #: counters that repeat exactly for one seed and one commit, so a later
 #: change may rest a claim on them (as a count, not as a speed-up)
 EXACT_COUNTERS = (
-    "pipeline.partitions",
     "wrapper.soft_errors",
     "wrapper.retries",
     "spark.jobs",
@@ -88,13 +87,6 @@ class Snapshot:
             if any(a - 0.005 <= t <= b for a, b in windows):
                 out.append(j)
         return out
-
-    def job_durations_ms(self, windows) -> list[float]:
-        return [
-            (epoch(j["completionTime"]) - epoch(j["submissionTime"])) * 1e3
-            for j in self.jobs_in(windows)
-            if j.get("completionTime")
-        ]
 
     def counters(self, windows) -> dict[str, float]:
         """Sums over every stage attempt of the jobs submitted inside

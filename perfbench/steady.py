@@ -7,9 +7,9 @@ spread of every (workload, end-to-end metric) pair against its bound.
 Each set runs every workload ``--runs`` times, each time with another
 seed, one process at a time. For each pair it prints both sets' medians,
 their spread (the distance between the first and third quartile, as a
-share of the median) and how far the second median moved from the first
-in the worse direction. A pair passes when both spreads (except
-``setup_s``'s) and the move stay within the bound in BENCHMARK.json.
+share of the median) and how far each later median moved from the first,
+in either direction, as a share of the first. A pair passes when every
+spread and every move stay within the bound in BENCHMARK.json.
 Raw results go to ``.bench_work/steady-<time>.json``. Exits 1 if any
 pair fails.
 """
@@ -70,9 +70,10 @@ def main() -> int:
             for w in args.workloads:
                 res = run(w, seed, args.seconds)
                 results[w][s].append(res)
-                load = res["detail"]["loadavg_before"][0], res["detail"]["loadavg_after"][0]
+                d = res["detail"]
                 print(f"set {s + 1} {w} seed {seed}: correct={res['correct']} "
-                      f"{res['elapsed_s']:.0f}s load {load[0]:.1f}->{load[1]:.1f} "
+                      f"{res['elapsed_s']:.0f}s load {d['loadavg_before'][0]:.1f}"
+                      f"->{d['loadavg_after'][0]:.1f} steal {d['cpu_steal_share']:.2f} "
                       + " ".join(f"{k}={v['value']:.4g}" for k, v in res["metrics"].items()),
                       flush=True)
             seed += 1
@@ -92,15 +93,13 @@ def main() -> int:
             sets = [[r["metrics"][name]["value"] for r in runs] for runs in results[w]]
             meds = [statistics.median(v) for v in sets]
             spreads = [spread(v) for v in sets]
-            sign = 1 if m["better"] == "lower" else -1
-            moved = max(sign * (meds[i] - meds[0]) / meds[0] for i in range(len(meds)))
-            bad = moved > bound or (
-                name != "setup_s" and any(sp > bound for sp in spreads)
-            )
+            moved = max(abs(md - meds[0]) / meds[0] for md in meds)
+            bad = moved > bound or any(sp > bound for sp in spreads)
             ok &= not bad
             print(f"{w:14s} {name:14s} {bound:6.2f} "
                   + " ".join(f"{md:12.4f} {sp:8.3f}" for md, sp in zip(meds, spreads))
-                  + f" {moved:7.3f}" + ("  FAIL" if bad else ""))
+                  + f" {moved:7.3f}"
+                  + ("  FAIL" if bad else "  over a third" if max(spreads) > bound / 3 else ""))
     print(f"\nraw results: {os.path.relpath(path, ROOT)}")
     return 0 if ok else 1
 

@@ -1,6 +1,6 @@
 """Seeded relational tables for the query_mix workload, laid out as the
 query inventory reads them (``<dir>/<table>.parquet``, one file and one
-row group each), at the sizes of scale factor 0.1.
+row group each), at the sizes of scale factor 0.02.
 
 ``documents`` is drawn from the shared benchmark corpus, so the dedup
 and rule keys see its planted duplicates.
@@ -14,9 +14,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from perfbench.corpus import Corpus
+from perfbench.corpus import FILE_ROWS, Corpus
 
-SF = 0.1
+SF = 0.02
+#: rows of the documents and embeddings tables
+DOCS, VECTORS = 2000, 1000
 _REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
 _SEGMENTS = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
 _PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -40,7 +42,7 @@ def write_tables(directory: str, seed: int, corpus: Corpus) -> dict[str, int]:
     os.makedirs(directory, exist_ok=True)
     rng = np.random.default_rng(seed + 7919)
     n_cust, n_supp = int(150_000 * SF), int(10_000 * SF)
-    n_orders, n_docs, n_vecs = int(1_500_000 * SF), 5000, 2000
+    n_orders, n_docs, n_vecs = int(1_500_000 * SF), DOCS, VECTORS
     ts = pa.timestamp("us")
 
     tables = {
@@ -76,7 +78,7 @@ def write_tables(directory: str, seed: int, corpus: Corpus) -> dict[str, int]:
         "o_orderdate": pa.array(_EPOCH_1995_US + order_day * _DAY_US, ts),
         "o_orderpriority": np.array(_PRIORITIES)[rng.integers(0, 5, n_orders)],
     })
-    lines = rng.integers(1, 8, n_orders)  # 1-7 lines per order, ~600k in all
+    lines = rng.integers(1, 8, n_orders)  # 1-7 lines per order, ~120k in all
     l_order = np.repeat(np.arange(n_orders), lines)
     n_lines = len(l_order)
     l_number = np.arange(n_lines) - np.repeat(np.cumsum(lines) - lines, lines) + 1
@@ -99,7 +101,7 @@ def write_tables(directory: str, seed: int, corpus: Corpus) -> dict[str, int]:
         ),
     })
     # straddle the first file boundary: planted copies only sit past it
-    doc_ids = range(n_docs // 2, n_docs // 2 + n_docs)
+    doc_ids = range(FILE_ROWS - n_docs // 2, FILE_ROWS - n_docs // 2 + n_docs)
     docs = [corpus.norm[i] for i in doc_ids]
     tables["documents"] = pa.table({
         "doc_id": pa.array(doc_ids, pa.int64()),

@@ -1,4 +1,4 @@
-"""The four workloads. Each runs in its own process with one
+"""The two workloads. Each runs in its own process with one
 ``get_spark()`` session and a single closed-loop client: one call in
 flight, the next sent when the previous returns.
 
@@ -28,14 +28,13 @@ CORPUS_DOCS = 20_000
 #: query_mix's fixed key list in pass order, with the tables each key
 #: reads. The pass opens with the key whose time varied least between
 #: runs of one seed, because its time is the pass's first_item_ms.
-#: The TPC-H join key is q64_tpch_q4, whose output is counts: the keys
-#: that sum revenue (q38_tpch_q5, q66_tpch_q7) disagree with their DuckDB
-#: oracles on some seeds, when a group's exact sum ends in half a cent
-#: (seeds 203 and 519), so they cannot be checked on generated data.
+#: q38_tpch_q5 disagrees with its DuckDB oracle on the seeds where a
+#: nation's exact revenue sum ends in half a cent (seed 203 is one); such
+#: a run counts every pass as failed, see perfbench/METRICS.md.
 QUERY_KEYS = {
     "ext_dedup_minhash": ("documents",),
     "q11_agg_pricing_summary": ("lineitem",),
-    "q64_tpch_q4": ("orders", "lineitem"),
+    "q38_tpch_q5": ("customer", "orders", "lineitem", "supplier", "nation", "region"),
     "q15_window_topk": ("orders",),
     "ext_c4_rules": ("documents",),
     "ext_knn_bruteforce": ("embeddings",),
@@ -63,7 +62,6 @@ class Call:
     wall: float = 0.0
     items: int = 0
     first_ms: float = 0.0
-    drain_s: float = 0.0  # item_drain: from the first Item to the last
     raised: bool = False
     failed: int = 0  # outputs of this call that failed their check
     build_ms: float = 0.0
@@ -121,12 +119,8 @@ class Workload:
     def prepare(self) -> None:
         """Inputs beyond the shared corpus."""
 
-    #: untimed calls before the timed phase; see ItemDrain
-    warmup_calls = 1
-
     def warmup(self) -> None:
-        for _ in range(self.warmup_calls):
-            self.call(Call())
+        self.call(Call())
 
     # -- the timed phase -------------------------------------------------
     def phase(self, traced: bool) -> list[Call]:
@@ -145,15 +139,11 @@ class Workload:
             rec.wall = time.perf_counter() - p0
             rec.end = time.time()
             calls.append(rec)
-            self.after_call(rec)
         self.tracer.enabled = False
         return calls
 
     def call(self, rec: Call) -> None:
         raise NotImplementedError
-
-    def after_call(self, rec: Call) -> None:
-        """Untimed work right after a call, such as hashing its output."""
 
     def check(self, calls: list[Call]) -> None:
         """Set ``failed`` on each call whose output is wrong."""
@@ -165,19 +155,18 @@ class Workload:
         return sum(1 if c.raised else c.failed for c in calls)
 
     # -- metrics ---------------------------------------------------------
-    def e2e(self, calls: list[Call], snap: sparkstats.Snapshot) -> dict[str, float]:
+    def e2e(self, calls: list[Call]) -> dict[str, float]:
         ok = [c for c in calls if not c.raised]
         busy = sum(c.wall for c in ok)
         return {
             "items_per_s": sum(c.items for c in ok) / busy if busy else 0.0,
             "wall_s": median([c.wall for c in ok]),
             "first_item_ms": median([c.first_ms for c in ok]),
-            "batch_p50_ms": self.batch_p50_ms(ok, snap),
+            "batch_p50_ms": self.batch_p50_ms(ok),
         }
 
-    def batch_p50_ms(self, calls: list[Call], snap) -> float:
-        """Median Spark job duration over the timed calls."""
-        return median(snap.job_durations_ms([(c.start, c.end) for c in calls]))
+    def batch_p50_ms(self, calls: list[Call]) -> float:
+        raise NotImplementedError
 
     def layers(self, calls: list[Call], snap: sparkstats.Snapshot) -> dict[str, float]:
         """Per-layer metrics of the traced phase."""
@@ -201,9 +190,7 @@ class Workload:
 
     def scan(self) -> float:
         """Seconds for a scan-only noop job over this workload's input."""
-        t = time.perf_counter()
-        self.spark.read.parquet(self.corpus_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t
+        raise NotImplementedError
 
     def wrapper_layers(self) -> dict[str, float]:
         """The stage wrapper timed on the driver over a fixed row list:
@@ -245,13 +232,6 @@ class Workload:
             "wrapper.chain_us_per_item": median(chain) / _KERNEL_ROWS * 1e6,
         }
 
-    def batch_chain_layers(self) -> dict[str, float]:
-        p = self.pipeline(self.spark.read.parquet(self.corpus_dir))
-        return {
-            **self.wrapper_layers(),
-            "pipeline.partitions": float(p.dataframe().rdd.getNumPartitions()),
-        }
-
     # -- shared helpers ---------------------------------------------------
     def pipeline(self, source):
         from perfbench.chain import append_chain
@@ -265,15 +245,16 @@ class Workload:
             p.build()
             rec.build_ms = (time.perf_counter() - t) * 1e3
 
-    def check_sink(self, rec: Call, dedup: bool) -> None:
-        """Compare a parquet sink with the expectation from the seed."""
+    def check_sink(self, rec: Call) -> None:
+        """Compare a deduplicated parquet sink with the expectation from
+        the seed."""
         try:
             rows, value, soft, retried = corpus_mod.parquet_summary(rec.out)
         except (OSError, KeyError, TypeError, ValueError):
             traceback.print_exc(file=sys.stderr)
             rec.failed = 1
             return
-        exp_rows, exp_value = self.expected[dedup]
+        exp_rows, exp_value = self.expected
         counts = self.corpus.counts()
         rec.soft, rec.retried = soft, retried
         if (rows, value, soft, retried) != (exp_rows, exp_value, counts["soft"], counts["flaky"]):
@@ -287,97 +268,10 @@ class Workload:
         shutil.rmtree(rec.out, ignore_errors=True)
 
     @property
-    def expected(self) -> dict[bool, tuple[int, int]]:
+    def expected(self) -> tuple[int, int]:
         if not hasattr(self, "_expected"):
-            self._expected = {
-                d: corpus_mod.expected(self.corpus, dedup=d) for d in (False, True)
-            }
+            self._expected = corpus_mod.expected(self.corpus)
         return self._expected
-
-
-class StageChain(Workload):
-    """The chain over the multi-file corpus, sunk to parquet by write()."""
-
-    name = "stage_chain"
-
-    def call(self, rec: Call) -> None:
-        self.n_calls += 1
-        rec.out = os.path.join(self.work, f"out-{self.n_calls}")
-        p = self.pipeline(self.spark.read.parquet(self.corpus_dir))
-        self.build(p, rec)
-        with self.tracer.span("pipeline.write"):
-            p.write(rec.out)
-        rec.items = self.corpus.n
-        # write() publishes its output at job commit, so the first
-        # result becomes visible when the call returns
-        rec.first_ms = (time.time() - rec.start) * 1e3
-
-    def check(self, calls):
-        for c in calls:
-            if not c.raised:
-                self.check_sink(c, dedup=False)
-
-    def layers(self, calls, snap):
-        return {**super().layers(calls, snap), **self.batch_chain_layers()}
-
-
-class ItemDrain(Workload):
-    """The same chain consumed item by item through ``Pipeline.run()``."""
-
-    name = "item_drain"
-    # after a single warm-up call the first timed drain still ran ~15%
-    # slower than the ones after it
-    warmup_calls = 2
-
-    def call(self, rec: Call) -> None:
-        p = self.pipeline(self.spark.read.parquet(self.corpus_dir))
-        self.build(p, rec)
-        items = []
-        with self.tracer.span("pipeline.run"):
-            t_run = time.perf_counter()
-            gen = p.run()
-            items.append(next(gen))
-            rec.first_ms = (time.perf_counter() - t_run) * 1e3
-            t_first = time.perf_counter()
-            for item in gen:
-                items.append(item)
-            rec.drain_s = time.perf_counter() - t_first
-        rec.items = len(items)
-        self._items = items
-
-    def after_call(self, rec: Call) -> None:
-        """Hash the yielded Items, ``_errors`` included, then drop them."""
-        items, self._items = getattr(self, "_items", []), []
-        if rec.raised:
-            return
-        h = corpus_mod.RowHash()
-        try:
-            for it in items:
-                d = it.data
-                h.add(corpus_mod.row_key(
-                    d["doc_id"], d["norm"], d["n_tokens"], d["digest"], d["attempts"],
-                    it.error_entries,
-                ))
-                rec.soft += it.has_soft_errors()
-                rec.retried += d["attempts"] == 2
-        except (KeyError, TypeError):
-            traceback.print_exc(file=sys.stderr)
-            rec.failed = 1
-            return
-        counts = self.corpus.counts()
-        got = (*h.summary(), rec.soft, rec.retried)
-        if got != (*self.expected[False], counts["soft"], counts["flaky"]):
-            print(f"check failed for run(): {got[0]} items, soft {rec.soft}, "
-                  f"retried {rec.retried}", file=sys.stderr)
-            rec.failed = 1
-
-    def layers(self, calls, snap):
-        out = {**super().layers(calls, snap), **self.batch_chain_layers()}
-        ok = [c for c in calls if not c.raised and c.items > 1]
-        out["pipeline.drain_us_per_item"] = median(
-            [c.drain_s / (c.items - 1) * 1e6 for c in ok]
-        )
-        return out
 
 
 class QueryMix(Workload):
@@ -411,7 +305,7 @@ class QueryMix(Workload):
                 rec.first_ms = rec.key_s[key] * 1e3
         rec.items = self.pass_rows
 
-    def batch_p50_ms(self, calls, snap):
+    def batch_p50_ms(self, calls):
         """Median time of one key, over every key of every pass."""
         return median([t * 1e3 for c in calls for t in c.key_s.values()])
 
@@ -426,8 +320,8 @@ class QueryMix(Workload):
         rule ``scripts/check_oracles.py`` uses, on concurrent threads,
         which overlaps the keys' one-time JIT and code-generation cost.
         Then one untimed pass as the timed passes run it: after the
-        concurrent check alone, the first timed pass still ran up to 25%
-        slower than the next."""
+        concurrent checks alone, the first timed pass still ran 20-30%
+        slower than the fifth."""
         from concurrent.futures import ThreadPoolExecutor
 
         from smartpipeline_spark.testing import compare
@@ -510,9 +404,9 @@ class StreamIngest(Workload):
     def check(self, calls):
         for c in calls:
             if not c.raised:
-                self.check_sink(c, dedup=True)
+                self.check_sink(c)
 
-    def batch_p50_ms(self, calls, snap):
+    def batch_p50_ms(self, calls):
         """Median trigger time over the micro-batches that had input."""
         return median(
             [b["durationMs"]["triggerExecution"] for c in calls for b in c.batches]
@@ -551,4 +445,4 @@ class StreamIngest(Workload):
         return out
 
 
-WORKLOADS = {w.name: w for w in (StageChain, ItemDrain, QueryMix, StreamIngest)}
+WORKLOADS = {w.name: w for w in (QueryMix, StreamIngest)}
