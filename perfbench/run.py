@@ -19,6 +19,7 @@ import json
 import logging
 import os
 import shutil
+import signal
 import subprocess
 import sys
 
@@ -67,11 +68,13 @@ def _table(title: str, rows: list[tuple[str, float, str]]) -> None:
 
 def run_one(args, spec: dict) -> dict:
     sys.path.insert(0, ROOT)
+    from perfbench.procs import stop_spark
     from perfbench.sparkstats import EXACT_COUNTERS, StatusApi
     from perfbench.workloads import E2E, WORKLOADS
 
     work = os.path.join(ROOT, ".bench_work", f"{args.workload}-{args.seed}-{os.getpid()}")
     os.makedirs(work)
+    wl = None
     try:
         _environment(work)
         load_before = os.getloadavg()
@@ -129,7 +132,6 @@ def run_one(args, spec: dict) -> dict:
             "traced_calls": len(traced), "failed_share": failed / attempted,
             "corpus": wl.corpus.counts(),
         }))
-        wl.spark.stop()
         return {
             "correct": failed == 0,
             "attempted": attempted,
@@ -137,6 +139,7 @@ def run_one(args, spec: dict) -> dict:
             "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},
         }
     finally:
+        stop_spark(getattr(wl, "spark", None))
         shutil.rmtree(work, ignore_errors=True)
 
 
@@ -172,6 +175,8 @@ def main(argv=None) -> int:
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     args = ap.parse_args(argv)
+    # a terminated run still stops the processes it started
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     if not os.path.isfile(os.path.join(ROOT, "smartpipeline_spark", "__init__.py")):
         print("perfbench: run from a checkout that holds smartpipeline_spark/",
               file=sys.stderr)

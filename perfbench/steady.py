@@ -11,7 +11,8 @@ share of the median) and how far each later median moved from the first,
 in either direction, as a share of the first. A pair passes when every
 spread and every move stay within the bound in BENCHMARK.json.
 Raw results go to ``.bench_work/steady-<time>.json``. Exits 1 if any
-pair fails.
+pair fails, and stops at once if a run fails or leaves a process
+running.
 """
 
 from __future__ import annotations
@@ -19,6 +20,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
@@ -26,6 +28,9 @@ import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
+sys.path.insert(0, ROOT)
+
+from perfbench import procs  # noqa: E402
 
 
 def spread(values: list[float]) -> float:
@@ -35,15 +40,28 @@ def spread(values: list[float]) -> float:
 
 def run(workload: str, seed: int, seconds: int) -> dict:
     t = time.time()
-    out = subprocess.run(
+    child = subprocess.Popen(
         [sys.executable, os.path.join(HERE, "run.py"), "--workload", workload,
          "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
-        cwd=ROOT, capture_output=True, text=True, timeout=600,
+        cwd=ROOT, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        start_new_session=True,
     )
-    lines = out.stdout.strip().splitlines()
-    if out.returncode != 0 or not lines:
-        sys.stderr.write(out.stderr[-3000:])
-        raise SystemExit(f"{workload} seed {seed} exited with {out.returncode}")
+    try:
+        stdout, stderr = child.communicate(timeout=600)
+    except subprocess.TimeoutExpired:
+        os.killpg(child.pid, signal.SIGKILL)
+        child.wait()
+        raise SystemExit(f"{workload} seed {seed} ran over 600 s")
+    # the run and everything it started share the new process group
+    left = procs.group(child.pid)
+    if left:
+        for pid in left:
+            os.kill(pid, signal.SIGKILL)
+        raise SystemExit(f"{workload} seed {seed} left processes running: {left}")
+    lines = stdout.strip().splitlines()
+    if child.returncode != 0 or not lines:
+        sys.stderr.write(stderr[-3000:])
+        raise SystemExit(f"{workload} seed {seed} exited with {child.returncode}")
     res = json.loads(lines[-1])
     res["detail"] = json.loads(lines[-2])
     res["elapsed_s"] = time.time() - t
