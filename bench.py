@@ -1,25 +1,32 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline query inventory at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+"""Headline timer: runs BENCH_QUERIES over the fixture tables at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 set) on local[$SPARK_GRAFT_CPUS],
+each to completion through the ``noop`` sink, and prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec",
- "queries": {name: sec}, "sf": ...}
+ "queries": {name: median sec}, "reps": 5, "sf": ...}
 
-Each query executes to completion through the `noop` sink (full
-computation, no collect/write overhead measured).
+The benchmark of record is ``perfbench/`` (``python3 perfbench/run.py``,
+``perfbench/steady.py``); this script keeps only the one-line headline.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import signal
 import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# headline set: one per operator category + the training-data operators
+# One key per operator category plus the training-data operators. Left
+# out on purpose: ext_quality_classifier, ext_lang_id_trained and
+# ext_pagerank (their sequential jobs are fixed job overhead at fixture
+# scale and would mask the rest; their pytest attestations time them),
+# ext_leakage_safe_split (its cost is the jaccard-pairs machinery the
+# dedup keys already time) and ext_compression_ratio (it compresses a
+# synthetic column, so it would time the fixture, not a corpus).
 BENCH_QUERIES = [
     "q01_scan_count",
     "q03_filter_project",
@@ -49,8 +56,6 @@ BENCH_QUERIES = [
     "ext_knn_lsh",
     "ext_quality_score",
     "ext_tfidf",
-    # round-3 additions: the flagship/new operators (bench_compare
-    # treats them as added keys; the original 28 stay comparable)
     "q38_tpch_q5",
     "q46_recursive_cte",
     "q60_scd2",
@@ -58,376 +63,89 @@ BENCH_QUERIES = [
     "ext_knn_pq",
     "ext_pack_emit",
     "ext_stream_tumbling",
-    # round-4 additions: incremental ingestion dedup, Bloom
-    # decontamination, ExactSubstr spans, DSIR selection, the
-    # byte-deterministic tar-shard sink (a real write per rep)
     "ext_dedup_incremental",
     "ext_contamination_bloom",
     "ext_substring_dedup",
     "ext_dsir_select",
     "ext_export_shards",
-    # TPC-H composite flagships: the 8-table market-share join, the
-    # large-volume HAVING semi-join, and the partsupp profit rollup
-    # (operators/tpch.py)
     "q67_tpch_q8",
     "q73_tpch_q18",
     "q80_tpch_q9",
-    # round-5 additions: the foreachBatch upsert sink (a real
-    # streaming-query drain + partitioned write per rep), the salted
-    # join equality key, the CMS heavy-hitter detector (post
-    # cache-leak fix), and TPC-H Q21 (double correlation)
     "ext_stream_upsert",
     "ext_salted_join",
     "ext_heavy_hitters",
     "q78_tpch_q21",
-    # round-5 additions (late): gear-hash CDC chunk profile, the Zipf
-    # frequency-spectrum profile, and salted exact-k group sampling.
-    # ext_quality_classifier stays OUT: 30 sequential GD jobs are
-    # ~40s of fixed job overhead at fixture scale and would mask the
-    # rest of the headline set (it is timed in its pytest attestation)
     "ext_cdc_chunk_stats",
     "ext_zipf_spectrum",
     "ext_sample_per_group",
-    # round-6 additions: HTML text extraction (the new raw-markup
-    # first stage; strip mode — one Arrow map pass), the
-    # histogram-decomposed ROC-AUC evaluation op, the UniMax
-    # budget-waterfill mixer, and the forward-with-tolerance as-of
-    # join. ext_lang_id_trained stays OUT for the same reason as
-    # ext_quality_classifier: its sequential GD jobs are fixed job
-    # overhead at fixture scale (it is timed in its pytest
-    # attestations).
     "ext_html_extract",
     "ext_score_auc",
     "ext_unimax_budget",
     "q36b_asof_forward_tolerance",
-    # round-6 additions (late): the C4/FineWeb rule battery (pure
-    # codegen row-local map — the cheapest operator class, benched to
-    # prove it), the MAD robust-outlier report (two broadcast-band
-    # percentile passes), and the trigram Stupid-Backoff LM (count
-    # model build + five-way scoring join in one persisted scan).
     "ext_c4_rules",
     "ext_mad_outliers",
     "ext_lm_stupid_backoff",
-    # round-7 additions: CCNet corpus-level line dedup (hash-keyed
-    # keep-first + per-doc reassembly), the Shannon entropy filter
-    # (row-local HOF char leg + word-count leg), near-dup benchmark
-    # decontamination (broadcast pair containment), and the A-ES
-    # weighted sampler (TakeOrdered top-k, no global sort)
     "ext_line_dedup",
     "ext_entropy_filter",
     "ext_fuzzy_decontam",
     "ext_weighted_sample",
-    # round-7 additions (late): Flesch readability (row-local regexp
-    # projection) and CCNet perplexity terciles (persisted bigram-LM
-    # scan + broadcast percentile labeler). ext_leakage_safe_split
-    # stays OUT: its cost IS the jaccard-pairs + label-propagation
-    # machinery already benched through the dedup keys.
     "ext_readability",
     "ext_ccnet_buckets",
-    # round-9 additions: the graph-ANN member (per-shard HNSW build +
-    # broadcast query batch + exact re-score — build cost dominates,
-    # benched to keep it honest), int8 embedding quantization (pure
-    # codegen row-local audit, the cheapest class), the 256-bucket
-    # epoch-shuffle rank decomposition (one bucket shuffle + bounded
-    # cumsum), and pinned-vocabulary BPE encoding (one vectorized
-    # Arrow pass). ext_compression_ratio stays OUT: its registered
-    # form compresses a synthetic 64-class column, so its timing
-    # would measure the fixture synth, not a corpus-shaped cost.
     "ext_knn_hnsw",
     "ext_emb_quantize",
     "ext_epoch_shuffle",
     "ext_bpe_encode",
-    # round-9 additions (late): MMR diversified top-k — the brute
-    # relevance pool plus one bounded applyInPandas greedy per query;
-    # benched because the pool build shares ext_knn_bruteforce's
-    # broadcast shape and the re-rank should price as noise on top.
-    # ext_pagerank stays OUT for the ext_quality_classifier reason:
-    # 4 sequential power iterations are ~15 jobs of fixed overhead at
-    # fixture scale (6.4s, job-count-bound, not data-bound) and would
-    # mask the headline set; its scale posture is one edge join + one
-    # partial-agg groupBy per iteration, measured via the sweep.
     "ext_mmr_diversify",
-    # round-11 addition: BM25 through the persisted postings index —
-    # build amortizes across reps via the per-corpus cache, so the
-    # median prices the footer-pruned QUERY path (the number a user
-    # compares against ext_bm25's inline corpus pass).
     "ext_bm25_indexed",
-    # round-12 addition: dense global row numbering via the bucketed
-    # two-level decomposition — benched because the naive formulation
-    # (ROW_NUMBER over an unpartitioned window) is the classic
-    # single-task scale-killer this op exists to replace; the timing
-    # prices the bucket histogram + broadcast offsets + per-bucket
-    # numbering chain.
     "ext_global_index",
-    # round-12 addition: hybrid RRF retrieval served entirely from the
-    # persisted BM25 + IVF layouts — prices the indexed query-time
-    # read path (footer-pruned postings probe + partition-pruned cell
-    # scan + 50-row fusion), the number a RAG deployment actually pays
-    # per query batch.
     "ext_hybrid_indexed",
 ]
 
-
-def stage_multipart(spark, sf_dir: str, parts: int = 16) -> str:
-    """Re-lay the single-file, single-row-group fixture tables as
-    ``parts``-file parquet directories (one-time, cached under /tmp).
-
-    WHY: a row group is Spark's split atom, so the shipped fixtures
-    start every scan at parallelism 1 — q38's five broadcast probes
-    stream through one task and Python chains pay a widening shuffle
-    that a production layout (always many part files) never pays. The
-    staged copy holds the SAME rows (byte-identical results; events.ts
-    normalizes on write exactly as it would at query time) so bench
-    timings measure operator cost on a realistic layout instead of the
-    fixture's file shape. Tiny dimension tables stay single-part
-    (multi-part region/nation would just be empty-file litter).
-
-    MEASURED RESULT (round 4, idle, median-of-3): the multipart layout
-    is +35% WALL-CLOCK at sf0.1 (25.5s -> 34.3s on the shared key
-    set) — at 10 MB/table, per-task scheduling + footer overhead of
-    16-way scans exceeds any parallelism gain, and the Python-chain
-    "widening shuffle" cost it was meant to remove turns out to be
-    noise (q24b 1.98 -> 1.96s). The single-file floor documented in
-    SCALING.md is therefore NOT the binding constraint at fixture
-    scale; task overhead is. Multipart staging stays available as the
-    opt-in (SPARK_GRAFT_BENCH_MULTIPART=1) because at production
-    scale (GB+ per part) the trade inverts; the DEFAULT measurement
-    uses the shipped layout so round-over-round diffs stay
-    comparable."""
-    from smartpipeline_spark import sources
-
-    tag = sf_dir.strip("/").replace("/", "_")
-    stage = os.path.join("/tmp", "spark_graft_bench_multipart", tag)
-    os.makedirs(stage, exist_ok=True)
-    for tbl in sources.TABLE_NAMES:
-        src = os.path.join(sf_dir, f"{tbl}.parquet")
-        dst = os.path.join(stage, f"{tbl}.parquet")
-        if os.path.exists(os.path.join(dst, "_SUCCESS")):
-            continue
-        n = parts if os.path.getsize(src) > 256 * 1024 else 1
-        sources.table(spark, tbl, sf_dir).repartition(n).write.mode(
-            "overwrite"
-        ).parquet(dst)
-    return stage
-
-
-def _stage_metrics(spark) -> dict | None:
-    """Per-stage cumulative metrics from the status API, keyed by
-    (stageId, attempt): the co-primary evidence channel (r10 verdict
-    #2) — executorCpuTime and spill bytes survive host contention
-    where wall-clock does not, so a uniform wall shift with flat CPU
-    and unchanged plans is dismissible from the artifact alone.
-    Per-stage keying (not a scalar sum) makes the diff immune to the
-    UI's retained-stage eviction. Returns None when the UI is off."""
-    try:
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages", timeout=10
-        ) as resp:
-            stages = json.load(resp)
-        return {
-            (s["stageId"], s.get("attemptId", 0)): (
-                s.get("executorCpuTime", 0),
-                s.get("memoryBytesSpilled", 0) + s.get("diskBytesSpilled", 0),
-            )
-            for s in stages
-        }
-    except Exception:
-        return None
-
-
-def _metrics_delta(before: dict | None, after: dict | None) -> tuple | None:
-    """(cpu_ns, spill_bytes) accrued between two snapshots."""
-    if before is None or after is None:
-        return None
-    cpu = sum(
-        v[0] - before.get(k, (0, 0))[0] for k, v in after.items()
-    )
-    spill = sum(
-        v[1] - before.get(k, (0, 0))[1] for k, v in after.items()
-    )
-    return cpu, spill
-
-
-def _isolated_main(mode: str) -> None:
-    """Isolation mode (r10 verdict #2): run the key list in CHILD
-    processes — one fresh JVM per key (``key``) or per small group
-    (``group``, 8 keys) — and merge their artifacts. SMOKE_r10
-    measured 2.6x same-JVM contamination (minhash after the 80
-    GB-spill jaccard probe), so cross-key ordering inside one JVM is
-    a measurement hazard; per-process floors are the clean protocol
-    for idle-host comparisons. Not the default: the driver's
-    per-round run keeps the single-JVM protocol for longitudinal
-    comparability (and its CPU co-primary makes it adjudicable);
-    select with SPARK_GRAFT_BENCH_ISOLATE=key|group."""
-    import subprocess
-
-    size = 1 if mode == "key" else 8
-    chunks = [
-        BENCH_QUERIES[i : i + size] for i in range(0, len(BENCH_QUERIES), size)
-    ]
-    merged: dict[str, dict] = {
-        "plan_fp": {}, "queries": {}, "queries_min": {},
-        "queries_cpu": {}, "queries_spill_gb": {},
-    }
-    reps = None
-    for chunk in chunks:
-        env = dict(os.environ)
-        env["SPARK_GRAFT_BENCH_KEYS"] = ",".join(chunk)
-        env.pop("SPARK_GRAFT_BENCH_ISOLATE", None)
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__)],
-            env=env, capture_output=True, text=True, check=True,
-        ).stdout
-        for line in out.splitlines():
-            try:
-                obj = json.loads(line)
-            except ValueError:
-                continue
-            if obj.get("artifact") == "plan_fp":
-                merged["plan_fp"].update(obj.get("plan_fp", {}))
-            elif obj.get("artifact") == "detail":
-                reps = obj.get("reps", reps)
-                for f in ("queries", "queries_min", "queries_cpu",
-                          "queries_spill_gb"):
-                    merged[f].update(obj.get(f, {}))
-    _emit(merged, reps or 0, isolation=mode)
-
-
-def _emit(merged: dict, reps: int, isolation: str | None = None) -> None:
-    timings = merged["queries"]
-    total = round(sum(timings.values()), 3)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    print(json.dumps({"artifact": "plan_fp", "plan_fp": merged["plan_fp"]}))
-    detail = {
-        "artifact": "detail",
-        "queries": timings,
-        "queries_min": merged["queries_min"],
-        "queries_cpu": merged["queries_cpu"],
-        "queries_spill_gb": merged["queries_spill_gb"],
-        "reps": reps,
-        "loadavg": [round(x, 2) for x in os.getloadavg()],
-    }
-    if isolation:
-        detail["isolation"] = isolation
-    print(json.dumps(detail))
-    headline = {
-        "metric": "headline_inventory_total_runtime",
-        "value": total,
-        "unit": "sec",
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-        "reps": reps,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
-    if isolation:
-        headline["isolation"] = isolation
-    print(json.dumps(headline))
+REPS = 5
 
 
 def main() -> None:
-    isolate = os.environ.get("SPARK_GRAFT_BENCH_ISOLATE", "")
-    if isolate in ("key", "group"):
-        _isolated_main(isolate)
-        return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").split("sf")[-1]
+    import __spark_entry__ as entrymod
+    from perfbench.procs import stop_spark
+    from smartpipeline_spark import sources
     from smartpipeline_spark.session import get_spark
 
-    import __spark_entry__ as entrymod
-
-    spark = get_spark("bench")
-    if os.environ.get("SPARK_GRAFT_BENCH_MULTIPART", "0") == "1":
-        sf_dir = stage_multipart(spark, sf_dir)
     registry = entrymod.queries()
-    # warm up the JVM / codegen / parquet footer cache / Python workers
-    # so the first timed query touching each resource doesn't absorb
-    # one-time session costs (steady-state operator cost is the metric;
-    # spin-up amortizes to zero over any real workload)
-    from smartpipeline_spark import sources
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for tbl in ("lineitem", "orders", "customer", "part", "events",
-                "documents", "embeddings"):
-        sources.table(spark, tbl, sf_dir).count()
-    spark.range(64).mapInPandas(lambda it: it, schema="id long").count()
-    # min-of-N + median-of-N per query (round-8 protocol): single-shot
-    # timings on a shared box moved ±40% run-to-run (round-2 finding)
-    # and the r07 adjudication burned ~30 report lines separating host
-    # contention from real regressions. The artifact now carries, per
-    # key: the MEDIAN (the longitudinal headline, comparable with
-    # every earlier round), the MIN (the contention-robust floor), and
-    # the PLAN FINGERPRINT (same line format as PLANS_r{N}.txt, from
-    # the shared scripts/planfp.py primitive) — so one JSON line holds
-    # both the timing and the evidence bench_compare needs to
-    # adjudicate a swing as plan-change vs host-variance.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5")))
-    from scripts.planfp import fingerprint
-
-    key_filter = os.environ.get("SPARK_GRAFT_BENCH_KEYS")
-    keys = (
-        [k for k in key_filter.split(",") if k]
-        if key_filter
-        else BENCH_QUERIES
-    )
-    timings: dict[str, float] = {}
-    mins: dict[str, float] = {}
-    cpus: dict[str, float] = {}
-    spills: dict[str, float] = {}
-    plan_fp: dict[str, str] = {}
-    for name in keys:
-        fn = registry[name]
-        samples = []
-        cpu_samples: list[float] = []
-        spill_samples: list[float] = []
-        df = None
-        for _ in range(reps):
-            before = _stage_metrics(spark)
-            t0 = time.monotonic()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            samples.append(time.monotonic() - t0)
-            delta = _metrics_delta(before, _stage_metrics(spark))
-            if delta is not None:
-                cpu_samples.append(delta[0] / 1e9)
-                spill_samples.append(delta[1] / 2**30)
-        timings[name] = round(statistics.median(samples), 3)
-        mins[name] = round(min(samples), 3)
-        if cpu_samples:
-            # median CPU / spill per key: the load-independent
-            # co-primary (r10 verdict #2) — bench_compare reads these
-            # to self-adjudicate wall swings without checkout-bisect
-            cpus[name] = round(statistics.median(cpu_samples), 2)
-            spills[name] = round(statistics.median(spill_samples), 3)
-        try:
-            plan_fp[name] = " ".join(fingerprint(df).split())
-        except Exception:  # a fingerprint must never sink the bench
-            pass
-    # Three stdout lines, headline LAST and small (round-8 lesson):
-    # the external driver keeps only the last 2000 chars of stdout
-    # and parses the final JSON line, so BENCH_r08.json lost its
-    # timings when the one-line artifact grew past the capture limit
-    # (queries_min + plan_fp pushed it to ~9KB and the captured tail
-    # started mid-JSON). The fingerprint and full-precision evidence
-    # (now incl. per-key CPU + spill medians) ride earlier,
-    # sacrificial lines — truncation can orphan them, never the
-    # headline timings. bench_compare._parse merges whichever lines
-    # survive.
-    _emit(
-        {
-            "plan_fp": plan_fp,
-            "queries": timings,
-            "queries_min": mins,
-            "queries_cpu": cpus,
-            "queries_spill_gb": spills,
-        },
-        reps,
-    )
-    spark.stop()
+    spark = None
+    try:
+        spark = get_spark("bench")
+        # warm the JVM, codegen, parquet footers and Python workers so
+        # the first timed query does not absorb one-time session costs
+        spark.range(1_000_000).selectExpr("sum(id)").collect()
+        for tbl in ("lineitem", "orders", "customer", "part", "events",
+                    "documents", "embeddings"):
+            sources.table(spark, tbl, sf_dir).count()
+        spark.range(64).mapInPandas(lambda it: it, schema="id long").count()
+        timings: dict[str, float] = {}
+        for name in BENCH_QUERIES:
+            samples = []
+            for _ in range(REPS):
+                t0 = time.monotonic()
+                registry[name](spark, sf_dir).write.format("noop").mode(
+                    "overwrite"
+                ).save()
+                samples.append(time.monotonic() - t0)
+            timings[name] = round(statistics.median(samples), 3)
+    finally:
+        stop_spark(spark)
+    print(json.dumps({
+        "metric": "headline_inventory_total_runtime",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": {k: round(v, 2) for k, v in timings.items()},
+        "reps": REPS,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+    }))
 
 
 if __name__ == "__main__":
+    # a SIGTERM unwinds through the finally above, so the JVM is stopped
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
     main()

@@ -14,7 +14,8 @@ pre-build BOTH modalities' saved layouts once —
 footer-pruned term probes) and ``functions.similarity.build_ivf_index``
 (cell-partitioned vectors) — and serve query batches from them; the
 end-to-end indexed composition is measured as the ``rag_retrieval_qps``
-rung in ``scripts/scale_smoke.py`` (SMOKE_r11.json).
+rung in ``scripts/scale_smoke.py`` (results:
+``git show d3e6f62:SMOKE_r11.json``).
 
 Run: python examples/rag_retrieval.py [sf_dir]
 """

@@ -93,8 +93,8 @@ def main():
             ]
         )
         scans = re.findall(r"ReadSchema: (.*)", p)
-        # the printed line IS the adjudication fingerprint bench.py
-        # embeds and bench_compare joins on — one shared primitive
+        # the same fingerprint tests/test_scale.py compares — one
+        # shared primitive (scripts/planfp.py)
         print(f"{key:28s} {fingerprint_of_plan(p)}")
         if key not in NESTED_LOOP_ALLOWED:
             if n_cart:

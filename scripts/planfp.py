@@ -1,11 +1,9 @@
 """Shared plan-fingerprint primitive.
 
-One fingerprint format, two consumers: scripts/explain_plans.py (the
-per-round PLANS_r{N}.txt audit) and bench.py (which embeds the
-fingerprint per benched key in the BENCH json so a single artifact
-carries timing + the evidence needed to adjudicate a timing swing).
-The format is the adjudication contract bench_compare.py joins on —
-change it in ONE place or round-over-round diffs go blind.
+Two consumers: scripts/explain_plans.py prints one fingerprint line per
+registered key, and tests/test_scale.py compares the fingerprints and
+operator counts of two plans to pin a plan shape. Keep the format here
+so both read it the same way.
 """
 
 from __future__ import annotations
@@ -25,7 +23,7 @@ def plan_of(df) -> str:
 def fingerprint_of_plan(p: str) -> str:
     """The ``exch=.. (reused=..) bhj=.. smj=.. codegen=..
     pushedFilterScans=n/m [NESTEDLOOP=k]`` summary of a formatted
-    plan — whitespace-normalized exactly as bench_compare loads it."""
+    plan."""
     n_exchange = len(re.findall(r"\bExchange\b", p))
     n_reused = len(re.findall(r"ReusedExchange", p))
     n_bhj = len(re.findall(r"BroadcastHashJoin", p))
@@ -39,9 +37,7 @@ def fingerprint_of_plan(p: str) -> str:
     pushed = re.findall(r"PushedFilters: \[(.*?)\]", p)
     pushed_n = sum(1 for x in pushed if x.strip())
     nlj_note = f" NESTEDLOOP={n_nlj}" if n_nlj else ""
-    # padded exactly like the historical PLANS_r{N}.txt lines so the
-    # judge's textual diff of consecutive PLANS artifacts stays quiet;
-    # bench_compare whitespace-normalizes on load either way
+    # fixed-width counts keep explain_plans.py's column aligned
     return (
         f"exch={n_exchange:2d} (reused={n_reused}) bhj={n_bhj} "
         f"smj={n_smj} codegen={n_wsc:2d} "
@@ -62,7 +58,3 @@ def operator_counts(p: str) -> dict:
         name = m.group(1).strip()
         counts[name] = counts.get(name, 0) + 1
     return counts
-
-
-def fingerprint(df) -> str:
-    return fingerprint_of_plan(plan_of(df))

@@ -110,9 +110,10 @@ def _heap_aware_level(df: DataFrame):
     """Storage level for a big intermediate persist, sized against the
     runtime's UNIFIED memory pool: a cached frame whose plan-estimated
     size crowds the pool evicts itself and every execution page over
-    and over (SMOKE_r11: the 6.6 GB replicated-docs persist at a
-    default 8 GB heap ran minhash-1024x at 341 s vs 196.5 s on a 16 GB
-    heap — pure cache-store thrash) — park such frames on DISK_ONLY
+    and over (the 6.6 GB replicated-docs persist at a default 8 GB
+    heap ran minhash-1024x at 341 s vs 196.5 s on a 16 GB heap — pure
+    cache-store thrash; ``git show d3e6f62:SMOKE_r11.json``) — park
+    such frames on DISK_ONLY
     instead, where a local-SSD columnar re-read is far cheaper than
     storage/execution contention. Frames that comfortably fit (< ~80%
     of the ``spark.memory.fraction`` pool) keep MEMORY_AND_DISK, so
@@ -279,9 +280,9 @@ def _pair_join_width(
     side — and :func:`~smartpipeline_spark.operators.scale.
     tuned_shuffle_partitions` turns it into the exchange width
     (~128 MB serialized per task, nearest pow2, floored at
-    2×parallelism). SMOKE_r10 measured helper-sized joins 27-66%
-    faster than the r9 hand-tuned constants; this is that rule as
-    DEFAULT library behavior (VERDICT r10 #1). The estimate pass is
+    2×parallelism). Helper-sized joins measured 27-66% faster than
+    the r9 hand-tuned constants (``git show d3e6f62:SMOKE_r10.json``);
+    this is that rule as DEFAULT library behavior (VERDICT r10 #1). The estimate pass is
     charged to the operator by design — it is part of the join.
 
     The estimate is SAMPLE-FIRST (r12): a 1-in-16 key sample

@@ -582,8 +582,8 @@ def _bm25_postings(docs: DataFrame, partitions: int | None = None) -> DataFrame:
     map-side and shuffles only distinct pairs (~5% of the words here)
     — the r12 formulation that repartitioned post-explode shuffled all
     2.6B raw word rows and cost +45% build wall for zero spill saved
-    (the 73 GB it chased belonged to the IVF query leg all along,
-    rag_phase_probe)."""
+    (the 73 GB it chased belonged to the IVF query leg all along:
+    ``git show d3e6f62:scripts/rag_phase_probe.py``)."""
     from pyspark.sql.window import Window
 
     if partitions is not None:

@@ -2125,127 +2125,6 @@ def test_top_terms_equals_naive_window_on_skewed_vocab(spark):
     assert got == want and len({g for g, *_ in got}) == 2
 
 
-def test_bench_compare_refuses_falsified_unchanged_adjudication():
-    """Replays the round-5 ext_dsir_select mis-adjudication through the
-    mechanized path: the committed r04/r05 artifacts show the plan
-    fingerprint changed and git shows curation.py changed since the
-    round-4 boundary, so bench_compare must refuse the 'unchanged /
-    host variance' adjudication for that key."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(repo, "scripts", "bench_compare.py")
-    )
-    bc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bc)
-    lines = bc.adjudicate(
-        [("ext_dsir_select", 1.926, 2.675, 0.39)],
-        os.path.join(repo, "PLANS_r04.txt"),
-        os.path.join(repo, "PLANS_r05.txt"),
-        "906b544",  # round-4 verdict commit
-    )
-    assert len(lines) == 1
-    line = lines[0]
-    assert "ADJUDICATION REFUSED" in line
-    assert "plan changed" in line
-    assert "code changed" in line and "curation.py" in line
-    # and a genuinely-unchanged key stays eligible for host variance
-    ok = bc.adjudicate(
-        [("ext_dedup_minhash", 2.0, 2.7, 0.35)],
-        os.path.join(repo, "PLANS_r04.txt"),
-        os.path.join(repo, "PLANS_r04.txt"),
-        None,
-    )
-    assert "eligible for host-variance" in ok[0]
-
-
-def test_bench_compare_git_leg_is_call_graph_scoped():
-    """Replays the round-6 q06/q09 FALSE positives: 34a139b only ADDED
-    an unrelated query (q36b) to relational.py, so file-level evidence
-    refused a legitimate host-variance adjudication. The call-graph
-    span leg must stay eligible there while still catching the r05
-    dsir change (de8f398), which lived in the dsir_select library
-    function BEHIND the registered 10-line wrapper."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(repo, "scripts", "bench_compare.py")
-    )
-    bc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bc)
-    ok = bc.adjudicate(
-        [("q06_join_broadcast", 0.848, 1.062, 0.25)],
-        os.path.join(repo, "PLANS_r05.txt"),
-        os.path.join(repo, "PLANS_r06.txt"),
-        "f5ec894",  # round-5 verdict commit: 34a139b is inside the range
-    )
-    assert "eligible for host-variance" in ok[0]
-    assert "tracked spans untouched" in ok[0] and "34a139b" in ok[0]
-    # the wrapper-only blind spot is closed: de8f398 touched
-    # dsir_select (not the registered wrapper) and must still be found.
-    # CONTRACT: span tracking only runs against a clean defining file —
-    # working-tree line numbers don't match the HEAD blob otherwise —
-    # so a dirty file must yield None (conservative file-level route).
-    import subprocess
-
-    spans = bc.defining_spans("ext_dsir_select")
-    files = sorted({s[0] for s in spans})
-    dirty = subprocess.run(
-        ["git", "status", "--porcelain", "--", *files],
-        cwd=repo, capture_output=True, text=True,
-    ).stdout.strip()
-    got = bc.commits_touching_spans(spans, "906b544")
-    if dirty:
-        assert got is None, "dirty defining file must disable -L tracking"
-    else:
-        assert any(c.startswith("de8f398") for c in got)
-
-
-def test_bench_compare_cpu_coprimary_self_adjudicates():
-    """r10 verdict #2: with per-key executor-CPU medians in both
-    artifacts, a wall regression with FLAT CPU and an unchanged plan
-    self-adjudicates as host variance (the r9/r10 checkout-bisect
-    evidence form, read straight from the artifact); CPU moving with
-    wall blocks the dismissal; and a plan change still REFUSES
-    regardless of CPU."""
-    import importlib.util
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "bench_compare", os.path.join(repo, "scripts", "bench_compare.py")
-    )
-    bc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bc)
-    fps = {"k": "exch= 2 bhj=1"}
-    # wall +35%, CPU +3% (flat), plan unchanged -> self-adjudicated
-    out = bc.adjudicate(
-        [("k", 2.0, 2.7, 0.35)], fps, dict(fps), None,
-        cpu_old={"k": 10.0}, cpu_new={"k": 10.3},
-    )
-    assert "SELF-ADJUDICATED host variance" in out[0]
-    assert "+3%" in out[0] and "flat" in out[0]
-    # CPU moved with wall -> not dismissible
-    out = bc.adjudicate(
-        [("k", 2.0, 2.7, 0.35)], fps, dict(fps), None,
-        cpu_old={"k": 10.0}, cpu_new={"k": 14.0},
-    )
-    assert "NOT dismissible" in out[0]
-    # plan changed -> refusal wins even with flat CPU
-    out = bc.adjudicate(
-        [("k", 2.0, 2.7, 0.35)], fps, {"k": "exch= 3 bhj=0"}, None,
-        cpu_old={"k": 10.0}, cpu_new={"k": 10.1},
-    )
-    assert "ADJUDICATION REFUSED" in out[0]
-    # no CPU channel (pre-r11 artifacts) -> the old eligible wording
-    out = bc.adjudicate([("k", 2.0, 2.7, 0.35)], fps, dict(fps), None)
-    assert "eligible for host-variance" in out[0]
-
-
 def test_html_oracles_survive_exotic_whitespace(spark, tmp_path):
     """r10 verdict #4: the markup closed forms must no longer depend
     on the fixture being plain-ASCII. Plants \\x0b, \\x1c, \\x85,

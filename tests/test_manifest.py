@@ -117,6 +117,17 @@ def test_registry_is_the_full_union_no_key_dropped():
     assert tuple(entrymod.queries())[: len(entrymod._WINDOW)] == entrymod._WINDOW
 
 
+def test_bench_keys_are_unique_and_registered():
+    """bench.py looks its keys up only after a long warm-up, so a stale
+    or repeated key must fail here instead."""
+    import bench
+
+    keys = bench.BENCH_QUERIES
+    assert len(keys) == len(set(keys)), "bench.py repeats a key"
+    missing = set(keys) - set(entrymod.queries())
+    assert not missing, f"bench.py keys not registered: {sorted(missing)}"
+
+
 import pytest
 
 

@@ -921,9 +921,9 @@ def test_release_caches_drops_tracked_pairing_frames(spark):
 
 def test_heap_aware_level_parks_oversized_frames_on_disk(spark):
     """A cached frame whose plan-estimated size crowds the unified
-    memory pool must go DISK_ONLY (the SMOKE_r11 8g-vs-16g thrash
-    finding); frames that fit keep MEMORY_AND_DISK, so fixture-scale
-    persists are unchanged."""
+    memory pool must go DISK_ONLY (the 8g-vs-16g thrash finding in
+    ``git show d3e6f62:SMOKE_r11.json``); frames that fit keep
+    MEMORY_AND_DISK, so fixture-scale persists are unchanged."""
     from pyspark import StorageLevel
 
     from smartpipeline_spark.functions.dedup import _heap_aware_level
