@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import logging
 from dataclasses import dataclass, field
-from typing import Sequence
 
 _LOG = logging.getLogger(__name__)
 
@@ -108,10 +107,6 @@ class RetryManager:
             if not (isinstance(exc, type) and issubclass(exc, Exception)):
                 raise ValueError(f"retryable_errors must be exception types, got {exc!r}")
 
-    @property
-    def enabled(self) -> bool:
-        return bool(self.retryable_errors)
-
     def sleep_for(self, attempt: int) -> float:
         """Backoff before retry number ``attempt`` (1-based)."""
         return (2 ** (attempt - 1)) * self.backoff
@@ -180,9 +175,4 @@ class StagePolicy:
     name: str
     retry: RetryManager = field(default_factory=RetryManager)
     concurrency: int = 0  # advisory: repartition hint; Spark is already parallel
-    parallel: bool = False  # no-op on Spark (executors are processes)
     profile_memory: bool = False  # record worker RSS into timings (<name>#rss_kb)
-
-
-def count_errors(entries: Sequence[dict], kind: str) -> int:
-    return sum(1 for e in entries or () if e["kind"] == kind)

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.operators.relational import _sql_dsum2, dsum2
+from smartpipeline_spark.streaming import start_memory_sink
 
 _SINK = "_ext_stream_tumbling_sink"
 _SESSION_SINK = "_ext_stream_session_sink"
@@ -169,13 +170,7 @@ def _run_to_memory(
         if q.name == sink_name:
             q.stop()
     with _scoped_state_width(spark, *input_paths):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = start_memory_sink(agg, sink_name, "complete")
     q.awaitTermination()
     return spark.table(sink_name)
 
@@ -299,13 +294,7 @@ def ext_stream_join(spark, sf_dir) -> DataFrame:
     # trigger — the widest fixed cost in the streaming family (see the
     # width table above _state_width)
     with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(_JOIN_SINK)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = start_memory_sink(joined, _JOIN_SINK, "append")
     q.awaitTermination()
     return spark.table(_JOIN_SINK)
 
@@ -335,13 +324,7 @@ def ext_stream_dedup(spark, sf_dir) -> DataFrame:
         if q.name == _DEDUP_SINK:
             q.stop()
     with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(_DEDUP_SINK)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = start_memory_sink(deduped, _DEDUP_SINK, "append")
     q.awaitTermination()
     return spark.table(_DEDUP_SINK)
 
@@ -633,13 +616,7 @@ def ext_stream_outer_join(spark, sf_dir) -> DataFrame:
         if q.name == _OUTER_JOIN_SINK:
             q.stop()
     with _scoped_state_width(spark, stage):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(_OUTER_JOIN_SINK)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = start_memory_sink(joined, _OUTER_JOIN_SINK, "append")
     q.awaitTermination()
     return spark.table(_OUTER_JOIN_SINK).filter(F.col("click_id") >= 0)
 
@@ -688,13 +665,7 @@ def ext_stream_enrich(spark, sf_dir) -> DataFrame:
     for q in spark.streams.active:
         if q.name == _ENRICH_SINK:
             q.stop()
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(_ENRICH_SINK)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = start_memory_sink(joined, _ENRICH_SINK, "append")
     q.awaitTermination()
     return spark.table(_ENRICH_SINK)
 
@@ -734,13 +705,7 @@ def ext_stream_stateful(spark, sf_dir) -> DataFrame:
         if q.name == _STATEFUL_SINK:
             q.stop()
     with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(_STATEFUL_SINK)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = start_memory_sink(counts, _STATEFUL_SINK, "update")
     q.awaitTermination()
     return (
         spark.table(_STATEFUL_SINK)
@@ -798,13 +763,7 @@ def ext_stream_stateful_tws(spark, sf_dir) -> DataFrame:
         with _scoped_state_width(
             spark, os.path.join(sf_dir, "events.parquet")
         ):
-            q = (
-                counts.writeStream.format("memory")
-                .queryName(_STATEFUL_TWS_SINK)
-                .outputMode("update")
-                .trigger(availableNow=True)
-                .start()
-            )
+            q = start_memory_sink(counts, _STATEFUL_TWS_SINK, "update")
         q.awaitTermination()
     finally:
         if prev is None:

@@ -18,7 +18,7 @@ between the distributed and local paths by construction.
 from __future__ import annotations
 
 import uuid
-from typing import Any, Callable, Iterator, Sequence
+from typing import Any, Callable, Iterator
 
 from smartpipeline_spark.errors import (
     KIND_CRITICAL,
@@ -177,9 +177,25 @@ class FilePathItem(Item):
         return os.path.basename(self.path)
 
 
-def item_from_row(row: dict, payload_keys: Sequence[str]) -> Item:
-    """Build an Item from a flat row dict produced by the wrapper."""
-    item = Item({k: row.get(k) for k in payload_keys})
-    item._error_entries = list(row.get("_errors") or [])
-    item._timings = dict(row.get("_timings") or {})
+def restore_item(data: dict, dynamic, errors, timings) -> Item:
+    """Rebuild an Item from one output row of the stage wrapper.
+
+    ``data`` is the typed payload and becomes the Item's dict as is (no
+    copy). ``dynamic`` is the ``_data`` map: its keys splat into the
+    payload without overriding a typed column. ``errors`` and
+    ``timings`` are the ``_errors``/``_timings`` values. Maps may arrive
+    as dicts or as (key, value) pairs and arrays as lists or numpy
+    arrays, so each value is copied through ``dict`` and tested with
+    ``len()``."""
+    if dynamic:
+        for k, v in dict(dynamic).items():
+            data.setdefault(k, v)
+    item = Item.__new__(Item)
+    item._data = data
+    item._metadata = {}
+    item._timings = dict(timings) if timings else {}
+    item._error_entries = (
+        [dict(e) for e in errors] if errors is not None and len(errors) > 0 else []
+    )
+    item._callback_fun = None
     return item

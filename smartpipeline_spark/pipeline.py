@@ -19,9 +19,11 @@ unit of parallelism, and thread-vs-process distinctions disappear
 
 from __future__ import annotations
 
+import logging
 import queue as _queue
 import threading
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Iterator, Optional, Union
 
 from pyspark.accumulators import AccumulatorParam
@@ -29,8 +31,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from smartpipeline_spark.errors import ErrorManager, RetryManager, StagePolicy
-from smartpipeline_spark.item import Item
+from smartpipeline_spark.item import Item, restore_item
 from smartpipeline_spark.stage import BatchStage, Source, Stage
+from smartpipeline_spark.streaming import start_query
 from smartpipeline_spark.wrapper import (
     DATA_COL,
     DATA_DDL,
@@ -95,11 +98,9 @@ class Pipeline:
         # ``logging.DEBUG``) ships from that level, False disables.
         # Each task additionally hard-caps shipped records
         # (_LogCapture.MAX_RECORDS) and reports any overflow.
-        import logging as _logging
-
         self._ship_logs = ship_logs is not False
         self._ship_level = (
-            _logging.INFO if ship_logs is True else int(ship_logs or 0)
+            logging.INFO if ship_logs is True else int(ship_logs or 0)
         )
         self._log_acc = None
         self._source: SourceLike | None = None
@@ -172,7 +173,9 @@ class Pipeline:
         calls skip recomputing everything up to this stage).
         ``profile_memory=True`` records the Python worker's RSS after
         each item/chunk into the timings map under ``<name>#rss_kb``
-        (the roadmap's "stages can be memory profiled")."""
+        (the roadmap's "stages can be memory profiled").
+        ``parallel`` is accepted for reference-API familiarity and
+        ignored: executors are separate processes already."""
         if name in self._names:
             raise ValueError(f"stage name already used: {name!r}")
         if not isinstance(stage, (Stage, BatchStage)):
@@ -181,7 +184,6 @@ class Pipeline:
             name=name,
             retry=RetryManager(tuple(retryable_errors), max_retries, backoff),
             concurrency=concurrency,
-            parallel=parallel,
             profile_memory=profile_memory,
         )
         stage.set_name(name)
@@ -357,22 +359,23 @@ class Pipeline:
         group; if the generator is abandoned before exhaustion, the
         group is cancelled so prefetched partition jobs don't keep
         executing behind the caller's back."""
-        import uuid as _uuid
-
         df = self.dataframe()
-        payload_cols = [c for c in df.columns if c not in (ERRORS_COL, TIMINGS_COL)]
+        payload_cols = [
+            c for c in df.columns if c not in (ERRORS_COL, TIMINGS_COL, DATA_COL)
+        ]
         sc = df.sparkSession.sparkContext
-        group = f"smartpipeline-run-{_uuid.uuid4().hex}"
+        group = f"smartpipeline-run-{uuid.uuid4().hex}"
         sc.setJobGroup(group, "Pipeline.run()", interruptOnCancel=True)
         completed = False
         try:
             for row in df.toLocalIterator(prefetchPartitions=True):
                 d = row.asDict(recursive=True)
-                item = Item({k: d.get(k) for k in payload_cols if k != DATA_COL})
-                for k, v in (d.get(DATA_COL) or {}).items():
-                    item.data.setdefault(k, v)
-                item._error_entries = [dict(e) for e in (d.get(ERRORS_COL) or [])]
-                item._timings = dict(d.get(TIMINGS_COL) or {})
+                item = restore_item(
+                    {k: d.get(k) for k in payload_cols},
+                    d.get(DATA_COL),
+                    d.get(ERRORS_COL),
+                    d.get(TIMINGS_COL),
+                )
                 with self._count_lock:
                     self._count += 1
                 yield item
@@ -392,8 +395,6 @@ class Pipeline:
         retried task may deliver its records twice (Spark accumulator
         semantics for non-result-stage updates); log shipping is a
         diagnostic channel, not an exactly-once ledger."""
-        import logging as _logging
-
         if self._log_acc is None:
             return
         records = self._log_acc.value
@@ -401,7 +402,7 @@ class Pipeline:
             return
         self._log_acc.value = []
         for name, level, msg in records:
-            _logging.getLogger(name).log(level, "[stage] %s", msg)
+            logging.getLogger(name).log(level, "[stage] %s", msg)
 
     def start_stream(
         self,
@@ -436,12 +437,9 @@ class Pipeline:
             writer = df.writeStream.format("memory").queryName(queryName)
         else:
             raise ValueError("need a sink path, a foreachBatch callable, or queryName")
-        writer = writer.outputMode(output_mode).option("checkpointLocation", checkpoint)
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        elif processing_time:
-            writer = writer.trigger(processingTime=processing_time)
-        return writer.start()
+        return start_query(
+            writer.outputMode(output_mode), checkpoint, available_now, processing_time
+        )
 
     def write(self, path: str, fmt: str = "parquet", mode: str = "overwrite", **options):
         """Sink the pipeline output without driver round-trip.
@@ -568,45 +566,42 @@ class Pipeline:
 
 
 class _AsyncRunner:
-    """Thread-pool executor for process_async: items run through the
+    """process_async on a ``ThreadPoolExecutor``: items run through the
     local kernel path concurrently and land in an output queue, with
     per-item completion callbacks (reference ``pipeline.py:385-424``;
-    callback/completion ordering is unordered, as in the reference's
-    concurrent mode)."""
+    completion order is unordered, as in the reference's concurrent
+    mode).
+
+    * A callback runs on the worker thread. If it raises, the exception
+      is logged on the pipeline's logger and the item is delivered
+      anyway; the worker keeps serving.
+    * A critical error under ``raise_on_critical_error`` is delivered to
+      ``get`` in place of the item, which raises it.
+    * ``stop()`` cancels the items not yet started and returns at once.
+    * ``join()`` (run by ``Pipeline.shutdown`` before any ``on_end``)
+      waits for the items in flight."""
 
     def __init__(self, pipeline: Pipeline, workers: int = 8):
         self._pipeline = pipeline
-        self._in: _queue.Queue = _queue.Queue()
+        self._pool = ThreadPoolExecutor(workers)
         self._out: _queue.Queue = _queue.Queue()
-        self._stop = threading.Event()
-        self._threads = [
-            threading.Thread(target=self._loop, daemon=True) for _ in range(workers)
-        ]
-        for t in self._threads:
-            t.start()
 
-    def _loop(self):
-        while not self._stop.is_set():
-            try:
-                item = self._in.get(timeout=0.1)
-            except _queue.Empty:
-                continue
-            try:
-                out = self._pipeline.process(item)
-            except Exception as exc:
-                # raise_on_critical mode: deliver the failure to the
-                # consumer instead of silently killing this worker
-                self._out.put(exc)
-                self._in.task_done()
-                continue
-            try:
-                out.callback()
-            finally:
-                self._out.put(out)
-                self._in.task_done()
+    def _run(self, item: Item) -> None:
+        try:
+            out = self._pipeline.process(item)
+        except Exception as exc:
+            self._out.put(exc)
+            return
+        try:
+            out.callback()
+        except Exception:
+            logging.getLogger(self._pipeline.name).exception(
+                "callback failed for %s", out
+            )
+        self._out.put(out)
 
     def submit(self, item: Item) -> None:
-        self._in.put(item)
+        self._pool.submit(self._run, item)
 
     def get(self, block=True, timeout=None) -> Item:
         got = self._out.get(block=block, timeout=timeout)
@@ -615,9 +610,7 @@ class _AsyncRunner:
         return got
 
     def stop(self) -> None:
-        self._stop.set()
+        self._pool.shutdown(wait=False, cancel_futures=True)
 
     def join(self) -> None:
-        self._stop.set()
-        for t in self._threads:
-            t.join(timeout=1.0)
+        self._pool.shutdown(wait=True)

@@ -21,7 +21,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -147,6 +147,26 @@ def stateful_user_counts(df: DataFrame, key: str = "user_id") -> DataFrame:
     )
 
 
+def start_query(
+    writer: DataStreamWriter,
+    checkpoint: str | None = None,
+    available_now: bool = False,
+    processing_time: str | None = None,
+) -> StreamingQuery:
+    """Start a stream whose sink is already chosen: the one place the
+    checkpoint and the trigger policy are set. ``available_now`` drains
+    what is there and stops; otherwise ``processing_time`` fixes the
+    micro-batch interval; otherwise Spark's default trigger runs the
+    next batch as soon as the last one ends."""
+    if checkpoint:
+        writer = writer.option("checkpointLocation", checkpoint)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    elif processing_time:
+        writer = writer.trigger(processingTime=processing_time)
+    return writer.start()
+
+
 def start_foreach_batch(
     df: DataFrame,
     fn: Callable[[DataFrame, int], None],
@@ -158,16 +178,8 @@ def start_foreach_batch(
     """foreachBatch sink: ``fn(batch_df, batch_id)`` per micro-batch —
     the streaming sink pattern for external systems (the reference's
     Elasticsearch ``Indexer`` stage maps here)."""
-    writer = (
-        df.writeStream.foreachBatch(fn)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    writer = df.writeStream.foreachBatch(fn).outputMode(output_mode)
+    return start_query(writer, checkpoint, available_now, processing_time)
 
 
 def start_memory_sink(
@@ -178,12 +190,8 @@ def start_memory_sink(
 ) -> StreamingQuery:
     """Memory sink for tests/interactive use: results land in the
     in-memory table ``name`` (driver-sized outputs only)."""
-    writer = (
-        df.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    return start_query(writer, available_now=available_now)
 
 
 def interval_join(
@@ -273,14 +281,8 @@ def continuous_rollup(
         finally:
             batch_df.unpersist()
 
-    writer = (
-        agg.writeStream.foreachBatch(upsert)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    writer = agg.writeStream.foreachBatch(upsert).outputMode("update")
+    return start_query(writer, checkpoint, available_now)
 
 
 def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:

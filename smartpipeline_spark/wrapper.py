@@ -2,29 +2,38 @@
 piece of the engine (SURVEY.md §4.3).
 
 Compiles a chain of user ``Stage``/``BatchStage`` objects into a single
-``mapInPandas`` function that reproduces the reference's per-item
-kernel (reference ``runners.py:20-138``):
+``mapInPandas`` function that reproduces the reference's runners
+(reference ``runners.py:20-138``). Both kernels — ``run_stage_on_item``
+(``stage.process`` on one item) and ``run_stage_on_batch``
+(``stage.process_batch`` on a chunk) — call one attempt loop,
+``_attempt``, so they agree by construction:
+
+* retry with exponential backoff ``2^(attempt-1) * backoff`` on the
+  stage's retryable exception classes; RetryErrors attach only when
+  retries are EXHAUSTED — one per failed attempt (``max_retries=3`` ->
+  4 soft errors) on every item of the call — while an item that
+  recovers on a later attempt stays clean (reference
+  ``runners.py:33-67``);
+* soft errors skip only the failing stage; any other exception becomes
+  critical via the pluggable ErrorManager, once per item;
+* per-stage wall-clock timing written into the ``_timings`` map
+  (includes backoff sleeps, like the reference), spread evenly over
+  the items of the call.
+
+What differs stays with the kernels:
 
 * critical-skip: an item with a critical error skips every later stage
   (unless the ErrorManager is in ``no_skip_on_critical_error`` mode)
   but still reaches the output;
-* retry with exponential backoff ``2^(attempt-1) * backoff`` on the
-  stage's retryable exception classes; RetryErrors attach only when
-  retries are EXHAUSTED — one per failed attempt (``max_retries=3`` ->
-  4 soft errors) — while an item that recovers on a later attempt
-  stays clean (reference ``runners.py:33-67``);
-* soft errors skip only the failing stage; any other exception becomes
-  critical via the pluggable ErrorManager;
-* per-stage wall-clock timing written into the ``_timings`` map
-  (includes backoff sleeps, like the reference);
 * BatchStage: the batch is chunked to ``stage.size``; a non-retryable
   failure poisons the whole chunk (reference semantics,
   ``runners.py:107-125``) unless ``isolate_failures`` is set, in which
   case the wrapper retries the chunk row-by-row and only the truly
-  failing rows are poisoned (strictly better, opt-in);
-* ``on_start`` runs once per Python worker process per stage (lazy
-  executor-side singleton), ``on_end`` at worker exit via atexit —
-  lifetime documented in SURVEY.md §7.3.
+  failing rows are poisoned (strictly better, opt-in).
+
+``on_start`` runs once per Python worker process per stage (lazy
+executor-side singleton), ``on_end`` at worker exit via atexit —
+lifetime documented in SURVEY.md §7.3.
 
 Everything relational bypasses this wrapper entirely and stays inside
 Catalyst/Tungsten; only user-authored per-item logic pays the Python
@@ -35,7 +44,7 @@ from __future__ import annotations
 
 import atexit
 import logging
-import time
+from time import monotonic, sleep
 from typing import Callable, Iterable, Iterator, Sequence
 
 import pandas as pd
@@ -47,7 +56,7 @@ from smartpipeline_spark.errors import (
     StagePolicy,
     error_entry,
 )
-from smartpipeline_spark.item import Item
+from smartpipeline_spark.item import Item, restore_item
 from smartpipeline_spark.stage import BatchStage, Stage
 
 #: companion column names + Spark DDL
@@ -84,50 +93,14 @@ def _safe_on_end(stage) -> None:  # pragma: no cover - worker teardown
 def run_stage_on_item(
     stage: Stage, policy: StagePolicy, item: Item, error_manager: ErrorManager
 ) -> Item:
-    """Per-item kernel: critical-skip, retry w/ backoff, error routing,
-    timing. Shared verbatim by the distributed path (inside
-    ``mapInPandas``) and the local ``Pipeline.process`` fast path, so
-    the two agree by construction."""
+    """Per-item kernel: critical-skip, then the shared attempt loop.
+    Shared verbatim by the distributed path (inside ``mapInPandas``)
+    and the local ``Pipeline.process`` fast path, so the two agree by
+    construction."""
     if item.has_critical_errors() and error_manager.skips_rest():
         return item
-    retry = policy.retry
-    start = time.monotonic()
-    # failed retryable attempts buffer here and only attach if the stage
-    # EXHAUSTS its retries — an item that recovers on a later attempt
-    # carries no soft errors (reference kernel, runners.py:33-67)
-    caught: list[Exception] = []
-    try:
-        while True:
-            try:
-                stage.process(item)
-                break
-            except retry.retryable_errors as exc:
-                if not retry.enabled:  # defensive; empty tuple never matches
-                    raise
-                caught.append(exc)
-                if len(caught) > retry.max_retries:
-                    for rexc in caught:
-                        rerr = RetryError(str(rexc)).with_exception(rexc)
-                        rerr.set_stage(policy.name)
-                        item.add_error_entry(error_entry(policy.name, KIND_SOFT, rerr))
-                    break
-                time.sleep(retry.sleep_for(len(caught)))
-            except Exception as exc:  # soft / critical routing
-                item.add_error_entry(error_manager.handle(exc, policy.name, item))
-                break
-    finally:
-        item.set_timing(policy.name, time.monotonic() - start)
-        if policy.profile_memory:
-            item.set_timing(f"{policy.name}#rss_kb", _worker_rss_kb())
+    _attempt(stage.process, item, (item,), policy, error_manager)
     return item
-
-
-def _worker_rss_kb() -> float:
-    """Python worker peak RSS in KB (reference roadmap: "stages can be
-    memory profiled") — one getrusage syscall, cheap enough per item."""
-    import resource
-
-    return float(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
 
 
 def run_stage_on_batch(
@@ -137,29 +110,43 @@ def run_stage_on_batch(
     error_manager: ErrorManager,
     isolate_failures: bool = False,
 ) -> list[Item]:
-    """Batched kernel (reference ``runners.py:71-138`` semantics)."""
-    out: list[Item] = []
+    """Batched kernel (reference ``runners.py:71-138`` semantics): each
+    chunk of ``stage.size`` items, minus those a critical error skips,
+    goes through the shared attempt loop as one call."""
     skip_critical = error_manager.skips_rest()
     for chunk_start in range(0, len(items), stage.size):
-        chunk = list(items[chunk_start : chunk_start + stage.size])
         todo = [
-            it for it in chunk if not (skip_critical and it.has_critical_errors())
+            it
+            for it in items[chunk_start : chunk_start + stage.size]
+            if not (skip_critical and it.has_critical_errors())
         ]
-        if todo:
-            _process_chunk(stage, policy, todo, error_manager, isolate_failures)
-        out.extend(chunk)
-    return out
+        if not todo:
+            continue
+        isolate = isolate_failures and len(todo) > 1
+        exc = _attempt(stage.process_batch, todo, todo, policy, error_manager, not isolate)
+        if exc is not None:
+            # better-than-reference: fall back to singleton sub-batches
+            # so only truly-failing rows are poisoned
+            for it in todo:
+                _attempt(stage.process_batch, [it], (it,), policy, error_manager)
+    return list(items)
 
 
-def _process_chunk(stage, policy, todo, error_manager, isolate_failures):
+def _attempt(method, arg, items, policy, error_manager, route=True):
+    """The one attempt loop behind both kernels (retry, routing and
+    timing as the module docstring says): call ``method(arg)`` —
+    ``stage.process`` with an item or ``stage.process_batch`` with a
+    chunk — and account the outcome on every Item in ``items``. With
+    ``route=False`` a non-retryable exception is returned unrouted, for
+    the caller's own fallback."""
     retry = policy.retry
-    start = time.monotonic()
-    caught: list[Exception] = []  # attach only on exhaustion (see kernel above)
+    start = monotonic()
+    caught: list[Exception] = []
     try:
         while True:
             try:
-                stage.process_batch(todo)
-                break
+                method(arg)
+                return None
             except retry.retryable_errors as exc:
                 caught.append(exc)
                 if len(caught) > retry.max_retries:
@@ -167,27 +154,33 @@ def _process_chunk(stage, policy, todo, error_manager, isolate_failures):
                         rerr = RetryError(str(rexc)).with_exception(rexc)
                         rerr.set_stage(policy.name)
                         entry = error_entry(policy.name, KIND_SOFT, rerr)
-                        for it in todo:
+                        for it in items:
                             it.add_error_entry(dict(entry))
-                    break
-                time.sleep(retry.sleep_for(len(caught)))
-            except Exception as exc:
-                if isolate_failures and len(todo) > 1:
-                    # better-than-reference: fall back to singleton
-                    # sub-batches so only truly-failing rows are poisoned
-                    for it in todo:
-                        _process_chunk(stage, policy, [it], error_manager, False)
-                    return
-                for it in todo:
+                    return None
+                sleep(retry.sleep_for(len(caught)))
+            except Exception as exc:  # soft / critical routing
+                if not route:
+                    return exc
+                for it in items:
                     it.add_error_entry(error_manager.handle(exc, policy.name, it))
-                break
+                return None
     finally:
-        per_item = (time.monotonic() - start) / max(len(todo), 1)
-        rss = _worker_rss_kb() if policy.profile_memory else None
-        for it in todo:
-            it.set_timing(policy.name, per_item)
-            if rss is not None:
-                it.set_timing(f"{policy.name}#rss_kb", rss)
+        per_item = (monotonic() - start) / len(items)
+        name = policy.name
+        for it in items:
+            it._timings[name] = per_item
+        if policy.profile_memory:
+            rss = _worker_rss_kb()
+            for it in items:
+                it._timings[f"{name}#rss_kb"] = rss
+
+
+def _worker_rss_kb() -> float:
+    """Python worker peak RSS in KB (reference roadmap: "stages can be
+    memory profiled") — one getrusage syscall, cheap enough per item."""
+    import resource
+
+    return float(resource.getrusage(resource.RUSAGE_SELF).ru_maxrss)
 
 
 def run_chain_on_items(
@@ -214,35 +207,23 @@ def _rows_to_items(pdf: pd.DataFrame, payload_cols: list[str]) -> list[Item]:
     ``Item.__init__`` copies its dict — both bypassed here (this
     conversion dominated wrapper cost before the stages even ran)."""
     cols = [c for c in payload_cols if c != DATA_COL]
+    none = [None] * len(pdf)
     col_lists = [pdf[c].tolist() for c in cols]
-    err_list = pdf[ERRORS_COL].tolist() if ERRORS_COL in pdf.columns else None
-    tim_list = pdf[TIMINGS_COL].tolist() if TIMINGS_COL in pdf.columns else None
+    # dynamic tier: the _data map splats back into the payload so stages
+    # see keys invented by earlier stages (reference semantics:
+    # schemaless dict, SURVEY.md §1.2)
     dyn_list = (
         pdf[DATA_COL].tolist()
         if DATA_COL in payload_cols and DATA_COL in pdf.columns
-        else None
+        else none
     )
-    items: list[Item] = []
-    for idx, vals in enumerate(zip(*col_lists) if col_lists else iter(())):
-        item = Item.__new__(Item)
-        data = dict(zip(cols, vals))
-        # dynamic tier: splat _data map entries back into the payload so
-        # stages see keys invented by earlier stages (reference
-        # semantics: schemaless dict, SURVEY.md §1.2)
-        if dyn_list is not None and dyn_list[idx]:
-            for k, v in dict(dyn_list[idx]).items():
-                data.setdefault(k, v)
-        item._data = data
-        item._metadata = {}
-        errs = err_list[idx] if err_list is not None else None
-        item._error_entries = (
-            [dict(e) for e in errs] if errs is not None and len(errs) > 0 else []
-        )
-        tm = tim_list[idx] if tim_list is not None else None
-        item._timings = dict(tm) if tm else {}
-        item._callback_fun = None
-        items.append(item)
-    return items
+    err_list = pdf[ERRORS_COL].tolist() if ERRORS_COL in pdf.columns else none
+    tim_list = pdf[TIMINGS_COL].tolist() if TIMINGS_COL in pdf.columns else none
+    rows = zip(*col_lists) if col_lists else iter(())
+    return [
+        restore_item(dict(zip(cols, vals)), dyn, errs, tm)
+        for vals, dyn, errs, tm in zip(rows, dyn_list, err_list, tim_list)
+    ]
 
 
 def _items_to_pdf(items: list[Item], out_cols: list[str]) -> pd.DataFrame:

@@ -4,6 +4,7 @@ contents and stage attribution, retry counts/timing envelopes, batch
 semantics, count, and local/distributed parity.
 """
 
+import threading
 import time
 
 import pytest
@@ -783,3 +784,48 @@ def test_error_summary_aggregates_the_error_channel(spark, items_df):
     assert rows[("soft", "soft", "SoftError")] == 50
     assert rows[("crit", "critical", "ValueError")] == 20
     assert sum(rows.values()) == 70
+
+
+def test_process_async_raising_callback_keeps_workers(caplog):
+    # JVM-free: process_async runs the local kernel path only. More
+    # raising callbacks than pool workers, then one plain item: every
+    # item must still arrive, and each failure is logged.
+    pipe = Pipeline(spark=None).append("reverser", TextReverser())
+
+    def boom(_item):
+        raise RuntimeError("callback failed")
+
+    for i in range(9):
+        pipe.process_async(Item({"count": i, "text": f"t{i}"}), callback=boom)
+    pipe.process_async(Item({"count": 9, "text": "t9"}))
+    got = sorted(pipe.get_item(timeout=5).data["count"] for _ in range(10))
+    assert got == list(range(10))
+    pipe.shutdown()
+    logged = [r for r in caplog.records if r.name == pipe.name]
+    assert len(logged) == 9 and all(r.exc_info for r in logged)
+
+
+class SlowStage(Stage):
+    def __init__(self):
+        self.started = threading.Event()
+        self.finished = False
+        self.finished_at_on_end = None
+
+    def process(self, item):
+        self.started.set()
+        time.sleep(2)
+        self.finished = True
+        return item
+
+    def on_end(self):
+        self.finished_at_on_end = self.finished
+
+
+def test_shutdown_waits_for_in_flight_item_before_on_end():
+    stage = SlowStage()
+    pipe = Pipeline(spark=None).append("slow", stage)
+    pipe.process_async(Item({"x": 1}))
+    assert stage.started.wait(timeout=5)
+    pipe.shutdown()
+    assert stage.finished_at_on_end is True
+    assert pipe.get_item(timeout=1).data == {"x": 1}

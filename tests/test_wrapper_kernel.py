@@ -116,3 +116,105 @@ def test_batch_kernel_invariants(n_items, size, poison, isolate):
         assert poisoned == list(range(chunk * size, min((chunk + 1) * size, n_items)))
     clean = [it for it in out if not it.has_critical_errors()]
     assert all(it.data.get("done") for it in clean)
+
+
+class FailFirstBatch(BatchStage):
+    """Raises exc_class for its first `fail_times` calls, then marks
+    every item of the chunk done."""
+
+    def __init__(self, exc_class, fail_times, size):
+        super().__init__(size=size)
+        self._exc = exc_class
+        self._fail_times = fail_times
+        self._calls = 0
+
+    def process_batch(self, items):
+        self._calls += 1
+        if self._calls <= self._fail_times:
+            raise self._exc("scripted")
+        for it in items:
+            it.data["done"] = True
+        return items
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    n_items=st.integers(min_value=1, max_value=12),
+    size=st.integers(min_value=1, max_value=12),
+    max_retries=st.integers(min_value=0, max_value=3),
+    exc=st.sampled_from([Err1, Err2]),
+    fail_times=st.integers(min_value=0, max_value=5),
+)
+def test_batch_retry_invariants(n_items, size, max_retries, exc, fail_times):
+    stage = FailFirstBatch(exc, fail_times, size)
+    policy = StagePolicy("b", RetryManager((Err1,), max_retries, 0.0))
+    items = [Item({"k": i}) for i in range(n_items)]
+    out = run_stage_on_batch(stage, policy, items, ErrorManager())
+
+    assert [it.data["k"] for it in out] == list(range(n_items))
+    for it in out:
+        assert it.get_timing("b") is not None
+    # the scripted failures hit the first chunk(s) in call order: walk
+    # the chunks, replaying how many failing calls each one absorbs
+    left = fail_times
+    for start in range(0, n_items, size):
+        chunk = out[start : start + size]
+        if left == 0:
+            assert all(not it.error_entries and it.data.get("done") for it in chunk)
+        elif exc is Err2:
+            # non-retryable: one critical entry per item, no retries
+            left -= 1
+            for it in chunk:
+                assert len(it.critical_errors()) == 1 and not it.soft_errors()
+                assert not it.data.get("done")
+        elif left > max_retries:
+            # exhausted: every item carries max_retries+1 soft RetryErrors
+            left -= max_retries + 1
+            for it in chunk:
+                assert len(it.soft_errors()) == max_retries + 1
+                assert all(e["exc_class"] == "Err1" for e in it.soft_errors())
+                assert not it.has_critical_errors() and not it.data.get("done")
+        else:
+            # recovered within budget: clean
+            left = 0
+            assert all(not it.error_entries and it.data.get("done") for it in chunk)
+
+
+class SingletonBatch(BatchStage):
+    """A size-1 BatchStage around a Stage's ``process``."""
+
+    def __init__(self, stage):
+        super().__init__(size=1)
+        self._stage = stage
+
+    def process_batch(self, items):
+        for it in items:
+            self._stage.process(it)
+        return items
+
+
+def _errors_view(item):
+    return [(e["stage"], e["kind"], e["exc_class"], e["message"]) for e in item.error_entries]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    max_retries=st.integers(min_value=0, max_value=4),
+    exc=st.sampled_from([None, Err1, Err2]),
+    retryable=st.sampled_from([(), (Err1,), (Err1, Err2)]),
+    fail_times=st.integers(min_value=0, max_value=6),
+)
+def test_singleton_batch_matches_item_kernel(max_retries, exc, retryable, fail_times):
+    policy = StagePolicy("s", RetryManager(retryable, max_retries, 0.0))
+    by_item = run_stage_on_item(
+        ScriptedStage(exc, fail_times), policy, Item({"x": 1}), ErrorManager()
+    )
+    (by_batch,) = run_stage_on_batch(
+        SingletonBatch(ScriptedStage(exc, fail_times)),
+        policy,
+        [Item({"x": 1})],
+        ErrorManager(),
+    )
+    assert _errors_view(by_batch) == _errors_view(by_item)
+    assert by_batch.data == by_item.data
+    assert by_batch.get_timing("s") is not None and by_item.get_timing("s") is not None
