@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
+from smartpipeline_spark.rounding import half_up, np_half_up
 
 EMAIL_RE = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
 URL_RE = "https?://[^ ]+"
@@ -352,9 +353,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_bigrams"),
-            (F.floor(F.avg(logp) * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias(
-                "avg_logprob"
-            ),
+            half_up(F.avg(logp), 4).alias("avg_logprob"),
         )
     )
 
@@ -582,7 +581,7 @@ def dsir_scores(raw: DataFrame, lr: dict, m: int = DSIR_BUCKETS) -> DataFrame:
                         lrv[np.asarray(bs, dtype=np.int64)].sum()
                     )
                     vals.append(
-                        np.floor((logw + g) * 10000.0 + 0.5) / 10000.0
+                        np_half_up(logw + g, 4)
                     )
             out = pdf[["doc_id"]].copy()
             out["score"] = pd.array(vals, dtype="Float64")
@@ -921,11 +920,10 @@ def repetition_metrics(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.lit(1.0) - F.col("n3_distinct") / F.col("n3_total")
     )
     topf = F.col("max_c") / F.col("nw")
-    r4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return base.join(top, id_col).select(
         id_col,
-        r4(dup3).alias("dup3_frac"),
-        r4(topf).alias("top_word_frac"),
+        half_up(dup3, 4).alias("dup3_frac"),
+        half_up(topf, 4).alias("top_word_frac"),
         ((dup3 <= 0.5) & (topf <= 0.2)).alias("keep"),
     )
 
@@ -1834,7 +1832,7 @@ def classifier_scores(
             )
             prob = 1.0 / (1.0 + np.exp(-z))
             out = pdf[cols].copy()
-            p4 = np.floor(prob * 10000.0 + 0.5) / 10000.0
+            p4 = np_half_up(prob, 4)
             out["prob"] = p4
             # threshold the PUBLISHED (rounded) prob so pred always
             # equals prob >= 0.5 for a reader of the output
@@ -2190,17 +2188,10 @@ def binary_auc(
     c = hist.withColumn(
         "cum_neg", F.coalesce(F.sum("n_neg").over(win), F.lit(0))
     )
-    raw_auc = (
-        F.floor(
-            F.sum(
-                F.col("n_pos")
-                * (F.col("cum_neg") + F.col("n_neg") / F.lit(2.0))
-            )
-            / (F.sum("n_pos") * F.sum("n_neg"))
-            * 1e6
-            + F.lit(0.5)
-        )
-        / 1e6
+    raw_auc = half_up(
+        F.sum(F.col("n_pos") * (F.col("cum_neg") + F.col("n_neg") / F.lit(2.0)))
+        / (F.sum("n_pos") * F.sum("n_neg")),
+        6,
     )
     return c.agg(
         F.when(
@@ -2537,7 +2528,6 @@ def pr_curve(
     # groupBy (same rationale as the zipf spectrum checkpoint)
     hist = hist.localCheckpoint(eager=True)
     tot = hist.agg(F.sum("n_pos").alias("p_total"))
-    r6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6
     return (
         hist.withColumn("tp", F.sum("n_pos").over(win))
         .withColumn("fp", F.sum("n_neg").over(win))
@@ -2546,8 +2536,8 @@ def pr_curve(
             "threshold",
             F.col("tp").cast("bigint").alias("tp"),
             F.col("fp").cast("bigint").alias("fp"),
-            r6(F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
-            r6(F.col("tp") / F.col("p_total")).alias("recall"),
+            half_up(F.col("tp") / (F.col("tp") + F.col("fp")), 6).alias("precision"),
+            half_up(F.col("tp") / F.col("p_total"), 6).alias("recall"),
         )
     )
 
@@ -2793,10 +2783,9 @@ def c4_quality_rules(
     max_word_len = F.array_max(
         F.transform(F.split(txt, r"\s+"), F.length)
     )
-    r4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-    term_ratio = r4(term_lines / n_lines)
-    short_frac = r4(short_lines / n_lines)
-    dup_frac = r4(dup_lines / n_lines)
+    term_ratio = half_up(term_lines / n_lines, 4)
+    short_frac = half_up(short_lines / n_lines, 4)
+    dup_frac = half_up(dup_lines / n_lines, 4)
     has_lorem = F.lower(txt).contains("lorem ipsum")
     has_brace = txt.contains("{")
     has_js = F.exists(
@@ -3023,10 +3012,7 @@ def stupid_backoff_scores(
         .agg(
             F.count("*").cast("long").alias("n_trigrams"),
             F.first("_is_ref").alias("in_ref"),
-            (
-                F.floor(F.avg(score) * F.lit(10000.0) + F.lit(0.5))
-                / F.lit(10000.0)
-            ).alias("avg_logscore"),
+            half_up(F.avg(score), 4).alias("avg_logscore"),
         )
     )
 
@@ -3165,9 +3151,7 @@ def psi_drift(
     return (
         joined.groupBy("g")
         .agg(
-            (
-                F.floor(F.sum(term) * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-            ).alias("psi")
+            half_up(F.sum(term), 6).alias("psi")
         )
         .select(F.col("g").alias(group_col), "psi")
     )
@@ -3284,9 +3268,7 @@ def ks_drift(
         .groupBy("g")
         .agg(
             F.first("n_g").alias("n_rows"),
-            (
-                F.floor(F.max("gap") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-            ).alias("ks"),
+            half_up(F.max("gap"), 6).alias("ks"),
         )
         .select(F.col("g").alias(group_col), "n_rows", "ks")
     )
@@ -3422,12 +3404,7 @@ def line_dedup(
     ).filter(F.col("line").isNotNull())
     fp = F.md5(_ccnet_line_norm(F.col("line")))
     kept_n = F.sum(F.col("kept").cast("long"))
-    dup_frac = (
-        F.floor(
-            (F.lit(1.0) - kept_n / F.count("*")) * F.lit(10000.0) + F.lit(0.5)
-        )
-        / F.lit(10000.0)
-    )
+    dup_frac = half_up(F.lit(1.0) - kept_n / F.count("*"), 4)
 
     if p is None:
         # one-pass shape: bodies ride the (small) exchanges
@@ -3600,9 +3577,7 @@ def weighted_sample(
         .select(
             id_col,
             weight_col,
-            (F.floor(F.col("_es") * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)).alias(
-                "es_key"
-            ),
+            half_up(F.col("_es"), 8).alias("es_key"),
         )
     )
 
@@ -3680,15 +3655,14 @@ def fuzzy_decontamination(
         .groupBy("doc_id", "bench_id", "a_sz", "b_sz")
         .agg(F.count("*").cast("long").alias("shared"))
     )
-    r4 = lambda col: F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     jac = F.col("shared") / (F.col("a_sz") + F.col("b_sz") - F.col("shared"))
     cont = F.col("shared") / F.col("b_sz")
     return pairs.select(
         "doc_id",
         "bench_id",
         "shared",
-        r4(jac).alias("jaccard"),
-        r4(cont).alias("containment"),
+        half_up(jac, 4).alias("jaccard"),
+        half_up(cont, 4).alias("containment"),
         (cont >= F.lit(float(threshold))).alias("contaminated"),
     )
 
@@ -3770,10 +3744,9 @@ def ccnet_perplexity_buckets(
     # interpolants land on thirds of the grid (frac in {0, 1/3,
     # 2/3}), so after *1e4 + 0.5 they sit >= 1/6 grid unit from every
     # floor boundary — the snap is provably immune to lerp noise.
-    snap = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     th = scored.groupBy("lang").agg(
-        snap(F.percentile("avg_logprob", 1.0 / 3)).alias("t_low"),
-        snap(F.percentile("avg_logprob", 2.0 / 3)).alias("t_high"),
+        half_up(F.percentile("avg_logprob", 1.0 / 3), 4).alias("t_low"),
+        half_up(F.percentile("avg_logprob", 2.0 / 3), 4).alias("t_high"),
     )
     return scored.join(F.broadcast(th), "lang").select(
         "doc_id",

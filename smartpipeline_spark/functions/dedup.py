@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
+from smartpipeline_spark.rounding import half_up
 
 # --- minhash parameters (fixed seed: deterministic across runs) -----------
 _N_HASHES = 16
@@ -456,7 +457,7 @@ def jaccard_pairs(
         .select(
             "d1",
             "d2",
-            (F.floor(jac * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("jaccard"),
+            half_up(jac, 4).alias("jaccard"),
         )
     )
 
@@ -721,9 +722,7 @@ def ext_dedup_minhash(spark, sf_dir):
         .select(
             "d1",
             "d2",
-            (F.floor(jac * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias(
-                "jaccard_verified"
-            ),
+            half_up(jac, 4).alias("jaccard_verified"),
         )
     )
 
@@ -978,9 +977,7 @@ def ext_dedup_embedding(spark, sf_dir):
         .select(
             "v1",
             "v2",
-            (F.floor(F.col("_cos") * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias(
-                "cosine"
-            ),
+            half_up(F.col("_cos"), 4).alias("cosine"),
         )
     )
 
@@ -1303,7 +1300,7 @@ def overlap_pairs(
             "d1",
             "d2",
             "shared",
-            (F.floor(ratio * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("overlap"),
+            half_up(ratio, 4).alias("overlap"),
         )
     )
 
@@ -1372,7 +1369,7 @@ def pagerank(
     (edge contributions, dangling mass) through DECIMAL(28,14) — an
     exact, order-independent accumulator — so every iteration's rank
     vector is REPRODUCIBLE bit-for-bit across shuffles, retries, AND
-    engines (the dsum2 trick from operators/relational.py applied
+    engines (the dsum2 trick from smartpipeline_spark/rounding.py applied
     iteratively; every other op in the update is pointwise IEEE on
     identical inputs). The DuckDB oracle of the registered key
     depends on it; default off to keep the plain-double fast path."""
@@ -1497,9 +1494,7 @@ def ext_pagerank(spark, sf_dir):
     pr = pagerank(e, iters=4, deterministic_sums=True)
     return pr.select(
         "id",
-        (F.floor(F.col("rank") * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)).alias(
-            "rank"
-        ),
+        half_up(F.col("rank"), 6).alias("rank"),
     )
 
 

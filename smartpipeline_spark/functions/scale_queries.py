@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
-from smartpipeline_spark.operators.relational import _sql_dsum2, dsum2, r2
+from smartpipeline_spark.rounding import DEC28, dsum2, half_up, sql_dsum2
 
 
 @ext_query(
@@ -46,10 +46,7 @@ def ext_skew_report(spark, sf_dir) -> DataFrame:
         .select(
             "key",
             "n",
-            (
-                F.floor(F.col("n") * F.lit(1.0) / F.col("total") * F.lit(1e6) + F.lit(0.5))
-                / F.lit(1e6)
-            ).alias("frac"),
+            half_up(F.col("n") * F.lit(1.0) / F.col("total"), 6).alias("frac"),
         )
         .orderBy(F.desc("n"), F.asc("key"))
         .limit(10)
@@ -60,7 +57,7 @@ def ext_skew_report(spark, sf_dir) -> DataFrame:
     "ext_salted_join",
     f"""SELECT s.s_nationkey AS nationkey,
                COUNT(*) AS n_items,
-               {_sql_dsum2('l.l_quantity')} AS sum_qty
+               {sql_dsum2('l.l_quantity')} AS sum_qty
        FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey
        GROUP BY s.s_nationkey""",
 )
@@ -95,7 +92,7 @@ def ext_salted_join(spark, sf_dir) -> DataFrame:
                        '%Y-%m-%d') AS day,
                event_type,
                COUNT(*) AS n_events,
-               {_sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
+               {sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
        FROM events GROUP BY day, event_type""",
 )
 def ext_rollup_reuse(spark, sf_dir) -> DataFrame:
@@ -116,7 +113,7 @@ def ext_rollup_reuse(spark, sf_dir) -> DataFrame:
     ev = sources.table(spark, "events", sf_dir)
     hourly = ev.groupBy(F.window("ts", "1 hour"), "event_type").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("value").cast("decimal(28,12)")).alias("s"),
+        F.sum(F.col("value").cast(DEC28)).alias("s"),
     )
     return (
         hourly.groupBy(
@@ -125,7 +122,7 @@ def ext_rollup_reuse(spark, sf_dir) -> DataFrame:
         )
         .agg(
             F.sum("n").alias("n_events"),
-            r2(F.sum("s").cast("double")).alias("sum_value"),
+            half_up(F.sum("s").cast("double"), 2).alias("sum_value"),
         )
     )
 

@@ -30,6 +30,7 @@ from pyspark.sql.window import Window
 
 from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
+from smartpipeline_spark.rounding import half_up, np_half_up
 
 K_NEIGHBORS = 10
 N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -87,11 +88,6 @@ def _emb(spark, sf_dir) -> DataFrame:
     return raw.repartition(width).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
-
-
-def round4(col: Column) -> Column:
-    """Engine-portable 4-dec rounding (see relational.r2 rationale)."""
-    return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
 
 
 def dot_expr(a: Column, b: Column) -> Column:
@@ -159,9 +155,9 @@ def ext_knn_bruteforce(spark, sf_dir):
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            round4(
+            half_up(
                 dot_expr(F.col("q_emb"), F.col("emb"))
-                / (F.col("_qn") * F.col("_cn"))
+                / (F.col("_qn") * F.col("_cn")), 4
             ).alias("score"),
         )
     )
@@ -285,7 +281,7 @@ def mmr_diversify(
             dots += np.outer(col, col)
             norms += col * col
         nrm = np.sqrt(norms)
-        sim = np.floor(dots / np.outer(nrm, nrm) * 10000.0 + 0.5) / 10000.0
+        sim = np_half_up(dots / np.outer(nrm, nrm), 4)
         rel = pdf["rel"].to_numpy(dtype=np.float64)
         ids = pdf["neighbor_id"].to_numpy()
         picks, scores = [0], [lam * rel[0]]
@@ -307,9 +303,7 @@ def mmr_diversify(
                 "query_id": pdf["query_id"].iloc[0],
                 "neighbor_id": ids[picks],
                 "mmr_rank": np.arange(1, len(picks) + 1, dtype=np.int32),
-                "mmr_score": np.floor(
-                    np.asarray(scores) * 10000.0 + 0.5
-                ) / 10000.0,
+                "mmr_score": np_half_up(np.asarray(scores), 4),
             }
         )
 
@@ -340,7 +334,7 @@ def ext_mmr_diversify(spark, sf_dir):
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         "emb",
-        round4(cosine_expr(F.col("q_emb"), F.col("emb"))).alias("rel"),
+        half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("rel"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("rel").desc(), F.col("neighbor_id")
@@ -391,7 +385,7 @@ def ext_embedding_centroids(spark, sf_dir):
     return (
         e.select("label", F.posexplode("embedding").alias("pos0", "v"))
         .groupBy("label", (F.col("pos0") + 1).alias("pos"))
-        .agg(round4(F.avg("v")).alias("centroid"))
+        .agg(half_up(F.avg("v"), 4).alias("centroid"))
     )
 
 
@@ -493,7 +487,7 @@ def ext_knn_lsh(spark, sf_dir):
     scored = cands.select(
         "query_id",
         "neighbor_id",
-        round4(cosine_expr(F.col("q_emb"), F.col("emb"))).alias("score"),
+        half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
@@ -583,7 +577,7 @@ def _exact_topk(cands: DataFrame, k: int | None = None) -> DataFrame:
         scored = cands.select(
             "query_id",
             "neighbor_id",
-            round4(cosine_expr(F.col("q_emb"), F.col("emb"))).alias("score"),
+            half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("score"),
         )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
     return (
@@ -806,9 +800,9 @@ def _ivf_candidates(
     return j.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
-        round4(
+        half_up(
             dot_expr(F.col("q_emb"), F.col("emb"))
-            / (F.col("_qn") * F.col("_cn"))
+            / (F.col("_qn") * F.col("_cn")), 4
         ).alias("score"),
     ).dropDuplicates(["query_id", "neighbor_id"])
 
@@ -974,71 +968,28 @@ def query_ivf_index(
     return _exact_topk(_ivf_candidates(idx, q, exclude_self), k=k)
 
 
-_IVF_IDX_CACHE: dict[str, str] = {}
-
-
 def _ivf_index_for(spark, sf_dir: str) -> str:
-    """Build-once cache of the saved IVF layout per fixture corpus —
-    the vector twin of ``text._bm25_index_for`` and the same hardening:
-    per-uid 0700 cache root (no predictable world-shared /tmp name),
-    keyed by the embeddings file's identity (path + size + mtime), and
-    CONTENT-CHECKED on reuse — the layout's total row count must equal
-    the source parquet's footer row count, so a stale, torn, or
-    pre-planted layout rebuilds instead of being served silently.
-    Concurrent builders race through a private staging dir + one
-    atomic rename."""
-    import hashlib
+    """The saved IVF layout of a fixture corpus, built once through
+    ``text._fixture_index_for``: valid when the centroids file exists
+    and the layout's total row count equals the embeddings file's
+    footer row count."""
     import os
-    import shutil
-    import stat as stat_mod
-    import tempfile
-    import uuid
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from smartpipeline_spark.functions.text import _fixture_index_for
 
     src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:16]
-
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_ivf_idx_u{os.getuid()}")
-    try:
-        os.makedirs(root, mode=0o700, exist_ok=True)
-        rst = os.stat(root)
-        if rst.st_uid != os.getuid() or (rst.st_mode & (stat_mod.S_IRWXG | stat_mod.S_IRWXO)):
-            raise OSError("cache root not exclusively ours")
-    except OSError:
-        root = tempfile.mkdtemp(prefix="spark_graft_ivf_idx_")
 
     def _valid(p: str) -> bool:
-        try:
-            import pyarrow.dataset as ds
-            import pyarrow.parquet as pq
+        n_src = pq.ParquetFile(src).metadata.num_rows
+        n_idx = ds.dataset(p, format="parquet", partitioning="hive").count_rows()
+        return os.path.exists(os.path.join(p, "_centroids.json")) and n_idx == n_src
 
-            n_src = pq.ParquetFile(src).metadata.num_rows
-            n_idx = ds.dataset(p, format="parquet", partitioning="hive").count_rows()
-            return os.path.exists(os.path.join(p, "_centroids.json")) and n_idx == n_src
-        except Exception:
-            return False
-
-    cached = _IVF_IDX_CACHE.get(tag)
-    if cached and _valid(cached):
-        return cached
-    path = os.path.join(root, tag)
-    if not _valid(path):
-        staging = f"{path}.build-{os.getpid()}"
-        try:
-            build_ivf_index(_emb(spark, sf_dir), staging)
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if _valid(path):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                path = f"{path}-{uuid.uuid4().hex[:8]}"
-                os.rename(staging, path)
-    _IVF_IDX_CACHE[tag] = path
-    return path
+    return _fixture_index_for(
+        "ivf", src, lambda p: build_ivf_index(_emb(spark, sf_dir), p), _valid
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1588,7 +1539,7 @@ def query_pq_index(
                 "query_id",
                 "neighbor_id",
                 "rank",
-                round4(F.col("pq_score")).alias("score"),
+                half_up(F.col("pq_score"), 4).alias("score"),
             )
         )
     q = queries.select("query_id", "q_emb")
@@ -1699,7 +1650,7 @@ def ext_hybrid_search(spark, sf_dir):
         )
         lex_scored = bm25_scores(d).select(
             "doc_id",
-            (F.floor(F.col("raw") * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("bm25"),
+            half_up(F.col("raw"), 4).alias("bm25"),
         )
         # top-POOL FIRST via orderBy().limit() — TakeOrderedAndProject,
         # a distributed partial top-k — then rank the 50-row survivor
@@ -1729,7 +1680,7 @@ def ext_hybrid_search(spark, sf_dir):
         )
         c = e.filter(F.col("vec_id") != 0)
         vec_scored = c.crossJoin(F.broadcast(q)).select(
-            "vec_id", round4(cosine_expr(F.col("q_emb"), F.col("emb"))).alias("cos")
+            "vec_id", half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("cos")
         )
         w_vec = Window.orderBy(F.col("cos").desc(), F.asc("vec_id"))
         return (
@@ -1758,7 +1709,7 @@ def ext_hybrid_search(spark, sf_dir):
             "doc_id",
             "r_lex",
             "r_vec",
-            (F.floor(F.col("rrf_raw") * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)).alias("rrf"),
+            half_up(F.col("rrf_raw"), 6).alias("rrf"),
         )
     )
 
@@ -1880,7 +1831,7 @@ def ext_hybrid_indexed(spark, sf_dir):
             .filter(F.col("doc_id") != 0)
             .select(
                 "doc_id",
-                (F.floor(F.col("raw") * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("bm25"),
+                half_up(F.col("raw"), 4).alias("bm25"),
             )
         )
         w_lex = Window.orderBy(F.col("bm25").desc(), F.asc("doc_id"))
@@ -1922,7 +1873,7 @@ def ext_hybrid_indexed(spark, sf_dir):
             "doc_id",
             "r_lex",
             "r_vec",
-            (F.floor(F.col("rrf_raw") * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0)).alias("rrf"),
+            half_up(F.col("rrf_raw"), 6).alias("rrf"),
         )
     )
 
@@ -2005,7 +1956,7 @@ def ext_dedup_semantic(spark, sf_dir):
         .select(
             "v1",
             "v2",
-            round4(F.col("_cos")).alias("cosine"),
+            half_up(F.col("_cos"), 4).alias("cosine"),
         )
         .distinct()
     )
@@ -2429,7 +2380,7 @@ def query_hnsw_index(spark, path: str, q: DataFrame, k: int = K_NEIGHBORS) -> Da
     scored = cands.select(
         "query_id",
         "neighbor_id",
-        round4(cosine_expr(F.col("q_emb"), F.col("emb"))).alias("score"),
+        half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("score"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("neighbor_id")

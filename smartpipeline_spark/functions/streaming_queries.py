@@ -25,7 +25,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, functions as F
 
 from smartpipeline_spark.functions import ext_query
-from smartpipeline_spark.operators.relational import _sql_dsum2, dsum2
+from smartpipeline_spark.rounding import DEC28, dsum2, sql_dsum2
 from smartpipeline_spark.streaming import start_memory_sink
 
 _SINK = "_ext_stream_tumbling_sink"
@@ -181,7 +181,7 @@ def _run_to_memory(
                        '%Y-%m-%d %H:%M:%S') AS window_start,
               event_type,
               COUNT(*) AS n_events,
-              {_sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
+              {sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
        FROM events
        GROUP BY window_start, event_type""",
 )
@@ -198,7 +198,7 @@ def ext_stream_tumbling(spark, sf_dir) -> DataFrame:
         .groupBy(F.window("ts", "1 hour"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            dsum2(F.col("value"), "decimal(28,12)").alias("sum_value"),
+            dsum2(F.col("value"), DEC28).alias("sum_value"),
         )
         .select(
             F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias(
@@ -370,7 +370,7 @@ def ext_stream_session(spark, sf_dir) -> DataFrame:
         .agg(
             F.min("t_us").alias("sess_start_us"),
             F.count("*").alias("n_events"),
-            dsum2(F.col("value"), "decimal(28,12)").alias("sum_value"),
+            dsum2(F.col("value"), DEC28).alias("sum_value"),
         )
         .select("user_id", "sess_start_us", "n_events", "sum_value")
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
+from smartpipeline_spark.rounding import half_up, np_half_up
 
 # deterministic marker lists for the n-gram/stopword language heuristic
 LANG_MARKERS: dict[str, list[str]] = {
@@ -149,7 +150,7 @@ def ext_quality_score(spark, sf_dir):
         n_tokens.alias("n_tokens"),
         n_punct.alias("n_punct"),
         n_stop.alias("n_stopwords"),
-        (F.floor(quality * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)).alias("quality"),
+        half_up(quality, 2).alias("quality"),
     )
 
 
@@ -192,7 +193,7 @@ def ext_tfidf(spark, sf_dir):
             F.col("w").alias("word"),
             "tf",
             "df",
-            (F.floor(tfidf * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("tfidf"),
+            half_up(tfidf, 4).alias("tfidf"),
         )
     )
 
@@ -421,7 +422,7 @@ def ext_data_card(spark, sf_dir):
     share = F.col("n_tokens") * F.lit(1.0) / F.col("total_tokens")
     return per.crossJoin(F.broadcast(tot)).select(
         "source", "lang", "n_docs", "n_tokens",
-        (F.floor(share * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("token_share"),
+        half_up(share, 4).alias("token_share"),
     )
 
 
@@ -487,7 +488,7 @@ def ext_bm25(spark, sf_dir):
         .limit(20)
         .select(
             "doc_id",
-            (F.floor(F.col("raw") * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("bm25"),
+            half_up(F.col("raw"), 4).alias("bm25"),
         )
     )
 
@@ -917,85 +918,91 @@ def query_bm25_index(
     return out
 
 
-_BM25_IDX_CACHE: dict[str, str] = {}
+_FIXTURE_IDX_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _bm25_cache_root() -> str:
-    """Per-user 0700 cache root. A fixed world-shared /tmp name is the
-    classic predictable-tmp hazard (another local user pre-plants or
-    clobbers the path and the oracled key silently serves it); the
-    root is uid-scoped, created 0700, and REJECTED if it turns out to
-    exist with the wrong owner or group/other permissions — that case
-    falls back to a fresh private mkdtemp for this process."""
-    import os
-    import stat as stat_mod
-    import tempfile
+def _fixture_index_for(kind: str, src: str, build, valid) -> str:
+    """Build-once cache of an index saved from one fixture file.
 
-    root = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_bm25_idx_u{os.getuid()}"
-    )
-    try:
-        os.makedirs(root, mode=0o700, exist_ok=True)
-        st = os.stat(root)
-        if st.st_uid != os.getuid() or (st.st_mode & (stat_mod.S_IRWXG | stat_mod.S_IRWXO)):
-            raise OSError("cache root not exclusively ours")
-    except OSError:
-        root = tempfile.mkdtemp(prefix="spark_graft_bm25_idx_")
-    return root
-
-
-def _bm25_index_for(spark, sf_dir: str) -> str:
-    """Build-once cache of the saved index per fixture corpus, keyed by
-    the documents file's identity (path + size + mtime) so a testdata
+    Keyed by ``src``'s identity (path + size + mtime), so a testdata
     regeneration rebuilds instead of serving a stale layout, and
-    CONTENT-CHECKED on reuse: the manifest's exact ``n_docs`` must
-    equal the source parquet's footer row count, so a poisoned, torn,
-    or stale layout rebuilds instead of being served silently."""
+    CONTENT-CHECKED on reuse: ``valid(path)`` (an exception counts as
+    False) must accept a memoized or on-disk copy, so a poisoned, torn
+    or stale layout rebuilds instead of being served silently.
+    ``build(path)`` writes a fresh index to ``path``.
+
+    The cache root is per-user and 0700. A fixed world-shared /tmp name
+    is the classic predictable-tmp hazard (another local user
+    pre-plants or clobbers the path and the oracled key silently serves
+    it); a root that exists with the wrong owner or with group/other
+    permissions is REJECTED in favour of a fresh private mkdtemp for
+    this process."""
     import hashlib
     import os
     import shutil
+    import stat as stat_mod
+    import tempfile
     import uuid
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()
-    ).hexdigest()[:16]
-
-    def _valid(p: str) -> bool:
+    def _ok(p: str) -> bool:
         try:
-            import pyarrow.parquet as pq
-
-            return _bm25_manifest(p)["n_docs"] == pq.ParquetFile(src).metadata.num_rows
+            return bool(valid(p))
         except Exception:
             return False
 
-    cached = _BM25_IDX_CACHE.get(tag)
-    if cached and _valid(cached):
+    st = os.stat(src)
+    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:16]
+    cached = _FIXTURE_IDX_CACHE.get((kind, tag))
+    if cached and _ok(cached):
         return cached
-    path = os.path.join(_bm25_cache_root(), tag)
-    if not _valid(path):
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_idx_u{os.getuid()}")
+    try:
+        os.makedirs(root, mode=0o700, exist_ok=True)
+        rst = os.stat(root)
+        if rst.st_uid != os.getuid() or (rst.st_mode & (stat_mod.S_IRWXG | stat_mod.S_IRWXO)):
+            raise OSError("cache root not exclusively ours")
+    except OSError:
+        root = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_idx_")
+    path = os.path.join(root, tag)
+    if not _ok(path):
         # concurrent sessions (driver + sweep) may race to build the
-        # same corpus tag: build into a private dir, publish with one
-        # atomic rename; the loser keeps the winner's copy — unless the
+        # same tag: build into a private dir, publish with one atomic
+        # rename; the loser keeps the winner's copy — unless the
         # winner's copy fails the content check (pre-existing garbage
         # at the tag path), in which case publish under a fresh name.
         staging = f"{path}.build-{os.getpid()}"
         try:
-            build_bm25_index(sources.table(spark, "documents", sf_dir), staging)
+            build(staging)
         except BaseException:
             shutil.rmtree(staging, ignore_errors=True)
             raise
         try:
             os.rename(staging, path)
         except OSError:
-            if _valid(path):
+            if _ok(path):
                 shutil.rmtree(staging, ignore_errors=True)
             else:
                 path = f"{path}-{uuid.uuid4().hex[:8]}"
                 os.rename(staging, path)
-    _BM25_IDX_CACHE[tag] = path
+    _FIXTURE_IDX_CACHE[(kind, tag)] = path
     return path
+
+
+def _bm25_index_for(spark, sf_dir: str) -> str:
+    """The saved BM25 index of a fixture corpus, built once: valid
+    when the manifest's exact ``n_docs`` equals the documents file's
+    footer row count."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    src = os.path.join(sf_dir, "documents.parquet")
+    return _fixture_index_for(
+        "bm25",
+        src,
+        lambda p: build_bm25_index(sources.table(spark, "documents", sf_dir), p),
+        lambda p: _bm25_manifest(p)["n_docs"] == pq.ParquetFile(src).metadata.num_rows,
+    )
 
 
 @ext_query(
@@ -1043,7 +1050,7 @@ def ext_bm25_indexed(spark, sf_dir):
         query_bm25_index(spark, path, BM25_TERMS, k=20)
         .select(
             "doc_id",
-            (F.floor(F.col("raw") * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("bm25"),
+            half_up(F.col("raw"), 4).alias("bm25"),
         )
     )
 
@@ -1306,7 +1313,7 @@ def ext_pmi(spark, sf_dir):
         .crossJoin(F.broadcast(n_bg))
         .select(
             "l", "r", "c2",
-            (F.floor(pmi * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)).alias("pmi"),
+            half_up(pmi, 4).alias("pmi"),
         )
     )
 
@@ -1469,9 +1476,7 @@ def ext_zipf_spectrum(spark, sf_dir):
         F.col("freq").cast("bigint").alias("freq"),
         F.col("n_words").cast("bigint").alias("n_words"),
         "rank_mid",
-        (F.floor(F.col("slope") * 10000.0 + F.lit(0.5)) / 10000.0).alias(
-            "zipf_slope"
-        ),
+        half_up(F.col("slope"), 4).alias("zipf_slope"),
     )
 
 
@@ -1505,11 +1510,10 @@ def compression_ratio(
             out = pd.DataFrame({"doc_id": pdf["doc_id"]})
             out["n_bytes"] = n_b
             out["z_bytes"] = z_b
+            # the fixture oracle's int() truncation equals this floor
+            # only because z / n is never negative
             out["ratio"] = pd.array(
-                [
-                    float(int(z / n * 10000 + 0.5)) / 10000 if n else None
-                    for n, z in zip(n_b, z_b)
-                ],
+                [np_half_up(z / n, 4) if n else None for n, z in zip(n_b, z_b)],
                 dtype="Float64",
             )
             yield out
@@ -1739,13 +1743,12 @@ def entropy_metrics(
             / F.sum("c").cast("double")
         ).alias("_hw"),
     )
-    r4 = lambda c: F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
     return char_side.join(word_side, "doc_id", "left").select(
         "doc_id",
         "n_chars",
         F.coalesce(F.col("n_words"), F.lit(0)).cast("long").alias("n_words"),
-        r4(F.col("_hc")).alias("char_entropy"),
-        r4(F.col("_hw")).alias("word_entropy"),
+        half_up(F.col("_hc"), 4).alias("char_entropy"),
+        half_up(F.col("_hw"), 4).alias("word_entropy"),
         (
             (F.col("_hc") >= F.lit(float(min_char_entropy)))
             & F.coalesce(
@@ -1830,7 +1833,7 @@ def readability_scores(
         F.lit(206.835) - F.lit(1.015) * (words / sents)
         - F.lit(84.6) * (syll / words)
     )
-    r2 = F.floor(score * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
+    flesch = half_up(score, 2)
     return (
         df.withColumn("_lw", lower)
         .select(
@@ -1838,10 +1841,10 @@ def readability_scores(
             words.cast("long").alias("n_words"),
             sents.cast("long").alias("n_sentences"),
             syll.cast("long").alias("n_syllables"),
-            r2.alias("flesch"),
-            F.when(r2 >= 70, F.lit("easy"))
-            .when(r2 >= 50, F.lit("standard"))
-            .when(r2 >= 30, F.lit("difficult"))
+            flesch.alias("flesch"),
+            F.when(flesch >= 70, F.lit("easy"))
+            .when(flesch >= 50, F.lit("standard"))
+            .when(flesch >= 30, F.lit("difficult"))
             .otherwise(F.lit("very_difficult"))
             .alias("band"),
         )

@@ -11,17 +11,10 @@ same key with IDENTICAL output column names (the driver's comparator
 sorts columns by name before hashing).
 
 Determinism rules applied throughout (the hash-match hazards from
-SURVEY.md §7.3, solved once here):
-* money/measure SUM/AVG go through DECIMAL: per-row doubles are
-  bit-identical across engines, casting them to DECIMAL(18,4)/(22,8)
-  is exact (inputs have <=6 true decimal digits, far from cast-tie
-  boundaries), and DECIMAL summation is exact integer arithmetic —
-  immune to float summation-order differences between Spark's
-  partial-aggregate tree and DuckDB's scan order;
-* rounding uses FLOOR(x*100+0.5)/100 instead of ROUND: Spark's ROUND
-  rounds the shortest-decimal-string of the double (BigDecimal.valueOf)
-  while DuckDB rounds the binary value, so exact .xx5 ties diverge;
-  the FLOOR form is the same IEEE ops on both sides;
+SURVEY.md §7.3):
+* money/measure SUM/AVG go through DECIMAL and rounding uses the
+  FLOOR(x*10^k+0.5)/10^k form, never ROUND — both through
+  :mod:`smartpipeline_spark.rounding`, which states why;
 * dates/timestamps output as formatted strings or epoch integers;
 * every top-k / window ordering carries a unique-key tiebreak.
 
@@ -42,6 +35,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from smartpipeline_spark import sources
+from smartpipeline_spark.rounding import (
+    DEC4,
+    DEC8,
+    DEC28,
+    davg2,
+    dsum2,
+    half_up,
+    sql_davg2,
+    sql_dsum2,
+    sql_half_up,
+)
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -61,47 +65,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return sources.table(spark, name, sf_dir)
 
 
-DEC4 = "decimal(18,4)"
-DEC8 = "decimal(22,8)"
-
-
-def r2(col):
-    """Engine-portable 2-decimal rounding: FLOOR(x*100+0.5)/100 is the
-    same IEEE double ops in Spark and DuckDB (unlike ROUND, see module
-    docstring)."""
-    return F.floor(col * F.lit(100.0) + F.lit(0.5)) / F.lit(100.0)
-
-
-def r4(col):
-    """4-decimal twin of :func:`r2` for small-magnitude statistics
-    (correlations, variances of narrow columns)."""
-    return F.floor(col * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
-
-
-def dsum2(col, dec: str = DEC4):
-    """Exact decimal SUM of a per-row double, output as 2-dec double."""
-    return r2(F.sum(col.cast(dec)).cast("double"))
-
-
-def davg2(col, count_col, dec: str = DEC4):
-    """AVG as exact-decimal SUM / COUNT, rounded: both engines divide
-    the identical double by the identical count."""
-    return r2(F.sum(col.cast(dec)).cast("double") / count_col)
-
-
-# SQL fragments mirroring the helpers above (DuckDB dialect)
-def _sql_r2(expr: str) -> str:
-    return f"FLOOR(({expr}) * 100.0 + 0.5) / 100.0"
-
-
-def _sql_dsum2(expr: str, dec: str = "DECIMAL(18,4)") -> str:
-    return _sql_r2(f"CAST(SUM(CAST({expr} AS {dec})) AS DOUBLE)")
-
-
-def _sql_davg2(expr: str, count_expr: str = "COUNT(*)", dec: str = "DECIMAL(18,4)") -> str:
-    return _sql_r2(f"CAST(SUM(CAST({expr} AS {dec})) AS DOUBLE) / {count_expr}")
-
-
 # ---------------------------------------------------------------------------
 # Scans & sinks
 # ---------------------------------------------------------------------------
@@ -115,10 +78,10 @@ def q01_scan_count(spark, sf_dir):
 @query(
     "q02_sink_roundtrip",
     f"""SELECT COUNT(*) AS n_rows,
-               {_sql_dsum2('o_totalprice')} AS sum_total,
+               {sql_dsum2('o_totalprice')} AS sum_total,
                (SELECT COUNT(*) FROM orders WHERE year(CAST(o_orderdate AS DATE)) = 1997)
                  AS n_rows_1997,
-               (SELECT {_sql_dsum2('o_totalprice')} FROM orders
+               (SELECT {sql_dsum2('o_totalprice')} FROM orders
                 WHERE year(CAST(o_orderdate AS DATE)) = 1997) AS sum_total_1997
         FROM orders""",
 )
@@ -214,7 +177,7 @@ def q04_join_inner(spark, sf_dir):
     "q05_join_left_agg",
     f"""SELECT c_custkey, c_name,
                COUNT(o_orderkey) AS n_orders,
-               COALESCE({_sql_dsum2('o_totalprice')}, 0.0) AS sum_spent
+               COALESCE({sql_dsum2('o_totalprice')}, 0.0) AS sum_spent
         FROM customer LEFT JOIN orders ON o_custkey = c_custkey
         GROUP BY c_custkey, c_name""",
 )
@@ -238,7 +201,7 @@ def q05_join_left_agg(spark, sf_dir):
 @query(
     "q06_join_broadcast",
     f"""SELECT n_name,
-               {_sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS revenue,
+               {sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
@@ -298,7 +261,7 @@ def q08_join_anti(spark, sf_dir):
     f"""SELECT l_orderkey,
               strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS o_date,
               o_orderpriority,
-              {_sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS revenue
+              {sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS revenue
        FROM customer
        JOIN orders ON c_custkey = o_custkey
        JOIN lineitem ON l_orderkey = o_orderkey
@@ -336,7 +299,7 @@ def q09_join_3way(spark, sf_dir):
 @query(
     "q10_join_range",
     f"""SELECT l_returnflag, COUNT(*) AS n_rows,
-              {_sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS sum_rev
+              {sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS sum_rev
        FROM lineitem JOIN orders
          ON l_orderkey = o_orderkey
         AND CAST(l_shipdate AS DATE) BETWEEN CAST(o_orderdate AS DATE)
@@ -373,13 +336,13 @@ def q10_join_range(spark, sf_dir):
 @query(
     "q11_agg_pricing_summary",
     f"""SELECT l_returnflag, l_linestatus,
-              {_sql_dsum2('l_quantity')} AS sum_qty,
-              {_sql_dsum2('l_extendedprice')} AS sum_base_price,
-              {_sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS sum_disc_price,
-              {_sql_dsum2('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)', 'DECIMAL(22,8)')} AS sum_charge,
-              {_sql_davg2('l_quantity')} AS avg_qty,
-              {_sql_davg2('l_extendedprice')} AS avg_price,
-              {_sql_davg2('l_discount')} AS avg_disc,
+              {sql_dsum2('l_quantity')} AS sum_qty,
+              {sql_dsum2('l_extendedprice')} AS sum_base_price,
+              {sql_dsum2('l_extendedprice * (1 - l_discount)', 'DECIMAL(22,8)')} AS sum_disc_price,
+              {sql_dsum2('(l_extendedprice * (1 - l_discount)) * (1 + l_tax)', 'DECIMAL(22,8)')} AS sum_charge,
+              {sql_davg2('l_quantity')} AS avg_qty,
+              {sql_davg2('l_extendedprice')} AS avg_price,
+              {sql_davg2('l_discount')} AS avg_disc,
               COUNT(*) AS count_order
        FROM lineitem
        WHERE CAST(l_shipdate AS DATE) <= DATE '1998-09-02'
@@ -459,7 +422,7 @@ def q12b_approx_distinct(spark, sf_dir):
 @query(
     "q13_rollup",
     f"""SELECT n_name, c_mktsegment, COUNT(*) AS n_cust,
-              {_sql_davg2('c_acctbal')} AS avg_bal
+              {sql_davg2('c_acctbal')} AS avg_bal
        FROM customer JOIN nation ON c_nationkey = n_nationkey
        GROUP BY ROLLUP(n_name, c_mktsegment)""",
 )
@@ -479,7 +442,7 @@ def q13_rollup(spark, sf_dir):
 @query(
     "q14_cube",
     f"""SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n,
-              {_sql_dsum2('o_totalprice')} AS total
+              {sql_dsum2('o_totalprice')} AS total
        FROM orders
        GROUP BY CUBE(o_orderpriority, o_orderstatus)""",
 )
@@ -493,7 +456,7 @@ def q14_cube(spark, sf_dir):
 @query(
     "q13b_grouping_sets",
     f"""SELECT n_name, c_mktsegment, COUNT(*) AS n_cust,
-               {_sql_dsum2('c_acctbal')} AS sum_bal
+               {sql_dsum2('c_acctbal')} AS sum_bal
         FROM customer JOIN nation ON c_nationkey = n_nationkey
         GROUP BY GROUPING SETS ((n_name), (c_mktsegment), ())""",
 )
@@ -519,10 +482,10 @@ def q13b_grouping_sets(spark, sf_dir):
 @query(
     "q28_percentiles",
     f"""SELECT o_orderstatus,
-               {_sql_r2("quantile_cont(o_totalprice, 0.5)")} AS median_price,
-               {_sql_r2("quantile_cont(o_totalprice, 0.9)")} AS p90_price,
-               {_sql_r2("MIN(o_totalprice)")} AS min_price,
-               {_sql_r2("MAX(o_totalprice)")} AS max_price
+               {sql_half_up("quantile_cont(o_totalprice, 0.5)", 2)} AS median_price,
+               {sql_half_up("quantile_cont(o_totalprice, 0.9)", 2)} AS p90_price,
+               {sql_half_up("MIN(o_totalprice)", 2)} AS min_price,
+               {sql_half_up("MAX(o_totalprice)", 2)} AS max_price
         FROM orders GROUP BY o_orderstatus""",
 )
 def q28_percentiles(spark, sf_dir):
@@ -532,10 +495,10 @@ def q28_percentiles(spark, sf_dir):
     swap when exactness isn't required."""
     o = _t(spark, sf_dir, "orders")
     return o.groupBy("o_orderstatus").agg(
-        r2(F.expr("percentile(o_totalprice, 0.5)")).alias("median_price"),
-        r2(F.expr("percentile(o_totalprice, 0.9)")).alias("p90_price"),
-        r2(F.min("o_totalprice")).alias("min_price"),
-        r2(F.max("o_totalprice")).alias("max_price"),
+        half_up(F.expr("percentile(o_totalprice, 0.5)"), 2).alias("median_price"),
+        half_up(F.expr("percentile(o_totalprice, 0.9)"), 2).alias("p90_price"),
+        half_up(F.min("o_totalprice"), 2).alias("min_price"),
+        half_up(F.max("o_totalprice"), 2).alias("max_price"),
     )
 
 
@@ -544,7 +507,7 @@ def q28_percentiles(spark, sf_dir):
     f"""SELECT o_orderpriority,
                COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
                COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-               {_sql_dsum2("CASE WHEN o_orderstatus = 'F' THEN o_totalprice END")} AS total_finished
+               {sql_dsum2("CASE WHEN o_orderstatus = 'F' THEN o_totalprice END")} AS total_finished
         FROM orders GROUP BY o_orderpriority""",
 )
 def q33_filtered_agg(spark, sf_dir):
@@ -654,14 +617,14 @@ def q15_window_topk(spark, sf_dir):
 @query(
     "q16_window_running",
     f"""SELECT o_custkey, o_orderkey,
-              {_sql_r2('''CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+              {sql_half_up('''CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
                  PARTITION BY o_custkey
                  ORDER BY CAST(o_orderdate AS DATE), o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)''')} AS running,
-              {_sql_r2('''CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
+                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)''', 2)} AS running,
+              {sql_half_up('''CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) OVER (
                  PARTITION BY o_custkey
                  ORDER BY date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-                 RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS DOUBLE)''')} AS rolling_30d
+                 RANGE BETWEEN 30 PRECEDING AND CURRENT ROW) AS DOUBLE)''', 2)} AS rolling_30d
        FROM orders""",
 )
 def q16_window_running(spark, sf_dir):
@@ -685,8 +648,8 @@ def q16_window_running(spark, sf_dir):
     return o.select(
         "o_custkey",
         "o_orderkey",
-        r2(F.sum(F.col("o_totalprice").cast(DEC4)).over(w).cast("double")).alias("running"),
-        r2(F.sum(F.col("o_totalprice").cast(DEC4)).over(w_range).cast("double")).alias(
+        half_up(F.sum(F.col("o_totalprice").cast(DEC4)).over(w).cast("double"), 2).alias("running"),
+        half_up(F.sum(F.col("o_totalprice").cast(DEC4)).over(w_range).cast("double"), 2).alias(
             "rolling_30d"
         ),
     )
@@ -696,11 +659,11 @@ def q16_window_running(spark, sf_dir):
     "q17_window_lag",
     f"""SELECT o_custkey, o_orderkey,
               LAG(o_totalprice) OVER w AS prev_price,
-              {_sql_r2('o_totalprice - LAG(o_totalprice) OVER w')} AS delta,
+              {sql_half_up('o_totalprice - LAG(o_totalprice) OVER w', 2)} AS delta,
               FIRST_VALUE(o_orderkey) OVER w AS first_key,
               NTH_VALUE(o_orderkey, 3) OVER w AS third_key,
-              {_sql_r2('PERCENT_RANK() OVER w * 1000.0')} AS pct_rank_k,
-              {_sql_r2('CUME_DIST() OVER w * 1000.0')} AS cume_k
+              {sql_half_up('PERCENT_RANK() OVER w * 1000.0', 2)} AS pct_rank_k,
+              {sql_half_up('CUME_DIST() OVER w * 1000.0', 2)} AS cume_k
        FROM orders
        WINDOW w AS (PARTITION BY o_custkey
                     ORDER BY CAST(o_orderdate AS DATE), o_orderkey)""",
@@ -719,11 +682,11 @@ def q17_window_lag(spark, sf_dir):
         "o_custkey",
         "o_orderkey",
         prev.alias("prev_price"),
-        r2(F.col("o_totalprice") - prev).alias("delta"),
+        half_up(F.col("o_totalprice") - prev, 2).alias("delta"),
         F.first("o_orderkey").over(wf).alias("first_key"),
         F.nth_value("o_orderkey", 3).over(wf).alias("third_key"),
-        r2(F.percent_rank().over(w) * F.lit(1000.0)).alias("pct_rank_k"),
-        r2(F.cume_dist().over(w) * F.lit(1000.0)).alias("cume_k"),
+        half_up(F.percent_rank().over(w) * F.lit(1000.0), 2).alias("pct_rank_k"),
+        half_up(F.cume_dist().over(w) * F.lit(1000.0), 2).alias("cume_k"),
     )
 
 
@@ -822,7 +785,7 @@ def q20_intersect_except(spark, sf_dir):
               upper(p_type) AS type_upper,
               length(p_name) AS name_len,
               CAST(regexp_extract(p_brand, '([0-9]+)', 1) AS INT) AS brand_num,
-              {_sql_r2('p_retailprice * 1.1')} AS uplift,
+              {sql_half_up('p_retailprice * 1.1', 2)} AS uplift,
               concat(p_brand, ':', p_type) AS brand_type,
               replace(p_name, ' ', '_') AS snake_name
        FROM part""",
@@ -836,7 +799,7 @@ def q21_scalar_strings(spark, sf_dir):
         F.upper("p_type").alias("type_upper"),
         F.length("p_name").alias("name_len"),
         F.regexp_extract("p_brand", "([0-9]+)", 1).cast("int").alias("brand_num"),
-        r2(F.col("p_retailprice") * 1.1).alias("uplift"),
+        half_up(F.col("p_retailprice") * 1.1, 2).alias("uplift"),
         F.concat_ws(":", "p_brand", "p_type").alias("brand_type"),
         F.regexp_replace("p_name", " ", "_").alias("snake_name"),
     )
@@ -975,7 +938,7 @@ def q27_explode_wordfreq(spark, sf_dir):
                        '%Y-%m-%d %H:%M:%S') AS window_start,
               event_type,
               COUNT(*) AS n_events,
-              {_sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
+              {sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
        FROM events
        GROUP BY window_start, event_type""",
 )
@@ -985,7 +948,7 @@ def q22_tumbling_window(spark, sf_dir):
     w = F.window("ts", "1 hour")
     return e.groupBy(w, "event_type").agg(
         F.count("*").alias("n_events"),
-        dsum2(F.col("value"), "decimal(28,12)").alias("sum_value"),
+        dsum2(F.col("value"), DEC28).alias("sum_value"),
     ).select(
         F.date_format(F.col("window.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -1038,7 +1001,7 @@ def q22b_sliding_window(spark, sf_dir):
                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
          FROM marked)
        SELECT user_id, MIN(t_us) AS sess_start_us, COUNT(*) AS n_events,
-              {_sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
+              {sql_dsum2('value', 'DECIMAL(28,12)')} AS sum_value
        FROM sess GROUP BY user_id, sid""",
 )
 def q23_session_window(spark, sf_dir):
@@ -1052,7 +1015,7 @@ def q23_session_window(spark, sf_dir):
         .agg(
             F.min("t_us").alias("sess_start_us"),
             F.count("*").alias("n_events"),
-            dsum2(F.col("value"), "decimal(28,12)").alias("sum_value"),
+            dsum2(F.col("value"), DEC28).alias("sum_value"),
         )
         .select("user_id", "sess_start_us", "n_events", "sum_value")
     )
@@ -1404,7 +1367,7 @@ def q37_udtf_sentences(spark, sf_dir):
 @query(
     "q38_tpch_q5",
     f"""SELECT n_name,
-               {_sql_dsum2("l_extendedprice * (1 - l_discount)", "DECIMAL(28,12)")} AS revenue
+               {sql_dsum2("l_extendedprice * (1 - l_discount)", "DECIMAL(28,12)")} AS revenue
         FROM customer, orders, lineitem, supplier, nation, region
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
           AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey
@@ -1442,7 +1405,7 @@ def q38_tpch_q5(spark, sf_dir):
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
     )
     rev = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC8)
-    return joined.groupBy("n_name").agg(r2(F.sum(rev).cast("double")).alias("revenue"))
+    return joined.groupBy("n_name").agg(half_up(F.sum(rev).cast("double"), 2).alias("revenue"))
 
 
 @query(
@@ -1462,15 +1425,15 @@ def q39_stat_moments(spark, sf_dir):
     squares, cross-moments), so the exchange carries one constant-size
     state row per (partition x group) — identical scale profile to a
     plain SUM at any corpus size. Rounded like every other double
-    aggregate here (relational.py header: fp sum-order drift)."""
+    aggregate here (rounding.py header: fp sum-order drift)."""
     li = _t(spark, sf_dir, "lineitem")
     q, p = F.col("l_quantity"), F.col("l_extendedprice")
     return li.groupBy("l_returnflag").agg(
-        r4(F.corr(q, p)).alias("corr_qty_price"),
-        r2(F.covar_samp(q, p)).alias("covar_qp"),
-        r2(F.stddev_samp(p)).alias("sd_price"),
-        r4(F.var_pop(q)).alias("var_qty"),
-        r4(F.regr_slope(p, q)).alias("slope"),
+        half_up(F.corr(q, p), 4).alias("corr_qty_price"),
+        half_up(F.covar_samp(q, p), 2).alias("covar_qp"),
+        half_up(F.stddev_samp(p), 2).alias("sd_price"),
+        half_up(F.var_pop(q), 4).alias("var_qty"),
+        half_up(F.regr_slope(p, q), 4).alias("slope"),
     )
 
 
@@ -1571,7 +1534,7 @@ def q41_gapfill(spark, sf_dir):
         "event_type",
         "h",
         "n_events",
-        r2(F.coalesce(F.max("sv").over(w_isl), F.lit(0.0))).alias("sum_filled"),
+        half_up(F.coalesce(F.max("sv").over(w_isl), F.lit(0.0)), 2).alias("sum_filled"),
         (F.col("n_events") == 0).alias("is_gap"),
     )
 
@@ -1609,7 +1572,7 @@ def q42_udaf_geomean(spark, sf_dir):
 
     li = _t(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 0)
     return li.groupBy("l_returnflag").agg(
-        r4(geomean("l_quantity")).alias("geomean_qty"),
+        half_up(geomean("l_quantity"), 4).alias("geomean_qty"),
         n_rows("l_quantity").alias("n"),
     )
 
@@ -1625,7 +1588,7 @@ def q42_udaf_geomean(spark, sf_dir):
         FULL OUTER JOIN (
               SELECT o_custkey,
                      COUNT(*) AS n_orders,
-                     {_sql_dsum2("o_totalprice")} AS total_f
+                     {sql_dsum2("o_totalprice")} AS total_f
               FROM orders WHERE o_orderstatus = 'F'
               GROUP BY o_custkey) o
         ON c.c_custkey = o.o_custkey""",
@@ -1705,7 +1668,7 @@ def q44_having_in(spark, sf_dir):
           SELECT o_orderpriority,
                  CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS n_open,
                  CAST(COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS DOUBLE) AS n_finished,
-                 {_sql_dsum2("o_totalprice")} AS total_price
+                 {sql_dsum2("o_totalprice")} AS total_price
           FROM orders GROUP BY o_orderpriority)
         SELECT o_orderpriority, 'n_open' AS metric, n_open AS value FROM w
         UNION ALL
@@ -1816,7 +1779,7 @@ def q47_try_arith(spark, sf_dir):
 @query(
     "q48_sql_udf",
     f"""SELECT o_orderkey,
-               {_sql_dsum2("l_extendedprice * (1 - l_discount)")} AS revenue
+               {sql_dsum2("l_extendedprice * (1 - l_discount)")} AS revenue
         FROM orders JOIN lineitem ON l_orderkey = o_orderkey
         WHERE o_totalprice > 400000.0
         GROUP BY o_orderkey""",
@@ -2172,7 +2135,7 @@ def q57_grouped_map(spark, sf_dir):
     f"""WITH tgt AS (SELECT c_custkey, c_name, c_acctbal FROM customer
                      WHERE c_custkey <= 1200),
             src AS (SELECT o_custkey,
-                           {_sql_dsum2("o_totalprice")} AS new_bal
+                           {sql_dsum2("o_totalprice")} AS new_bal
                     FROM orders GROUP BY o_custkey)
        SELECT COALESCE(t.c_custkey, s.o_custkey) AS custkey,
               CASE WHEN t.c_custkey IS NULL THEN 'new-customer'
@@ -2230,10 +2193,10 @@ def q58_merge_upsert(spark, sf_dir):
                strftime(time_bucket(INTERVAL 1 HOUR, CAST(ts AS TIMESTAMP)),
                         '%Y-%m-%d %H:%M:%S') AS hour_start,
                COUNT(*) AS n_events,
-               {_sql_r2('arg_min(value, ts)')} AS open_v,
-               {_sql_r2('arg_max(value, ts)')} AS close_v,
-               {_sql_r2('MIN(value)')} AS low_v,
-               {_sql_r2('MAX(value)')} AS high_v
+               {sql_half_up('arg_min(value, ts)', 2)} AS open_v,
+               {sql_half_up('arg_max(value, ts)', 2)} AS close_v,
+               {sql_half_up('MIN(value)', 2)} AS low_v,
+               {sql_half_up('MAX(value)', 2)} AS high_v
         FROM events
         GROUP BY user_id, hour_start""",
 )
@@ -2246,7 +2209,7 @@ def q59_ohlc_downsample(spark, sf_dir):
     not the raw stream. Deterministic because (user_id, ts) is unique
     in this corpus (verified); with tie-prone data, order min_by on a
     (ts, event_id) struct instead. Epoch-aligned hours match DuckDB's
-    time_bucket; values round via the shared r2 helper."""
+    time_bucket; values round via the shared half_up helper."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -2257,10 +2220,10 @@ def q59_ohlc_downsample(spark, sf_dir):
         )
         .agg(
             F.count("*").alias("n_events"),
-            r2(F.min_by("value", "ts")).alias("open_v"),
-            r2(F.max_by("value", "ts")).alias("close_v"),
-            r2(F.min("value")).alias("low_v"),
-            r2(F.max("value")).alias("high_v"),
+            half_up(F.min_by("value", "ts"), 2).alias("open_v"),
+            half_up(F.max_by("value", "ts"), 2).alias("close_v"),
+            half_up(F.min("value"), 2).alias("low_v"),
+            half_up(F.max("value"), 2).alias("high_v"),
         )
     )
 
@@ -2269,12 +2232,12 @@ def q59_ohlc_downsample(spark, sf_dir):
     "q60_scd2",
     f"""WITH init AS (
           SELECT c_custkey AS custkey,
-                 {_sql_r2('c_acctbal')} AS bal,
+                 {sql_half_up('c_acctbal', 2)} AS bal,
                  DATE '1991-12-31' AS valid_from
           FROM customer),
         chg AS (
           SELECT o_custkey AS custkey,
-                 {_sql_dsum2('o_totalprice')} AS bal,
+                 {sql_dsum2('o_totalprice')} AS bal,
                  CAST(o_orderdate AS DATE) AS valid_from
           FROM orders GROUP BY o_custkey, CAST(o_orderdate AS DATE)),
         hist AS (SELECT * FROM init UNION ALL SELECT * FROM chg)
@@ -2303,7 +2266,7 @@ def q60_scd2(spark, sf_dir):
 
     init = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"),
-        r2(F.col("c_acctbal")).alias("bal"),
+        half_up(F.col("c_acctbal"), 2).alias("bal"),
         F.lit("1991-12-31").cast("date").alias("valid_from"),
     )
     chg = (
@@ -2330,17 +2293,17 @@ def q60_scd2(spark, sf_dir):
 @query(
     "q61_snapshot_diff",
     f"""WITH old AS (SELECT c_custkey AS custkey, c_name AS name,
-                            {_sql_r2('c_acctbal')} AS acctbal
+                            {sql_half_up('c_acctbal', 2)} AS acctbal
                      FROM customer),
         tgt AS (SELECT c_custkey, c_name, c_acctbal FROM customer
                 WHERE c_custkey <= 1200),
-        src AS (SELECT o_custkey, {_sql_dsum2('o_totalprice')} AS new_bal
+        src AS (SELECT o_custkey, {sql_dsum2('o_totalprice')} AS new_bal
                 FROM orders GROUP BY o_custkey),
         new AS (
           SELECT COALESCE(t.c_custkey, s.o_custkey) AS custkey,
                  CASE WHEN t.c_custkey IS NULL THEN 'new-customer'
                       ELSE t.c_name END AS name,
-                 {_sql_r2("CASE WHEN s.o_custkey IS NULL THEN t.c_acctbal ELSE s.new_bal END")} AS acctbal
+                 {sql_half_up("CASE WHEN s.o_custkey IS NULL THEN t.c_acctbal ELSE s.new_bal END", 2)} AS acctbal
           FROM tgt t FULL OUTER JOIN src s ON t.c_custkey = s.o_custkey)
        SELECT COALESCE(o.custkey, n.custkey) AS custkey,
               CASE WHEN o.custkey IS NULL THEN 'insert'
@@ -2374,10 +2337,10 @@ def q61_snapshot_diff(spark, sf_dir):
     old = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("custkey"),
         F.col("c_name").alias("name"),
-        r2(F.col("c_acctbal")).alias("acctbal"),
+        half_up(F.col("c_acctbal"), 2).alias("acctbal"),
     )
     new = q58_merge_upsert(spark, sf_dir).select(
-        "custkey", "name", r2(F.col("acctbal")).alias("acctbal")
+        "custkey", "name", half_up(F.col("acctbal"), 2).alias("acctbal")
     )
     o, n = old.alias("o"), new.alias("n")
     j = o.join(n, F.col("o.custkey") == F.col("n.custkey"), "full_outer")

@@ -17,7 +17,8 @@ in their oracle CTEs.
 
 Every query follows the determinism contract from
 ``relational.py``'s module header: money aggregates through exact
-DECIMAL summation, FLOOR-based rounding, date output as formatted
+DECIMAL summation and FLOOR-based rounding (both from
+``rounding.py``), date output as formatted
 strings, unique-key tiebreaks on every ORDER BY ... LIMIT.
 
 Scale notes are inline per query; the common shape is one
@@ -30,23 +31,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from smartpipeline_spark.operators.relational import (
-    DEC4,
-    DEC8,
-    _sql_dsum2,
-    _t,
-    dsum2,
-    query,
-    r2,
-    r4,
-)
-
-_DEC28 = "decimal(28,12)"
+from smartpipeline_spark.operators.relational import _t, query
+from smartpipeline_spark.rounding import DEC4, DEC28, dsum2, half_up, sql_dsum2
 
 
 def _rev():
     """l_extendedprice * (1 - l_discount) as exact decimal."""
-    return (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(_DEC28)
+    return (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(DEC28)
 
 
 _SQL_REV = "l_extendedprice * (1 - l_discount)"
@@ -55,7 +46,7 @@ _SQL_REV = "l_extendedprice * (1 - l_discount)"
 @query(
     "q63_tpch_q3",
     f"""SELECT l_orderkey,
-               {_sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue,
+               {sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue,
                strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS orderdate
         FROM customer, orders, lineitem
         WHERE c_mktsegment = 'BUILDING'
@@ -87,7 +78,7 @@ def q63_tpch_q3(spark, sf_dir):
             "l_orderkey",
             F.date_format(F.to_date("o_orderdate"), "yyyy-MM-dd").alias("orderdate"),
         )
-        .agg(r2(F.sum(_rev()).cast("double")).alias("revenue"))
+        .agg(half_up(F.sum(_rev()).cast("double"), 2).alias("revenue"))
         .orderBy(F.desc("revenue"), "l_orderkey")
         .limit(10)
     )
@@ -130,7 +121,7 @@ def q64_tpch_q4(spark, sf_dir):
 
 @query(
     "q65_tpch_q6",
-    f"""SELECT {_sql_dsum2("l_extendedprice * l_discount", "DECIMAL(28,12)")} AS revenue
+    f"""SELECT {sql_dsum2("l_extendedprice * l_discount", "DECIMAL(28,12)")} AS revenue
         FROM lineitem
         WHERE CAST(l_shipdate AS DATE) >= DATE '1997-01-01'
           AND CAST(l_shipdate AS DATE) < DATE '1998-01-01'
@@ -152,14 +143,14 @@ def q65_tpch_q6(spark, sf_dir):
         & (F.col("l_discount") <= 0.07)
         & (F.col("l_quantity") < 24)
     )
-    disc_rev = (F.col("l_extendedprice") * F.col("l_discount")).cast(_DEC28)
-    return li.agg(r2(F.sum(disc_rev).cast("double")).alias("revenue"))
+    disc_rev = (F.col("l_extendedprice") * F.col("l_discount")).cast(DEC28)
+    return li.agg(half_up(F.sum(disc_rev).cast("double"), 2).alias("revenue"))
 
 
 @query(
     "q66_tpch_q7",
     f"""SELECT supp_nation, cust_nation, yr,
-               {_sql_dsum2("volume", "DECIMAL(28,12)")} AS revenue
+               {sql_dsum2("volume", "DECIMAL(28,12)")} AS revenue
         FROM (SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                      year(CAST(l_shipdate AS DATE)) AS yr,
                      {_SQL_REV} AS volume
@@ -207,7 +198,7 @@ def q66_tpch_q7(spark, sf_dir):
     return (
         joined.withColumn("yr", F.year(sd))
         .groupBy("supp_nation", "cust_nation", "yr")
-        .agg(r2(F.sum(_rev()).cast("double")).alias("revenue"))
+        .agg(half_up(F.sum(_rev()).cast("double"), 2).alias("revenue"))
     )
 
 
@@ -266,12 +257,12 @@ def q67_tpch_q8(spark, sf_dir):
         .join(F.broadcast(n2), s.s_nationkey == F.col("n2_key"))
     )
     vol = _rev()
-    nat_vol = F.when(F.col("nation") == "NATION_3", vol).otherwise(F.lit(0.0).cast(_DEC28))
+    nat_vol = F.when(F.col("nation") == "NATION_3", vol).otherwise(F.lit(0.0).cast(DEC28))
     return (
         joined.withColumn("yr", F.year(F.to_date("o_orderdate")))
         .groupBy("yr")
         .agg(
-            r4(F.sum(nat_vol).cast("double") / F.sum(vol).cast("double")).alias("mkt_share")
+            half_up(F.sum(nat_vol).cast("double") / F.sum(vol).cast("double"), 4).alias("mkt_share")
         )
     )
 
@@ -279,7 +270,7 @@ def q67_tpch_q8(spark, sf_dir):
 @query(
     "q68_tpch_q10",
     f"""SELECT c_custkey, c_name,
-               {_sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue,
+               {sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue,
                c_acctbal, n_name
         FROM customer, orders, lineitem, nation
         WHERE c_custkey = o_custkey AND l_orderkey = o_orderkey
@@ -310,7 +301,7 @@ def q68_tpch_q10(spark, sf_dir):
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
-        .agg(r2(F.sum(_rev()).cast("double")).alias("revenue"))
+        .agg(half_up(F.sum(_rev()).cast("double"), 2).alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
         .orderBy(F.desc("revenue"), "c_custkey")
         .limit(20)
@@ -371,12 +362,12 @@ def q70_tpch_q14(spark, sf_dir):
     )
     p = _t(spark, sf_dir, "part")
     vol = _rev()
-    promo = F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0).cast(_DEC28))
+    promo = F.when(F.col("p_type") == "PROMO", vol).otherwise(F.lit(0.0).cast(DEC28))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .agg(
-            r4(
-                F.lit(100.0) * F.sum(promo).cast("double") / F.sum(vol).cast("double")
+            half_up(
+                F.lit(100.0) * F.sum(promo).cast("double") / F.sum(vol).cast("double"), 4
             ).alias("promo_revenue")
         )
     )
@@ -421,7 +412,7 @@ def q71_tpch_q15(spark, sf_dir):
         .select(
             "s_suppkey",
             "s_name",
-            r2(F.col("total").cast("double")).alias("total_revenue"),
+            half_up(F.col("total").cast("double"), 2).alias("total_revenue"),
         )
     )
 
@@ -459,8 +450,8 @@ def q72_tpch_q17(spark, sf_dir):
         brand_li.join(F.broadcast(per_part), F.col("l_partkey") == F.col("pp_key"))
         .filter(F.col("l_quantity") < F.col("qty_cutoff"))
         .agg(
-            r2(
-                F.sum(F.col("l_extendedprice").cast(DEC4)).cast("double") / F.lit(7.0)
+            half_up(
+                F.sum(F.col("l_extendedprice").cast(DEC4)).cast("double") / F.lit(7.0), 2
             ).alias("avg_yearly")
         )
     )
@@ -517,7 +508,7 @@ def q73_tpch_q18(spark, sf_dir):
 @query(
     "q74_tpch_q22",
     f"""SELECT cntrycode, COUNT(*) AS numcust,
-               {_sql_dsum2("c_acctbal")} AS totacctbal
+               {sql_dsum2("c_acctbal")} AS totacctbal
         FROM (SELECT c_nationkey % 10 AS cntrycode, c_acctbal, c_custkey
               FROM customer
               WHERE c_nationkey % 10 IN (1, 2, 3, 4, 5)
@@ -612,7 +603,7 @@ def q76_tpch_q12(spark, sf_dir):
 
 @query(
     "q77_tpch_q19",
-    f"""SELECT {_sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue
+    f"""SELECT {sql_dsum2(_SQL_REV, "DECIMAL(28,12)")} AS revenue
         FROM lineitem, part
         WHERE p_partkey = l_partkey AND (
              (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
@@ -645,7 +636,7 @@ def q77_tpch_q19(spark, sf_dir):
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .filter(cond)
-        .agg(r2(F.sum(_rev()).cast("double")).alias("revenue"))
+        .agg(half_up(F.sum(_rev()).cast("double"), 2).alias("revenue"))
     )
 
 
@@ -878,7 +869,7 @@ def q80_tpch_q9(spark, sf_dir):
             profit.alias("amount"),
         )
         .groupBy("nation", "o_year")
-        .agg(r2(F.sum("amount").cast("double")).alias("sum_profit"))
+        .agg(half_up(F.sum("amount").cast("double"), 2).alias("sum_profit"))
     )
 
 
@@ -914,7 +905,7 @@ def q81_tpch_q11(spark, sf_dir):
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .select(
             "ps_partkey",
-            (F.col("ps_supplycost") * F.col("ps_availqty")).cast(_DEC28).alias("v"),
+            (F.col("ps_supplycost") * F.col("ps_availqty")).cast(DEC28).alias("v"),
         )
     )
     tot = nps.agg(F.sum("v").alias("total_v"))
@@ -923,7 +914,7 @@ def q81_tpch_q11(spark, sf_dir):
         .agg(F.sum("v").alias("pv"))
         .join(F.broadcast(tot))
         .filter(F.col("pv").cast("double") > F.col("total_v").cast("double") * 0.004)
-        .select("ps_partkey", r2(F.col("pv").cast("double")).alias("part_value"))
+        .select("ps_partkey", half_up(F.col("pv").cast("double"), 2).alias("part_value"))
     )
 
 

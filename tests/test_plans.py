@@ -80,7 +80,8 @@ def test_no_decimal_output_in_oracled_queries(spark, queries):
     changes an output column's type and breaks the cross-engine value
     hash even when the numbers agree. Every oracled query's OUTPUT
     schema must be decimal-free (decimals are fine internally — the
-    dsum2 helpers use them on purpose for deterministic summation)."""
+    rounding.dsum2/davg2 helpers use them on purpose for deterministic
+    summation)."""
     from pyspark.sql.types import DecimalType
 
     import __spark_entry__ as entrymod
