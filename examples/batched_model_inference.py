@@ -12,8 +12,9 @@ Run: python examples/batched_model_inference.py
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from smartpipeline_spark import BatchStage, Pipeline, get_spark, sources
 

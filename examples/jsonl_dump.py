@@ -15,10 +15,11 @@ Run: python examples/jsonl_dump.py <ids.txt> <dim.parquet> <out_dir>
 """
 
 import sys
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from smartpipeline_spark import get_spark, sources
 

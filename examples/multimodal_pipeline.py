@@ -15,8 +15,10 @@ Usage: python examples/multimodal_pipeline.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -80,7 +82,7 @@ def main():
     )
     stats = export_tar_shards(
         with_meta,
-        "/root/repo/.tmp/media_shards",
+        str(REPO / ".tmp/media_shards"),
         members={"payload": "bin", "meta": "json"},
         num_shards=4,
     ).collect()

@@ -21,8 +21,9 @@ Run: python examples/rag_retrieval.py [sf_dir]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

@@ -10,8 +10,9 @@ Run: python examples/sql_surface.py [sf_dir]   (default sf0.001)
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from smartpipeline_spark import get_spark, sources
 from smartpipeline_spark.sqlfuncs import register_sql_functions

@@ -32,8 +32,9 @@ Run: python examples/streaming_ingest.py
 
 import sys
 import tempfile
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

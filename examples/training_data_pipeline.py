@@ -23,8 +23,10 @@ Run: python examples/training_data_pipeline.py [sf_dir]
 """
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F
 
@@ -238,7 +240,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("training-data-pipeline")
     curated = curate(spark, sf_dir)
-    out = "/root/repo/.tmp/curated_corpus"
+    out = str(REPO / ".tmp/curated_corpus")
     curated.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     n = back.count()
@@ -294,7 +296,7 @@ def main():
     # 12. materialize split-partitioned with a disk-attested manifest
     from smartpipeline_spark.functions.curation import export_dataset
 
-    manifest = export_dataset(back, "/root/repo/.tmp/curated_dataset")
+    manifest = export_dataset(back, str(REPO / ".tmp/curated_dataset"))
     print(
         "exported:",
         {k: v["rows"] for k, v in sorted(manifest["splits"].items())},
@@ -306,7 +308,7 @@ def main():
 
     shards = export_tar_shards(
         back.filter(F.col("split") == "train"),
-        "/root/repo/.tmp/curated_shards",
+        str(REPO / ".tmp/curated_shards"),
         members={"text": "txt"},
         num_shards=8,
     ).collect()

@@ -26,8 +26,9 @@ Usage: python scripts/audit_oracle_types.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 BAD_MARKERS = ("HUGEINT", "INT128", "STRUCT(", "MAP(")
 

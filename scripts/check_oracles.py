@@ -8,10 +8,11 @@ Usage: python scripts/check_oracles.py [sf_dir] [key_prefix...]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from smartpipeline_spark.session import get_spark
 from smartpipeline_spark.testing import compare

@@ -31,9 +31,10 @@ from __future__ import annotations
 
 import hashlib
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 def _cell(v) -> str:
     import datetime

@@ -11,9 +11,10 @@ import sys
 import textwrap
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
-QUERIES_DIR = Path("/root/repo/queries")
+QUERIES_DIR = REPO / "queries"
 
 
 def render(key: str, oracle: str | None) -> str:

@@ -17,9 +17,10 @@ from __future__ import annotations
 import io
 import re
 import sys
+from pathlib import Path
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF = "/root/testdata/sf0.01"
 

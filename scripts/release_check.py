@@ -23,6 +23,7 @@ from __future__ import annotations
 import subprocess
 import sys
 import time
+from pathlib import Path
 
 STAGES = [
     # cheapest first: every oracle's DuckDB output types must be
@@ -46,7 +47,7 @@ def main() -> int:
     results = []
     for name, cmd in stages:
         t0 = time.monotonic()
-        rc = subprocess.call(cmd, cwd="/root/repo")
+        rc = subprocess.call(cmd, cwd=Path(__file__).resolve().parents[1])
         dt = round(time.monotonic() - t0, 1)
         results.append((name, rc, dt))
         print(f"[release_check] {name}: {'PASS' if rc == 0 else 'FAIL'} ({dt}s)")

@@ -23,9 +23,10 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 

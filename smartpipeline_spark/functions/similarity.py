@@ -535,14 +535,20 @@ def _ivf_kmeans(m: np.ndarray) -> np.ndarray:
     so the oracle pin-honesty pytest can re-derive the pinned centroids
     from the raw fixture sample without a SparkSession."""
     m = m / (np.linalg.norm(m, axis=1, keepdims=True) + 1e-12)
-    cents = m[:: max(1, len(m) // _IVF_K)][:_IVF_K].copy()
+    # every centroid is snapped to a 1e-12 grid: numpy's SIMD reductions
+    # round differently by an ulp from one CPU to the next, and the
+    # oracle replays the pinned doubles by repr. The snap makes a host
+    # difference much less likely, not impossible: an ulp can still
+    # cross a grid midpoint, or flip a near-tie in the argmax below,
+    # which runs on unsnapped rows; the pin test's repr check catches it
+    cents = np_half_up(m[:: max(1, len(m) // _IVF_K)][:_IVF_K], 12)
     for _ in range(_IVF_ITERS):
         assign = (m @ cents.T).argmax(axis=1)  # cosine on normalized rows
         for c in range(len(cents)):
             members = m[assign == c]
             if len(members):
                 mu = members.mean(axis=0)
-                cents[c] = mu / (np.linalg.norm(mu) + 1e-12)
+                cents[c] = np_half_up(mu / (np.linalg.norm(mu) + 1e-12), 12)
     return cents
 
 
@@ -591,68 +597,70 @@ def _exact_topk(cands: DataFrame, k: int | None = None) -> DataFrame:
 # embeddings fingerprint COUNT(*):SUM(DECIMAL(28,14) of embedding[1])
 # (exact order-free accumulator, so the key is engine- and
 # parallelism-stable; it distinguishes sf0.001 from sf0.01, which share
-# a row count). Derived by _ivf_kmeans over the same deterministic
-# vec_id%7 sample _ivf_centroids collects — re-derived from the parquet
-# on every suite run by test_ivf_oracle_pins_match_reference, so the
+# a row count). Derived by _ivf_kmeans (centroids snapped to its 1e-12
+# grid, so the doubles are much less likely to differ by host) over the
+# same deterministic vec_id%7 sample _ivf_centroids collects —
+# re-derived from the parquet on every suite run by
+# test_ivf_oracle_pins_match_reference, so the
 # pins cannot rot. Emitted into the oracle via repr: both engines see
 # the identical doubles.
 _IVF_CENTROID_PINS = {
     # sf0.001
     '500:-1.46395296278528': [
-        [-0.18607139273376905,0.03198709877049546,-0.01856729344427942,-0.011394165242238125,-0.10348029187071266,-0.3001081996639446,-0.08182406820302876,-0.045488012490229164,0.0006878684316908207,0.02215447579528612,-0.12718324814357385,-0.16634438313446262,0.17424534564363175,0.17498072806911857,-0.06129813697001879,0.18173994145520245,0.03356294485384691,-0.06287260186007151,0.04653576913346206,-0.043534574240942855,-0.01947380748476992,-0.0761574870908638,0.14679686586648802,-0.08700502272341851,-0.0832547835724836,0.2362918264775162,-0.15389938321611882,0.05213816925901496,0.10524639884243561,0.06618694127020475,-0.26506112112862806,0.052784960298016666,-0.006653290292134194,-0.13213860441677833,-0.2507957349468945,0.18403942522826117,0.17612665216565082,-0.051330264600514264,-0.07241202023049786,0.09032112992346221,-0.031026556274345318,-0.1119509251547219,-0.045129517022054574,-0.02473884847204603,0.045851679764092025,-0.08479212511031099,-0.11739013108713928,0.023971111013634073,0.003769298532845044,0.11854056269556913,-0.07619310644936836,-0.008772128027087137,-0.15476229919608495,-0.26063088704281445,0.13741431806520799,0.039971342437664766,-0.0009133653969777239,0.13721133664659177,-0.13832633655294932,0.11390194246250877,0.024894975090811806,-0.029590707625249547,-0.2708481650373398,0.1758107499459375],
-        [0.07997496088895273,-0.07341319432939393,0.25078485403045214,-0.07789257366444215,0.18535443708782812,0.01184067381359987,0.10092969731247463,0.04992160894869237,-0.03320934114195999,-0.14098513770877633,0.1419377337896372,0.058868573602675965,-0.06480999716532461,0.005567775929313887,-0.06844793776116198,-0.06377352881024201,-0.19901902483369363,-0.15735706521558313,0.04349790071699728,0.2186217447890735,0.142308885237438,-0.03107239233447891,0.1274030000014048,-0.15550567874562676,0.026376485505935993,0.009227115429469534,-0.0451592359397854,0.1940242546067236,-0.20654028742802585,-0.0023580664855712523,-0.043986909203211244,-0.059221599236465625,0.06569584141273722,0.12710584960808782,-0.2418070332874535,-0.10392406069929401,0.32654141278203075,0.16919172468583077,0.1995897510010696,0.05631540941553506,-0.012316192705635883,-0.1166934914377157,0.08011849475542829,-0.08063802614080097,-0.16094551952692232,0.014646986411565525,0.1397882853641347,0.3448558191154218,0.05998816917460865,-0.013537980024169184,0.0714440198629202,-0.10508414114870389,-0.016362309232666097,-0.0022616601192370902,0.05556948233847128,-0.0015716660668403473,-0.008703383305124514,-0.023960420209372946,-0.01271875844447687,0.02035937256524703,0.18064906438675943,0.06029280351705447,-0.08103210979412424,0.15365414292139723],
-        [0.018961033832998145,0.005379334569596354,0.013255133625255777,0.08095120703452129,-0.04645942831572271,-0.24419721293866153,-0.09041681663227176,0.048007921197801465,-0.18085813641972498,-0.025220265610939537,-0.1890223827542956,-0.13046424714025276,0.1810262434299493,-0.22724244674836433,0.03370537196030126,-0.04489216819525204,0.1655535728040181,0.03144032362351209,-0.04239247618414237,-0.07999719609978818,-0.04597350612854526,-0.05387983055878378,0.06666799855762583,0.1730612990214052,-0.023765803494828774,-0.25905613539329747,0.12462906812161739,0.06150245609216911,0.20846362854129427,0.008202273357508694,-0.00534647326811347,-0.07239202222120786,0.09414509877310172,0.14984591692563584,0.06869659067778758,-0.18180662550122217,-0.10374223149561738,-0.004655984024544116,-0.040056511910922715,0.016045332562704864,-0.04283377600693473,-0.05129437398218316,0.020265506499867154,0.0920240112227175,0.0064339613975076685,-0.3121378227830718,-0.25480179251372326,0.08968437717862685,0.0351527014222056,0.02990153411958094,-0.07627279965369428,0.1498152599343149,-0.02943552972195709,0.07691232317753473,0.16526955370549143,-0.259828091014136,0.10267691658725754,-0.02718878276678424,-0.007304912683659533,-0.13603152915961694,0.09362543154062218,0.16971468376479198,-0.1965988405754615,0.17773308920261036],
-        [-0.09100820356330505,-0.0125061709429721,-0.03279957100234683,-0.04050052352422719,0.1423013729590797,0.06100307789486421,0.2323891572577731,-0.029147605696804798,0.053151003455022626,-0.10493555158291125,-0.07037646610103845,-0.13605297793631174,-0.11595168244736785,0.07815099266240895,-0.01974913716485043,-0.012455434436968352,-0.20712137859227128,0.23813579871094154,0.15216354867283582,-0.16870804240840487,0.19865528957526757,-0.12252094424718699,0.0508068077344197,0.17825290065030097,0.16259572348503779,-0.044141911952499814,-0.10090737543697897,-0.022348389943864542,0.04661692093404343,-0.028153388976483847,0.06614902142686511,-0.03437986648103669,-0.0497214556910014,-0.050951214772262554,-0.0952148525935344,0.2622834237435116,0.06505716319898783,-0.031826110839685756,0.10534459940221987,0.10632572797032387,0.12656450262916671,-0.2625610966446817,0.0503781104674337,-0.08282711033542384,-0.3342866117601001,0.1396587084580245,0.19181786521875346,-0.24554881378941223,0.11657787565258801,-0.07786323423630491,-0.0527169303259006,0.03660815563280086,0.00023312504150497612,0.05329149012429428,-5.344672897734936e-05,-0.13880006571134992,-0.03802956392265111,-0.1956703533502654,0.09105971391006151,-0.02413497765555127,-0.12632222135856422,-0.12991012013799186,-0.0003476337676333139,0.06623308535698086],
-        [0.11105572158799872,0.2479075625198526,-0.07357757235196206,0.18632349057991265,0.205293004259832,-0.16313553267507216,-0.20623408557869716,-0.061940841062886776,0.11716473781203869,0.09637870751013235,-0.0192882416191438,0.08641222888413207,-0.07443009757069306,-0.07717842527751786,-0.10789318172509063,0.03096091875669044,0.08078019440831721,-0.18244602535963927,-0.038395381300324265,-0.20902659087581504,0.13899158610747653,-0.03389259198014885,-0.12440185661720193,-0.006212602157114937,0.046910681728106966,-0.1513980281994133,0.10387043436849601,-0.08427149324927874,0.11098836401426339,-0.07757733432428467,-0.07160672094094879,-0.04815226381050771,0.2057028133177086,-0.26194166038185795,0.008008501732375467,0.13639658039404082,-0.001362709946606494,-0.21321089992161404,0.07128702702074466,-0.143152074282601,-0.05710626458446613,-0.15583239563135132,0.008253471421917938,0.1691127988030279,0.223942270594072,-0.05312504452631778,0.08058118131198924,0.12713570718486278,-0.03185919673635916,0.03157119476654728,-0.21070876430386742,-0.21246208957549692,0.12131912361799366,-0.08812660418206117,0.06030847452247632,0.042051957533015015,0.15026092584437006,-0.157765353083658,-0.0616594141304217,-0.026592497453418018,0.004513165664126431,0.0052504358174027856,0.07663972250739277,0.128191162030319],
-        [0.2390212978293749,-0.17701297814606418,-0.032149390143422815,0.026066452873556356,-0.08833176932048471,0.04487745365701866,-0.019485862518474336,-0.1599035572416035,0.23895908140353148,0.0641806847803184,0.007212095399685025,0.05428084463443514,-0.03154763425621076,0.17703729588787426,-0.11028581664228718,-0.052702981618002624,-0.07282402744459643,-0.05022855574427484,0.07656911236610943,0.04494261809256374,-0.14233367766463553,0.05878837642018523,0.18986970127486968,-0.024990868930075728,-0.06636666823344302,0.02193970997370493,0.039589212041895194,-0.14493928469417797,0.10876197758062606,0.10200459421212353,0.008556365393498997,0.03273131980745787,0.0854433389154257,0.09405403301724853,0.1876785695114847,-0.009219723098508614,-0.17163421109831412,0.06838533272556051,0.03058241464426275,0.056634315934862595,-0.15142623734546723,0.038217985712447396,-0.2612247288920781,0.12719189484338592,-0.12024546999605662,-0.18912472376630754,-0.029685076141264036,-0.24482300189462544,-0.03636271956770099,-0.05832196230246572,0.09129537800240273,0.2687996596729178,-0.08990041006838054,-0.12169985568351258,0.040161864692966016,0.22080782257130732,-0.11255184989130135,-0.18041806230909788,0.16012020651685227,0.011500917722993113,0.1679348316516153,0.1367827275452014,0.16432888505900642,0.15018995902466906],
-        [-0.08966177356733869,-0.09417543231216648,0.0458901885631298,0.1757754775117179,-0.011471996141254269,-0.00836747346328288,0.18359353696347205,0.18901392140359957,0.09270394548445764,-0.03514578482488671,-0.05002084570354744,-0.060408460338230434,-0.03940806249663048,-0.08111154095155786,0.21149545145551385,0.13673175588414185,0.11432948454869031,0.07501381459031267,-0.21936546918470204,0.10938696606413262,-0.1901934520979608,-0.17859741997583353,0.006066935259570416,-0.20656935535835505,0.044591182568441134,-0.027979423915006008,-0.10572078052155617,0.20263572129191962,0.20036412953654262,-0.004123017853551383,-0.1561915498469428,0.03904530643151573,-0.034238213271887336,-0.14617629117068975,-0.11593557346803121,-0.09614468284632446,-0.048491330357459395,0.14296753417154504,0.17180442970354984,-0.11256734390729227,-0.16149879533978387,0.15069690666561814,-0.13630196051397694,0.28277878020375175,-0.08958430714910445,0.0349915170479912,-0.15155221117349263,-0.03802207233891684,-0.2038486667115165,0.02167870240679764,0.052204108598963725,-0.1310811154721396,0.012342718564881939,-0.08622912337420903,0.2278247573758284,0.12802352349585439,-0.0030431356075069985,0.17066215858995182,0.10827361615259991,0.020051520867177274,-0.010222582892819961,0.020199603289281685,-0.03290482388269021,-0.10193205111218816],
-        [0.2697813449225595,-0.005214125913388831,-0.26871874273662094,0.007715021077467181,0.029849068196762633,0.27568420218975004,-0.01658619159891707,0.13086714862975085,0.16784062036472644,-0.14194931293445856,-0.04245708037247018,0.1467606426783588,0.10704443437173637,0.024500629150234328,0.1859648543943174,-0.004534316721134781,-0.06083762395132258,0.2763884286650529,-0.2832132895693805,-0.16196469171537833,-0.1385250371398051,0.13512417700992074,0.06301135762503839,-0.060349161501467054,0.10259731231626643,-0.10508123492045475,-0.18087224967826782,0.192065269351967,-0.02785010547012988,-0.11067367345729846,0.059932222552677765,-0.08025007166054132,-0.13253790887176317,-0.04146139003720203,0.05375308103681457,0.019225828533585437,-0.12191821463999296,0.15003481188712314,-0.001385261989206618,0.04883881246726355,0.0793769383852796,0.001290260596104663,0.05540978637318058,-0.06542757626763662,0.17791861402408038,-0.010263589609399689,0.11091862503649148,0.13415583674417428,-0.1668329059470003,0.17070308024460035,0.011831704474974393,0.08236317794055709,0.06959424605469174,-0.12910245447884278,-0.13708270868063097,0.017523203743199763,-0.08572139573763604,-0.12229466660024733,0.009454010923275587,-0.14065787308865377,0.0009404429336767465,0.06169703067487801,-0.07389635218361887,0.05008490886649353],
-        [-0.034258554022062945,0.01587979753542403,-0.1013490167540467,0.023756604762504237,0.09029462051601336,0.09545864323847261,0.15996577798538966,-0.1083369213528103,0.022727106089781103,-0.05007236999367067,-0.035221764045198355,-0.2016889434270769,-0.1340245189435493,0.1573270444636981,-0.039354145589361456,-0.10215126768888019,-0.054184809681376525,-0.16813072825786535,0.036939561061563375,-0.10031651407720249,-0.10157252458174547,0.09990997865761077,-0.2661398471277927,-0.09566686280315165,-0.07498876202093864,-0.07959412414630093,0.16179637412501474,0.0002018447933274487,0.16247265644040476,-0.26860921794297676,-0.04487184582614421,0.13818059180717748,-0.21778396857180574,-0.06100306091218757,-0.33070631246860804,-0.13967258883650802,-0.2258827218306737,0.07253892930461615,-0.09804379697272424,0.027576228174136144,0.1078333052123408,-0.05607268403512186,0.0441544076086144,-0.07908554237281082,-0.18380361839462817,-0.04156203432195991,-0.02569747837807428,0.07711476944803508,-0.04504234944410953,0.011764953867043274,-0.19049092780571836,-0.1441095692950068,-0.00843264676497541,0.0649186837099781,-0.09182506406836276,-0.22356818890955882,-0.042694303886348296,0.08305743635979364,-0.06228745639780059,0.1441970314662699,-0.010964088397704911,0.08273075440821127,-0.01966836842892116,-0.24156681306668562],
-        [0.04333917319463279,0.0008321622054668956,0.04578492408140957,0.030400238008289074,-0.02381943070948801,-0.057449341869808275,-0.01745601279237627,-0.13578691783967023,0.009093150695584825,0.04391364138235878,0.12417896659251296,0.07832473720954951,-0.17304542333771142,0.05318413419117561,0.15295507959789537,0.046653239709642774,0.0014994087007445596,-0.021515406948698773,0.053918136480039486,-0.17944234654959174,0.2599020691150187,0.021586608463332817,-0.2508916259237662,0.028809136004813506,-0.21691873824420968,-0.10706299243542297,0.15829641599373112,0.03606763580620427,-0.055669960702557794,0.34451934047163685,-0.07402049896613985,0.0519178353146266,0.16964812236404195,-0.12460366630093135,-0.021796562568486694,-0.04939462765771927,-0.05317796251164742,0.04189570778732197,-0.12473363854548368,-0.11950656209108339,-0.011248694888319399,-0.15835464036858293,-0.01768080568953624,-0.07829707676556756,-0.21421803594082575,0.09071318106986212,-0.36346528735579586,-0.03576054591801629,0.0784312380959962,0.11016978128251795,-0.23653543154343074,-0.05646662609669206,0.04009282269316175,0.0929909930767482,0.09132762453712191,0.07395860341567348,-0.08628711308667422,0.016821020574706504,0.13119475934870556,0.03946896963878993,0.22685599805112666,-0.0034079902529430043,-0.12575147728107763,-0.11090373988474257],
-        [0.1597918595679895,0.009361996847823602,-0.022137703037954357,-0.018515650125981883,0.0243558768008553,-0.12366189998231412,-0.06483310989333937,0.08619553149793134,0.042121020869259666,0.06571585829575959,-0.27915114698388344,-0.0033641219526131237,-0.01743897023531341,0.1097235786135318,-0.01106170944121999,0.020646074526637977,0.14513914611654405,-0.07934107229886192,-0.11333068771838971,-0.15487794836619537,0.10402940899079717,-0.020502564147558862,0.17284382116712435,-0.005120275306623487,-0.10832492802195041,0.14514422007909192,-0.04398320960593708,-0.024023687072416016,0.14273237610191458,-0.2090376678918953,0.02264464328090545,0.2288738238342999,-0.06633866099486958,0.13125095131231262,0.012405599556587531,0.06809827968939951,0.15148885094563164,0.16963191329060603,-0.0562888332006776,0.017591847599638787,-0.2827038760511022,0.005520256601380792,0.013387504880284291,0.031304356250824214,0.25182930974239787,0.15661718818711085,-0.0034317686964593767,0.1955077684453466,0.25552999795149284,0.07549131326051821,-0.05196605045756276,0.07477032969058289,0.011428043052348163,0.1496626274888231,0.2482813668270704,0.11836745174489977,0.19870813092289177,0.08751154744485515,-0.016657779836254015,0.18488663649578194,0.03055579693278642,-0.01336158503554656,0.19051043132344034,0.07809850113972722],
-        [-0.019541261177677526,-0.09067873810647549,-0.12408076575180528,-0.07744543359188026,0.15731116913729518,0.11160880668626603,0.32767825227202124,0.12089763351184528,-0.15022922899252042,-0.07119582236214306,0.04757071528018382,-0.16915834412725253,0.2713945268871399,0.0259184314453074,-0.14615724016314333,0.07319920031860999,-0.1331392907502808,-0.002188901081909143,-0.1144756814887829,-0.15705703846263477,-0.09760514474742399,-0.1445093580327898,-0.011606028747552686,-0.15024112649236862,-0.17851939202391556,0.03352010001849585,-0.15696823604640123,-0.055176929969110056,0.05127721096976937,0.03822513286340935,0.07065177664044071,-0.23275790742005903,-0.008726917314658798,0.1491013181383394,0.17695976778250885,-0.0657275911607108,-0.07291839296500088,-0.06042766942373081,0.034093443080326365,-0.11027042031749604,-0.001739917778446521,-0.10620820438640816,0.06947100467339846,-0.1391419531168005,0.08944679163751112,0.148781333066716,0.10054134035031244,-0.18695992746314954,0.10832672306470587,-0.10499590014085011,0.1309296329152809,-0.04379625647315692,-0.10655368441394994,-0.05990466337199181,-0.05532639854075607,-0.04084221239548614,0.03745400520176206,-0.03617027055921662,-0.10543060928762137,-0.20001284545845943,0.18339166932204584,0.051673903062108714,0.2584581668206964,0.0967739426710158],
-        [-0.12505522706707436,0.09188651319875432,-0.05258265687270217,-0.083831896797094,-0.028246828219004535,0.009814337813587185,-0.1612747606916994,0.041830570820015345,0.08254870299103564,-0.02280506949714321,0.2138913830477316,-0.0036997630085213755,-0.100422622765262,-0.1542974353575383,-0.07294905628584662,-0.19357905624479846,0.007615901383598022,-0.004769683773999463,0.06224091495757639,0.0342395974375451,-0.18109288379057373,0.0798824696034011,-0.00551353898660968,0.26496451190430526,-0.02893971926113204,0.019935217764010475,0.17535160614722362,0.15986333862201374,0.01404370828964657,0.09119657403161091,0.2134345601248666,-0.001097176853568643,-0.16129233871653473,-0.06441326482367594,-0.07850490216301241,0.0027778424205896464,0.18189215632373254,0.03510501304935744,0.05174275845613692,0.0157416770409332,0.18656448202253018,0.13890978175208707,0.03441996596499793,-0.04934269965514286,0.11949721794643492,0.12032842351607514,-0.04928727366656851,-0.012650259634682403,0.12536661920302702,-0.06494270062029318,0.31346440392759306,0.2552620943355298,0.14187742648504545,0.11051043504068735,-0.058854579398805534,-0.06828666645420639,0.1869968217821764,-0.12074607913187292,-0.2090098848485955,-0.08538018743249103,-0.29227452912973323,-0.024168525954967737,0.09090054773210302,-0.01663764959754127],
-        [-0.025586678054944956,-0.15356090718705975,0.07476372137321431,0.006403090332123045,-0.016634911707282672,0.048959781488569436,0.04499137377401583,-0.0596228111807514,0.04068870042846603,0.14063032955851046,0.024954531009252007,-0.09922908318634432,0.09745076430925464,0.004070629912738705,-0.14349481178530912,-0.18469888826308167,-0.09431591171915137,-0.0271034107342932,0.01073171918006702,0.23141180824583282,-0.09787954485089156,-0.26685466707912636,0.3350605819863213,0.021343774786609933,-0.201448091132079,0.12262881503857463,0.20826358002228962,0.006307357306354769,-0.025702327854130715,-0.22278533531037095,0.030191399077310773,-0.06793242267766143,-0.17792429998802872,-0.15924552868792471,0.11303685150231611,-0.05456990632523202,0.11766398482142691,0.034762393074657574,-0.08239728044477447,0.010565048446394673,0.1692138033456455,0.24452266323448113,-0.06202239987945528,0.054079264038696104,-0.04631524516189795,-0.03185242559783717,0.10876478109287761,-0.24607155497581368,-0.16614246734734664,-0.09977548344358217,-0.10033218823111266,0.022133982363868505,-0.09157241089751122,0.14356719548039448,0.07054994281183531,-0.059708994287106264,0.06547722968916263,-0.18930423253873935,-0.019873539519006257,-0.0815039321103831,0.11546533835915333,-0.03950044181004761,-0.1911547071754472,0.06624600643329258],
-        [-0.007095926597059397,-0.2574086504493583,0.1823051688209289,0.21901545105049322,-0.13558461069766703,0.07940663298482449,0.2016130927806415,-0.1078720717820396,-0.03393765204959792,-0.07019581269956796,0.02742454807424279,0.10416111193448592,-0.014182879442032012,-0.02416805787951603,0.026499467823219665,-0.07319622972758749,0.12124580618512551,-0.0575037726215514,0.024958627102854805,0.011714833699409788,-0.14889553566715735,0.11608220095733655,0.009415651324328266,-0.1693325273556126,-0.10248915657225924,-0.04146958955529726,0.09152318590402643,-0.048689384079263834,-0.14009207795327774,-0.06434270274041098,0.18386994322216033,0.04239832582572005,0.19249315042967416,-0.17532703098375507,-0.10262475530809696,0.12108840937208211,0.005506519942112073,-0.019381183045546407,-0.012670044700348517,0.04719944221246122,-0.029926447192251012,0.022284799606308192,-0.005717962840396482,-0.1533187259927858,0.018220657433986553,0.1274823965266568,0.1121073269882698,0.10268917785555483,0.08949878345501451,-0.056259297670288616,-0.17731053626943513,-0.16887916515978346,-0.22626427035367375,0.2801671548267572,0.22990422521470485,0.04720665828255093,-0.15462771791093927,0.07368448966294232,0.18112871269371061,-0.2170773354525083,-0.12908882341418912,-0.06217670349178185,0.11981537348308663,0.1581099687309815],
-        [-0.004821962263630638,-0.10134886193849561,-0.14011330235123534,0.2599210645592258,-0.13085241745427206,-0.06680971059885729,0.07374008898813823,-0.06485422938282144,-0.4262933820498713,0.026440070712595593,0.06750890742497058,-0.0015099664616405803,-0.07678433516036667,-0.0054241270017634695,0.012352623500926177,0.054171050280441974,0.013044477016153955,-0.013666925565814579,0.1620791167258366,0.001755125301273426,-0.11434354030424342,-0.15856082636506996,0.15386132176436712,0.03376016641964486,0.01509988829007997,-0.0951551048002062,-0.011229704024299727,-0.0947465884420447,-0.17209991952544199,0.06433470741994038,-0.26930375987199195,0.034508860859114684,-0.1841358179803199,0.008166407718641364,0.034483052972335816,0.12709800994279288,0.013657470285136869,-0.2070762787679123,-0.04089315484985125,0.06141315517802937,0.01694423691898211,0.1864730719664723,0.10683234090023674,-0.00968298542539105,0.04455847146852455,0.14613522123928355,-0.06029731870320955,-0.07439988625833964,0.17581858182436352,0.10648808115643438,-0.19321736421385793,-0.1658963910439129,0.20183021307510823,0.17589631020114102,0.07357314190454557,0.13521999219173417,0.003467554194279246,-0.21802662600244596,0.0061662102251704935,-0.03313649381734003,0.044004471745701705,0.14301793403570456,-0.06871048250206797,-0.05090841629064523],
+        [-0.186071392734,0.03198709877,-0.018567293444,-0.011394165242,-0.103480291871,-0.300108199664,-0.081824068203,-0.04548801249,0.000687868432,0.022154475795,-0.127183248144,-0.166344383134,0.174245345644,0.174980728069,-0.06129813697,0.181739941455,0.033562944854,-0.06287260186,0.046535769133,-0.043534574241,-0.019473807485,-0.076157487091,0.146796865866,-0.087005022723,-0.083254783572,0.236291826478,-0.153899383216,0.052138169259,0.105246398842,0.06618694127,-0.265061121129,0.052784960298,-0.006653290292,-0.132138604417,-0.250795734947,0.184039425228,0.176126652166,-0.051330264601,-0.07241202023,0.090321129923,-0.031026556274,-0.111950925155,-0.045129517022,-0.024738848472,0.045851679764,-0.08479212511,-0.117390131087,0.023971111014,0.003769298533,0.118540562696,-0.076193106449,-0.008772128027,-0.154762299196,-0.260630887043,0.137414318065,0.039971342438,-0.000913365397,0.137211336647,-0.138326336553,0.113901942463,0.024894975091,-0.029590707625,-0.270848165037,0.175810749946],
+        [0.079974960889,-0.073413194329,0.25078485403,-0.077892573664,0.185354437088,0.011840673814,0.100929697312,0.049921608949,-0.033209341142,-0.140985137709,0.14193773379,0.058868573603,-0.064809997165,0.005567775929,-0.068447937761,-0.06377352881,-0.199019024834,-0.157357065216,0.043497900717,0.218621744789,0.142308885237,-0.031072392334,0.127403000001,-0.155505678746,0.026376485506,0.009227115429,-0.04515923594,0.194024254607,-0.206540287428,-0.002358066486,-0.043986909203,-0.059221599236,0.065695841413,0.127105849608,-0.241807033287,-0.103924060699,0.326541412782,0.169191724686,0.199589751001,0.056315409416,-0.012316192706,-0.116693491438,0.080118494755,-0.080638026141,-0.160945519527,0.014646986412,0.139788285364,0.344855819115,0.059988169175,-0.013537980024,0.071444019863,-0.105084141149,-0.016362309233,-0.002261660119,0.055569482338,-0.001571666067,-0.008703383305,-0.023960420209,-0.012718758444,0.020359372565,0.180649064387,0.060292803517,-0.081032109794,0.153654142921],
+        [0.018961033833,0.00537933457,0.013255133625,0.080951207035,-0.046459428316,-0.244197212939,-0.090416816632,0.048007921198,-0.18085813642,-0.025220265611,-0.189022382754,-0.13046424714,0.18102624343,-0.227242446748,0.03370537196,-0.044892168195,0.165553572804,0.031440323624,-0.042392476184,-0.0799971961,-0.045973506129,-0.053879830559,0.066667998558,0.173061299021,-0.023765803495,-0.259056135393,0.124629068122,0.061502456092,0.208463628541,0.008202273358,-0.005346473268,-0.072392022221,0.094145098773,0.149845916926,0.068696590678,-0.181806625501,-0.103742231496,-0.004655984025,-0.040056511911,0.016045332563,-0.042833776007,-0.051294373982,0.0202655065,0.092024011223,0.006433961398,-0.312137822783,-0.254801792514,0.089684377179,0.035152701422,0.02990153412,-0.076272799654,0.149815259934,-0.029435529722,0.076912323178,0.165269553705,-0.259828091014,0.102676916587,-0.027188782767,-0.007304912684,-0.13603152916,0.093625431541,0.169714683765,-0.196598840575,0.177733089203],
+        [-0.091008203563,-0.012506170943,-0.032799571002,-0.040500523524,0.142301372959,0.061003077895,0.232389157258,-0.029147605697,0.053151003455,-0.104935551583,-0.070376466101,-0.136052977936,-0.115951682447,0.078150992662,-0.019749137165,-0.012455434437,-0.207121378592,0.238135798711,0.152163548673,-0.168708042408,0.198655289575,-0.122520944247,0.050806807734,0.17825290065,0.162595723485,-0.044141911952,-0.100907375437,-0.022348389944,0.046616920934,-0.028153388976,0.066149021427,-0.034379866481,-0.049721455691,-0.050951214772,-0.095214852594,0.262283423744,0.065057163199,-0.03182611084,0.105344599402,0.10632572797,0.126564502629,-0.262561096645,0.050378110467,-0.082827110335,-0.33428661176,0.139658708458,0.191817865219,-0.245548813789,0.116577875653,-0.077863234236,-0.052716930326,0.036608155633,0.000233125042,0.053291490124,-5.3446729e-05,-0.138800065711,-0.038029563923,-0.19567035335,0.09105971391,-0.024134977656,-0.126322221359,-0.129910120138,-0.000347633768,0.066233085357],
+        [0.111055721588,0.24790756252,-0.073577572352,0.18632349058,0.20529300426,-0.163135532675,-0.206234085579,-0.061940841063,0.117164737812,0.09637870751,-0.019288241619,0.086412228884,-0.074430097571,-0.077178425278,-0.107893181725,0.030960918757,0.080780194408,-0.18244602536,-0.0383953813,-0.209026590876,0.138991586107,-0.03389259198,-0.124401856617,-0.006212602157,0.046910681728,-0.151398028199,0.103870434368,-0.084271493249,0.110988364014,-0.077577334324,-0.071606720941,-0.048152263811,0.205702813318,-0.261941660382,0.008008501732,0.136396580394,-0.001362709947,-0.213210899922,0.071287027021,-0.143152074283,-0.057106264584,-0.155832395631,0.008253471422,0.169112798803,0.223942270594,-0.053125044526,0.080581181312,0.127135707185,-0.031859196736,0.031571194767,-0.210708764304,-0.212462089575,0.121319123618,-0.088126604182,0.060308474522,0.042051957533,0.150260925844,-0.157765353084,-0.06165941413,-0.026592497453,0.004513165664,0.005250435817,0.076639722507,0.12819116203],
+        [0.239021297829,-0.177012978146,-0.032149390143,0.026066452874,-0.08833176932,0.044877453657,-0.019485862518,-0.159903557242,0.238959081404,0.06418068478,0.0072120954,0.054280844634,-0.031547634256,0.177037295888,-0.110285816642,-0.052702981618,-0.072824027445,-0.050228555744,0.076569112366,0.044942618093,-0.142333677665,0.05878837642,0.189869701275,-0.02499086893,-0.066366668233,0.021939709974,0.039589212042,-0.144939284694,0.108761977581,0.102004594212,0.008556365393,0.032731319807,0.085443338915,0.094054033017,0.187678569511,-0.009219723099,-0.171634211098,0.068385332726,0.030582414644,0.056634315935,-0.151426237345,0.038217985712,-0.261224728892,0.127191894843,-0.120245469996,-0.189124723766,-0.029685076141,-0.244823001895,-0.036362719568,-0.058321962302,0.091295378002,0.268799659673,-0.089900410068,-0.121699855684,0.040161864693,0.220807822571,-0.112551849891,-0.180418062309,0.160120206517,0.011500917723,0.167934831652,0.136782727545,0.164328885059,0.150189959025],
+        [-0.089661773567,-0.094175432312,0.045890188563,0.175775477512,-0.011471996141,-0.008367473463,0.183593536963,0.189013921404,0.092703945484,-0.035145784825,-0.050020845704,-0.060408460338,-0.039408062497,-0.081111540952,0.211495451456,0.136731755884,0.114329484549,0.07501381459,-0.219365469185,0.109386966064,-0.190193452098,-0.178597419976,0.00606693526,-0.206569355358,0.044591182568,-0.027979423915,-0.105720780522,0.202635721292,0.200364129537,-0.004123017854,-0.156191549847,0.039045306432,-0.034238213272,-0.146176291171,-0.115935573468,-0.096144682846,-0.048491330357,0.142967534172,0.171804429704,-0.112567343907,-0.16149879534,0.150696906666,-0.136301960514,0.282778780204,-0.089584307149,0.034991517048,-0.151552211173,-0.038022072339,-0.203848666712,0.021678702407,0.052204108599,-0.131081115472,0.012342718565,-0.086229123374,0.227824757376,0.128023523496,-0.003043135608,0.17066215859,0.108273616153,0.020051520867,-0.010222582893,0.020199603289,-0.032904823883,-0.101932051112],
+        [0.269781344923,-0.005214125913,-0.268718742737,0.007715021077,0.029849068197,0.27568420219,-0.016586191599,0.13086714863,0.167840620365,-0.141949312934,-0.042457080372,0.146760642678,0.107044434372,0.02450062915,0.185964854394,-0.004534316721,-0.060837623951,0.276388428665,-0.283213289569,-0.161964691715,-0.13852503714,0.13512417701,0.063011357625,-0.060349161501,0.102597312316,-0.10508123492,-0.180872249678,0.192065269352,-0.02785010547,-0.110673673457,0.059932222553,-0.080250071661,-0.132537908872,-0.041461390037,0.053753081037,0.019225828534,-0.12191821464,0.150034811887,-0.001385261989,0.048838812467,0.079376938385,0.001290260596,0.055409786373,-0.065427576268,0.177918614024,-0.010263589609,0.110918625036,0.134155836744,-0.166832905947,0.170703080245,0.011831704475,0.082363177941,0.069594246055,-0.129102454479,-0.137082708681,0.017523203743,-0.085721395738,-0.1222946666,0.009454010923,-0.140657873089,0.000940442934,0.061697030675,-0.073896352184,0.050084908866],
+        [-0.034258554022,0.015879797535,-0.101349016754,0.023756604763,0.090294620516,0.095458643238,0.159965777985,-0.108336921353,0.02272710609,-0.050072369994,-0.035221764045,-0.201688943427,-0.134024518944,0.157327044464,-0.039354145589,-0.102151267689,-0.054184809681,-0.168130728258,0.036939561062,-0.100316514077,-0.101572524582,0.099909978658,-0.266139847128,-0.095666862803,-0.074988762021,-0.079594124146,0.161796374125,0.000201844793,0.16247265644,-0.268609217943,-0.044871845826,0.138180591807,-0.217783968572,-0.061003060912,-0.330706312469,-0.139672588837,-0.225882721831,0.072538929305,-0.098043796973,0.027576228174,0.107833305212,-0.056072684035,0.044154407609,-0.079085542373,-0.183803618395,-0.041562034322,-0.025697478378,0.077114769448,-0.045042349444,0.011764953867,-0.190490927806,-0.144109569295,-0.008432646765,0.06491868371,-0.091825064068,-0.22356818891,-0.042694303886,0.08305743636,-0.062287456398,0.144197031466,-0.010964088398,0.082730754408,-0.019668368429,-0.241566813067],
+        [0.043339173195,0.000832162205,0.045784924081,0.030400238008,-0.023819430709,-0.05744934187,-0.017456012792,-0.13578691784,0.009093150696,0.043913641382,0.124178966593,0.07832473721,-0.173045423338,0.053184134191,0.152955079598,0.04665323971,0.001499408701,-0.021515406949,0.05391813648,-0.17944234655,0.259902069115,0.021586608463,-0.250891625924,0.028809136005,-0.216918738244,-0.107062992435,0.158296415994,0.036067635806,-0.055669960703,0.344519340472,-0.074020498966,0.051917835315,0.169648122364,-0.124603666301,-0.021796562568,-0.049394627658,-0.053177962512,0.041895707787,-0.124733638545,-0.119506562091,-0.011248694888,-0.158354640369,-0.01768080569,-0.078297076766,-0.214218035941,0.09071318107,-0.363465287356,-0.035760545918,0.078431238096,0.110169781283,-0.236535431543,-0.056466626097,0.040092822693,0.092990993077,0.091327624537,0.073958603416,-0.086287113087,0.016821020575,0.131194759349,0.039468969639,0.226855998051,-0.003407990253,-0.125751477281,-0.110903739885],
+        [0.159791859568,0.009361996848,-0.022137703038,-0.018515650126,0.024355876801,-0.123661899982,-0.064833109893,0.086195531498,0.042121020869,0.065715858296,-0.279151146984,-0.003364121953,-0.017438970235,0.109723578614,-0.011061709441,0.020646074527,0.145139146117,-0.079341072299,-0.113330687718,-0.154877948366,0.104029408991,-0.020502564148,0.172843821167,-0.005120275307,-0.108324928022,0.145144220079,-0.043983209606,-0.024023687072,0.142732376102,-0.209037667892,0.022644643281,0.228873823834,-0.066338660995,0.131250951312,0.012405599557,0.068098279689,0.151488850946,0.169631913291,-0.056288833201,0.0175918476,-0.282703876051,0.005520256601,0.01338750488,0.031304356251,0.251829309742,0.156617188187,-0.003431768696,0.195507768445,0.255529997951,0.075491313261,-0.051966050458,0.074770329691,0.011428043052,0.149662627489,0.248281366827,0.118367451745,0.198708130923,0.087511547445,-0.016657779836,0.184886636496,0.030555796933,-0.013361585036,0.190510431323,0.07809850114],
+        [-0.019541261178,-0.090678738106,-0.124080765752,-0.077445433592,0.157311169137,0.111608806686,0.327678252272,0.120897633512,-0.150229228993,-0.071195822362,0.04757071528,-0.169158344127,0.271394526887,0.025918431445,-0.146157240163,0.073199200319,-0.13313929075,-0.002188901082,-0.114475681489,-0.157057038463,-0.097605144747,-0.144509358033,-0.011606028748,-0.150241126492,-0.178519392024,0.033520100018,-0.156968236046,-0.055176929969,0.05127721097,0.038225132863,0.07065177664,-0.23275790742,-0.008726917315,0.149101318138,0.176959767783,-0.065727591161,-0.072918392965,-0.060427669424,0.03409344308,-0.110270420317,-0.001739917778,-0.106208204386,0.069471004673,-0.139141953117,0.089446791638,0.148781333067,0.10054134035,-0.186959927463,0.108326723065,-0.104995900141,0.130929632915,-0.043796256473,-0.106553684414,-0.059904663372,-0.055326398541,-0.040842212395,0.037454005202,-0.036170270559,-0.105430609288,-0.200012845458,0.183391669322,0.051673903062,0.258458166821,0.096773942671],
+        [-0.125055227067,0.091886513199,-0.052582656873,-0.083831896797,-0.028246828219,0.009814337814,-0.161274760692,0.04183057082,0.082548702991,-0.022805069497,0.213891383048,-0.003699763009,-0.100422622765,-0.154297435358,-0.072949056286,-0.193579056245,0.007615901384,-0.004769683774,0.062240914958,0.034239597438,-0.181092883791,0.079882469603,-0.005513538987,0.264964511904,-0.028939719261,0.019935217764,0.175351606147,0.159863338622,0.01404370829,0.091196574032,0.213434560125,-0.001097176854,-0.161292338717,-0.064413264824,-0.078504902163,0.002777842421,0.181892156324,0.035105013049,0.051742758456,0.015741677041,0.186564482023,0.138909781752,0.034419965965,-0.049342699655,0.119497217946,0.120328423516,-0.049287273667,-0.012650259635,0.125366619203,-0.06494270062,0.313464403928,0.255262094336,0.141877426485,0.110510435041,-0.058854579399,-0.068286666454,0.186996821782,-0.120746079132,-0.209009884849,-0.085380187432,-0.29227452913,-0.024168525955,0.090900547732,-0.016637649598],
+        [-0.025586678055,-0.153560907187,0.074763721373,0.006403090332,-0.016634911707,0.048959781489,0.044991373774,-0.059622811181,0.040688700428,0.140630329559,0.024954531009,-0.099229083186,0.097450764309,0.004070629913,-0.143494811785,-0.184698888263,-0.094315911719,-0.027103410734,0.01073171918,0.231411808246,-0.097879544851,-0.266854667079,0.335060581986,0.021343774787,-0.201448091132,0.122628815039,0.208263580022,0.006307357306,-0.025702327854,-0.22278533531,0.030191399077,-0.067932422678,-0.177924299988,-0.159245528688,0.113036851502,-0.054569906325,0.117663984821,0.034762393075,-0.082397280445,0.010565048446,0.169213803346,0.244522663234,-0.062022399879,0.054079264039,-0.046315245162,-0.031852425598,0.108764781093,-0.246071554976,-0.166142467347,-0.099775483444,-0.100332188231,0.022133982364,-0.091572410898,0.14356719548,0.070549942812,-0.059708994287,0.065477229689,-0.189304232539,-0.019873539519,-0.08150393211,0.115465338359,-0.03950044181,-0.191154707175,0.066246006433],
+        [-0.007095926597,-0.257408650449,0.182305168821,0.21901545105,-0.135584610698,0.079406632985,0.201613092781,-0.107872071782,-0.03393765205,-0.0701958127,0.027424548074,0.104161111934,-0.014182879442,-0.02416805788,0.026499467823,-0.073196229728,0.121245806185,-0.057503772622,0.024958627103,0.011714833699,-0.148895535667,0.116082200957,0.009415651324,-0.169332527356,-0.102489156572,-0.041469589555,0.091523185904,-0.048689384079,-0.140092077953,-0.06434270274,0.183869943222,0.042398325826,0.19249315043,-0.175327030984,-0.102624755308,0.121088409372,0.005506519942,-0.019381183046,-0.0126700447,0.047199442212,-0.029926447192,0.022284799606,-0.00571796284,-0.153318725993,0.018220657434,0.127482396527,0.112107326988,0.102689177856,0.089498783455,-0.05625929767,-0.177310536269,-0.16887916516,-0.226264270354,0.280167154827,0.229904225215,0.047206658283,-0.154627717911,0.073684489663,0.181128712694,-0.217077335453,-0.129088823414,-0.062176703492,0.119815373483,0.158109968731],
+        [-0.004821962264,-0.101348861938,-0.140113302351,0.259921064559,-0.130852417454,-0.066809710599,0.073740088988,-0.064854229383,-0.42629338205,0.026440070713,0.067508907425,-0.001509966462,-0.07678433516,-0.005424127002,0.012352623501,0.05417105028,0.013044477016,-0.013666925566,0.162079116726,0.001755125301,-0.114343540304,-0.158560826365,0.153861321764,0.03376016642,0.01509988829,-0.0951551048,-0.011229704024,-0.094746588442,-0.172099919525,0.06433470742,-0.269303759872,0.034508860859,-0.18413581798,0.008166407719,0.034483052972,0.127098009943,0.013657470285,-0.207076278768,-0.04089315485,0.061413155178,0.016944236919,0.186473071966,0.1068323409,-0.009682985425,0.044558471469,0.146135221239,-0.060297318703,-0.074399886258,0.175818581824,0.106488081156,-0.193217364214,-0.165896391044,0.201830213075,0.175896310201,0.073573141905,0.135219992192,0.003467554194,-0.218026626002,0.006166210225,-0.033136493817,0.044004471746,0.143017934036,-0.068710482502,-0.050908416291],
     ],
     # sf0.01
     '500:1.08235486072832': [
-        [0.08940833837187304,0.10594589385253578,-0.0571239402569961,-0.11405203626442395,0.17250246383187054,-0.11062238577771442,-0.12972754250054497,0.10087749968197085,-0.02045206095315987,0.050863064630283394,0.06340875292960022,-0.06015142564858003,-0.1610943664697581,-0.05381950982366744,0.03338498179132757,-0.15813981174264286,0.00931674950693191,0.08043619971020083,-0.0035876934082257747,0.09247782652389731,-0.20771869735756787,0.032556953757277206,0.2601573588352219,-0.034442213264239616,0.022992068797455287,0.21302162733552052,-0.18649451121748672,-0.03163630647548127,-0.04907940696617746,0.20201833576264785,0.09838351818612964,0.1520573006608,-0.007842491162394749,-0.16590789129497713,-0.11592786393328637,-0.08538755860421929,-0.0221050704984656,0.05007683489890161,0.05059703149963702,0.2804044386461531,-0.050148779417024024,-0.07498845665192574,-0.10541123469931307,0.024402300008589745,0.0016430677140570364,0.0463211252046267,0.1220187513172749,0.02068301722351072,0.08064812104018569,-0.062261738152662074,0.05011617523384408,0.27642106596316646,0.05312982509238568,-0.13478257723350182,-0.055061765470137226,0.10817835015743812,-0.018608889141357603,0.06982566187338873,-0.31151137628187986,0.035576038250263155,0.10642764904446905,0.10295745309000248,0.10926461937693736,-0.33430939050879505],
-        [0.2189641540700778,-0.1370024892880878,-0.09728687133469581,0.03856620323587642,0.15284833960077024,0.1583974690962782,0.01579072549979377,0.18269916849851706,-0.12558121575575565,0.14576465618560155,0.24770004128789855,0.32893926117727285,-0.013510818762859422,0.023533868143554373,-0.049518068315868885,-0.2277604881522708,-0.02872366960611756,-0.09656110765635875,0.009398328960544466,-0.02720419978057526,-0.05182677073640429,0.12052272076667501,-0.04257479943188261,-0.22056318007988296,0.11578553582197676,-0.006396579665908512,-0.09730949315843146,-0.02252514263761916,0.11217183734717737,0.10115604231811318,-0.0006639125461539686,-0.04308546303890627,-0.04775271601548467,0.1859962640269702,-0.15776169730212747,0.033682752687385256,-0.24944961737455826,-0.020518991273988756,0.05653035282176475,0.06801132016252444,0.2170010635871664,-0.11566418518661041,-0.17014095462633916,-0.06769817639985681,0.02959921451136692,-0.1979503395110572,0.004104014948870107,-0.053328097777889064,-0.041343200346737635,-0.03532086822808232,0.01803163591191356,-0.15230840994135741,-0.03620054554264272,0.1945210149635447,-0.10191759718087093,-0.12663818793061069,0.01873466049014268,-0.14792523379898445,0.007885942881396676,0.07586917185980349,0.15389643696196076,0.11039881099972931,-0.1340449962910614,-0.08740293487102949],
-        [-0.21509716047172336,0.10967295907836797,0.18398983153701642,-0.23258948869812257,-0.018440102685265778,-0.04804379691469035,0.01310067230191154,0.18558388362120293,0.11379004675038072,0.17743229865743493,0.015137349355172837,0.015972765264118033,0.02070776360587562,-0.1913782136652858,0.024144191755957473,0.07288506558818993,0.015121453210286623,0.06793859084915209,0.050744041092665906,0.06936395879814795,-0.022575075107369853,-0.08849135923483396,0.035221741684225934,-0.11630827453658522,-0.1396457685559351,-0.02783079627601993,0.010790722507321817,0.08469385925662458,-0.2628646436855305,0.009534941544146327,-0.22482426836306318,0.036516477352024276,0.11844890907903975,0.1948920381174837,0.17351079867367372,0.1631162657298865,0.12213540145557447,-0.1738915067114917,-0.019727495858963558,0.03772043720711345,-0.012120331889583095,0.014030227172805282,0.23030729887699763,0.04654754203783542,-0.14997562651295326,-0.06755563349551828,0.0061851498008742185,0.025674674979809832,-0.08434807238613656,-0.17132856235084473,0.08846676551401389,0.21707534680966398,0.1906903958986718,0.039613232500486,0.05979630541960996,0.0847442615206648,-0.11178338178260701,0.08887581250468815,-0.28438868828999064,0.09877179463076524,-0.14716835362073602,-0.14866183666168709,0.05175780084452654,0.08993177208756087],
-        [0.05209939177666439,-0.08204950195834639,-0.11514031766229073,-0.09142304541483041,-0.04370585564068226,0.009344991544566793,-0.17784251883335805,0.02542852942036957,0.07238541867169232,-0.1650776085012868,-0.0822187051443288,0.15257430898968433,-0.16198490695388593,0.17740522703255623,-0.25583364909030415,0.11173608473558388,-0.07905523312025586,-0.18279926026391183,0.0916114753164478,-0.13189947899771357,-0.14482812694631375,0.13192130730416313,-0.03959774053268341,0.11846787827728711,0.05633792921542601,0.09355142338512543,0.3072841954408145,-0.06223970795433615,-0.03443053149149549,-0.01390100201651781,-0.02050703621052032,0.1941791986527605,-0.17211671054064057,0.0651580377578537,0.06022140384220081,-0.11515553167163929,-0.033477915265005424,-0.24339988941899518,-0.13644371347177722,-0.08129050465455331,0.06820858005548382,-0.015743116920741443,-0.05444988547600744,-0.045492491833854835,0.10346223647950448,0.08875409388414864,-0.14403166138530787,0.07233336866395225,0.01277512702159215,-0.1887868189562523,0.004005529502530903,0.050064916513238605,0.182393022819554,-0.08814832552828858,-0.09557490152420882,0.18237906162619608,-0.05366746468686953,-0.048997689570169686,0.05312474490525462,0.1359857989698672,-0.16875831541045472,0.30351030482498575,-0.06403628665962584,-0.05857254367648792],
-        [0.11144786896523118,0.04160197915137928,0.17991997062917056,0.12896689520131258,0.10558534884342125,-0.12646532358873488,-0.1193869954914732,-0.21367084827200333,-0.06472654629022385,-0.10866955722861622,-0.19320327050068553,0.05543818536990416,-0.09573719036603774,0.04539009506035769,0.2686251145142581,0.1465450170196876,0.18125094170355655,-0.24454973369872768,-0.31411419618900205,0.024330657903829753,-0.007449051272576043,-0.011835833984001698,0.2076114637589753,-0.002210078205564763,-0.05724160929037948,-0.043414529832916576,-0.04557841612352393,-0.2164810397738622,-0.13873073838926997,-0.023172582892900497,-0.04358544233347862,0.058299483389266805,-0.010732577979399902,0.026963406387425694,-0.017968653770915863,0.007819379497693194,0.05969052581288518,-0.07165920255831355,0.23774784657355322,-0.09626607624397385,-0.043952354721743046,0.07858424274488814,0.04310833841641987,-0.054892513310374876,-0.0362910634622694,-0.1501522925834229,-0.15023116846594764,0.027973321576642517,0.11896967016444449,0.16555334199853933,0.09046865141860898,-0.04693598213296235,-0.07702821204719561,-0.000810851680991041,-0.10413677268129251,-0.02386878396833061,0.2592588578439833,-0.03423790768372353,0.007151142069128236,0.02186034195016096,0.14643215678542892,-0.07645923741369416,0.23504288274991916,0.13219108281388198],
-        [-0.03032759521532716,-0.0861953497280684,0.03942204288936752,-0.053660295230073506,0.05321455345496313,0.20966268649471465,-0.02395069585656992,-0.349673843956992,-0.19914989646933692,0.030308873009497365,-0.1642231402974253,-0.25693508444726454,0.1324088141042349,0.11302728063476276,0.04620850443681717,0.16743541746609944,-0.0697610794376054,-0.15888710706114748,0.08988158417044351,-0.13074057706047307,0.16114051186804598,-0.06961095103412215,-0.12341404808154545,0.04783151662932997,-0.07860770851585908,0.040172275060176274,-0.10663156444938479,-0.0016114798238134613,0.02458966604147689,0.042035912286651725,0.1576627515161217,0.06360132465955166,-0.014672226946033413,-0.27118077347806013,-0.06924404544072321,-0.18269633212671538,-0.1634551747312838,-0.09241410559825354,-0.004913000565437917,0.040362994093888584,0.06936406738139403,0.019774905323546574,-0.023705186067504484,0.3797529264600862,0.010652646323963599,-0.05257927480073313,0.06095111113414678,0.04015033099841085,-0.18295763458405548,-0.15078700251028068,0.08161798181443647,-8.640221116472431e-05,0.10769216258836435,0.10034803035161635,0.003089577615809747,0.10481846268300332,-0.06987171707246315,0.03531468594393459,0.07176595318403432,0.03331891619631068,-0.030281135893001947,-0.18971883297791853,0.06742524278529549,0.11438527146140805],
-        [-0.12698263612383454,-0.15620194259976777,0.023354705411957975,0.17268582115395398,0.002740741959875045,0.27314657774277556,0.15725014896155398,0.23699127384816215,-0.16129863667995567,-0.039735182391534285,-0.012975535965035607,-0.15268942467632082,0.0641968834488745,0.01608289787791696,-0.24886881448776996,0.12581501312168467,-0.32027071067573554,-0.06338181685083764,-0.10695522838908621,0.08509768071659418,-0.15320568757192102,-0.12493297086333499,-0.0692316471112927,0.11385389302009553,-0.0961881084771107,0.0630227476354927,0.09644681837240623,0.027844583750819944,-0.0818972570240161,-0.06640406929101393,-0.07302766293033477,-0.014886088865800938,0.19449042292313254,-0.000625955643412806,0.04840137881647005,0.13464245795042282,0.12435340602503253,0.03242136206020992,0.045285837798662694,-0.01736957376900073,-0.1323705438209043,0.2037458002208673,-0.262162935451917,-0.10422438660667045,-0.2430383920059574,-0.04448151048012035,-0.04041971386554627,0.1424262364688743,0.03961686911133371,-0.0741166907791835,0.2024791573014081,0.0032739665839624597,0.0037767781491010884,0.06434311106566379,-0.010153641808042697,-0.06379778772544946,0.07861166503275106,0.2080869405449441,0.09382622978498911,-0.05085394934672392,0.019109815671367818,-0.03712063546305955,-0.022737299945357062,-0.0034611772577272546],
-        [0.14129075800407465,0.013161532680490218,0.09150212639143421,-0.007508910605780932,-0.16858106212016064,0.06360480616147715,-0.030336000289477184,-0.0563628771092888,0.11569990185741512,0.08913002656444624,0.07237696002607621,0.09765610324569099,0.08211070100442587,-0.0752140403285932,0.09783617053333456,0.10785058045205136,0.010024037327799001,-0.04792010051092639,0.09625930286719708,0.06285679782277734,0.16085379682748743,-0.07518461784474134,-0.29047301034854117,0.010701133767116412,0.07719073166360219,0.18852774324809668,-0.033523877963646136,0.2300350201712099,0.1866933973546615,-0.20209820031685224,-0.25071135639236325,-0.08930944845213729,0.10082823208834388,0.19696603658426506,0.034001542122238645,0.11277421948511471,0.06972599204650591,-0.23931909137711335,-0.07969976835326975,-0.026914568380253124,0.10373379503282823,-0.2313466348952257,-0.029548980717809842,-0.03400277092404058,-0.14568647023764336,-0.22653385111674162,0.14326251628626488,0.20288791578042642,-0.022272598971677365,-0.09286861358803984,-0.07148057655276875,-0.016795189260621284,0.0052708560331989375,-0.15811262449129465,-0.08696085821867296,0.21736730459459935,0.07428449525291753,-0.01071665023622282,-0.10316028005021866,-0.09396640924597727,0.010839772963711733,-0.05643469010268143,-0.18839375769485098,-0.024983175161189877],
-        [0.04543868536742045,-0.08131934538965689,0.12043486470369026,-0.23974027172728143,0.2675685409418166,-0.058167138161613355,-0.015642288606863543,0.04008757246039631,0.022994625216217653,-0.02872003301529673,-0.13918912527293925,-0.07703897649915287,0.0698104237402944,0.22326393254868715,0.15133201819455722,-0.05848556975260394,-0.028538656868025862,-0.12322509362922697,-0.07749614431490179,0.11435051357963846,0.01027706466370252,-0.046568622022417676,0.10830783983251935,0.10756361050389136,0.030933122344737832,0.241708880047541,0.09736248457694335,0.030766669266267463,0.17712949659950736,-0.23878944248097933,-0.041189789859289484,0.13109239702300018,0.015717466668340906,0.2737864089920106,0.23891127054232567,0.004773413493541892,-0.031241401569069065,-0.16103476533776018,-0.018578141234258674,-0.023944176160562547,0.06796353682389163,-0.17812264015753132,-0.1805626755341142,0.049471727173105336,-0.017363798582144825,0.024673893934663165,-0.06681855841893752,0.02932912063506269,0.034219224191694694,0.09441770236161032,0.001349872833954192,-0.16701989826818098,0.2614387732533024,-0.1537555175141572,-0.14839928629880936,-0.009686801092687951,-0.09157362209183498,-0.049950481276955734,0.2172152480272651,-0.0557681211020912,0.07186818110577495,0.08621550573305942,-0.10934823505394446,0.14658234489468194],
-        [0.07975003078144896,0.05720542352700814,0.028689913396441558,0.05668451178997656,0.019911504297407314,0.006379032155754568,-0.16120555224783148,-0.045885015145096054,0.13512645056435654,0.14581147542544337,0.014039843722915404,-0.10604956696817029,0.03971512989018869,0.14552138653513294,-0.06766898511798121,-0.08230468949949814,0.11524841520273474,0.1971084842116017,-0.10570060683544054,0.005285109033982555,-0.23602731664699594,0.09187216390772741,0.054395277526246795,-0.2725345286682344,-0.07947487059033112,-0.17778333763385248,0.17262858645077225,0.1285887203304294,0.006811489327266712,-0.06347822182226616,0.06107288791066374,-0.06161385351340991,0.08094979681749528,-0.09495814753550207,-0.06838949768812883,0.40637921162484947,-0.10732025668509632,-0.19643607383480746,0.16415530593182617,0.018672798941963605,0.09419334351269865,-0.03707830939318561,-0.003915767834158151,-0.1290722319760785,0.03562866274328733,-0.08155484616343207,-0.17758446285098725,-0.05110891421814925,-0.07790070571577874,0.06901299485500038,-0.15682828159314716,-0.071532055033045,0.15992843571954662,-0.14726840742557146,0.22089128974547922,-0.03771521482727419,-0.1710315823059727,-0.02738769545922742,0.05213753731790934,-0.007038217442023543,0.0397682789704086,0.19788698082553913,-0.15410449917558727,-0.07132255489353255],
-        [0.05730260796320127,0.09183613349736187,-0.15729549532115733,0.00962475422778087,-0.1382430451778398,0.059900180553175746,-0.0050584646120933035,0.13497089572819154,-0.00834142512782698,-0.0476954774789105,0.05700319698524671,-0.16790800487890395,0.04383373157613523,0.06252777550925638,0.0611383074991105,0.16872373417668177,0.2097637004981532,0.26472694809677655,-0.06913317228220928,-0.04840517756143479,-0.01319969053609696,-0.006286185117253158,-0.0571456917421021,0.14560465474844642,-0.12081546015251621,-0.1834611176549007,0.05453583782458956,0.09170308576779088,0.19153194399010717,0.13899419868090415,0.1209836133141019,-0.028764824783028956,0.13090784684889906,-0.0045757163953003424,-0.15257179188349793,0.21520817112758975,0.023746615159806334,-0.14637743208657444,-0.10471442335548618,-0.023091291092151158,0.04171435536875606,-0.14494076608904552,-0.21924120907647132,0.22332089960793913,-0.1385075452361925,-0.09857637921352988,0.057189571150277146,-0.02732686190420427,-0.07565788159553596,-0.15044383295729588,0.047581801932168336,0.015975282768525337,-0.1390007850425407,-0.13346469356284765,-0.08207220235375436,0.06930731183390423,-0.08454178265744323,-0.1186734088237789,0.03709020145453865,-0.1093124164469609,-0.033643945772182014,-0.2044547521933889,0.26713835208785425,-0.26729253419339805],
-        [-0.09170607154933304,-0.14164413926940125,-0.08397578861698748,0.08088915787632338,-0.026453171604660156,-0.057060454544586234,0.007545823892451531,0.05439264759816808,0.06225998396503839,-0.001639436757129674,0.10311044963388434,-0.05734004687680115,0.07710336845286259,-0.21085869406622357,0.18119578387404847,0.020335174262453005,0.08637685674342314,-0.08611304531435426,0.2049257657886366,0.0527703801118102,-0.021878342021849767,-0.005893107755531377,-0.0660399563110999,0.22406230756545512,0.25121326954866396,-0.03802280989528611,-0.14380340877182346,0.05558820832106555,-0.18029740232873762,-0.19888557953427363,0.08037835795594868,-0.1283813121489118,0.2596354046333461,-0.11482459379190298,-0.06344225589973748,-0.05263612487584129,-0.08375658515255086,-0.11544247396475033,0.18285969618502865,0.019706435675945218,0.3682471599097668,0.1648166928180986,-0.08081601444203165,-0.11508922955497197,0.1595336774121525,0.13811520864647206,0.04657775570239363,-0.0021886259037751502,-0.05841912532268304,-0.062289278673051694,-0.12404208180618273,-0.04488289407165319,-0.06701510963221884,-0.00832839283701646,-0.0854491210744256,0.012472393483726417,0.006596379223375482,0.2948240676547911,0.025119396742659828,-0.12554618165831877,0.09414080010614612,-0.0058921452194708795,-0.15680802359972346,-0.08417733192224745],
-        [-0.28082953839060654,0.15613118193645667,-0.04578682338992609,0.07364861689785415,0.14894639749673855,0.05779373524110659,-0.15397972377619593,-0.08851734618341706,-0.15299793067917866,0.08898349020332295,-0.009616286149246528,-0.0739051072829268,-0.27780386806381174,-0.07134009587678324,0.027652367098313584,-0.20387736332468692,0.23230429704003847,0.08075115050128151,-0.14137220255434504,-0.07828571602962013,-0.15644251532648756,-0.06713624360096088,-0.06980187865015314,-0.098617324413064,-0.1791401883733185,-0.07652506878132008,-0.078124402352621,0.029449621707295388,0.11581298265906943,0.006185820243101211,0.052944751629333146,-0.10605974983356822,0.00024286135972584973,-0.07092122572411647,0.334738180387839,-0.003230678753926783,0.04088034671572924,-0.017613191496666496,0.11625193653315871,-0.08496021037940417,-0.007875876249966132,-0.11538987532364746,0.20480193051939194,-0.029240845959990557,-0.08830369213240219,0.13928678752797974,0.013629408789794168,-0.2429401103104988,-0.06815776151776097,0.008109542286717343,-0.1805386595355359,0.03546784116023831,0.17974436626681572,-0.03447882901962493,-0.05996772702508403,0.19532464762867857,0.1452631190625312,0.021509433375109844,-0.026266728285312967,0.07976380642078545,0.09168911028784309,0.1254740010169427,0.03579645424012926,0.1336047580930778],
-        [0.13027570879986838,-0.1422064381586914,-0.049974804785017916,-0.23965636108637686,0.07393887164154969,-0.11911597394531172,0.005144506199441005,-0.010127302062671222,0.03168393477250609,-0.10731640104490459,0.06103901673436096,-0.06352593774615893,0.036553153820585646,-0.08168853923523799,0.11612835314419125,0.19696281385836814,0.03849079466529999,0.18468597536542353,0.18556763524178677,-0.0011670432950089164,-0.007426377957982415,-0.3028727533223463,-0.27491795427891896,-0.05350649933200284,-0.013863181646458674,-0.25113803362351556,0.02076917802574598,0.2312731529579507,-0.05548511791192887,0.12890062080625703,-0.08524395937998987,0.05442918164192553,-0.021282449831458453,0.05777363884327167,0.1782382686440313,-0.09158778615848283,-0.0724973819612425,0.006164684247441211,0.06399382219793327,-0.12372146105316809,-0.07740281269981333,-0.17945358621385227,0.0731009696681464,0.29561468358852716,-0.03738467413818268,0.16916725426817822,-0.005625397773094116,-0.04801681411595649,0.1121512649289351,0.1074137344422813,0.06202417736234315,-0.036342820614216585,-0.0699399816035773,-0.2702964705149934,0.05294141846458037,-0.11162782242123208,0.10862787200311905,0.0496822188936656,-0.044503407457314945,-0.10124558341097281,-0.08495926363025963,0.13680292926541865,-0.06893993793220457,-0.05957042276590004],
-        [0.21042482544315994,-0.4321935607370791,-0.09770613343665831,-0.1352971544784031,-0.010484876110146606,0.10976936448924952,0.18126415346555758,-0.10319003094219269,-0.01105154542299371,0.0605413888956188,0.20133710146422423,0.08708335813744106,-0.07299341511466614,-0.028949740377621654,0.12937469364488888,-0.18348104510355676,0.052709834805265525,0.05669523952800221,0.08448669050468391,-0.04074190152199398,-0.05756464675664221,0.11372023589504092,-0.08137520598943325,-0.28461555864909227,0.13228963047361322,0.21205276372520773,0.028692753546260212,-0.024231226956280123,-0.06335446202692589,-0.06105983347339399,0.007951802322308401,0.13624786073223008,0.1702374300313572,-0.12058505851914854,-0.0570978214807777,-0.11220226589237595,-0.05393793425151771,-0.05140474036478749,-0.007433979013121294,0.04312568166166113,0.02725133236815661,-0.06816217378390355,0.032927012014064894,-0.07288866297543833,0.14033898655586238,0.03372441689344248,0.09403951967329117,-0.02855575300677563,-0.023714615180966174,-0.16979599086874342,0.04842610452088201,-0.13043273844709427,0.01574093942136418,-0.1476192775701603,-0.015510146812238999,-0.18513556475364512,0.03962029486474717,0.17540990946754806,0.2500459563690874,-0.0784441152843809,-0.005829955505812782,0.11671023220802187,0.12645631006158878,-0.15147556240781063],
-        [0.029815108990647404,0.01949794893726839,-0.06227027192808378,0.12782776012889735,0.06948338405204085,0.02317665948615793,-0.1442317125588634,0.12151651345678925,-0.11377481631165484,-0.07832027484222007,0.06066721919664439,0.10239445322242711,-0.0346265928963836,-0.060787644235012976,0.07528897321970719,0.17350806439097546,-0.1570912017542845,0.054728265466273164,-0.03843658266416955,0.13404190136900157,0.023935627670748853,-0.06903548078179286,0.03995195314557606,-0.1295107848874266,0.016496581909702622,-0.08050912075697979,0.029738880634868178,0.15095889900374923,-0.14933351596198013,-0.2841775155639563,0.12203131449473185,0.0009932281988170196,-0.1308753725641299,-0.001176750931562481,0.07787480393260417,-0.024758656734947676,-0.1374477759432632,0.21294909344364576,-0.12920419119044688,0.15368120570034755,0.041665990991074806,-0.06222346309397134,-0.041522040775592454,-0.10874804594305262,0.15605119384566057,0.24147452030714003,0.10990904272350213,-0.17232220460086203,0.27310622762286024,0.014874576538779778,-0.27355554885243755,0.037278114821578286,0.04940187981464462,0.06453631089005789,0.02724466291950995,0.008279510503713772,0.1511954217458408,-0.08236440666869872,0.0037115311346089014,0.23086660231657177,-0.27674494603431404,-0.08833973899992495,0.08891927953498577,-0.19700295454456998],
+        [0.089408338372,0.105945893853,-0.057123940257,-0.114052036264,0.172502463832,-0.110622385778,-0.129727542501,0.100877499682,-0.020452060953,0.05086306463,0.06340875293,-0.060151425649,-0.16109436647,-0.053819509824,0.033384981791,-0.158139811743,0.009316749507,0.08043619971,-0.003587693408,0.092477826524,-0.207718697358,0.032556953757,0.260157358835,-0.034442213264,0.022992068797,0.213021627336,-0.186494511217,-0.031636306475,-0.049079406966,0.202018335763,0.098383518186,0.152057300661,-0.007842491162,-0.165907891295,-0.115927863933,-0.085387558604,-0.022105070498,0.050076834899,0.0505970315,0.280404438646,-0.050148779417,-0.074988456652,-0.105411234699,0.024402300009,0.001643067714,0.046321125205,0.122018751317,0.020683017224,0.08064812104,-0.062261738153,0.050116175234,0.276421065963,0.053129825092,-0.134782577234,-0.05506176547,0.108178350157,-0.018608889141,0.069825661873,-0.311511376282,0.03557603825,0.106427649044,0.10295745309,0.109264619377,-0.334309390509],
+        [0.21896415407,-0.137002489288,-0.097286871335,0.038566203236,0.152848339601,0.158397469096,0.0157907255,0.182699168499,-0.125581215756,0.145764656186,0.247700041288,0.328939261177,-0.013510818763,0.023533868144,-0.049518068316,-0.227760488152,-0.028723669606,-0.096561107656,0.009398328961,-0.027204199781,-0.051826770736,0.120522720767,-0.042574799432,-0.22056318008,0.115785535822,-0.006396579666,-0.097309493158,-0.022525142638,0.112171837347,0.101156042318,-0.000663912546,-0.043085463039,-0.047752716015,0.185996264027,-0.157761697302,0.033682752687,-0.249449617375,-0.020518991274,0.056530352822,0.068011320163,0.217001063587,-0.115664185187,-0.170140954626,-0.0676981764,0.029599214511,-0.197950339511,0.004104014949,-0.053328097778,-0.041343200347,-0.035320868228,0.018031635912,-0.152308409941,-0.036200545543,0.194521014964,-0.101917597181,-0.126638187931,0.01873466049,-0.147925233799,0.007885942881,0.07586917186,0.153896436962,0.110398811,-0.134044996291,-0.087402934871],
+        [-0.215097160472,0.109672959078,0.183989831537,-0.232589488698,-0.018440102685,-0.048043796915,0.013100672302,0.185583883621,0.11379004675,0.177432298657,0.015137349355,0.015972765264,0.020707763606,-0.191378213665,0.024144191756,0.072885065588,0.01512145321,0.067938590849,0.050744041093,0.069363958798,-0.022575075107,-0.088491359235,0.035221741684,-0.116308274537,-0.139645768556,-0.027830796276,0.010790722507,0.084693859257,-0.262864643686,0.009534941544,-0.224824268363,0.036516477352,0.118448909079,0.194892038117,0.173510798674,0.16311626573,0.122135401456,-0.173891506711,-0.019727495859,0.037720437207,-0.01212033189,0.014030227173,0.230307298877,0.046547542038,-0.149975626513,-0.067555633496,0.006185149801,0.02567467498,-0.084348072386,-0.171328562351,0.088466765514,0.21707534681,0.190690395899,0.0396132325,0.05979630542,0.084744261521,-0.111783381783,0.088875812505,-0.28438868829,0.098771794631,-0.147168353621,-0.148661836662,0.051757800845,0.089931772088],
+        [0.052099391777,-0.082049501958,-0.115140317662,-0.091423045415,-0.043705855641,0.009344991545,-0.177842518833,0.02542852942,0.072385418672,-0.165077608501,-0.082218705144,0.15257430899,-0.161984906954,0.177405227033,-0.25583364909,0.111736084736,-0.07905523312,-0.182799260264,0.091611475316,-0.131899478998,-0.144828126946,0.131921307304,-0.039597740533,0.118467878277,0.056337929215,0.093551423385,0.307284195441,-0.062239707954,-0.034430531491,-0.013901002017,-0.020507036211,0.194179198653,-0.172116710541,0.065158037758,0.060221403842,-0.115155531672,-0.033477915265,-0.243399889419,-0.136443713472,-0.081290504655,0.068208580055,-0.015743116921,-0.054449885476,-0.045492491834,0.10346223648,0.088754093884,-0.144031661385,0.072333368664,0.012775127022,-0.188786818956,0.004005529503,0.050064916513,0.18239302282,-0.088148325528,-0.095574901524,0.182379061626,-0.053667464687,-0.04899768957,0.053124744905,0.13598579897,-0.16875831541,0.303510304825,-0.06403628666,-0.058572543676],
+        [0.111447868965,0.041601979151,0.179919970629,0.128966895201,0.105585348843,-0.126465323589,-0.119386995491,-0.213670848272,-0.06472654629,-0.108669557229,-0.193203270501,0.05543818537,-0.095737190366,0.04539009506,0.268625114514,0.14654501702,0.181250941704,-0.244549733699,-0.314114196189,0.024330657904,-0.007449051273,-0.011835833984,0.207611463759,-0.002210078206,-0.05724160929,-0.043414529833,-0.045578416124,-0.216481039774,-0.138730738389,-0.023172582893,-0.043585442333,0.058299483389,-0.010732577979,0.026963406387,-0.017968653771,0.007819379498,0.059690525813,-0.071659202558,0.237747846574,-0.096266076244,-0.043952354722,0.078584242745,0.043108338416,-0.05489251331,-0.036291063462,-0.150152292583,-0.150231168466,0.027973321577,0.118969670164,0.165553341999,0.090468651419,-0.046935982133,-0.077028212047,-0.000810851681,-0.104136772681,-0.023868783968,0.259258857844,-0.034237907684,0.007151142069,0.02186034195,0.146432156785,-0.076459237414,0.23504288275,0.132191082814],
+        [-0.030327595215,-0.086195349728,0.039422042889,-0.05366029523,0.053214553455,0.209662686495,-0.023950695857,-0.349673843957,-0.199149896469,0.030308873009,-0.164223140297,-0.256935084447,0.132408814104,0.113027280635,0.046208504437,0.167435417466,-0.069761079438,-0.158887107061,0.08988158417,-0.13074057706,0.161140511868,-0.069610951034,-0.123414048082,0.047831516629,-0.078607708516,0.04017227506,-0.106631564449,-0.001611479824,0.024589666041,0.042035912287,0.157662751516,0.06360132466,-0.014672226946,-0.271180773478,-0.069244045441,-0.182696332127,-0.163455174731,-0.092414105598,-0.004913000565,0.040362994094,0.069364067381,0.019774905324,-0.023705186068,0.37975292646,0.010652646324,-0.052579274801,0.060951111134,0.040150330998,-0.182957634584,-0.15078700251,0.081617981814,-8.6402211e-05,0.107692162588,0.100348030352,0.003089577616,0.104818462683,-0.069871717072,0.035314685944,0.071765953184,0.033318916196,-0.030281135893,-0.189718832978,0.067425242785,0.114385271461],
+        [-0.126982636124,-0.1562019426,0.023354705412,0.172685821154,0.00274074196,0.273146577743,0.157250148962,0.236991273848,-0.16129863668,-0.039735182392,-0.012975535965,-0.152689424676,0.064196883449,0.016082897878,-0.248868814488,0.125815013122,-0.320270710676,-0.063381816851,-0.106955228389,0.085097680717,-0.153205687572,-0.124932970863,-0.069231647111,0.11385389302,-0.096188108477,0.063022747635,0.096446818372,0.027844583751,-0.081897257024,-0.066404069291,-0.07302766293,-0.014886088866,0.194490422923,-0.000625955643,0.048401378816,0.13464245795,0.124353406025,0.03242136206,0.045285837799,-0.017369573769,-0.132370543821,0.203745800221,-0.262162935452,-0.104224386607,-0.243038392006,-0.04448151048,-0.040419713866,0.142426236469,0.039616869111,-0.074116690779,0.202479157301,0.003273966584,0.003776778149,0.064343111066,-0.010153641808,-0.063797787725,0.078611665033,0.208086940545,0.093826229785,-0.050853949347,0.019109815671,-0.037120635463,-0.022737299945,-0.003461177258],
+        [0.141290758004,0.01316153268,0.091502126391,-0.007508910606,-0.16858106212,0.063604806161,-0.030336000289,-0.056362877109,0.115699901857,0.089130026564,0.072376960026,0.097656103246,0.082110701004,-0.075214040329,0.097836170533,0.107850580452,0.010024037328,-0.047920100511,0.096259302867,0.062856797823,0.160853796827,-0.075184617845,-0.290473010349,0.010701133767,0.077190731664,0.188527743248,-0.033523877964,0.230035020171,0.186693397355,-0.202098200317,-0.250711356392,-0.089309448452,0.100828232088,0.196966036584,0.034001542122,0.112774219485,0.069725992047,-0.239319091377,-0.079699768353,-0.02691456838,0.103733795033,-0.231346634895,-0.029548980718,-0.034002770924,-0.145686470238,-0.226533851117,0.143262516286,0.20288791578,-0.022272598972,-0.092868613588,-0.071480576553,-0.016795189261,0.005270856033,-0.158112624491,-0.086960858219,0.217367304595,0.074284495253,-0.010716650236,-0.10316028005,-0.093966409246,0.010839772964,-0.056434690103,-0.188393757695,-0.024983175161],
+        [0.045438685367,-0.08131934539,0.120434864704,-0.239740271727,0.267568540942,-0.058167138162,-0.015642288607,0.04008757246,0.022994625216,-0.028720033015,-0.139189125273,-0.077038976499,0.06981042374,0.223263932549,0.151332018195,-0.058485569753,-0.028538656868,-0.123225093629,-0.077496144315,0.11435051358,0.010277064664,-0.046568622022,0.108307839833,0.107563610504,0.030933122345,0.241708880048,0.097362484577,0.030766669266,0.1771294966,-0.238789442481,-0.041189789859,0.131092397023,0.015717466668,0.273786408992,0.238911270542,0.004773413494,-0.031241401569,-0.161034765338,-0.018578141234,-0.023944176161,0.067963536824,-0.178122640158,-0.180562675534,0.049471727173,-0.017363798582,0.024673893935,-0.066818558419,0.029329120635,0.034219224192,0.094417702362,0.001349872834,-0.167019898268,0.261438773253,-0.153755517514,-0.148399286299,-0.009686801093,-0.091573622092,-0.049950481277,0.217215248027,-0.055768121102,0.071868181106,0.086215505733,-0.109348235054,0.146582344895],
+        [0.079750030781,0.057205423527,0.028689913396,0.05668451179,0.019911504297,0.006379032156,-0.161205552248,-0.045885015145,0.135126450564,0.145811475425,0.014039843723,-0.106049566968,0.03971512989,0.145521386535,-0.067668985118,-0.082304689499,0.115248415203,0.197108484212,-0.105700606835,0.005285109034,-0.236027316647,0.091872163908,0.054395277526,-0.272534528668,-0.07947487059,-0.177783337634,0.172628586451,0.12858872033,0.006811489327,-0.063478221822,0.061072887911,-0.061613853513,0.080949796817,-0.094958147536,-0.068389497688,0.406379211625,-0.107320256685,-0.196436073835,0.164155305932,0.018672798942,0.094193343513,-0.037078309393,-0.003915767834,-0.129072231976,0.035628662743,-0.081554846163,-0.177584462851,-0.051108914218,-0.077900705716,0.069012994855,-0.156828281593,-0.071532055033,0.15992843572,-0.147268407426,0.220891289745,-0.037715214827,-0.171031582306,-0.027387695459,0.052137537318,-0.007038217442,0.03976827897,0.197886980826,-0.154104499176,-0.071322554894],
+        [0.057302607963,0.091836133497,-0.157295495321,0.009624754228,-0.138243045178,0.059900180553,-0.005058464612,0.134970895728,-0.008341425128,-0.047695477479,0.057003196985,-0.167908004879,0.043833731576,0.062527775509,0.061138307499,0.168723734177,0.209763700498,0.264726948097,-0.069133172282,-0.048405177561,-0.013199690536,-0.006286185117,-0.057145691742,0.145604654748,-0.120815460153,-0.183461117655,0.054535837825,0.091703085768,0.19153194399,0.138994198681,0.120983613314,-0.028764824783,0.130907846849,-0.004575716395,-0.152571791883,0.215208171128,0.02374661516,-0.146377432087,-0.104714423355,-0.023091291092,0.041714355369,-0.144940766089,-0.219241209076,0.223320899608,-0.138507545236,-0.098576379214,0.05718957115,-0.027326861904,-0.075657881596,-0.150443832957,0.047581801932,0.015975282769,-0.139000785043,-0.133464693563,-0.082072202354,0.069307311834,-0.084541782657,-0.118673408824,0.037090201455,-0.109312416447,-0.033643945772,-0.204454752193,0.267138352088,-0.267292534193],
+        [-0.091706071549,-0.141644139269,-0.083975788617,0.080889157876,-0.026453171605,-0.057060454545,0.007545823892,0.054392647598,0.062259983965,-0.001639436757,0.103110449634,-0.057340046877,0.077103368453,-0.210858694066,0.181195783874,0.020335174262,0.086376856743,-0.086113045314,0.204925765789,0.052770380112,-0.021878342022,-0.005893107756,-0.066039956311,0.224062307565,0.251213269549,-0.038022809895,-0.143803408772,0.055588208321,-0.180297402329,-0.198885579534,0.080378357956,-0.128381312149,0.259635404633,-0.114824593792,-0.0634422559,-0.052636124876,-0.083756585153,-0.115442473965,0.182859696185,0.019706435676,0.36824715991,0.164816692818,-0.080816014442,-0.115089229555,0.159533677412,0.138115208646,0.046577755702,-0.002188625904,-0.058419125323,-0.062289278673,-0.124042081806,-0.044882894072,-0.067015109632,-0.008328392837,-0.085449121074,0.012472393484,0.006596379223,0.294824067655,0.025119396743,-0.125546181658,0.094140800106,-0.005892145219,-0.1568080236,-0.084177331922],
+        [-0.280829538391,0.156131181936,-0.04578682339,0.073648616898,0.148946397497,0.057793735241,-0.153979723776,-0.088517346183,-0.152997930679,0.088983490203,-0.009616286149,-0.073905107283,-0.277803868064,-0.071340095877,0.027652367098,-0.203877363325,0.23230429704,0.080751150501,-0.141372202554,-0.07828571603,-0.156442515326,-0.067136243601,-0.06980187865,-0.098617324413,-0.179140188373,-0.076525068781,-0.078124402353,0.029449621707,0.115812982659,0.006185820243,0.052944751629,-0.106059749834,0.00024286136,-0.070921225724,0.334738180388,-0.003230678754,0.040880346716,-0.017613191497,0.116251936533,-0.084960210379,-0.00787587625,-0.115389875324,0.204801930519,-0.02924084596,-0.088303692132,0.139286787528,0.01362940879,-0.24294011031,-0.068157761518,0.008109542287,-0.180538659536,0.03546784116,0.179744366267,-0.03447882902,-0.059967727025,0.195324647629,0.145263119063,0.021509433375,-0.026266728285,0.079763806421,0.091689110288,0.125474001017,0.03579645424,0.133604758093],
+        [0.1302757088,-0.142206438159,-0.049974804785,-0.239656361086,0.073938871642,-0.119115973945,0.005144506199,-0.010127302063,0.031683934773,-0.107316401045,0.061039016734,-0.063525937746,0.036553153821,-0.081688539235,0.116128353144,0.196962813858,0.038490794665,0.184685975365,0.185567635242,-0.001167043295,-0.007426377958,-0.302872753322,-0.274917954279,-0.053506499332,-0.013863181646,-0.251138033624,0.020769178026,0.231273152958,-0.055485117912,0.128900620806,-0.08524395938,0.054429181642,-0.021282449831,0.057773638843,0.178238268644,-0.091587786158,-0.072497381961,0.006164684247,0.063993822198,-0.123721461053,-0.0774028127,-0.179453586214,0.073100969668,0.295614683589,-0.037384674138,0.169167254268,-0.005625397773,-0.048016814116,0.112151264929,0.107413734442,0.062024177362,-0.036342820614,-0.069939981604,-0.270296470515,0.052941418465,-0.111627822421,0.108627872003,0.049682218894,-0.044503407457,-0.101245583411,-0.08495926363,0.136802929265,-0.068939937932,-0.059570422766],
+        [0.210424825443,-0.432193560737,-0.097706133437,-0.135297154478,-0.01048487611,0.109769364489,0.181264153466,-0.103190030942,-0.011051545423,0.060541388896,0.201337101464,0.087083358137,-0.072993415115,-0.028949740378,0.129374693645,-0.183481045104,0.052709834805,0.056695239528,0.084486690505,-0.040741901522,-0.057564646757,0.113720235895,-0.081375205989,-0.284615558649,0.132289630474,0.212052763725,0.028692753546,-0.024231226956,-0.063354462027,-0.061059833473,0.007951802322,0.136247860732,0.170237430031,-0.120585058519,-0.057097821481,-0.112202265892,-0.053937934252,-0.051404740365,-0.007433979013,0.043125681662,0.027251332368,-0.068162173784,0.032927012014,-0.072888662975,0.140338986556,0.033724416893,0.094039519673,-0.028555753007,-0.023714615181,-0.169795990869,0.048426104521,-0.130432738447,0.015740939421,-0.14761927757,-0.015510146812,-0.185135564754,0.039620294865,0.175409909468,0.250045956369,-0.078444115284,-0.005829955506,0.116710232208,0.126456310062,-0.151475562408],
+        [0.029815108991,0.019497948937,-0.062270271928,0.127827760129,0.069483384052,0.023176659486,-0.144231712559,0.121516513457,-0.113774816312,-0.078320274842,0.060667219197,0.102394453222,-0.034626592896,-0.060787644235,0.07528897322,0.173508064391,-0.157091201754,0.054728265466,-0.038436582664,0.134041901369,0.023935627671,-0.069035480782,0.039951953146,-0.129510784887,0.01649658191,-0.080509120757,0.029738880635,0.150958899004,-0.149333515962,-0.284177515564,0.122031314495,0.000993228199,-0.130875372564,-0.001176750932,0.077874803933,-0.024758656735,-0.137447775943,0.212949093444,-0.12920419119,0.1536812057,0.041665990991,-0.062223463094,-0.041522040776,-0.108748045943,0.156051193846,0.241474520307,0.109909042724,-0.172322204601,0.273106227623,0.014874576539,-0.273555548852,0.037278114822,0.049401879815,0.06453631089,0.02724466292,0.008279510504,0.151195421746,-0.082364406669,0.003711531135,0.230866602317,-0.276744946034,-0.088339739,0.088919279535,-0.197002954545],
     ],
     # sf0.1
     '2000:1.53081411098240': [
-        [-0.1009481278848251,0.12239994262745499,-0.08543747720723908,-0.22152316499590266,-0.02646945857271728,0.060179399400122804,0.20430410253341083,0.09195330706468906,0.0038821170770167103,-0.005479584510678969,-0.10086362440911535,-0.04137170695788315,-0.15514211322989854,0.004792912653467228,-0.03700913540852066,-0.23023736857096636,0.06757624529405382,0.015522558160187718,-0.14672986106231165,0.22564159716992244,-0.07216743931571831,0.0012613122072345467,0.031217599530107828,-0.14727705529673765,0.009464910027345178,-0.06643372712247164,0.03932096186063071,0.028284879230532124,0.0433759952141424,-0.1810085492293903,0.11775402414395428,-0.11634318931449245,0.13391668736403933,0.07830774242733739,0.1956322965288472,-0.2908277130235048,0.15957190433303298,0.1331159697441849,-0.14108473530287557,-0.061187424393388895,0.211869788019177,-0.19671939738900143,0.04508298207869843,-0.12956143516697638,-0.07815444006140176,-0.19347287436277114,-0.028539064674927634,0.12635824616842337,0.02999425173731413,-0.08062372479081494,0.05077565510224746,0.08547703286337197,-0.1394148906648179,0.06263050964244792,0.10453408882766177,0.10774254160010066,0.17899867895312582,-0.169926257769753,0.21264095765578966,0.13611335845091646,-0.06033700394070834,-0.02497229628132047,0.11226205251137868,-0.13539697349825686],
-        [0.21918186020446298,-0.13228740332235686,-0.11850258256807124,-0.10301534444652602,-0.05801061119140589,0.03857316310091408,0.13570156781722797,-0.1471453816947166,-0.0022680167564075497,-0.13215313285227878,0.004001280797766014,-0.10271708165084066,-0.008518658154444083,-0.2560616218886657,0.025961861237947234,0.18576848976236884,-0.014976119328580763,-0.033321631856597776,-0.0239614220204018,0.037207222568942544,0.03744689925966707,-0.05458836340458113,0.16322500032566495,0.10880688118444719,-0.26658670412748675,-0.09567860254727438,-0.08350838420548277,0.08853404450931503,0.14095761025096573,-0.12113425592349862,0.08631662142125444,0.14383503146432572,-0.38643308517960134,-0.13969515294620996,0.1977601058638415,-0.09385076271786554,0.15974611438644032,0.0663284176436867,-0.014835688719451902,-0.10028177644809484,-0.10049587044418315,0.05080282783128602,0.03440706768647808,0.12301375166875489,-0.05104149855252589,0.2433230851186974,-0.019309309501436955,-0.14214031784481518,0.11245875882781411,-0.03408023015756911,0.14452254902886394,-0.05356417034956406,0.09563151656654,-0.14847721501232308,-0.1783775742302074,-0.05391571519368598,0.06756821267716788,-0.05160890655410614,-0.018050498151083554,-0.15205253290401802,0.1420855794759013,-0.046190189545421076,-0.048618149182285145,-0.0704859887072116],
-        [-0.04146884132559761,0.2238821933413043,0.09076539829910207,0.013994008143323735,0.08812575769786338,-0.04041870254172763,-0.023225675830453176,0.11464814845236938,-0.11336459547130312,0.056470819287203856,-0.03208956909841053,-0.03969301447372845,0.12989147606308257,0.09506060173352285,0.07346895234671881,-0.05943983940379257,-0.24320594065469897,-0.010735951092703137,-0.25004704144277373,0.07453236348167146,0.0397630618272905,0.28138477809402995,-0.09137959713551642,-0.0930861339425702,0.038638702004470976,-0.0197725473430017,-0.042129949044928214,0.10411051337773358,0.006052466878997733,0.06511674531167586,0.23156785250639028,0.07060596934837754,-0.19319069628480154,-0.03522458526378755,0.06233902579980286,-0.19560656581262997,-0.021767289500789225,-0.10423788581419466,-0.15326409713868988,0.09974819181444071,0.1901253050100712,0.16148472913369824,-0.11172869865856216,-0.081984503530632,0.0647499885086966,0.07297254926869223,0.07955697398619765,-0.011869776739388117,0.2943039411400744,0.1413053335713758,-0.133012373245973,-0.15050577655431355,-0.09813298060299559,0.06499423282563582,-0.09206946850950973,0.053984572930839726,0.058534921578217186,0.03662591645879895,-0.005532426179572102,-0.15986894109659053,0.20460020949633306,0.003594832494949655,0.18449584806679234,0.2435268358764624],
-        [0.06785335778081429,-0.004802158680155363,-0.3203826491857578,0.08469536581954244,0.07205689758815977,-0.07345912617775673,0.055827174966990065,0.1523116794227961,0.09251607146111634,-0.07912986960030426,-0.05789047363121355,0.007958174762230309,0.16610038152611017,-0.024320483434509512,-0.05925196595634436,-0.032662574100152206,0.011071252509013063,-0.022240778629877955,0.09879197114151984,-0.03333439522457427,-0.10104551973303305,-0.31312598229495775,0.3118126069481412,-0.17669507461371464,0.21431948027309244,-0.13138353613276094,0.0016163689695525487,0.11038840361371632,0.1826114594659013,-0.28203820913290384,0.016569242695555614,0.03706222353685898,0.07119808401953111,-0.15663040479524362,-0.10291544252091896,0.03468183694726444,0.10510709673268442,-0.11844206240448601,0.09257421287411832,-0.04059247483755153,0.06681073792720921,-0.11954193695235024,-0.16419509059673318,0.10861969976661767,0.1287368799919023,-0.0069618300205768775,0.01541091713485026,-0.26298580780450004,-0.034999688300537374,0.08207363196774127,0.0567587340423414,-0.0711155454516885,-0.021450024826546822,0.12522513612572067,-0.0397001583094308,-0.04843835849567054,-0.03689675470048047,0.09391448881001772,-0.08824089385164838,-0.02048307205199686,-0.08498459274095624,-0.12072933456314237,-0.07260349477690428,0.23990636346372637],
-        [-0.0747580267224036,0.1363995620225077,-0.22994811535868884,0.08547000766559694,-0.13996056815588134,0.1754319147294389,0.03428357650797539,-0.03988497234161045,0.06282338723311572,0.34158150904126944,-0.03420014324595203,0.05360938543764461,0.09732825963430912,0.23354108654108052,-0.06382352914687857,0.1680846766081735,0.003008132072182136,0.03202243829502047,0.17012229884244692,0.03207849060358812,-0.08390919067401843,-0.15559510360241174,0.09288049955868068,0.1634140086397562,-0.12173026532411389,-0.109475458083668,0.0288468713712772,-0.0047428180963032624,-0.07550272381888821,0.03580517778372295,-0.04429398159114148,-0.13996026296409927,0.2599885273329956,0.013534055229346023,0.07737547065652417,0.1879946006503743,-0.0830184065835058,0.06008331111056346,0.049143675360109676,0.10285228164160509,-0.22819804654011452,0.21321168678886737,-0.11538909715871878,-0.06033672634597219,-0.018781509327242204,0.11347735054466651,0.21654120529193488,0.005542590378639741,0.22483396612885762,-0.16288331827134797,-0.06559984128686103,-0.12190800418270296,-0.08899009361984192,0.038414125184140925,0.03670415978229614,-0.056357940546761756,-0.025631572737861374,0.09129778550380035,0.14213655604228984,-0.008189566141898409,0.03561102483095234,-0.10880367729530277,-0.06667254560063475,-0.15325720595119],
-        [-0.03744300316235298,-0.0258795635488334,0.05183201066401707,-0.1360157137111993,-0.3302702775604825,0.14397278550581055,0.1628410425704571,-0.06409618845605672,-0.02834358463015931,-0.2947420259714899,0.04998607943782354,0.11051620732045801,-0.17342820870978884,0.1727981645092988,-0.022218009883977183,-0.27022184820322354,-0.008686998947014626,-0.14584453969552127,0.05294411895799044,-0.06755208487782251,0.14501074466232985,0.0397064274712845,-0.09383146565617585,-0.048497537889282495,-0.14057135065962592,0.11143206528933748,-0.16040950109423496,-0.007298436144085778,0.09689595982491266,0.11218264873500886,-0.19668075274690722,0.039448916434905223,0.11998687345082712,-0.038243380563444694,0.0073928366695132355,-0.13349881466070768,-0.18347417167028995,0.08650439127042388,-0.027716683110337068,0.059624568842947305,-0.03732661545801896,0.06003557898086075,-0.09770537943096207,-0.1418992817018678,-0.07941514690426994,-0.042349733220487684,0.03233707970810819,-0.017333546358494562,-0.04591708540577654,-0.06383016569889285,-0.13235455521684325,-0.020557204410213234,-0.06522601782092265,-0.17685030875928853,0.16650706897627965,-0.19990508236630664,0.1426915762120489,-0.05354992613214988,-0.06290398012844188,-0.004810447546434258,0.00203604114811016,-0.08661399572007687,-0.33041902123432076,-0.05709287917262138],
-        [-0.008730205075556581,0.14368101255976448,-0.012202397963809748,0.0473017105023973,0.030759099560608485,-0.06275509910433627,-0.29750850810885937,-0.0854192952948392,0.0890658289727501,0.12037094392586205,-0.08699414448013928,0.00086099033005788,-0.08558268720527575,-0.33292824253304676,0.028177584285632003,-0.0911771231919506,-0.004794110915647292,0.22451728032404974,-0.01209802039840135,-0.04555368263978357,-0.00762150056797714,0.21262019945502936,-0.10785559062724397,0.04775658993430856,0.008370375263832873,0.21304341859954984,0.0489058005904033,0.026552509947026442,0.002571164859428479,-0.05923523507064397,-0.02199577068678729,0.267428394117957,-0.05858361370626285,0.19642279624561226,0.0691099659333431,0.005451580651860136,0.16963404368556176,-0.1713714774669637,-0.02825404892638661,0.04003942677353726,0.015673489152384163,0.0484994400638665,0.17929660409806988,-0.24998151903187507,0.017843261892651754,0.2612291055598602,-0.013288200605491109,-0.08018832065484051,-0.2259048415480364,-0.018248424508025555,0.16586192950294484,0.00926932889450362,-0.008922427998727134,-0.08157183885346103,0.08757735402451636,0.08192664959838279,0.035666326761466735,0.044748236525227074,-0.15260905302478667,-0.1084077409425213,-0.09729148153896904,0.021083640291064704,0.1656520541708291,-0.16590154746813923],
-        [0.005616668804950936,0.05023981096631671,0.15753098360121828,-0.03907870760715313,-0.14436889900879063,-0.13989597794380734,0.26264047327773254,-0.11415664547594845,-0.027461505347554337,0.05113785349829151,-0.15623143745305754,0.08001871258363293,0.0013415890761723126,0.032244986113101684,-0.06635398058576333,-0.11653702971675728,0.0325670160150794,-0.03000458450904604,0.11110996124899468,-0.00037504515489007674,-0.26374636859309414,-0.16415322375491484,-0.023559418342955555,0.019671551935510758,0.1414414469138834,0.0691002991501674,0.2832295274915121,0.11054107360013495,-0.1856787293413132,0.232280917952535,-0.10258465404183502,0.05264513193421961,0.19370040229358382,0.05322374266733898,-0.04190045693523981,-0.02369865847413263,0.19449332509906403,-0.06744750898443629,0.22922978997768512,-0.10381964903914148,0.059738485317363206,0.040638406242635,-0.1236678923028039,-0.048675969776732386,-0.11731376665060969,-0.06117601002059288,0.12155090050699142,-0.012769491094343497,0.09162729675885448,0.10364496049087961,-0.028076999789046514,0.036323718036318176,-0.2660094383454918,-0.036252067400079836,0.048598797457330464,0.06869401570037564,0.05488226096960455,0.0763144956638177,0.23903768394542693,-0.23801308374805197,-0.09867383557139059,-0.02972207178260958,0.15265266856917004,0.06420014739438716],
-        [-0.045591154509489536,0.10902507064097273,0.02595020023171009,0.1130388879720657,0.16141941201894752,0.08295172969500339,-0.11999471827735181,0.0627802102240795,0.051206561056367346,-0.2209937736671656,0.034404786817768436,-0.14013812288080782,-0.1080104150775645,0.17470189268461617,-0.12166661952330039,0.058123762757557866,0.09190691012710081,0.03988340725162178,0.15985722087968848,-0.12464494170164023,-0.03549976948242893,0.13457647680877682,-0.05967063912398892,-0.036617986808581596,0.012304030015211893,-0.02135742846817765,0.04717194148301112,-0.10813969299948484,0.118687492834783,-0.04560425117810579,0.1337561140355558,-0.1467857405696124,-0.02783111416315513,-0.14274552271312232,-0.08534250977045808,-0.04580166932443368,-0.01576771497803483,0.15542421703479004,-0.09945984347362435,-0.24527431768496605,-0.06980792695909664,0.1507119612621866,-0.37469185481082656,0.0851141868855968,-0.07210602557575935,0.019209192599952945,-0.0014924211281849193,0.15341648833116595,0.043917387343879906,0.006973794284723706,-0.21151244449389064,0.045694278472349824,0.1376023663144903,-0.2592438847648646,-0.011134699304010115,-0.0433757018486319,0.1910095694267821,-0.08898294901922299,-0.06192576239393365,0.047607612337353895,-0.016611930758816295,-0.22275802262432284,0.08970828741129909,-0.2615419453640408],
-        [0.3071902993837098,-0.13991634585289678,-0.19409070114493598,-0.002844271773558433,0.18967469210475157,-0.10376979244660266,-0.29610851648769226,-0.11985841383948811,0.1333855860164045,-0.017910970105630628,0.04167908704500746,-0.1383623626626661,0.018283569665117343,-0.05838749277720494,-0.09041816073494247,0.024868581270598888,0.06032580048367641,0.026959938959155445,-0.13425366724650004,-0.1981788773239292,0.10747266539073914,0.00735075624783596,-0.1841589128149023,-0.05163516479014141,0.011000434702145631,-0.07532802132449226,0.1406684665803481,-0.03005807939237968,-0.07199377963424629,0.02718213471440292,-0.15285525099503908,-0.2263745543295929,-0.07025599877245378,-0.16044312319353543,-0.20349171942682528,0.10391523507301142,-0.03373827850638455,0.002819022842396379,0.2907668558326299,-0.20296779574750093,-0.0020185657432601825,-0.036911627619637344,0.24112614246681005,-0.10601317345325008,-0.08591687655591673,0.08401867981762255,-0.04573454668866084,0.14062780487080231,-0.06958766933953392,0.05818869226004154,0.04833219015179307,-0.0016466926003084843,0.13883094269777035,-0.019786956788751475,0.08783204836632479,-0.05869999119514007,-0.0007916260373481694,-0.07305886784261013,0.07525123252451447,-0.1174585709536767,0.12175015916342363,0.16263468909540074,-0.06059225507809392,0.056782440173568836],
-        [0.17690462032109203,-0.09560611589997339,-0.03395177429023002,0.04445122555957701,0.10470170720438153,0.0035533793577070386,-0.28070586239655404,0.02732901362832615,-0.08826173653404042,0.09385378821259074,-0.24483646717626723,-0.02411882887061881,-0.10038771069523177,0.15453726900657766,-0.12981602415946336,0.1561688428509398,0.061364435246006925,-0.06320265862060916,-0.0632157868473717,-0.012670172639440105,0.10843691260772184,-0.0814003614612712,-0.0553794169876815,-0.18827264350269404,-0.052603970941269826,-0.07339852498082954,-0.08184146100799093,-0.07140709552816728,-0.2765558297638153,-0.13449673259605252,-0.05150341234052722,0.09338754420239355,0.08285240697172196,-0.05967806645336897,-0.135430740035433,0.19862023596838194,0.11263548480830532,-0.27455544710386504,-0.10037347980588976,-0.026291469131227,0.017920275801422737,0.08904692871975957,0.12390645779071649,-0.06943410988906411,0.15888339058132253,-0.10385506355272059,-0.010194859695527489,0.10771219167845257,-0.0891562294318268,0.002684397233717935,0.21377733769390908,-0.38004945305638543,-0.02367928719609596,-0.21295564324089533,0.06554144403636544,0.03323111484534971,0.011925102660473544,-0.009928513686803104,0.06896424777144071,0.13804551508131693,-0.03741276920013537,0.018124187238090204,-0.001988596884899897,0.02185328867275902],
-        [-0.05595542510426535,-0.09719159871750935,-0.11396476127505349,0.12517485132098502,0.1539441166900066,0.014709865602432128,-0.11876276616791309,0.13550363157656983,0.20350023309368281,0.2098151639614135,0.0829673961901272,0.13948135760343966,0.03805600627996901,0.17994961889145777,-0.019455145307535105,-0.2279813956454134,0.20817350024215767,-0.0037167291490047246,0.0018698093291169185,0.02247590812374058,-0.060788970602853966,-0.14480827040096508,-0.09246985290122971,-0.034643903200905136,0.17409919003731947,-0.07952165898933111,0.18768889855667825,-0.13373453270361133,-0.10748086401340863,-0.1484477259699581,-0.10846469584262047,0.0954714005193318,0.15548788704266905,-0.07875006595936072,-0.04714387218712553,-0.0875222030484534,0.11225207550170081,-0.11738636108700908,0.12408929096502416,-0.02525184183808697,0.101441202006655,-0.02024701916506121,-0.10692167902478866,-0.010443884338836583,-0.08031106372578166,0.00964997042911613,0.022324413556346824,-0.19941740236947414,-0.01597545532641138,-0.08398234499515488,0.28550197141902406,-0.06492684542004915,0.0517629486275591,0.021087761536955504,-0.059199423638768005,-0.3239525192614328,-0.20090322225551616,0.07156606001688075,-0.01938795487332397,0.0387684745743126,0.18472379914082215,0.16096943079345535,0.12763968227650288,-0.04375176543337241],
-        [-0.2667821434083701,-0.0359708579896425,0.1241974691972081,-0.15165054135161124,0.1106004449777111,-0.020694378952705428,-0.061527569827550345,0.0023405382878550905,0.09294855141310693,-0.20688906425553305,-0.036719136121868126,0.08868419886565425,-0.12323772681999273,-0.1669241063576718,-0.18749204255934146,-0.009586063832053206,-0.08144319414729237,-0.18221270400741402,-0.11172326503993749,0.25608996110210847,0.0940434918321275,-0.13587690917390347,0.301519859045479,0.15730830183700462,-0.062275870979474304,-0.13210308957272915,-0.008221158507203669,-0.04126460412121336,-0.014046983221132663,-0.016328997291042653,-0.18558923231942,0.07076989723481442,-0.03563747302869758,0.011500436567245163,0.007123545673389044,0.03002536285968888,-0.00439750461795183,0.12627271072929128,-0.011960472987135696,-0.054705455707696166,0.23609231643679046,-0.04305122792811893,-0.03638202644601426,0.030928229486002885,0.030689703336549634,-0.04400829100463877,-0.18107170959873925,0.042405091489665106,0.07416334338406805,-0.07353569085049909,0.04886849448932529,0.051596723818587945,-0.3146053654829828,0.127382471357244,0.06972228999765862,0.18288186649372148,-0.12209725498039718,-0.17814655412604605,-0.15426814663398475,0.08821023680946698,0.0058741408991589035,0.13781970215537287,-0.0113059907242182,0.1555188300909982],
-        [-0.12062986183529278,0.07273941098464429,0.25000277070455024,-0.0029093797365220184,-0.1275535200545338,0.03584248516627852,0.13789331677047487,0.034466854863685434,-0.12434014799647977,0.10303918418522812,0.17880287965410568,0.031053065687436328,0.01226272493853697,-0.019197975685423484,-0.03108244017540121,-0.04932635096360959,-0.17586979885177606,-0.028085429861012194,-0.03548022289090635,-0.01870515804373713,-0.07908058415071477,0.2326825139802167,0.07627803471525953,0.09334022009057565,0.12313484788071766,-0.0013425326390227913,-0.006316453338678136,0.01181818053210329,0.18049225917357173,0.01850427144073081,0.03037801393221339,0.12747757820099712,0.21743603061893815,0.26533615631321167,-0.008856681532824567,0.18031733330411276,-0.09858080408098342,-0.04931105137926079,-0.06810840013468196,-0.06476606221660126,-0.19217353814418936,-0.15335116782944208,0.1593249168620694,-0.0149048079458242,0.027709048738926045,-0.09481272088959646,0.12231326319266106,-0.1116422376868758,-0.16493685016702866,0.07732587200499914,-0.24552461776441778,0.02580496645019386,0.14752526261052934,-0.14842267185798325,-0.21315590745206572,-0.16843094586900711,-0.21503260853484443,0.20915431700609285,0.04332786125271519,-0.020335180936510548,-0.18070280683637266,0.030265255317307553,-0.06737167393592525,-0.08163170612361015],
-        [0.03773988152267443,-0.052104456161203086,0.03363203229255189,0.07636440581747028,0.020642664843214694,0.0906472952586017,0.07351621774906346,-0.06467615122816972,0.21423480984607707,-0.10563965796917824,0.09847495062089238,0.05244717719788882,0.006891440410484801,0.04065011231681835,0.3141431091718777,0.29645263314809134,-0.04383842759047733,-0.12490384643521997,-0.011106856401870804,-0.11629521638890797,-0.06852298887483259,0.03969085164149701,0.09382737888827904,-0.10312674160180337,0.028806471018055422,-0.08207336122567163,-0.024509403595926127,-0.22666952968530207,-0.14275268760995277,0.07222827046623959,-0.16821632992131938,-0.040767161736202234,-0.08099468882551286,0.07411503427104389,-0.08166183262946622,-0.15708675746937073,0.026766365539185457,0.13450434059197378,0.1539499643665577,-0.03397603033442571,-0.17698510973960244,-0.13492661894204977,0.17910649259358302,-0.028066486704619965,0.16567535765945882,0.047952690900819946,-0.027539804016219204,-0.10983302690804592,-0.1293486280516293,0.015403085043589162,-0.1709386146144809,-0.014759401991258029,-0.27291636601575403,0.06928965283939652,-0.12583507835002497,-0.11241178801019527,0.1274395538638402,-0.2440719961085212,0.09422706370654967,-0.044218313929870794,-0.05196730578824043,0.0639945847120148,0.13879944227451868,-0.24903536910309404],
-        [0.13582532458678054,-0.09975915457060751,0.06003045976773236,-0.2061504411158013,-0.28517026546439045,-0.12078534348389469,-0.04005612098880188,0.11866304297756253,-0.22507891489527876,0.18478766977565786,0.046044725621707486,-0.08722748523159442,0.044224656174582315,0.12039409063608243,-0.037040113400030446,-0.2064408121288703,-0.12211315308738649,-0.090877703163969,0.10474703939826398,0.02377301421890509,0.11202875641650045,-0.0010928922242838808,-0.007217143093231893,-0.06912661101393805,-0.14147870277593277,-0.09065706233905291,-0.04699095404321819,-0.23869540114091858,-0.03442694449483691,0.20870980024312316,0.08208741913269703,-0.042941655362657344,-0.15317626517388291,0.13229530131289488,-0.055866837800891044,0.04339675039300469,-0.16334671877662743,0.04407567985133112,0.08343399952102648,0.08899752347406024,-0.08374787608463162,0.2004964255674245,0.051962084147839226,0.02264510795544116,0.0919726577684935,-0.18172438228747814,-0.025841489607650932,0.12964459182144136,0.027343791529143176,-0.09167959700116889,0.14336525615046716,0.09011939489396142,0.003870683470259,0.2625764187591893,-0.01585372349608521,0.007344519147741588,-0.12091191684417285,-0.05240556071701607,-0.04033424960980631,-0.24877016654023634,0.06884070784324293,-0.11263431152388802,0.2451307650378138,0.04172983312073952],
+        [-0.100948127885,0.122399942627,-0.085437477207,-0.221523164996,-0.026469458573,0.0601793994,0.204304102533,0.091953307065,0.003882117077,-0.005479584511,-0.100863624409,-0.041371706958,-0.15514211323,0.004792912653,-0.037009135409,-0.230237368571,0.067576245294,0.01552255816,-0.146729861062,0.22564159717,-0.072167439316,0.001261312207,0.03121759953,-0.147277055297,0.009464910027,-0.066433727122,0.039320961861,0.028284879231,0.043375995214,-0.181008549229,0.117754024144,-0.116343189314,0.133916687364,0.078307742427,0.195632296529,-0.290827713024,0.159571904333,0.133115969744,-0.141084735303,-0.061187424393,0.211869788019,-0.196719397389,0.045082982079,-0.129561435167,-0.078154440061,-0.193472874363,-0.028539064675,0.126358246168,0.029994251737,-0.080623724791,0.050775655102,0.085477032863,-0.139414890665,0.062630509642,0.104534088828,0.1077425416,0.178998678953,-0.16992625777,0.212640957656,0.136113358451,-0.060337003941,-0.024972296281,0.112262052511,-0.135396973498],
+        [0.219181860204,-0.132287403322,-0.118502582568,-0.103015344447,-0.058010611191,0.038573163101,0.135701567817,-0.147145381695,-0.002268016756,-0.132153132852,0.004001280798,-0.102717081651,-0.008518658154,-0.256061621889,0.025961861238,0.185768489762,-0.014976119329,-0.033321631857,-0.02396142202,0.037207222569,0.03744689926,-0.054588363405,0.163225000326,0.108806881184,-0.266586704127,-0.095678602547,-0.083508384205,0.088534044509,0.140957610251,-0.121134255923,0.086316621421,0.143835031464,-0.38643308518,-0.139695152946,0.197760105864,-0.093850762718,0.159746114386,0.066328417644,-0.014835688719,-0.100281776448,-0.100495870444,0.050802827831,0.034407067686,0.123013751669,-0.051041498553,0.243323085119,-0.019309309501,-0.142140317845,0.112458758828,-0.034080230158,0.144522549029,-0.05356417035,0.095631516567,-0.148477215012,-0.17837757423,-0.053915715194,0.067568212677,-0.051608906554,-0.018050498151,-0.152052532904,0.142085579476,-0.046190189545,-0.048618149182,-0.070485988707],
+        [-0.041468841326,0.223882193341,0.090765398299,0.013994008143,0.088125757698,-0.040418702542,-0.02322567583,0.114648148452,-0.113364595471,0.056470819287,-0.032089569098,-0.039693014474,0.129891476063,0.095060601734,0.073468952347,-0.059439839404,-0.243205940655,-0.010735951093,-0.250047041443,0.074532363482,0.039763061827,0.281384778094,-0.091379597136,-0.093086133943,0.038638702004,-0.019772547343,-0.042129949045,0.104110513378,0.006052466879,0.065116745312,0.231567852506,0.070605969348,-0.193190696285,-0.035224585264,0.0623390258,-0.195606565813,-0.021767289501,-0.104237885814,-0.153264097139,0.099748191814,0.19012530501,0.161484729134,-0.111728698659,-0.081984503531,0.064749988509,0.072972549269,0.079556973986,-0.011869776739,0.29430394114,0.141305333571,-0.133012373246,-0.150505776554,-0.098132980603,0.064994232826,-0.09206946851,0.053984572931,0.058534921578,0.036625916459,-0.00553242618,-0.159868941097,0.204600209496,0.003594832495,0.184495848067,0.243526835876],
+        [0.067853357781,-0.00480215868,-0.320382649186,0.08469536582,0.072056897588,-0.073459126178,0.055827174967,0.152311679423,0.092516071461,-0.0791298696,-0.057890473631,0.007958174762,0.166100381526,-0.024320483435,-0.059251965956,-0.0326625741,0.011071252509,-0.02224077863,0.098791971142,-0.033334395225,-0.101045519733,-0.313125982295,0.311812606948,-0.176695074614,0.214319480273,-0.131383536133,0.00161636897,0.110388403614,0.182611459466,-0.282038209133,0.016569242696,0.037062223537,0.07119808402,-0.156630404795,-0.102915442521,0.034681836947,0.105107096733,-0.118442062404,0.092574212874,-0.040592474838,0.066810737927,-0.119541936952,-0.164195090597,0.108619699767,0.128736879992,-0.006961830021,0.015410917135,-0.262985807805,-0.034999688301,0.082073631968,0.056758734042,-0.071115545452,-0.021450024827,0.125225136126,-0.039700158309,-0.048438358496,-0.0368967547,0.09391448881,-0.088240893852,-0.020483072052,-0.084984592741,-0.120729334563,-0.072603494777,0.239906363464],
+        [-0.074758026722,0.136399562023,-0.229948115359,0.085470007666,-0.139960568156,0.175431914729,0.034283576508,-0.039884972342,0.062823387233,0.341581509041,-0.034200143246,0.053609385438,0.097328259634,0.233541086541,-0.063823529147,0.168084676608,0.003008132072,0.032022438295,0.170122298842,0.032078490604,-0.083909190674,-0.155595103602,0.092880499559,0.16341400864,-0.121730265324,-0.109475458084,0.028846871371,-0.004742818096,-0.075502723819,0.035805177784,-0.044293981591,-0.139960262964,0.259988527333,0.013534055229,0.077375470657,0.18799460065,-0.083018406584,0.060083311111,0.04914367536,0.102852281642,-0.22819804654,0.213211686789,-0.115389097159,-0.060336726346,-0.018781509327,0.113477350545,0.216541205292,0.005542590379,0.224833966129,-0.162883318271,-0.065599841287,-0.121908004183,-0.08899009362,0.038414125184,0.036704159782,-0.056357940547,-0.025631572738,0.091297785504,0.142136556042,-0.008189566142,0.035611024831,-0.108803677295,-0.066672545601,-0.153257205951],
+        [-0.037443003162,-0.025879563549,0.051832010664,-0.136015713711,-0.33027027756,0.143972785506,0.16284104257,-0.064096188456,-0.02834358463,-0.294742025971,0.049986079438,0.11051620732,-0.17342820871,0.172798164509,-0.022218009884,-0.270221848203,-0.008686998947,-0.145844539696,0.052944118958,-0.067552084878,0.145010744662,0.039706427471,-0.093831465656,-0.048497537889,-0.14057135066,0.111432065289,-0.160409501094,-0.007298436144,0.096895959825,0.112182648735,-0.196680752747,0.039448916435,0.119986873451,-0.038243380563,0.00739283667,-0.133498814661,-0.18347417167,0.08650439127,-0.02771668311,0.059624568843,-0.037326615458,0.060035578981,-0.097705379431,-0.141899281702,-0.079415146904,-0.04234973322,0.032337079708,-0.017333546358,-0.045917085406,-0.063830165699,-0.132354555217,-0.02055720441,-0.065226017821,-0.176850308759,0.166507068976,-0.199905082366,0.142691576212,-0.053549926132,-0.062903980128,-0.004810447546,0.002036041148,-0.08661399572,-0.330419021234,-0.057092879173],
+        [-0.008730205076,0.14368101256,-0.012202397964,0.047301710502,0.030759099561,-0.062755099104,-0.297508508109,-0.085419295295,0.089065828973,0.120370943926,-0.08699414448,0.00086099033,-0.085582687205,-0.332928242533,0.028177584286,-0.091177123192,-0.004794110916,0.224517280324,-0.012098020398,-0.04555368264,-0.007621500568,0.212620199455,-0.107855590627,0.047756589934,0.008370375264,0.2130434186,0.04890580059,0.026552509947,0.002571164859,-0.059235235071,-0.021995770687,0.267428394118,-0.058583613706,0.196422796246,0.069109965933,0.005451580652,0.169634043686,-0.171371477467,-0.028254048926,0.040039426774,0.015673489152,0.048499440064,0.179296604098,-0.249981519032,0.017843261893,0.26122910556,-0.013288200605,-0.080188320655,-0.225904841548,-0.018248424508,0.165861929503,0.009269328895,-0.008922427999,-0.081571838853,0.087577354025,0.081926649598,0.035666326761,0.044748236525,-0.152609053025,-0.108407740943,-0.097291481539,0.021083640291,0.165652054171,-0.165901547468],
+        [0.005616668805,0.050239810966,0.157530983601,-0.039078707607,-0.144368899009,-0.139895977944,0.262640473278,-0.114156645476,-0.027461505348,0.051137853498,-0.156231437453,0.080018712584,0.001341589076,0.032244986113,-0.066353980586,-0.116537029717,0.032567016015,-0.030004584509,0.111109961249,-0.000375045155,-0.263746368593,-0.164153223755,-0.023559418343,0.019671551936,0.141441446914,0.06910029915,0.283229527492,0.1105410736,-0.185678729341,0.232280917953,-0.102584654042,0.052645131934,0.193700402294,0.053223742667,-0.041900456935,-0.023698658474,0.194493325099,-0.067447508984,0.229229789978,-0.103819649039,0.059738485317,0.040638406243,-0.123667892303,-0.048675969777,-0.117313766651,-0.061176010021,0.121550900507,-0.012769491094,0.091627296759,0.103644960491,-0.028076999789,0.036323718036,-0.266009438345,-0.0362520674,0.048598797457,0.0686940157,0.05488226097,0.076314495664,0.239037683945,-0.238013083748,-0.098673835571,-0.029722071783,0.152652668569,0.064200147394],
+        [-0.045591154509,0.109025070641,0.025950200232,0.113038887972,0.161419412019,0.082951729695,-0.119994718277,0.062780210224,0.051206561056,-0.220993773667,0.034404786818,-0.140138122881,-0.108010415078,0.174701892685,-0.121666619523,0.058123762758,0.091906910127,0.039883407252,0.15985722088,-0.124644941702,-0.035499769482,0.134576476809,-0.059670639124,-0.036617986809,0.012304030015,-0.021357428468,0.047171941483,-0.108139692999,0.118687492835,-0.045604251178,0.133756114036,-0.14678574057,-0.027831114163,-0.142745522713,-0.08534250977,-0.045801669324,-0.015767714978,0.155424217035,-0.099459843474,-0.245274317685,-0.069807926959,0.150711961262,-0.374691854811,0.085114186886,-0.072106025576,0.0192091926,-0.001492421128,0.153416488331,0.043917387344,0.006973794285,-0.211512444494,0.045694278472,0.137602366314,-0.259243884765,-0.011134699304,-0.043375701849,0.191009569427,-0.088982949019,-0.061925762394,0.047607612337,-0.016611930759,-0.222758022624,0.089708287411,-0.261541945364],
+        [0.307190299384,-0.139916345853,-0.194090701145,-0.002844271774,0.189674692105,-0.103769792447,-0.296108516488,-0.119858413839,0.133385586016,-0.017910970106,0.041679087045,-0.138362362663,0.018283569665,-0.058387492777,-0.090418160735,0.024868581271,0.060325800484,0.026959938959,-0.134253667247,-0.198178877324,0.107472665391,0.007350756248,-0.184158912815,-0.05163516479,0.011000434702,-0.075328021324,0.14066846658,-0.030058079392,-0.071993779634,0.027182134714,-0.152855250995,-0.22637455433,-0.070255998772,-0.160443123194,-0.203491719427,0.103915235073,-0.033738278506,0.002819022842,0.290766855833,-0.202967795748,-0.002018565743,-0.03691162762,0.241126142467,-0.106013173453,-0.085916876556,0.084018679818,-0.045734546689,0.140627804871,-0.06958766934,0.05818869226,0.048332190152,-0.0016466926,0.138830942698,-0.019786956789,0.087832048366,-0.058699991195,-0.000791626037,-0.073058867843,0.075251232525,-0.117458570954,0.121750159163,0.162634689095,-0.060592255078,0.056782440174],
+        [0.176904620321,-0.0956061159,-0.03395177429,0.04445122556,0.104701707204,0.003553379358,-0.280705862397,0.027329013628,-0.088261736534,0.093853788213,-0.244836467176,-0.024118828871,-0.100387710695,0.154537269007,-0.129816024159,0.156168842851,0.061364435246,-0.063202658621,-0.063215786847,-0.012670172639,0.108436912608,-0.081400361461,-0.055379416988,-0.188272643503,-0.052603970941,-0.073398524981,-0.081841461008,-0.071407095528,-0.276555829764,-0.134496732596,-0.051503412341,0.093387544202,0.082852406972,-0.059678066453,-0.135430740035,0.198620235968,0.112635484808,-0.274555447104,-0.100373479806,-0.026291469131,0.017920275801,0.08904692872,0.123906457791,-0.069434109889,0.158883390581,-0.103855063553,-0.010194859696,0.107712191678,-0.089156229432,0.002684397234,0.213777337694,-0.380049453056,-0.023679287196,-0.212955643241,0.065541444036,0.033231114845,0.01192510266,-0.009928513687,0.068964247771,0.138045515081,-0.0374127692,0.018124187238,-0.001988596885,0.021853288673],
+        [-0.055955425104,-0.097191598718,-0.113964761275,0.125174851321,0.15394411669,0.014709865602,-0.118762766168,0.135503631577,0.203500233094,0.209815163961,0.08296739619,0.139481357603,0.03805600628,0.179949618891,-0.019455145308,-0.227981395645,0.208173500242,-0.003716729149,0.001869809329,0.022475908124,-0.060788970603,-0.144808270401,-0.092469852901,-0.034643903201,0.174099190037,-0.079521658989,0.187688898557,-0.133734532704,-0.107480864013,-0.14844772597,-0.108464695843,0.095471400519,0.155487887043,-0.078750065959,-0.047143872187,-0.087522203048,0.112252075502,-0.117386361087,0.124089290965,-0.025251841838,0.101441202007,-0.020247019165,-0.106921679025,-0.010443884339,-0.080311063726,0.009649970429,0.022324413556,-0.199417402369,-0.015975455326,-0.083982344995,0.285501971419,-0.06492684542,0.051762948628,0.021087761537,-0.059199423639,-0.323952519261,-0.200903222256,0.071566060017,-0.019387954873,0.038768474574,0.184723799141,0.160969430793,0.127639682277,-0.043751765433],
+        [-0.266782143408,-0.03597085799,0.124197469197,-0.151650541352,0.110600444978,-0.020694378953,-0.061527569828,0.002340538288,0.092948551413,-0.206889064256,-0.036719136122,0.088684198866,-0.12323772682,-0.166924106358,-0.187492042559,-0.009586063832,-0.081443194147,-0.182212704007,-0.11172326504,0.256089961102,0.094043491832,-0.135876909174,0.301519859045,0.157308301837,-0.062275870979,-0.132103089573,-0.008221158507,-0.041264604121,-0.014046983221,-0.016328997291,-0.185589232319,0.070769897235,-0.035637473029,0.011500436567,0.007123545673,0.03002536286,-0.004397504618,0.126272710729,-0.011960472987,-0.054705455708,0.236092316437,-0.043051227928,-0.036382026446,0.030928229486,0.030689703337,-0.044008291005,-0.181071709599,0.04240509149,0.074163343384,-0.07353569085,0.048868494489,0.051596723819,-0.314605365483,0.127382471357,0.069722289998,0.182881866494,-0.12209725498,-0.178146554126,-0.154268146634,0.088210236809,0.005874140899,0.137819702155,-0.011305990724,0.155518830091],
+        [-0.120629861835,0.072739410985,0.250002770705,-0.002909379737,-0.127553520055,0.035842485166,0.13789331677,0.034466854864,-0.124340147996,0.103039184185,0.178802879654,0.031053065687,0.012262724939,-0.019197975685,-0.031082440175,-0.049326350964,-0.175869798852,-0.028085429861,-0.035480222891,-0.018705158044,-0.079080584151,0.23268251398,0.076278034715,0.093340220091,0.123134847881,-0.001342532639,-0.006316453339,0.011818180532,0.180492259174,0.018504271441,0.030378013932,0.127477578201,0.217436030619,0.265336156313,-0.008856681533,0.180317333304,-0.098580804081,-0.049311051379,-0.068108400135,-0.064766062217,-0.192173538144,-0.153351167829,0.159324916862,-0.014904807946,0.027709048739,-0.09481272089,0.122313263193,-0.111642237687,-0.164936850167,0.077325872005,-0.245524617764,0.02580496645,0.147525262611,-0.148422671858,-0.213155907452,-0.168430945869,-0.215032608535,0.209154317006,0.043327861253,-0.020335180937,-0.180702806836,0.030265255317,-0.067371673936,-0.081631706124],
+        [0.037739881523,-0.052104456161,0.033632032293,0.076364405817,0.020642664843,0.090647295259,0.073516217749,-0.064676151228,0.214234809846,-0.105639657969,0.098474950621,0.052447177198,0.00689144041,0.040650112317,0.314143109172,0.296452633148,-0.04383842759,-0.124903846435,-0.011106856402,-0.116295216389,-0.068522988875,0.039690851641,0.093827378888,-0.103126741602,0.028806471018,-0.082073361226,-0.024509403596,-0.226669529685,-0.14275268761,0.072228270466,-0.168216329921,-0.040767161736,-0.080994688826,0.074115034271,-0.081661832629,-0.157086757469,0.026766365539,0.134504340592,0.153949964367,-0.033976030334,-0.17698510974,-0.134926618942,0.179106492594,-0.028066486705,0.165675357659,0.047952690901,-0.027539804016,-0.109833026908,-0.129348628052,0.015403085044,-0.170938614614,-0.014759401991,-0.272916366016,0.069289652839,-0.12583507835,-0.11241178801,0.127439553864,-0.244071996109,0.094227063707,-0.04421831393,-0.051967305788,0.063994584712,0.138799442275,-0.249035369103],
+        [0.135825324587,-0.099759154571,0.060030459768,-0.206150441116,-0.285170265464,-0.120785343484,-0.040056120989,0.118663042978,-0.225078914895,0.184787669776,0.046044725622,-0.087227485232,0.044224656175,0.120394090636,-0.0370401134,-0.206440812129,-0.122113153087,-0.090877703164,0.104747039398,0.023773014219,0.112028756417,-0.001092892224,-0.007217143093,-0.069126611014,-0.141478702776,-0.090657062339,-0.046990954043,-0.238695401141,-0.034426944495,0.208709800243,0.082087419133,-0.042941655363,-0.153176265174,0.132295301313,-0.055866837801,0.043396750393,-0.163346718777,0.044075679851,0.083433999521,0.088997523474,-0.083747876085,0.200496425567,0.051962084148,0.022645107955,0.091972657768,-0.181724382287,-0.025841489608,0.129644591821,0.027343791529,-0.091679597001,0.14336525615,0.090119394894,0.00387068347,0.262576418759,-0.015853723496,0.007344519148,-0.120911916844,-0.052405560717,-0.04033424961,-0.24877016654,0.068840707843,-0.112634311524,0.245130765038,0.041729833121],
     ],
 }
 
@@ -987,8 +995,10 @@ def _ivf_index_for(spark, sf_dir: str) -> str:
         n_idx = ds.dataset(p, format="parquet", partitioning="hive").count_rows()
         return os.path.exists(os.path.join(p, "_centroids.json")) and n_idx == n_src
 
+    # the kind names the trainer: a layout saved before the 1e-12
+    # centroid snap lives under "ivf" and is never served
     return _fixture_index_for(
-        "ivf", src, lambda p: build_ivf_index(_emb(spark, sf_dir), p), _valid
+        "ivf12", src, lambda p: build_ivf_index(_emb(spark, sf_dir), p), _valid
     )
 
 

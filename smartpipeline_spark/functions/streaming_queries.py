@@ -18,9 +18,7 @@ for any DataStreamWriter sink without touching the aggregation.
 
 from __future__ import annotations
 
-import math
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -74,103 +72,14 @@ def _staged_event_stream(spark, sf_dir):
     return stream
 
 
-# --- scale-derived state-partition width for availableNow drains ----
-#
-# Every STATEFUL streaming operator commits one state-store per state
-# partition per trigger (a stream-stream join commits FOUR per
-# partition), and the partition count binds to
-# spark.sql.shuffle.partitions at the query's first checkpoint. That
-# commit is a fixed I/O cost independent of the rows in the partition,
-# so at small state cardinality the drain's wall is LINEAR in the
-# width while the width buys nothing. Measured (r13 solo probe,
-# sf0.1, min-of-3 per cell, widths 64/32/16/8):
-#   ext_stream_tumbling   2.02 / 1.59 / 1.14 / 0.92 s
-#   ext_stream_sliding    1.94 / 1.52 / 1.13 / 0.93 s
-#   ext_stream_session    2.17 / 1.60 / 1.35 / 1.16 s
-#   ext_stream_join      10.66 / 6.27 / 3.61 / 2.44 s
-#   ext_stream_outer_join 10.41 / 6.00 / 3.71 / 2.53 s
-#   ext_stream_dedup      1.90 / 1.07 / 0.84 / 0.72 s
-# The session default (2 x cores) is therefore a per-core PENALTY for
-# small drains — the same key measured 7x slower at 32 cores than at
-# 8 purely from the wider state layout. Rule (parameterized, not a
-# local[32] constant): one state partition per ~2 MiB of drained
-# input, floor 8 (the ext_stream_upsert/TWS measured pick), and leave
-# the session conf in charge once the derived width reaches it — at
-# the 64x replicated rung (~128 MiB) the rule already yields the
-# session width, matching the r11 telemetry that 2 x cores is right
-# at millions of state keys (128 partitions measured +11% CPU there).
-_STATE_PARTITION_BYTES = 2 * 1024 * 1024
-_STATE_PARTITION_FLOOR = 8
-
-
-def _input_bytes(*paths: str) -> int | None:
-    """Total on-disk bytes of the staged stream input(s) — files or
-    directories (symlink-staged fixture layouts follow the link
-    target). None when any path cannot be sized."""
-    total = 0
-    try:
-        for p in paths:
-            if os.path.isdir(p):
-                for root, _dirs, files in os.walk(p):
-                    for f in files:
-                        total += os.path.getsize(os.path.join(root, f))
-            else:
-                total += os.path.getsize(p)
-    except OSError:
-        return None
-    return total
-
-
-def _state_width(spark, *paths: str) -> int | None:
-    """The width the rule above derives for a drain over ``paths``,
-    or None when the session conf should stay in charge (input
-    unsizable, or derived width at/over the session width)."""
-    size = _input_bytes(*paths)
-    if size is None:
-        return None
-    try:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return None
-    p = 2 ** max(
-        round(math.log2(_STATE_PARTITION_FLOOR)),
-        round(math.log2(max(1.0, size / _STATE_PARTITION_BYTES))),
-    )
-    return p if p < sess else None
-
-
-@contextmanager
-def _scoped_state_width(spark, *paths: str):
-    """Scope ``spark.sql.shuffle.partitions`` to the derived state
-    width for the duration of a drain (streaming confs bind at query
-    START, so only the stream started inside the scope is affected)
-    and restore the session value after."""
-    width = _state_width(spark, *paths)
-    if width is None:
-        yield
-        return
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, str(width))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
-def _run_to_memory(
-    spark, agg, sink_name: str, input_paths: tuple[str, ...] = ()
-) -> DataFrame:
+def _run_to_memory(spark, agg, sink_name: str) -> DataFrame:
     """Execute a streaming aggregation to completion (availableNow,
     complete mode so the final trigger emits every window) into a
-    memory sink and return its table. ``input_paths`` (the staged
-    stream input) drives the scale-derived state-partition width —
-    empty leaves the session conf in charge."""
+    memory sink and return its table."""
     for q in spark.streams.active:
         if q.name == sink_name:
             q.stop()
-    with _scoped_state_width(spark, *input_paths):
-        q = start_memory_sink(agg, sink_name, "complete")
+    q = start_memory_sink(agg, sink_name, "complete")
     q.awaitTermination()
     return spark.table(sink_name)
 
@@ -211,9 +120,7 @@ def ext_stream_tumbling(spark, sf_dir) -> DataFrame:
     )
     # complete mode so the final trigger emits every window (append
     # would withhold windows not yet past the terminal watermark)
-    return _run_to_memory(
-        spark, agg, _SINK, (os.path.join(sf_dir, "events.parquet"),)
-    )
+    return _run_to_memory(spark, agg, _SINK)
 
 
 @ext_query(
@@ -249,9 +156,7 @@ def ext_stream_sliding(spark, sf_dir) -> DataFrame:
             "n_events",
         )
     )
-    return _run_to_memory(
-        spark, agg, _SLIDING_SINK, (os.path.join(sf_dir, "events.parquet"),)
-    )
+    return _run_to_memory(spark, agg, _SLIDING_SINK)
 
 
 @ext_query(
@@ -292,9 +197,8 @@ def ext_stream_join(spark, sf_dir) -> DataFrame:
             q.stop()
     # a stream-stream join commits FOUR state stores per partition per
     # trigger — the widest fixed cost in the streaming family (see the
-    # width table above _state_width)
-    with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = start_memory_sink(joined, _JOIN_SINK, "append")
+    # width table in streaming.start_query's rule)
+    q = start_memory_sink(joined, _JOIN_SINK, "append")
     q.awaitTermination()
     return spark.table(_JOIN_SINK)
 
@@ -323,8 +227,7 @@ def ext_stream_dedup(spark, sf_dir) -> DataFrame:
     for q in spark.streams.active:
         if q.name == _DEDUP_SINK:
             q.stop()
-    with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = start_memory_sink(deduped, _DEDUP_SINK, "append")
+    q = start_memory_sink(deduped, _DEDUP_SINK, "append")
     q.awaitTermination()
     return spark.table(_DEDUP_SINK)
 
@@ -374,9 +277,7 @@ def ext_stream_session(spark, sf_dir) -> DataFrame:
         )
         .select("user_id", "sess_start_us", "n_events", "sum_value")
     )
-    return _run_to_memory(
-        spark, agg, _SESSION_SINK, (os.path.join(sf_dir, "events.parquet"),)
-    )
+    return _run_to_memory(spark, agg, _SESSION_SINK)
 
 
 @ext_query(
@@ -453,20 +354,18 @@ def ext_stream_upsert(spark, sf_dir) -> DataFrame:
     # checkpoint and every trigger pays per-partition state-store
     # file I/O + a write task; at the fixture's ~150-group
     # cardinality, 8 partitions cut the drain's floor from 5.8s to
-    # 3.9s (min-of-5, idle) with identical output. r13: the width now
-    # comes from the shared input-size rule (_state_width — 8 at
-    # fixture scale, the session conf once the input earns it) instead
-    # of this drain's private constant.
-    with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = streaming.continuous_rollup(
-            stream,
-            out,
-            ckpt,
-            window="1 day",
-            watermark="365 days",
-            available_now=True,
-        )
-        q.awaitTermination()
+    # 3.9s (min-of-5, idle) with identical output. The width comes from
+    # the rule streaming.start_query applies to availableNow drains, not
+    # from a constant of this drain.
+    q = streaming.continuous_rollup(
+        stream,
+        out,
+        ckpt,
+        window="1 day",
+        watermark="365 days",
+        available_now=True,
+    )
+    q.awaitTermination()
     return spark.read.parquet(out).select(
         "bucket", "event_type", "n_events", "sum_value"
     )
@@ -615,8 +514,7 @@ def ext_stream_outer_join(spark, sf_dir) -> DataFrame:
     for q in spark.streams.active:
         if q.name == _OUTER_JOIN_SINK:
             q.stop()
-    with _scoped_state_width(spark, stage):
-        q = start_memory_sink(joined, _OUTER_JOIN_SINK, "append")
+    q = start_memory_sink(joined, _OUTER_JOIN_SINK, "append")
     q.awaitTermination()
     return spark.table(_OUTER_JOIN_SINK).filter(F.col("click_id") >= 0)
 
@@ -704,8 +602,7 @@ def ext_stream_stateful(spark, sf_dir) -> DataFrame:
     for q in spark.streams.active:
         if q.name == _STATEFUL_SINK:
             q.stop()
-    with _scoped_state_width(spark, os.path.join(sf_dir, "events.parquet")):
-        q = start_memory_sink(counts, _STATEFUL_SINK, "update")
+    q = start_memory_sink(counts, _STATEFUL_SINK, "update")
     q.awaitTermination()
     return (
         spark.table(_STATEFUL_SINK)
@@ -756,14 +653,12 @@ def ext_stream_stateful_tws(spark, sf_dir) -> DataFrame:
     # at fixture key-cardinality (150) 8 partitions cut the drain from
     # ~57s to the instance-setup floor without changing semantics. At
     # production cardinality the state partition count is the real
-    # parallelism knob and binds FOREVER at first checkpoint — r13:
-    # width from the shared input-size rule (_state_width), not a
-    # fixture constant.
+    # parallelism knob and binds FOREVER at first checkpoint. The drain
+    # runs at the session width: streaming.start_query's width rule
+    # leaves Python stateful operators there, since their state stage
+    # does per-row Python work.
     try:
-        with _scoped_state_width(
-            spark, os.path.join(sf_dir, "events.parquet")
-        ):
-            q = start_memory_sink(counts, _STATEFUL_TWS_SINK, "update")
+        q = start_memory_sink(counts, _STATEFUL_TWS_SINK, "update")
         q.awaitTermination()
     finally:
         if prev is None:

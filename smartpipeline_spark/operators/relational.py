@@ -92,12 +92,14 @@ def q02_sink_roundtrip(spark, sf_dir):
     re-read that touches ONLY the o_year=1997 directory (partition
     pruning — the single most important layout lever at 100 TB).
 
-    Paths are per-process so concurrent runs don't collide on the sink
-    directory; sink dirs left behind by DEAD processes are reaped here
+    Paths are per-process under the process temp dir (``TMPDIR``) so
+    concurrent runs and checkouts don't collide on the sink directory;
+    sink dirs left behind by DEAD processes are reaped here
     so repeated harness runs don't accumulate litter."""
     import shutil
+    import tempfile
 
-    tmp_root = "/root/repo/.tmp"
+    tmp_root = tempfile.gettempdir()
     for stale in glob.glob(f"{tmp_root}/q02_sink_*"):
         try:
             pid = int(stale.rsplit("_", 1)[-1])

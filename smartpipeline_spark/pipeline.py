@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from smartpipeline_spark.errors import ErrorManager, RetryManager, StagePolicy
 from smartpipeline_spark.item import Item, restore_item
 from smartpipeline_spark.stage import BatchStage, Source, Stage
-from smartpipeline_spark.streaming import start_query
+from smartpipeline_spark.streaming import start_foreach_batch, start_query
 from smartpipeline_spark.wrapper import (
     DATA_COL,
     DATA_DDL,
@@ -423,13 +423,23 @@ class Pipeline:
         directories — the exactly-once sink commit log covers
         partitioned writes the same as flat ones). Returns the
         StreamingQuery — stop() for graceful shutdown, or use
-        ``available_now`` to drain-and-terminate."""
+        ``available_now`` to drain-and-terminate.
+
+        An ``available_now`` drain into a path or memory sink may run its
+        state at a narrower width than the session
+        (:func:`smartpipeline_spark.streaming.start_query`: 2 partitions
+        for a dedup, aggregation or stream-stream join over at most
+        6 MiB of file input). Spark records that width in ``checkpoint``
+        at the first batch, and every later run from the same checkpoint
+        keeps it, whatever its input has grown to."""
         df = self.dataframe()
         if not df.isStreaming:
             raise ValueError("source is not a streaming DataFrame")
         if callable(sink):
-            writer = df.writeStream.foreachBatch(sink)
-        elif isinstance(sink, str):
+            return start_foreach_batch(
+                df, sink, checkpoint, available_now, processing_time, output_mode
+            )
+        if isinstance(sink, str):
             writer = df.writeStream.format(fmt).option("path", sink)
             if partition_by:
                 writer = writer.partitionBy(*partition_by)

@@ -536,9 +536,11 @@ def test_training_data_curation_pipeline(spark):
     quality-gated, split-assigned, and exactly one doc per near-dup
     cluster survives its cluster."""
     import importlib.util
+    from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
-        "training_data_pipeline", "/root/repo/examples/training_data_pipeline.py"
+        "training_data_pipeline",
+        Path(__file__).resolve().parents[1] / "examples" / "training_data_pipeline.py",
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

@@ -108,7 +108,7 @@ def test_queries_dir_in_sync_with_registry():
     import sys
     from pathlib import Path
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
     from scripts.dump_queries_sql import QUERIES_DIR, render
 
     import __spark_entry__ as entrymod

@@ -399,8 +399,9 @@ def test_examples_compile():
     syntax/rot guard cheaper than executing them all."""
     import glob
     import py_compile
+    from pathlib import Path
 
-    files = glob.glob("/root/repo/examples/*.py")
+    files = glob.glob(str(Path(__file__).resolve().parents[1] / "examples" / "*.py"))
     assert files
     for f in files:
         py_compile.compile(f, doraise=True)

@@ -691,57 +691,237 @@ def test_stream_outer_join_equals_batch_left_join(spark):
 
 
 def test_state_width_rule_and_scope(spark, tmp_path):
-    """r13: the scale-derived state-partition width for availableNow
-    drains — one state partition per ~2 MiB of staged input, floor 8,
-    session conf in charge once the derived width reaches it — and the
-    conf scope's restore semantics (including on error)."""
-    from smartpipeline_spark.functions.streaming_queries import (
-        _scoped_state_width,
+    """The state width an availableNow drain gets: 2 for a plan whose
+    aggregation, dedup or stream-stream join state Spark keeps, over at
+    most 6 MiB of file-stream input on disk; None (the session width)
+    for larger input, a plan without such state, a Python stateful
+    operator, a leaf that is not a file stream, or a session no wider
+    than 2. The conf is set only around start() and restored also when
+    start() raises."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from smartpipeline_spark.streaming import (
+        _STATE_WIDTH,
+        _STATE_WIDTH_MAX_BYTES,
         _state_width,
+        start_query,
     )
 
-    def staged(n_bytes: int) -> str:
-        p = tmp_path / f"in_{n_bytes}"
-        p.write_bytes(b"\0" * n_bytes)
-        return str(p)
+    mib = 1024 * 1024
+    assert (_STATE_WIDTH, _STATE_WIDTH_MAX_BYTES) == (2, 6 * mib)
+
+    def drain_of(*sizes: int) -> DataFrame:
+        streams = []
+        for n in sizes:
+            d = tmp_path / f"in_{len(list(tmp_path.iterdir()))}"
+            d.mkdir()
+            with open(d / "part-0.parquet", "wb") as f:
+                f.truncate(n)  # sparse: sized, never read
+            streams.append(spark.readStream.schema("x long").parquet(str(d)))
+        return reduce(DataFrame.unionByName, streams)
+
+    def dedup(*sizes: int) -> DataFrame:
+        return drain_of(*sizes).dropDuplicates(["x"])
 
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
         spark.conf.set(key, "64")
-        # fixture-scale input (2 MiB) -> the floor
-        assert _state_width(spark, staged(2 * 1024 * 1024)) == 8
-        # 64 MiB -> 32 (one partition per 2 MiB, pow2)
-        assert _state_width(spark, staged(64 * 1024 * 1024)) == 32
-        # >= session width -> None (session conf stays in charge)
-        assert _state_width(spark, staged(512 * 1024 * 1024)) is None
-        # unsizable input -> None
-        assert _state_width(spark, str(tmp_path / "missing")) is None
-        # multiple paths sum
-        assert (
-            _state_width(
-                spark, staged(32 * 1024 * 1024), staged(32 * 1024 * 1024 + 1)
-            )
-            == 32
-        )
+        # fixture-scale and stream_ingest-scale input -> 2
+        assert _state_width(dedup(1024)) == 2
+        assert _state_width(dedup(6 * mib)) == 2
+        # input past the swept sizes -> None (session width)
+        assert _state_width(dedup(6 * mib + 1)) is None
+        assert _state_width(dedup(64 * mib)) is None
+        # the leaves of a union sum
+        assert _state_width(dedup(3 * mib, 3 * mib)) == 2
+        assert _state_width(dedup(3 * mib, 3 * mib + 1)) is None
+        # aggregation and stream-stream join state get it too
+        assert _state_width(drain_of(1024).groupBy("x").count()) == 2
+        assert _state_width(drain_of(1024).join(drain_of(1024), "x")) == 2
+        # a plan that keeps no state -> None
+        assert _state_width(drain_of(1024)) is None
+        # sources that cannot be sized -> None
+        assert _state_width(spark.readStream.format("rate").load().dropDuplicates()) is None
+        assert _state_width(dedup(1024).crossJoin(spark.range(2))) is None
+        glob_path = str(tmp_path / "in_*")
+        assert _state_width(spark.readStream.schema("x long").parquet(glob_path).dropDuplicates()) is None
+        # a Python stateful operator keeps the session width
+        assert _state_width(streaming.stateful_user_counts(drain_of(1024), key="x")) is None
+        assert _state_width(streaming.stateful_user_counts_tws(drain_of(1024), key="x")) is None
+        # a session no wider than the rule keeps its width
+        spark.conf.set(key, "2")
+        assert _state_width(dedup(1024)) is None
+        spark.conf.set(key, "64")
 
-        # scope sets the derived width for the drain and restores after
-        with _scoped_state_width(spark, staged(2 * 1024 * 1024 + 2)):
-            assert spark.conf.get(key) == "8"
-        assert spark.conf.get(key) == "64"
-        # ... including when the drain raises
+        # the width is set around start() only, and restored when it raises
+        seen = []
+
+        class FailingStart(DataStreamWriter):
+            def start(self, *args, **kwargs):
+                seen.append(spark.conf.get(key))
+                raise RuntimeError("sink down")
+
+        with pytest.raises(RuntimeError, match="sink down"):
+            start_query(FailingStart(dedup(1024)), available_now=True)
+        assert seen == ["2"] and spark.conf.get(key) == "64"
+        # a stream that is not availableNow keeps the session width
+        with pytest.raises(RuntimeError, match="sink down"):
+            start_query(FailingStart(dedup(1024)), processing_time="1 second")
+        assert seen == ["2", "64"] and spark.conf.get(key) == "64"
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _recorded_width(ckpt: str, batch: int) -> str:
+    """The shuffle width Spark recorded in a checkpoint's offset log."""
+    import json
+
+    with open(os.path.join(ckpt, "offsets", str(batch))) as f:
+        return json.loads(f.read().splitlines()[1])["conf"]["spark.sql.shuffle.partitions"]
+
+
+def _dedup_pipeline(spark, src: str, schema: str):
+    """A Pipeline that digests each text and drops repeated digests."""
+    from smartpipeline_spark import Pipeline
+
+    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    return (
+        Pipeline(spark)
+        .set_source(stream)
+        .transform("digest", lambda df: df.withColumn("digest", F.md5("text")))
+        .transform("dedup", lambda df: df.dropDuplicates(["digest"]))
+        .build()
+    )
+
+
+def test_available_now_drain_binds_the_derived_width(spark, tmp_path):
+    """Pipeline.start_stream over a small parquet directory: the
+    availableNow drain records the derived width in <ckpt>/offsets/0,
+    the session conf is back right after start() (and after a start()
+    that raises), a processing-time stream and a rate source keep the
+    session width, and a second availableNow drain from that checkpoint,
+    over input grown past the rule's 6 MiB and under another session
+    width, keeps the recorded width and leaves the dedup sink
+    exactly-once."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        schema = "doc_id bigint, text string"
+        src = tmp_path / "drop"
+
+        def drop(batch: int, n: int = 40) -> None:
+            # half of each file's texts are in the next file too: duplicates
+            # that only the dedup state can drop
+            rows = [(batch * 1000 + i, f"text {batch * n // 2 + i}") for i in range(n)]
+            spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
+
+        def pipeline():
+            return _dedup_pipeline(spark, str(src), schema)
+
+        drop(0)
+        drop(1)
+        out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+        q = pipeline().start_stream(ckpt, sink=out, available_now=True)
+        assert spark.conf.get(key) == "4"  # restored right after start()
+        _drain(q)
+        assert _recorded_width(ckpt, 0) == "2"
+
+        def state_partitions() -> set:
+            return {d for d in os.listdir(os.path.join(ckpt, "state", "0")) if d.isdigit()}
+
+        assert state_partitions() == {"0", "1"}
+
+        # a start() that raises leaves the session conf as it was
+        with pytest.raises(Exception):
+            pipeline().start_stream(str(tmp_path / "ckpt_bad"), sink=out, fmt="no_such_format",
+                                    available_now=True)
+        assert spark.conf.get(key) == "4"
+
+        # a processing-time stream keeps the session width
+        ckpt_pt = str(tmp_path / "ckpt_pt")
+        q = pipeline().start_stream(ckpt_pt, sink=str(tmp_path / "out_pt"),
+                                    processing_time="100 milliseconds")
         try:
-            with _scoped_state_width(spark, staged(2 * 1024 * 1024 + 3)):
-                assert spark.conf.get(key) == "8"
-                raise RuntimeError("drain failed")
-        except RuntimeError:
-            pass
-        assert spark.conf.get(key) == "64"
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        assert _recorded_width(ckpt_pt, 0) == "4"
 
-        # below the floor the scope is a no-op (the pytest session's
-        # own width-4 regime)
-        spark.conf.set(key, "4")
-        with _scoped_state_width(spark, staged(2 * 1024 * 1024 + 4)):
-            assert spark.conf.get(key) == "4"
+        # a rate source keeps the session width
+        ckpt_rate = str(tmp_path / "ckpt_rate")
+        rate = spark.readStream.format("rate").option("rowsPerSecond", 10).load()
+        q = streaming.start_query(
+            rate.dropDuplicates(["value"]).writeStream.format("noop"), ckpt_rate, available_now=True
+        )
+        _drain(q)
+        assert _recorded_width(ckpt_rate, 0) == "4"
+
+        # the input grows past 6 MiB (one file of unique 512-char hex texts,
+        # which parquet cannot compress much) and the drain reruns from the
+        # same checkpoint under another session width
+        drop(2)
+        spark.range(15000).select(
+            (F.col("id") + 10**6).alias("doc_id"),
+            F.concat(*[F.sha2(F.concat(F.col("id").cast("string"), F.lit(k)), 512) for k in "abcd"])
+            .alias("text"),
+        ).coalesce(1).write.mode("append").parquet(str(src))
+        on_disk = sum(os.path.getsize(os.path.join(r, f)) for r, _, fs in os.walk(src) for f in fs)
+        assert on_disk > 6 * 1024 * 1024
+        spark.conf.set(key, "3")
+        q = pipeline().start_stream(ckpt, sink=out, available_now=True)
+        _drain(q)
+        assert q.exception() is None
+        assert spark.conf.get(key) == "3"
+        batches = sorted(int(b) for b in os.listdir(os.path.join(ckpt, "offsets")) if b.isdigit())
+        assert len(batches) >= 4
+        assert {_recorded_width(ckpt, b) for b in batches} == {"2"}
+        assert state_partitions() == {"0", "1"}
+        got = spark.read.parquet(out).select("digest").collect()
+        want = {
+            r.digest
+            for r in spark.read.schema(schema).parquet(str(src))
+            .select(F.md5("text").alias("digest")).distinct().collect()
+        }
+        assert len(got) == len(want), "the rerun re-emitted or lost a digest"
+        assert {r.digest for r in got} == want
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_foreach_batch_callback_keeps_the_session_width(spark, tmp_path):
+    """A caller's foreachBatch callback, through Pipeline.start_stream or
+    start_foreach_batch, runs at the session width on an availableNow
+    dedup drain that a path sink runs at width 2: the batch frame runs
+    in the query's session, so every shuffle the callback runs gets the
+    width the query started with."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "4")
+    try:
+        schema = "doc_id bigint, text string"
+        src = str(tmp_path / "drop")
+        rows = [(i, f"text {i % 30}") for i in range(60)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        seen = []
+
+        def callback(batch_df, _batch_id):
+            seen.append(batch_df.sparkSession.conf.get(key))
+            batch_df.groupBy("text").count().collect()
+
+        ckpt = str(tmp_path / "ckpt_pipeline")
+        _drain(_dedup_pipeline(spark, src, schema).start_stream(ckpt, sink=callback, available_now=True))
+        assert _recorded_width(ckpt, 0) == "4"
+
+        ckpt_fb = str(tmp_path / "ckpt_fb")
+        stream = spark.readStream.schema(schema).parquet(src).dropDuplicates(["text"])
+        _drain(streaming.start_foreach_batch(stream, callback, ckpt_fb, available_now=True))
+        assert _recorded_width(ckpt_fb, 0) == "4"
+        assert len(seen) >= 2 and set(seen) == {"4"}
+        assert spark.conf.get(key) == "4"
     finally:
         spark.conf.set(key, prev)
