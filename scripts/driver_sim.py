@@ -79,16 +79,15 @@ def main() -> int:
     pos = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = pos[0] if pos else "/root/testdata/sf0.01"
     # Session fidelity (round-8 lesson): the EXTERNAL driver owns its
-    # SparkSession — bare builder, no engine confs, no
-    # ensure_protobuf() before JVM launch. Round 8's
+    # SparkSession — bare builder, no engine confs. Round 8's
     # ext_stream_stateful_tws crash shipped because the sim used
     # get_spark() and rehearsed green while the real driver's
     # JVM-forked workers lacked the vendored protobuf. Every query
-    # must self-provision whatever it needs on a session it did not
-    # create, so the sim creates the most foreign session it can —
-    # and creates it BEFORE any smartpipeline_spark import, so
-    # import-time side effects that only work pre-JVM-launch
-    # (sys.path/PYTHONPATH edits) cannot mask environment couplings.
+    # must set up whatever it needs on a session it did not create
+    # (stateful_user_counts_tws adds the protobuf shim to that
+    # session's worker PYTHONPATH), so the sim creates the most foreign
+    # session it can, BEFORE any smartpipeline_spark import, so
+    # nothing done before JVM launch can mask an environment coupling.
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     spark = SparkSession.builder.master(f"local[{cpus}]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,19 +31,8 @@ from smartpipeline_spark.errors import (
 )
 from smartpipeline_spark.item import Item
 from smartpipeline_spark.pipeline import Pipeline
-from smartpipeline_spark.session import ensure_protobuf, get_spark
+from smartpipeline_spark.session import get_spark
 from smartpipeline_spark.stage import BatchStage, Source, Stage
-
-# Spark-4 transformWithStateInPandas needs google.protobuf importable
-# in every forked Python worker — including workers of a JVM this
-# engine did NOT launch (an external driver owning its SparkSession).
-# Provision the vendored shim at package import so the streaming
-# state protocol works regardless of who creates the session; no-op
-# when a real protobuf is installed, never blocks import.
-try:
-    ensure_protobuf()
-except Exception:
-    pass
 
 __version__ = "0.1.0"
 

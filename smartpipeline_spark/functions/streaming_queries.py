@@ -630,11 +630,12 @@ def ext_stream_stateful_tws(spark, sf_dir) -> DataFrame:
     custom-state streaming operator.
 
     The JVM<->Python state protocol needs a protobuf runtime;
-    session.ensure_protobuf() provides the vendored minimal runtime
-    where none is installed (vendor/google/protobuf — wire format
-    from the public spec). TWS requires the RocksDB provider, which
-    is set for the duration of the drain and restored after (stream
-    confs bind at query start, so concurrent keys are unaffected)."""
+    stateful_user_counts_tws points the session's Python workers at
+    the vendored minimal runtime where none is installed
+    (vendor/google/protobuf — wire format from the public spec). TWS
+    requires the RocksDB provider, which is set for the duration of
+    the drain and restored after (stream confs bind at query start,
+    so concurrent keys are unaffected)."""
     from smartpipeline_spark.streaming import stateful_user_counts_tws
 
     stream = _staged_event_stream(spark, sf_dir)

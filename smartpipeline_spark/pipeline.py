@@ -135,7 +135,9 @@ class Pipeline:
         if self._spark is None:
             from smartpipeline_spark.session import get_spark
 
-            self._spark = get_spark()
+            # getOrCreate() would reset a live session's confs to the
+            # engine defaults, so only build one when none is active
+            self._spark = SparkSession.getActiveSession() or get_spark()
         return self._spark
 
     def set_error_manager(self, error_manager: ErrorManager) -> "Pipeline":

@@ -52,210 +52,18 @@ _ENGINE_CONF: dict[str, str] = {
 }
 
 
-# Marker file identifying a site-packages google/protobuf as OUR
-# provisioned shim copy (never a real installation): safe to refresh
-# or remove. A real protobuf ships no such file.
-SHIM_MARKER = "_VENDORED_BY_SMARTPIPELINE_SPARK"
-
-
-def _protobuf_importable() -> bool:
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except (ImportError, ModuleNotFoundError, ValueError):
-        return False
-
-
-# Opt-out: set SMARTPIPELINE_SPARK_NO_PROVISION=1 to forbid the
-# site-packages write entirely. ensure_protobuf() then falls back to
-# the PYTHONPATH mechanism, which still covers every JVM the engine
-# launches itself (only workers forked by a pre-existing external JVM
-# lose the shim — the tradeoff the env owner opted into).
-NO_PROVISION_ENV = "SMARTPIPELINE_SPARK_NO_PROVISION"
-
-
-def _site_candidates() -> list[str]:
-    """The writable-site-packages search order provision/unprovision
-    share: purelib first, then global site dirs, then the user dir."""
-    import site
-    import sysconfig
-
-    candidates: list[str] = []
-    try:
-        candidates.append(sysconfig.get_paths()["purelib"])
-    except (KeyError, OSError):
-        pass
-    try:
-        candidates.extend(site.getsitepackages())
-    except (AttributeError, OSError):
-        pass
-    try:
-        candidates.append(site.getusersitepackages())
-    except (AttributeError, OSError):
-        pass
-    return list(dict.fromkeys(candidates))
-
-
-def provision_protobuf() -> str | None:
-    """Install the vendored ``google.protobuf`` shim into a writable
-    site-packages as a PEP-420 namespace portion (``google/`` with NO
-    ``__init__.py``), so that Python workers forked by a JVM *this
-    engine did not launch* can still import it.
-
-    The PYTHONPATH mechanism in :func:`ensure_protobuf` only reaches
-    workers when it runs before the JVM starts; an external driver
-    that owns its SparkSession (the round-8 `ext_stream_stateful_tws`
-    crash) forks the transformWithStateInPandas state-server worker
-    from an environment we never touched. site-packages is on every
-    fresh interpreter's path, so a copy there is launch-order-proof.
-
-    Safety: provisions only when ``google.protobuf`` is unimportable;
-    never touches an existing ``google/protobuf`` that lacks our
-    marker file; installs atomically (temp dir + rename) so
-    concurrent imports cannot observe a half-copied package; a later
-    real installation overwrites the same path and wins.
-
-    Returns the directory provisioned into, or None (already
-    importable, opted out via $SMARTPIPELINE_SPARK_NO_PROVISION, or
-    nowhere writable)."""
-    import importlib
-    import shutil
-    import tempfile
-
-    if os.environ.get(NO_PROVISION_ENV, "").strip() not in ("", "0"):
-        return None
-    if _protobuf_importable():
-        return None
-    vendor_pb = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "vendor", "google", "protobuf"
-    )
-    for sp in _site_candidates():
-        try:
-            os.makedirs(sp, exist_ok=True)
-        except OSError:
-            continue
-        if not os.access(sp, os.W_OK):
-            continue
-        target_google = os.path.join(sp, "google")
-        target_pb = os.path.join(target_google, "protobuf")
-        if os.path.exists(os.path.join(target_google, "__init__.py")):
-            # a regular (non-namespace) google package owns the name
-            # here; adding a portion beside it would be invisible.
-            continue
-        refresh = os.path.isdir(target_pb) and os.path.exists(
-            os.path.join(target_pb, SHIM_MARKER)
-        )
-        if os.path.exists(target_pb) and not refresh:
-            continue  # unmarked => not ours; leave it alone
-        try:
-            os.makedirs(target_google, exist_ok=True)
-            tmp = tempfile.mkdtemp(prefix=".protobuf_shim_", dir=target_google)
-            staged = os.path.join(tmp, "protobuf")
-            shutil.copytree(vendor_pb, staged)
-            with open(os.path.join(staged, SHIM_MARKER), "w") as f:
-                f.write(
-                    "Vendored minimal protobuf shim provisioned by "
-                    "smartpipeline_spark.session.provision_protobuf().\n"
-                    "Safe to delete; `pip install protobuf` replaces it.\n"
-                )
-            if refresh:
-                shutil.rmtree(target_pb, ignore_errors=True)
-            try:
-                os.rename(staged, target_pb)
-            except OSError:
-                # concurrent provisioner won the rename — that's fine
-                pass
-            finally:
-                shutil.rmtree(tmp, ignore_errors=True)
-            importlib.invalidate_caches()
-            if _protobuf_importable():
-                return sp
-        except OSError:
-            continue
-    return None
-
-
-def unprovision_protobuf() -> list[str]:
-    """Remove every site-packages protobuf copy that
-    :func:`provision_protobuf` owns — identified STRICTLY by the
-    :data:`SHIM_MARKER` file, so a real ``pip install protobuf`` (which
-    ships no marker) is never touched. The enclosing namespace
-    ``google/`` dir is removed too when the shim was its only content
-    (we never created it otherwise); a ``google/`` holding anything
-    else is left alone. Returns the removed ``google/protobuf`` paths
-    (empty when nothing of ours was found)."""
-    import importlib
-    import shutil
-
-    removed: list[str] = []
-    for sp in _site_candidates():
-        target_google = os.path.join(sp, "google")
-        target_pb = os.path.join(target_google, "protobuf")
-        if not os.path.exists(os.path.join(target_pb, SHIM_MARKER)):
-            continue
-        shutil.rmtree(target_pb, ignore_errors=True)
-        if not os.path.exists(target_pb):
-            removed.append(target_pb)
-        try:
-            if not os.listdir(target_google):
-                os.rmdir(target_google)
-        except OSError:
-            pass
-    if removed:
-        importlib.invalidate_caches()
-    return removed
-
-
-def ensure_protobuf() -> bool:
-    """Make ``google.protobuf`` importable on driver AND Python
-    workers, preferring a real installation.
-
-    Spark 4's ``transformWithStateInPandas`` state-server protocol
-    imports the generated ``StateMessage_pb2``, which needs a protobuf
-    runtime. Where none is installed, the vendored minimal runtime
-    (``smartpipeline_spark/vendor`` — wire format implemented from the
-    public spec, scoped to the state protocol's field types) is first
-    provisioned into a writable site-packages (see
-    :func:`provision_protobuf` — reaches workers forked by ANY JVM),
-    falling back to adding the vendor dir to ``sys.path`` and
-    appending it to ``$PYTHONPATH`` so workers forked by a JVM
-    launched *after* this call inherit it. A real protobuf anywhere
-    earlier on the path wins: the vendor portion is namespace-style
-    and only consulted when the import fails elsewhere.
-
-    Returns True when google.protobuf is importable afterwards."""
-    import importlib
-    import sys
-
-    if _protobuf_importable():
-        return True
-    # a negative find_spec can be a STALE FileFinder directory cache
-    # (site-packages mutated by another process within mtime
-    # granularity — e.g. a provision/unprovision roundtrip elsewhere);
-    # refresh the finders before concluding the runtime is missing
-    importlib.invalidate_caches()
-    if _protobuf_importable():
-        return True
-    if provision_protobuf() is not None:
-        return True
-    vendor = os.path.join(os.path.dirname(os.path.abspath(__file__)), "vendor")
-    if vendor not in sys.path:
-        sys.path.append(vendor)
-    pp = os.environ.get("PYTHONPATH", "")
-    if vendor not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (pp + os.pathsep + vendor) if pp else vendor
-    return _protobuf_importable()
-
-
 def default_parallelism() -> int:
-    """CPU budget: $SPARK_GRAFT_CPUS if set, else os.cpu_count()."""
+    """CPU budget: $SPARK_GRAFT_CPUS if set, else the CPUs this
+    process may run on (its affinity mask, like ``nproc``), else
+    os.cpu_count()."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         try:
             return max(1, int(env))
         except ValueError:
             pass
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
     return os.cpu_count() or 8
 
 
@@ -273,7 +81,6 @@ def get_spark(
     value sized to input volume (rule of thumb: ~128MB post-shuffle
     per partition at 100 TB scale).
     """
-    ensure_protobuf()  # before the JVM forks Python workers
     cpus = default_parallelism()
     builder = SparkSession.builder.appName(app_name)
     builder = builder.master(master or f"local[{cpus}]")

@@ -404,6 +404,34 @@ def continuous_rollup(
     return start_query(writer, checkpoint, available_now)
 
 
+def _activate_protobuf_shim(spark: SparkSession) -> None:
+    """Let this session's Python workers import ``google.protobuf``,
+    which the transformWithStateInPandas state protocol needs.
+
+    When the driver finds no protobuf, append the vendored minimal
+    runtime (``smartpipeline_spark/vendor``, a PEP-420 ``google``
+    portion) to the session's worker ``PYTHONPATH``, once. A real
+    installation the driver can see is left to win. The worker
+    environment is bound when the Python function is built, so this
+    runs before ``transformWithStateInPandas``; ``sc.addPyFile`` would
+    not do, as the TWS pre-init driver worker never reads pyFiles.
+
+    The path reaches only workers on the driver's host: a multi-host
+    cluster still needs protobuf installed on its executors."""
+    import importlib.util
+
+    try:
+        if importlib.util.find_spec("google.protobuf") is not None:
+            return
+    except (ImportError, ValueError):
+        pass
+    vendor = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor")
+    env = spark.sparkContext.environment
+    parts = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if vendor not in parts:
+        env["PYTHONPATH"] = os.pathsep.join(parts + [vendor])
+
+
 def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:
     """Per-key running counts on the Spark-4 ``transformWithStateInPandas``
     API — the successor to ``applyInPandasWithState`` above, kept side
@@ -414,10 +442,10 @@ def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:
     100 TB ingest with hundreds of millions of live keys, this is the
     one to use; the applyInPandasWithState twin remains the
     compatibility path. Runtime dependency: the TWS wire protocol
-    needs a protobuf runtime on driver and executors —
-    ``session.ensure_protobuf()`` provides the vendored minimal
-    wire-format runtime (vendor/google/protobuf) where the real
-    package is not installed."""
+    needs a protobuf runtime in the Python workers; where the real
+    package is not installed, :func:`_activate_protobuf_shim` points
+    this session's workers at the vendored minimal wire-format runtime
+    (vendor/google/protobuf)."""
     import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
@@ -435,6 +463,7 @@ def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:
         def close(self) -> None:
             pass
 
+    _activate_protobuf_shim(df.sparkSession)
     return df.groupBy(key).transformWithStateInPandas(
         statefulProcessor=RunningCount(),
         outputStructType=f"{key} bigint, n_events bigint",

@@ -587,6 +587,31 @@ def test_source_error_propagates_to_driver(spark):
         list(pipe.run())
 
 
+def test_pipeline_without_spark_keeps_the_live_session_confs(spark):
+    """A Pipeline built with no ``spark=`` runs on the live session as
+    it is: building one through the engine builder would reset the
+    session's shuffle width (and AQE, Arrow) to the engine defaults."""
+    from smartpipeline_spark import Source
+
+    class Three(Source):
+        def __init__(self):
+            super().__init__()
+            self._it = iter(range(3))
+
+        def pop(self):
+            try:
+                return Item({"count": next(self._it), "text": "abc"})
+            except StopIteration:
+                self.stop()
+                return None
+
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    pipe = Pipeline().set_source(Three()).append("rev", TextReverser())
+    assert sorted(it.data["text"] for it in pipe.run()) == ["cba"] * 3
+    assert pipe.spark is spark
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
 def test_stage_cache_and_memory_profiling(spark):
     """Reference roadmap features, real here: cache=True persists the
     stage's output (repeat consumption skips recompute), and

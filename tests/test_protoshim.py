@@ -1,33 +1,69 @@
-"""Wire-format tests for the vendored minimal protobuf runtime
-(smartpipeline_spark/vendor/google/protobuf) — the shim that lets the
+"""The vendored minimal protobuf runtime
+(smartpipeline_spark/vendor/google/protobuf): the shim that lets the
 Spark-4 transformWithStateInPandas state protocol run where protobuf
-is not installed. The end-to-end attestation is
-test_streaming.test_transform_with_state_matches_batch_counts (a real
-JVM round-trip through the RocksDB state server); these tests pin the
-codec primitives the JVM validates implicitly there.
+is not installed, and the one place that activates it
+(``streaming._activate_protobuf_shim``).
+
+The codec tests pin the wire-format primitives the JVM validates
+implicitly in a real state-server round-trip. They always load the
+repo's vendor copy, so no other protobuf on this interpreter's path can
+stand in for the code under test. The end-to-end tests import the
+package, and run a transformWithStateInPandas drain on a session the
+engine did not build, in an interpreter that cannot import any protobuf.
 """
 
+import importlib
+import importlib.util
+import json
 import os
+import subprocess
 import sys
+import sysconfig
+import types
 
-VENDOR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "smartpipeline_spark",
-    "vendor",
-)
+import pytest
 
+from smartpipeline_spark.streaming import _activate_protobuf_shim
 
-def _pb2():
-    from smartpipeline_spark.session import ensure_protobuf
-
-    assert ensure_protobuf()
-    import pyspark.sql.streaming.proto.StateMessage_pb2 as sm
-
-    return sm
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+VENDOR = os.path.join(REPO, "smartpipeline_spark", "vendor")
+_PB2 = "pyspark.sql.streaming.proto.StateMessage_pb2"
 
 
-def test_pb2_builds_and_exposes_enums():
-    sm = _pb2()
+def _google_modules() -> list:
+    return [m for m in sys.modules if m in ("google", _PB2) or m.startswith("google.")]
+
+
+@pytest.fixture()
+def sm():
+    """``StateMessage_pb2`` built on the vendored runtime. Any
+    ``google`` modules already imported are set aside for the import and
+    put back afterwards."""
+    import pyspark.sql.streaming.proto as proto_pkg
+
+    saved = {m: sys.modules.pop(m) for m in _google_modules()}
+    saved_attr = proto_pkg.__dict__.get("StateMessage_pb2")
+    sys.path.insert(0, VENDOR)
+    importlib.invalidate_caches()
+    try:
+        import google.protobuf
+
+        want = os.path.join(VENDOR, "google", "protobuf", "__init__.py")
+        assert os.path.realpath(google.protobuf.__file__) == os.path.realpath(want)
+        yield importlib.import_module(_PB2)
+    finally:
+        sys.path.remove(VENDOR)
+        for m in _google_modules():
+            del sys.modules[m]
+        sys.modules.update(saved)
+        if saved_attr is None:
+            proto_pkg.__dict__.pop("StateMessage_pb2", None)
+        else:
+            proto_pkg.StateMessage_pb2 = saved_attr
+        importlib.invalidate_caches()
+
+
+def test_pb2_builds_and_exposes_enums(sm):
     assert sm.PRE_INIT == 0 and sm.CLOSED == 5
     for name in (
         "StateRequest",
@@ -42,11 +78,10 @@ def test_pb2_builds_and_exposes_enums():
         assert hasattr(sm, name), name
 
 
-def test_request_wire_bytes_are_canonical_proto3():
+def test_request_wire_bytes_are_canonical_proto3(sm):
     """Hand-computed wire bytes for the exact message shape the
     pyspark client sends on getValueState: field numbers and nesting
     from the public StateMessage.proto schema."""
-    sm = _pb2()
     cmd = sm.StateCallCommand()
     cmd.stateName = "n"
     call = sm.StatefulProcessorCall(getValueState=cmd)
@@ -61,8 +96,7 @@ def test_request_wire_bytes_are_canonical_proto3():
     assert sm.StateRequest(version=1).SerializeToString() == bytes.fromhex("0801")
 
 
-def test_negative_int64_roundtrip():
-    sm = _pb2()
+def test_negative_int64_roundtrip(sm):
     m = sm.RegisterTimer(expiryTimestampMs=-1)
     data = m.SerializeToString()
     # -1 as 10-byte two's-complement varint on field 1
@@ -76,8 +110,7 @@ def test_negative_int64_roundtrip():
     assert back2.expiryTimestampMs == 1 << 62
 
 
-def test_repeated_bytes_preserves_empty_elements_and_order():
-    sm = _pb2()
+def test_repeated_bytes_preserves_empty_elements_and_order(sm):
     m = sm.StateResponseWithListGet()
     m.ParseFromString(
         # statusCode=0 absent; value=[b'ab', b'', b'c']; requireNextFetch=true
@@ -88,8 +121,7 @@ def test_repeated_bytes_preserves_empty_elements_and_order():
     assert m.statusCode == 0 and m.errorMessage == ""
 
 
-def test_nested_repeated_message_parse():
-    sm = _pb2()
+def test_nested_repeated_message_parse(sm):
     kv = sm.KeyAndValuePair(key=b"k1", value=b"v1")
     kv2 = sm.KeyAndValuePair(key=b"k2")
     resp = sm.StateResponseWithMapIterator()
@@ -104,8 +136,7 @@ def test_nested_repeated_message_parse():
     ]
 
 
-def test_unknown_fields_are_skipped():
-    sm = _pb2()
+def test_unknown_fields_are_skipped(sm):
     resp = sm.StateResponse()
     # field 99 varint, field 98 LEN, then errorMessage="x"
     resp.ParseFromString(
@@ -114,68 +145,16 @@ def test_unknown_fields_are_skipped():
     assert resp.errorMessage == "x"
 
 
-def test_submessage_autovivify_marks_presence():
+def test_submessage_autovivify_marks_presence(sm):
     """Scoped deviation from full protobuf semantics, relied on by the
     pyspark client (`cmd.ttl.durationMs = 5`): touching a submessage
     attribute creates and ATTACHES it."""
-    sm = _pb2()
     cmd = sm.StateCallCommand()
     cmd.ttl.durationMs = 5
     data = cmd.SerializeToString()
     back = sm.StateCallCommand()
     back.ParseFromString(data)
     assert back.HasField("ttl") and back.ttl.durationMs == 5
-
-
-def _is_shim(pb_dir: str) -> bool:
-    from smartpipeline_spark.session import SHIM_MARKER
-
-    return VENDOR in pb_dir or os.path.exists(os.path.join(pb_dir, SHIM_MARKER))
-
-
-def test_real_protobuf_wins_when_installed():
-    """ensure_protobuf must not shadow a genuine installation: the
-    shim (vendor dir or a marker-bearing provisioned copy) is only
-    active when no real protobuf exists anywhere on the path."""
-    import importlib.util
-
-    from smartpipeline_spark.session import ensure_protobuf
-
-    ensure_protobuf()
-    spec = importlib.util.find_spec("google.protobuf")
-    assert spec is not None
-    origin = spec.origin or ""
-    if _is_shim(os.path.dirname(origin)):
-        # shim active => no real installation anywhere on the path
-        for p in sys.path:
-            cand = os.path.join(p, "google", "protobuf")
-            if os.path.exists(os.path.join(cand, "__init__.py")) and not _is_shim(
-                cand
-            ):
-                raise AssertionError(f"shim shadows a real protobuf at {cand}")
-
-
-def test_provisioned_shim_reaches_a_fresh_interpreter():
-    """The round-8 driver crash: a JVM the engine did not launch
-    forks Python workers that must still import google.protobuf.
-    Package import provisions the shim into site-packages as a
-    namespace portion, so a FRESH interpreter with no sys.path edits
-    and no $PYTHONPATH sees it."""
-    import importlib.util
-    import subprocess
-
-    import smartpipeline_spark  # noqa: F401  (import-time provisioning)
-
-    spec = importlib.util.find_spec("google.protobuf")
-    assert spec is not None
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(
-        [sys.executable, "-c", "import google.protobuf; print('ok')"],
-        capture_output=True,
-        text=True,
-        env=env,
-    )
-    assert out.returncode == 0 and "ok" in out.stdout, out.stderr
 
 
 def test_vendor_google_is_a_namespace_portion():
@@ -186,94 +165,153 @@ def test_vendor_google_is_a_namespace_portion():
     assert not os.path.exists(os.path.join(VENDOR, "google", "__init__.py"))
 
 
-def test_provision_unprovision_roundtrip():
-    """unprovision_protobuf removes exactly the marker-owned copies
-    and provision_protobuf can re-install afterwards — run in a fresh
-    subprocess (no $PYTHONPATH, clean import caches) that RESTORES the
-    provisioned state before exiting, so the rest of the suite keeps
-    its launch-order-proof shim."""
-    import subprocess
+def _stub_session(environment: dict):
+    return types.SimpleNamespace(sparkContext=types.SimpleNamespace(environment=environment))
 
-    script = """
-import os, importlib.util
-from smartpipeline_spark import session as S
 
-removed = S.unprovision_protobuf()
-assert all(os.path.basename(p) == "protobuf" for p in removed), removed
-assert S.unprovision_protobuf() == [], "second unprovision must be a no-op"
-for sp in S._site_candidates():
-    assert not os.path.exists(os.path.join(sp, "google", "protobuf", S.SHIM_MARKER))
-importlib.invalidate_caches()
-sp = S.provision_protobuf()
-if removed:
-    assert sp is not None, "re-provision failed after unprovision"
-    assert os.path.exists(os.path.join(sp, "google", "protobuf", S.SHIM_MARKER))
-assert importlib.util.find_spec("google.protobuf") is not None
-print("ROUNDTRIP-OK")
-"""
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(
-        [sys.executable, "-c", script], capture_output=True, text=True, env=env
+def test_real_protobuf_wins_when_installed(tmp_path, monkeypatch):
+    """A protobuf the driver can import is left alone: the helper adds
+    nothing to the workers' path."""
+    real = tmp_path / "google" / "protobuf"
+    real.mkdir(parents=True)
+    (real / "__init__.py").write_text("")
+    for m in _google_modules():
+        monkeypatch.delitem(sys.modules, m)
+    monkeypatch.syspath_prepend(str(tmp_path))
+    spec = importlib.util.find_spec("google.protobuf")
+    assert os.path.dirname(spec.origin) == str(real)
+    session = _stub_session({"PYTHONPATH": "/x"})
+    _activate_protobuf_shim(session)
+    assert session.sparkContext.environment == {"PYTHONPATH": "/x"}
+
+
+def test_shim_is_appended_once_after_the_workers_own_path(monkeypatch):
+    monkeypatch.setattr(importlib.util, "find_spec", lambda name: None)
+    session = _stub_session({"PYTHONPATH": "/x"})
+    _activate_protobuf_shim(session)
+    _activate_protobuf_shim(session)
+    assert session.sparkContext.environment["PYTHONPATH"] == os.pathsep.join(["/x", VENDOR])
+    bare = _stub_session({})
+    _activate_protobuf_shim(bare)
+    assert bare.sparkContext.environment == {"PYTHONPATH": VENDOR}
+
+
+# what pyspark's pandas path imports; protobuf is deliberately absent
+_NO_PROTOBUF_LIBS = (
+    "pyspark", "py4j", "pyarrow", "pandas", "numpy", "numpy.libs",
+    "dateutil", "pytz", "tzdata", "six.py",
+)
+
+
+@pytest.fixture(scope="module")
+def protobufless_python(tmp_path_factory):
+    """``(python, env)`` for an interpreter that cannot import any
+    protobuf: a venv without pip whose path holds only links to the
+    libraries pyspark's pandas path needs, plus this checkout. It is
+    also the Python of every worker its Spark JVM starts."""
+    base = tmp_path_factory.mktemp("no_protobuf")
+    venv = base / "venv"
+    subprocess.run([sys.executable, "-m", "venv", "--without-pip", str(venv)], check=True)
+    libs = base / "libs"
+    libs.mkdir()
+    purelib = sysconfig.get_paths()["purelib"]
+    for name in _NO_PROTOBUF_LIBS:
+        if os.path.exists(os.path.join(purelib, name)):
+            os.symlink(os.path.join(purelib, name), libs / name)
+    python = str(venv / "bin" / "python")
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PYTHONHOME")}
+    env.update(
+        PYTHONPATH=os.pathsep.join([str(libs), REPO]),
+        PYSPARK_PYTHON=python,
+        PYSPARK_DRIVER_PYTHON=python,
     )
-    assert out.returncode == 0 and "ROUNDTRIP-OK" in out.stdout, out.stderr
-    # the subprocess mutated site-packages under THIS process's feet;
-    # refresh our finders and prove the runtime is still reachable so
-    # a breakage fails HERE, not as a silent skip in a later TWS test
-    import importlib
-
-    importlib.invalidate_caches()
-    from smartpipeline_spark.session import ensure_protobuf
-
-    assert ensure_protobuf(), "protobuf unreachable after roundtrip"
-
-
-def test_no_provision_env_leaves_site_packages_untouched():
-    """With $SMARTPIPELINE_SPARK_NO_PROVISION=1 the package import must
-    not write to site-packages, while ensure_protobuf()'s PYTHONPATH
-    fallback still makes google.protobuf importable for engine-owned
-    sessions. Runs in a subprocess that first unprovisions (so the
-    opt-out has something to decline), then restores the provisioned
-    state before exiting."""
-    import subprocess
-
-    script = """
-import os, importlib, importlib.util
-from smartpipeline_spark import session as S
-
-had_shim = bool(S.unprovision_protobuf())
-importlib.invalidate_caches()
-os.environ[S.NO_PROVISION_ENV] = "1"
-assert S.provision_protobuf() is None, "opt-out must block the site write"
-for sp in S._site_candidates():
-    assert not os.path.exists(os.path.join(sp, "google", "protobuf", S.SHIM_MARKER)), sp
-assert S.ensure_protobuf(), "PYTHONPATH fallback must still work"
-assert importlib.util.find_spec("google.protobuf") is not None
-vendor = os.path.join(os.path.dirname(os.path.abspath(S.__file__)), "vendor")
-assert vendor in os.environ.get("PYTHONPATH", "").split(os.pathsep)
-# restore: drop the opt-out and re-provision for the rest of the suite.
-# The fallback put vendor on sys.path, which makes google.protobuf
-# importable and would make provision_protobuf() decline — remove it
-# first so the site-packages copy really comes back.
-del os.environ[S.NO_PROVISION_ENV]
-import sys
-if vendor in sys.path:
-    sys.path.remove(vendor)
-for mod in [m for m in sys.modules if m == "google" or m.startswith("google.")]:
-    del sys.modules[mod]
-importlib.invalidate_caches()
-if had_shim:
-    restored = S.provision_protobuf()
-    assert restored is not None, "restore re-provision failed"
-print("OPTOUT-OK")
-"""
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    out = subprocess.run(
-        [sys.executable, "-c", script], capture_output=True, text=True, env=env
+    probe = subprocess.run(
+        [python, "-c", "import google.protobuf"], capture_output=True, env=env
     )
-    assert out.returncode == 0 and "OPTOUT-OK" in out.stdout, out.stderr
-    import importlib
+    assert probe.returncode != 0, "the test interpreter must not see a protobuf"
+    return python, env
 
-    importlib.invalidate_caches()
-    from smartpipeline_spark.session import ensure_protobuf
 
-    assert ensure_protobuf(), "protobuf unreachable after opt-out test"
+def _tree(root: str) -> list:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for d, dirs, files in os.walk(root)
+        for f in dirs + files
+    )
+
+
+def test_package_import_leaves_site_packages_alone(protobufless_python):
+    python, env = protobufless_python
+    site = subprocess.run(
+        [python, "-c", "import sysconfig; print(sysconfig.get_paths()['purelib'])"],
+        capture_output=True, text=True, env=env, check=True,
+    ).stdout.strip()
+    before = _tree(site)
+    out = subprocess.run(
+        [python, "-c", "import smartpipeline_spark, pyspark.sql"],
+        capture_output=True, text=True, env=env, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr
+    assert _tree(site) == before
+
+
+_BARE_SESSION_TWS = """
+import importlib.util, json, sys
+from pyspark.sql import SparkSession
+
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    .getOrCreate()
+)
+from smartpipeline_spark import streaming
+
+try:
+    assert importlib.util.find_spec("google.protobuf") is None
+except ModuleNotFoundError:
+    pass
+work = sys.argv[1]
+spark.range(200).selectExpr(
+    "id AS event_id", "timestamp_seconds(id) AS ts", "id % 7 AS user_id",
+    "'view' AS event_type", "CAST(id AS double) AS value", "'' AS props",
+).repartition(4).write.parquet(work + "/events")
+stream = streaming.stream_events_dir(spark, work + "/events", max_files_per_trigger=1)
+rows = []
+q = streaming.start_foreach_batch(
+    streaming.stateful_user_counts_tws(stream),
+    lambda df, bid: rows.extend((bid, r["user_id"], r["n_events"]) for r in df.collect()),
+    checkpoint=work + "/ckpt",
+    available_now=True,
+    output_mode="update",
+)
+q.awaitTermination(240)
+final = {}
+for _, uid, n in rows:
+    final[uid] = max(n, final.get(uid, 0))
+want = {
+    r["user_id"]: r["cnt"]
+    for r in spark.read.parquet(work + "/events").groupBy("user_id").count()
+    .withColumnRenamed("count", "cnt").collect()
+}
+print(json.dumps({"batches": len({b for b, _, _ in rows}), "ok": final == want and bool(want)}))
+"""
+
+
+def test_bare_session_tws_drain_without_protobuf(protobufless_python, tmp_path):
+    """The round-8 case: the caller owns a bare SparkSession and no
+    protobuf is installed. The TWS drain's per-key running count must
+    end at the batch GROUP BY count."""
+    python, env = protobufless_python
+    out = subprocess.run(
+        [python, "-c", _BARE_SESSION_TWS, str(tmp_path)],
+        capture_output=True, text=True, env=env, timeout=420,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    result = json.loads(out.stdout.strip().splitlines()[-1])
+    assert result["batches"] > 1, "state must span micro-batches"
+    assert result["ok"], out.stdout[-2000:]

@@ -17,12 +17,9 @@ from tests.conftest import SF_SMOKE
 
 
 @pytest.fixture(scope="module")
-def events_stream_dir(tmp_path_factory):
+def events_stream_dir(spark, tmp_path_factory):
     """Replay the events table as a file-drop directory (4 chunks)."""
     base = tmp_path_factory.mktemp("events_stream")
-    from smartpipeline_spark.session import get_spark
-
-    spark = get_spark("pytest")
     ev = sources.table(spark, "events", SF_SMOKE)
     ev.repartition(4).write.mode("overwrite").parquet(str(base / "data"))
     return str(base / "data")
@@ -242,13 +239,9 @@ def test_transform_with_state_matches_batch_counts(spark, events_stream_dir, tmp
     """Spark-4 transformWithStateInPandas twin of the stateful-count
     test: same semantics, RocksDB-backed state store. The TWS protocol
     speaks protobuf between JVM and the Python state server;
-    session.ensure_protobuf() supplies the vendored wire-format
-    runtime where the real package is absent (this container), so the
-    skip only fires if neither is available."""
-    from smartpipeline_spark.session import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime available")
+    stateful_user_counts_tws points the workers at the vendored
+    wire-format runtime where the real package is absent, so a missing
+    runtime fails here."""
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
