@@ -3,13 +3,26 @@ Python, no JVM: retry/error/timing semantics must hold for arbitrary
 policies and exception sequences, and the batched kernel must agree
 with the per-item kernel wherever their semantics overlap."""
 
+import importlib
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from smartpipeline_spark.errors import ErrorManager, RetryManager, StagePolicy
 from smartpipeline_spark.item import Item
 from smartpipeline_spark.stage import BatchStage, Stage
-from smartpipeline_spark.wrapper import run_stage_on_batch, run_stage_on_item
+from smartpipeline_spark.wrapper import (
+    ERRORS_COL,
+    TIMINGS_COL,
+    compile_chain,
+    run_stage_on_batch,
+    run_stage_on_item,
+)
 
 
 class Err1(Exception):
@@ -218,3 +231,95 @@ def test_singleton_batch_matches_item_kernel(max_retries, exc, retryable, fail_t
     assert _errors_view(by_batch) == _errors_view(by_item)
     assert by_batch.data == by_item.data
     assert by_batch.get_timing("s") is not None and by_item.get_timing("s") is not None
+
+
+def _write_archive(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name in ("pkg/__init__.py", "pkg/sub/__init__.py", *modules):
+            zf.writestr(name, "VALUE = 1\n")
+
+
+def _archive_importers(archive):
+    return {
+        key: finder.prefix
+        for key, finder in sys.path_importer_cache.items()
+        if isinstance(finder, zipimport.zipimporter) and finder.archive == archive
+    }
+
+
+def _file_finders():
+    return {
+        key
+        for key, finder in sys.path_importer_cache.items()
+        if isinstance(finder, importlib.machinery.FileFinder)
+    }
+
+
+@pytest.fixture
+def zip_package(tmp_path):
+    """An archive holding ``pkg.sub.mod`` on ``sys.path``, imported; the
+    import state is restored afterwards."""
+    archive = str(tmp_path / "lib.zip")
+    _write_archive(archive, ["pkg/sub/mod.py"])
+    saved_path = list(sys.path)
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module("pkg.sub.mod")
+        yield archive
+    finally:
+        sys.path[:] = saved_path
+        for name in [m for m in sys.modules if m == "pkg" or m.startswith("pkg.")]:
+            del sys.modules[name]
+        for key in _archive_importers(archive):
+            del sys.path_importer_cache[key]
+
+
+class Passthrough(Stage):
+    def process(self, item):
+        return item
+
+
+class Explodes(Stage):
+    def process(self, item):
+        raise ValueError("critical")
+
+
+@pytest.mark.parametrize("ending", ["exhausted", "closed", "critical"])
+def test_chain_end_drops_archive_internal_importers(zip_package, ending):
+    """A reused Python worker's ``importlib.invalidate_caches()`` re-reads
+    the archive directory once per cached zipimporter; when the chain's
+    function ends — exhausted, closed early or raising — only the
+    archives' own importers are left, and a module added to the archive
+    still imports after the next invalidation."""
+    archive = zip_package
+    assert sorted(_archive_importers(archive).values()) == ["", "pkg/", "pkg/sub/"]
+    file_finders = _file_finders()
+
+    stage = Explodes() if ending == "critical" else Passthrough()
+    errors = ErrorManager()
+    if ending == "critical":
+        errors.raise_on_critical_error()
+    fn = compile_chain(
+        [(stage, StagePolicy("s"), False)],
+        ["x"],
+        ["x", ERRORS_COL, TIMINGS_COL],
+        errors,
+        chain_uid=f"archive-importers-{ending}",
+    )
+    batches = [pd.DataFrame({"x": [1, 2]}), pd.DataFrame({"x": [3]})]
+    out = fn(iter(batches))
+    if ending == "exhausted":
+        assert sum(len(pdf) for pdf in out) == 3
+    elif ending == "closed":
+        assert len(next(out)) == 2
+        out.close()
+    else:
+        with pytest.raises(ValueError, match="critical"):
+            next(out)
+
+    assert _archive_importers(archive) == {archive: ""}
+    assert _file_finders() >= file_finders
+
+    _write_archive(archive, ["pkg/sub/mod.py", "pkg/sub/new.py"])
+    importlib.invalidate_caches()
+    assert importlib.import_module("pkg.sub.new").VALUE == 1
