@@ -192,22 +192,23 @@ def main() -> None:
     # the capped probes track ~linear while the full ops show e~2,
     # the super-linearity is the output, proven mechanically.
     if want("jaccard_pairs_capped2", "minhash_candidates_capped2"):
-        from smartpipeline_spark.functions import dedup as _dd
         from smartpipeline_spark.functions.dedup import (
             jaccard_pairs,
             minhash_candidates,
             minhash_signatures,
+            release_caches,
         )
+        from smartpipeline_spark.operators.scale import LAST_DECISION
 
         anchor = F.col("doc_id") % n < 2
 
         # r11 (VERDICT r10 #1): the probes are PURE library API — the
         # anchored form and partitions="auto" now live in
         # jaccard_pairs/minhash_candidates themselves (one-pass join-
-        # cardinality estimate -> tuned_shuffle_partitions -> explicit
+        # cardinality estimate -> scale.resolve_exchange_width -> explicit
         # exchange widths when above the floor). No partition counts or
         # conf juggling here; the rung just records what the rule
-        # picked (dedup.LAST_AUTO_DECISION). The hot-key cap stays
+        # picked (scale.LAST_DECISION). The hot-key cap stays
         # replica-PROPORTIONAL (16 base docs at every rung): a fixed
         # cap would prune a growing share of the shingle universe as N
         # rises and the probe would measure the guard, not the join.
@@ -217,10 +218,10 @@ def main() -> None:
 
         def _record(name):
             counts[f"{name}_est_join_rows"] = int(
-                _dd.LAST_AUTO_DECISION.get("est_join_rows", 0)
+                LAST_DECISION.get("est_rows") or 0
             )
             counts[f"{name}_tuned_partitions"] = int(
-                _dd.LAST_AUTO_DECISION.get("partitions", 0)
+                LAST_DECISION.get("partitions") or 0
             )
 
         def capped_jaccard():
@@ -238,7 +239,7 @@ def main() -> None:
                 # the library persists its index frames internally and
                 # tracks them; release so the next rung starts cold
                 # (per-process measurement protocol: probes run solo)
-                _dd.release_caches()
+                release_caches()
 
         def capped_minhash():
             try:
@@ -250,7 +251,7 @@ def main() -> None:
                 _record("minhash_candidates_capped2")
                 return out
             finally:
-                _dd.release_caches()
+                release_caches()
 
         timed("jaccard_pairs_capped2", capped_jaccard)
         timed("minhash_candidates_capped2", capped_minhash)

@@ -1280,7 +1280,7 @@ def ext_export_shards(spark, sf_dir):
 
     d = sources.table(spark, "documents", sf_dir)
     out = os.path.join(
-        "/tmp", "spark_graft_shards", sf_dir.strip("/").replace("/", "_")
+        sources.scratch_root("shards"), sf_dir.strip("/").replace("/", "_")
     )
     stats = export_tar_shards(d, out, members={"text": "txt"})
     return stats.select("shard", "n_samples", "payload_bytes")

@@ -15,11 +15,12 @@ engine-portable md5-derived hashes so the oracle replays the exact
 candidate algebra); recall pytests against the exact Jaccard ground
 truth keep the approximate families honest.
 
-The pairing joins default to ``partitions="auto"``: a one-pass
-output-cardinality estimate sizes their exchanges via
-``operators.scale.tuned_shuffle_partitions`` (the rule the SMOKE
-ladders calibrated at 64x-256x) instead of leaving a 100 TB join at
-the session's shuffle width.
+The pairing joins and ExactSubstr default to ``partitions="auto"``:
+a one-pass estimate of the widest exchange sizes it through
+``operators.scale.resolve_exchange_width``, the package's one
+exchange-width contract (the rule the SMOKE ladders calibrated at
+64x-256x), instead of leaving a 100 TB join at the session's shuffle
+width. This module only supplies the estimates.
 """
 
 from __future__ import annotations
@@ -60,11 +61,6 @@ FUZZY_MAX_BLOCK = 500
 # 0.35 keeps the operator's output non-empty and genuinely verified
 COSINE_DUP_THRESHOLD = 0.35
 
-# telemetry: the most recent partitions="auto" decision (est rows +
-# chosen width) — read by scale_smoke to report what the rule picked
-LAST_AUTO_DECISION: dict = {}
-
-
 def _norm_text():
     return F.regexp_replace(F.lower(F.trim(F.col("text"))), "\\s+", " ")
 
@@ -97,14 +93,13 @@ def _spread_width(df: DataFrame) -> int:
     in-memory frames) falls back to the floor."""
     import math
 
+    from smartpipeline_spark.operators.scale import TASK_TARGET_BYTES, plan_size_bytes
+
     dp = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # non-JVM plan wrappers, connect mode, ...
+    size = plan_size_bytes(df)
+    if size is None:
         return dp
-    if size <= 0 or size > (1 << 50):  # Catalyst's "unknown" is ~8 EB
-        return dp
-    return max(dp, min(math.ceil(size / (128 * 1024 * 1024)), 1 << 20))
+    return max(dp, min(math.ceil(size / TASK_TARGET_BYTES), 1 << 20))
 
 
 def _heap_aware_level(df: DataFrame):
@@ -122,8 +117,12 @@ def _heap_aware_level(df: DataFrame):
     (connect mode, unknown stats) falls back to MEMORY_AND_DISK."""
     from pyspark import StorageLevel
 
+    from smartpipeline_spark.operators.scale import plan_size_bytes
+
+    size = plan_size_bytes(df)
+    if size is None:
+        return StorageLevel.MEMORY_AND_DISK
     try:
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         sc = df.sparkSession.sparkContext
         heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
         try:
@@ -133,7 +132,7 @@ def _heap_aware_level(df: DataFrame):
         pool = (heap - 300 * 1024 * 1024) * frac
     except Exception:
         return StorageLevel.MEMORY_AND_DISK
-    if 0 < size <= (1 << 50) and size > 0.8 * pool:
+    if size > 0.8 * pool:
         return StorageLevel.DISK_ONLY
     return StorageLevel.MEMORY_AND_DISK
 
@@ -250,146 +249,46 @@ def drop_hot_keys(df: DataFrame, key: str, max_df: int | None) -> DataFrame:
     return df.join(F.broadcast(hot), key, "left_anti")
 
 
-# The estimate pass's key-sample rate and its two trust gates: the
-# scaled sample is believed only when it aggregates enough keys for
-# concentration (>= _EST_MIN_SAMPLED_KEYS) AND no single key carries
-# more than _EST_MAX_KEY_SHARE of the sampled mass (a dominant bucket
-# means the estimate rides on a handful of hot keys, where a 1-in-16
-# key sample is Poisson-noisy — exactly the replica-ladder shape).
-_EST_SAMPLE_MOD = 16
-_EST_MIN_SAMPLED_KEYS = 4096
-_EST_MAX_KEY_SHARE = 1.0 / 16.0
-# Plan-size gate under which the sampled pre-pass is SKIPPED and the
-# exact estimate runs directly: the sample exists to make the estimate
-# cheap on BIG indexes; on a small index the exact pass is itself one
-# cheap job, while the sample almost always fails the >= 4096-key
-# trust gate and falls back — costing TWO estimate jobs where r11 paid
-# one (measured in the r12 idle bench as ext_dedup_minhash +13% wall,
-# pure fixed overhead at fixture scale). 256 MB keeps every regime
-# where sampling measurably pays (the 256x/1024x ladder rungs,
-# multi-GB materialized indexes) on the sampled path.
-_EST_SAMPLE_MIN_BYTES = 256 * 1024 * 1024
+def _pair_estimate(index: DataFrame, key_cols: list[str], anchor=None) -> int:
+    """Output cardinality of an inverted-index pairing join — Σ_k
+    C(n_k, 2) for the full self-join, Σ_k n_k·a_k when only ``anchor``
+    rows sit on the build side — from one sample-first pre-aggregation
+    over the (persisted) index
+    (:func:`~smartpipeline_spark.operators.scale.sample_first_estimate`)."""
+    from smartpipeline_spark.operators.scale import sample_first_estimate
+
+    def per_key(frame):
+        grouped = frame.groupBy(*key_cols)
+        if anchor is None:
+            per = grouped.agg(F.count("*").alias("na"))
+            return per.select((F.col("na") * (F.col("na") - 1) / 2).alias("e"))
+        per = grouped.agg(
+            F.count("*").alias("na"),
+            F.sum(F.when(anchor, 1).otherwise(0)).alias("nb"),
+        )
+        return per.select((F.col("na") * F.col("nb")).alias("e"))
+
+    return sample_first_estimate(index, key_cols, per_key)
 
 
 def _pair_join_width(
-    index: DataFrame, key_cols: list[str], anchor=None
-) -> int:
-    """The partition-sizing rule applied to an inverted-index pairing
-    join: a cheap pre-aggregation over the (persisted) index estimates
-    the join's output cardinality — Σ_k C(n_k, 2) for the full
-    self-join, Σ_k n_k·a_k when only ``anchor`` rows sit on the build
-    side — and :func:`~smartpipeline_spark.operators.scale.
-    tuned_shuffle_partitions` turns it into the exchange width
-    (~128 MB serialized per task, nearest pow2, floored at
-    2×parallelism). Helper-sized joins measured 27-66% faster than
-    the r9 hand-tuned constants (``git show d3e6f62:SMOKE_r10.json``);
-    this is that rule as DEFAULT library behavior (VERDICT r10 #1). The estimate pass is
-    charged to the operator by design — it is part of the join.
-
-    The estimate is SAMPLE-FIRST (r12): a 1-in-16 key sample
-    (``xxhash64(key) % 16 == 0`` — the filter prunes ~15/16 of the
-    index BEFORE the estimate's groupBy exchange) scaled back up by
-    16. The width only needs the right power-of-two bucket (nearest-
-    pow2 rounding tolerates ±41% before the bucket flips, and the
-    measured curves are flat within a 2× band), so a concentrated
-    sample is plenty — but concentration must be CHECKED, not
-    assumed: the sample is trusted only when it covers >= 4096 keys
-    and its largest single-key contribution is <= 1/16 of the sampled
-    mass. Otherwise (small index, or a mass dominated by a few hot
-    buckets — where a key sample is genuinely noisy) it falls back to
-    the exact pass, which is cheap in exactly those regimes."""
-    from smartpipeline_spark.operators.scale import tuned_shuffle_partitions
-
-    def agg_est(frame):
-        grouped = frame.groupBy(*key_cols)
-        if anchor is None:
-            per_key = grouped.agg(F.count("*").alias("na"))
-            est_col = F.col("na") * (F.col("na") - 1) / 2
-        else:
-            per_key = grouped.agg(
-                F.count("*").alias("na"),
-                F.sum(F.when(anchor, 1).otherwise(0)).alias("nb"),
-            )
-            est_col = F.col("na") * F.col("nb")
-        return (
-            per_key.select(est_col.alias("e"))
-            .agg(
-                F.sum("e").alias("r"),
-                F.count("*").alias("k"),
-                F.max("e").alias("m"),
-            )
-            .collect()[0]
-        )
-
-    from smartpipeline_spark.operators.scale import plan_size_bytes
-
-    size = plan_size_bytes(index)
-    sampled = None
-    if size is None or size > _EST_SAMPLE_MIN_BYTES:
-        sampled = agg_est(
-            index.filter(
-                F.pmod(F.xxhash64(*key_cols), F.lit(_EST_SAMPLE_MOD)) == 0
-            )
-        )
-    mode = "sampled"
-    if (
-        sampled is not None
-        and (sampled["k"] or 0) >= _EST_MIN_SAMPLED_KEYS
-        and (sampled["r"] or 0) > 0
-        and sampled["m"] <= sampled["r"] * _EST_MAX_KEY_SHARE
-    ):
-        est = int(sampled["r"]) * _EST_SAMPLE_MOD
-    else:
-        mode = "exact" if sampled is None else "exact_fallback"
-        est = int(agg_est(index)["r"] or 0)
-    p = tuned_shuffle_partitions(est, spark=index.sparkSession)
-    # diagnostics for benchmarks/smoke harnesses (last decision only;
-    # not part of the API contract)
-    LAST_AUTO_DECISION.clear()
-    LAST_AUTO_DECISION.update(
-        {
-            "est_join_rows": est,
-            "est_rows": est,
-            "partitions": p,
-            "est_mode": mode,
-        }
-    )
-    return p
-
-
-def _resolve_pair_partitions(
     partitions, index: DataFrame, key_cols: list[str], anchor=None
 ) -> int | None:
-    """``partitions`` contract shared by the pairing joins:
-    ``"auto"`` (default) runs the one-pass estimate and sizes the
-    exchanges; an int forces that width; ``None`` leaves the session
-    conf / AQE in charge (the pre-r11 behavior).
+    """``partitions`` contract of the pairing joins: the package's one
+    exchange-width contract (:func:`~smartpipeline_spark.operators.
+    scale.resolve_exchange_width`) fed the join's output cardinality
+    (:func:`_pair_estimate`) at ~50 B per pair row. No small-input
+    bypass: the output is quadratic in the index. Helper-sized joins
+    measured 27-66% faster than the r9 hand-tuned constants (``git
+    show d3e6f62:SMOKE_r10.json``); the estimate pass is charged to the
+    operator by design — it is part of the join."""
+    from smartpipeline_spark.operators.scale import resolve_exchange_width
 
-    "auto" only INJECTS explicit exchanges when the estimated working
-    set exceeds the rule's floor (2 x parallelism tasks of ~128 MB):
-    below that pressure point the measured curves are flat — explicit
-    widths would buy nothing and would also pin tiny joins away from
-    AQE's broadcast/coalesce choices (at fixture scale the b-side
-    would be shuffled just to be broadcast). So small inputs keep
-    their pre-r11 plans bit-for-bit; big ones get the tuned width.
-
-    One exception to the skip: an EGREGIOUSLY oversized session width
-    (> 8 x the tuned target) is clamped down by injecting the tuned
-    width anyway — measured at 1024x replicas, a 36M-row bucket join
-    under a 2048-partition session ran +49% wall vs the tuned 64
-    (per-task overhead, load-independent), while 8 x over (512 vs 64
-    at 256x) was still inside the flat band. The inject-or-skip rule
-    itself lives in :func:`~smartpipeline_spark.operators.scale.
-    should_inject_width`, shared with every other auto-sized
-    corpus-wide exchange."""
-    from smartpipeline_spark.operators.scale import should_inject_width
-
-    if partitions is None:
-        return None
-    if partitions == "auto":
-        p = _pair_join_width(index, key_cols, anchor)
-        return p if should_inject_width(p, index.sparkSession) else None
-    return int(partitions)
+    return resolve_exchange_width(
+        partitions,
+        index.sparkSession,
+        lambda: _pair_estimate(index, key_cols, anchor),
+    )
 
 
 def jaccard_pairs(
@@ -412,8 +311,9 @@ def jaccard_pairs(
 
     ``partitions="auto"`` (default) sizes the join and pair-count
     exchanges from a one-pass output-cardinality estimate (see
-    :func:`_pair_join_width`); pass an int to force a width or
-    ``None`` for session conf / AQE.
+    :func:`_pair_join_width`): explicit widths are injected only above
+    the pressure floor or to clamp an 8x-oversized session width; pass
+    an int to force a width or ``None`` for session conf / AQE.
 
     ``anchor`` (a boolean Column over the shingled rows, e.g.
     ``F.col("doc_id") % 1000 < 2``) switches to the ANCHORED form:
@@ -427,7 +327,7 @@ def jaccard_pairs(
     # sh feeds three consumers (sizes + both join sides): persist so
     # the regex-shingle explode and the hot-key anti-join run once
     sh = persist_intermediate(drop_hot_keys(raw_sh, "sh", max_df))
-    p = _resolve_pair_partitions(partitions, sh, ["sh"], anchor)
+    p = _pair_join_width(partitions, sh, ["sh"], anchor)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     side = sh if p is None else sh.repartition(p, "sh")
     a = side.alias("a")
@@ -619,9 +519,7 @@ def minhash_candidates(
         # the estimate pass + both join sides read the banded index —
         # persist so signatures compute once
         keyed = persist_intermediate(keyed)
-    p = _resolve_pair_partitions(
-        partitions, keyed, ["band_id", "band_key"], anchor
-    )
+    p = _pair_join_width(partitions, keyed, ["band_id", "band_key"], anchor)
     side = keyed if p is None else keyed.repartition(p, "band_id", "band_key")
     a = side.alias("a")
     b = (side if anchor is None else side.filter(anchor)).alias("b")
@@ -1280,7 +1178,7 @@ def overlap_pairs(
     the kept fingerprints. The fp frame feeds three consumers
     (sizes + both join sides): persisted once."""
     fp = persist_intermediate(drop_hot_keys(fp, "fp", max_df))
-    p = _resolve_pair_partitions(partitions, fp, ["fp"])
+    p = _pair_join_width(partitions, fp, ["fp"])
     sizes = fp.groupBy("doc_id").agg(F.count("*").alias("n"))
     side = fp if p is None else fp.repartition(p, "fp")
     a, b = side.alias("a"), side.alias("b")
@@ -1728,7 +1626,7 @@ def ext_dedup_incremental(spark, sf_dir):
     corpus = s.filter(F.col("split") != "test").select("doc_id", "text")
     batch = s.filter(F.col("split") == "test").select("doc_id", "text")
     root = os.path.join(
-        "/tmp", "spark_graft_dedup_index", sf_dir.strip("/").replace("/", "_")
+        sources.scratch_root("dedup_index"), sf_dir.strip("/").replace("/", "_")
     )
     # the declared key only exercises EXACT dedup (near=False below;
     # the near leg is pytest-pinned with planted duplicates): build
@@ -1817,21 +1715,15 @@ def _merge_spans(occ: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _kgram_width(
-    docs: DataFrame, k: int, partitions, decision: dict | None = None
-) -> int | None:
+def _kgram_width(docs: DataFrame, k: int, partitions) -> int | None:
     """``partitions`` contract for the ExactSubstr family: the widest
     exchanges carry the positional k-gram stream (groupBy g / window
     over g / the join-back), whose row count is exactly
     Σ max(n_words - k + 1, 0) — one row-local pre-pass over the corpus
     estimates it (charged to the operator, same as the pairing joins).
-    ~64 B per serialized gram row (two longs + a 32-hex digest).
-
-    ``decision`` (optional dict) receives
-    :func:`resolve_exchange_width`'s decision record — including
-    ``bypass_bytes`` when the small-input estimate bypass fired — so
-    callers can key follow-on shape choices on the SAME gate instead of
-    re-deriving it; defaults to the module diagnostics channel."""
+    ~64 B per serialized gram row (two longs + a 32-hex digest). The
+    gram stream is linear in the corpus, so the small-input estimate
+    bypass applies."""
     from smartpipeline_spark.operators.scale import resolve_exchange_width
 
     def est():
@@ -1845,9 +1737,7 @@ def _kgram_width(
         ).collect()[0]["r"]
 
     return resolve_exchange_width(
-        partitions, docs.sparkSession, est, row_bytes=64,
-        decision=LAST_AUTO_DECISION if decision is None else decision,
-        input_df=docs,
+        partitions, docs.sparkSession, est, row_bytes=64, input_df=docs
     )
 
 
@@ -1876,11 +1766,11 @@ def duplicate_spans(
     groupBy-partial-agg + join-back shape exists to avoid.
 
     What DOES work (r12, measured): on a provably small input — the
-    dispatch is :func:`resolve_exchange_width`'s estimate bypass
-    itself (plan-estimated <= its 16 MB bound AND a sane session
-    width), read back from the decision record so there is exactly one
-    source of truth for the gate — the gram stream is eagerly
-    localCheckpointed so the md5 k-gram fold — the dominant per-row
+    dispatch is :func:`~smartpipeline_spark.operators.scale.
+    estimate_bypassed`, the predicate behind the estimate bypass itself
+    (plan-estimated <= its 16 MB bound AND a sane session width), so
+    the gate has exactly one source of truth — the gram stream is
+    eagerly localCheckpointed so the md5 k-gram fold — the dominant per-row
     cost, duplicated verbatim into both consumers by the optimizer —
     evaluates ONCE; isolated min-of-5 at sf0.1 measured −12% wall min /
     −22% median vs the double-fold shape, row-identical output. Above
@@ -1901,17 +1791,13 @@ def duplicate_spans(
     for a <= few-hundred-MB fixture-scale intermediate, which is the
     only regime the gate admits. Pass ``partitions=None`` to keep the
     fully lazy double-fold shape."""
+    from smartpipeline_spark.operators.scale import estimate_bypassed
+
     grams = positional_kgrams(docs, k)
-    decision: dict = {}
-    p = _kgram_width(docs, k, partitions, decision=decision)
-    if decision:
-        # mirror into the module diagnostics channel (same record the
-        # default path would have written)
-        LAST_AUTO_DECISION.clear()
-        LAST_AUTO_DECISION.update(decision)
+    p = _kgram_width(docs, k, partitions)
     if p is not None:
         grams = grams.repartition(p, "g")
-    elif decision.get("bypass_bytes") is not None:
+    elif partitions == "auto" and estimate_bypassed(docs):
         grams = grams.localCheckpoint(eager=True)
     dup = grams.groupBy("g").agg(F.count("*").alias("_cnt")).filter(
         F.col("_cnt") >= 2

@@ -22,6 +22,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from smartpipeline_spark import sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import DEC28, dsum2, sql_dsum2
 from smartpipeline_spark.streaming import start_memory_sink
@@ -33,43 +34,48 @@ _JOIN_SINK = "_ext_stream_join_sink"
 _DEDUP_SINK = "_ext_stream_dedup_sink"
 
 
-def _staged_event_stream(spark, sf_dir):
-    """readStream over the events fixture: stages a symlink directory
-    around the single-file layout (file-stream sources need a
-    directory), takes the batch reader's schema (nanos conf set
-    first), and normalizes legacy ts encodings — shared by every
-    registered streaming query."""
+def _stage_events(sf_dir: str, name: str) -> str:
+    """A directory under this user's ``name`` scratch root holding a
+    symlink to the events fixture (file-stream sources need a
+    directory; the shipped fixture is a single file). Written once per
+    fixture and reused."""
     path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(path):
-        stage = path
-    else:
-        stage = os.path.join(
-            "/tmp", "spark_graft_stream", sf_dir.strip("/").replace("/", "_")
-        )
-        os.makedirs(stage, exist_ok=True)
-        link = os.path.join(stage, "events.parquet")
-        # lexists, not exists: exists() is False for a BROKEN symlink
-        # (old testdata path), which would make the symlink call raise
-        # FileExistsError — recreate stale links instead
-        if os.path.lexists(link):
-            if os.path.realpath(link) != os.path.realpath(path):
-                os.unlink(link)
-                os.symlink(path, link)
-        else:
+    stage = os.path.join(
+        sources.scratch_root(name), sf_dir.strip("/").replace("/", "_")
+    )
+    os.makedirs(stage, exist_ok=True)
+    link = os.path.join(stage, "events.parquet")
+    # lexists, not exists: exists() is False for a BROKEN symlink
+    # (old testdata path), which would make the symlink call raise
+    # FileExistsError — recreate stale links instead
+    if os.path.lexists(link):
+        if os.path.realpath(link) != os.path.realpath(path):
+            os.unlink(link)
             os.symlink(path, link)
-    from smartpipeline_spark import sources
+    else:
+        os.symlink(path, link)
+    return stage
 
+
+def _event_stream(spark, sf_dir, stage: str):
+    """The one events-stream reader of every registered streaming
+    query: readStream over the events directory ``stage`` with the
+    batch reader's schema (nanos conf set first) and the legacy ts
+    encodings normalized exactly as the batch table does."""
     sources.table(spark, "events", sf_dir)  # conf side effect on purpose
-    batch_schema = spark.read.parquet(path).schema
-    stream = spark.readStream.schema(batch_schema).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":  # legacy nanosAsLong layout
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(CAST(ts div 1000 AS LONG))")
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    return sources.normalize_event_ts(
+        spark.readStream.schema(batch_schema).parquet(stage)
+    )
+
+
+def _staged_event_stream(spark, sf_dir):
+    """:func:`_event_stream` over the events fixture: the fixture
+    directory itself, or a symlink stage around the single-file
+    layout."""
+    path = os.path.join(sf_dir, "events.parquet")
+    stage = path if os.path.isdir(path) else _stage_events(sf_dir, "stream")
+    return _event_stream(spark, sf_dir, stage)
 
 
 def _run_to_memory(spark, agg, sink_name: str) -> DataFrame:
@@ -325,7 +331,7 @@ def ext_stream_upsert(spark, sf_dir) -> DataFrame:
     # processed would drain zero batches and attest an empty table).
     # The pid suffix keeps concurrent sessions at the same sf (sweep +
     # driver_sim) from rmtree-ing each other's in-flight stream state.
-    root = os.path.join("/tmp", "spark_graft_stream_upsert")
+    root = sources.scratch_root("stream_upsert")
     base = os.path.join(
         root, f"{sf_dir.strip('/').replace('/', '_')}_{os.getpid()}"
     )
@@ -393,19 +399,7 @@ def _staged_outer_stream_dir(sf_dir: str) -> str:
     import pyarrow.parquet as pq
 
     path = os.path.join(sf_dir, "events.parquet")
-    stage = os.path.join(
-        "/tmp",
-        "spark_graft_stream_outer",
-        sf_dir.strip("/").replace("/", "_"),
-    )
-    os.makedirs(stage, exist_ok=True)
-    link = os.path.join(stage, "events.parquet")
-    if os.path.lexists(link):
-        if os.path.realpath(link) != os.path.realpath(path):
-            os.unlink(link)
-            os.symlink(path, link)
-    else:
-        os.symlink(path, link)
+    stage = _stage_events(sf_dir, "stream_outer")
     sentinel = os.path.join(stage, "sentinel.parquet")
     if not os.path.exists(sentinel):
         t = pq.read_table(path)
@@ -459,21 +453,7 @@ def ext_stream_outer_join(spark, sf_dir) -> DataFrame:
     watermark-advancing sentinel event (see
     :func:`_staged_outer_stream_dir`), making the drained output
     exactly the batch LEFT JOIN the DuckDB oracle runs."""
-    from smartpipeline_spark import sources
-
-    stage = _staged_outer_stream_dir(sf_dir)
-    sources.table(spark, "events", sf_dir)  # nanos conf side effect
-    batch_schema = spark.read.parquet(
-        os.path.join(sf_dir, "events.parquet")
-    ).schema
-    stream = spark.readStream.schema(batch_schema).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.expr("timestamp_micros(CAST(ts div 1000 AS LONG))")
-        )
-    elif ts_type == "timestamp_ntz":
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = _event_stream(spark, sf_dir, _staged_outer_stream_dir(sf_dir))
     # the sentinel rides INSIDE both legs (not filtered out before
     # them): the watermark advances from rows that flow through each
     # leg's EventTimeWatermark operator, so a pre-leg filter would
@@ -545,8 +525,6 @@ def ext_stream_enrich(spark, sf_dir) -> DataFrame:
     stream never shuffles (map-side hash join inside each
     micro-batch), and dim updates are picked up batch-by-batch — the
     documented Spark pattern for slowly-changing enrichment."""
-    from smartpipeline_spark import sources
-
     stream = _staged_event_stream(spark, sf_dir)
     dim = sources.table(spark, "customer", sf_dir).select(
         F.col("c_custkey"), F.col("c_mktsegment"), F.col("c_name")

@@ -651,37 +651,18 @@ def _bm25_word_estimate(docs: DataFrame) -> int:
     """Word-count estimate (upper bound on postings rows) — the sizing
     input for both the segment file count and the build parallelism.
     Charged to the build, same as every auto-sizing contract here.
+    One row per document keyed on ``doc_id``, through the shared
+    sample-first estimator (:func:`~smartpipeline_spark.operators.
+    scale.sample_first_estimate`): per-doc word counts are bounded, so
+    a doc sample concentrates fast, and a corpus that plan-estimates
+    under its 256 MB sample skip runs the exact pass alone."""
+    from smartpipeline_spark.operators.scale import sample_first_estimate
 
-    SAMPLE-FIRST (r12, same contract as the dedup pairing estimate): a
-    1-in-16 doc_id sample is tokenize-sized and scaled x16 when it
-    covers >= 4096 docs — per-doc word counts are bounded, so a doc
-    sample concentrates fast and the estimate only has to land in the
-    right power-of-two bucket. Small corpora (where the sample is
-    noisy AND the exact pass is cheap) fall back to the full pass."""
     wc = F.when(
         F.length(F.trim(F.col("text"))) > 0,
         F.size(F.split(F.lower(F.trim(F.col("text"))), "\\s+")),
     ).otherwise(F.lit(1))
-
-    def agg(frame):
-        r = frame.agg(F.sum(wc).alias("r"), F.count("*").alias("k")).collect()[0]
-        return int(r["r"] or 1), int(r["k"] or 0)
-
-    words, k = agg(docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(16)) == 0))
-    if k >= 4096:
-        return words * 16
-    return agg(docs)[0]
-
-
-def _files_for_rows(rows: int, row_bytes: int = 30) -> int:
-    """~128 MB of serialized postings per sorted file. The r12 1024x
-    RAG rung measured why a fixed count cannot work: 8 files over
-    ~500M postings put ~50M rows through each sortWithinPartitions
-    task, while a fixture corpus wants ~1 file so a term probe opens
-    ~1 footer."""
-    import math
-
-    return max(1, min(math.ceil(rows * row_bytes / (128 * 1024 * 1024)), 8192))
+    return sample_first_estimate(docs, ["doc_id"], lambda f: f.select(wc.alias("e")))
 
 
 def _bm25_new_segment(docs: DataFrame, path: str, num_files) -> str:
@@ -692,27 +673,27 @@ def _bm25_new_segment(docs: DataFrame, path: str, num_files) -> str:
 
     ``num_files="auto"`` runs the one-pass word estimate and derives
     BOTH knobs from it: the segment file count (~128 MB per sorted
-    file) and — through the shared inject-above-floor contract
-    (``scale.should_inject_width``) — explicit widths for the
-    builder's two corpus-wide exchanges, so AQE's compressed-bytes
-    coalescing can't overshoot executor memory at corpus scale while
-    fixture-scale plans stay untouched."""
+    file, ``scale.files_for_rows``) and — through the package's one
+    exchange-width contract (``scale.resolve_exchange_width``) —
+    explicit widths for the index build's two corpus-wide exchanges, so
+    AQE's compressed-bytes coalescing can't overshoot executor memory
+    at corpus scale while fixture-scale plans stay untouched."""
     import os
     import uuid
 
     from smartpipeline_spark.operators.scale import (
-        should_inject_width,
-        tuned_shuffle_partitions,
+        files_for_rows,
+        resolve_exchange_width,
         write_sorted,
     )
 
     width = None
     if num_files == "auto":
         words = _bm25_word_estimate(docs)
-        num_files = _files_for_rows(words)
-        spark = docs.sparkSession
-        p = tuned_shuffle_partitions(words, row_bytes=120, spark=spark)
-        width = p if should_inject_width(p, spark) else None
+        num_files = files_for_rows(words)
+        width = resolve_exchange_width(
+            "auto", docs.sparkSession, lambda: words, row_bytes=120
+        )
     seg = f"seg-{uuid.uuid4().hex[:12]}"
     write_sorted(
         _bm25_postings(docs, width), os.path.join(path, seg), "w", int(num_files)
@@ -817,7 +798,7 @@ def compact_bm25_index(spark, path: str, num_files: int | str = "auto") -> dict:
     import shutil
     import uuid
 
-    from smartpipeline_spark.operators.scale import write_sorted
+    from smartpipeline_spark.operators.scale import files_for_rows, write_sorted
 
     stats = _bm25_manifest(path)
     before = list(stats["segments"])
@@ -825,15 +806,7 @@ def compact_bm25_index(spark, path: str, num_files: int | str = "auto") -> dict:
     if num_files == "auto":
         # the manifest already knows the exact postings row count —
         # size ~128 MB/file with no estimate job at all
-        import math
-
-        num_files = max(
-            1,
-            min(
-                math.ceil(stats.get("postings_rows", 1) * 30 / (128 * 1024 * 1024)),
-                8192,
-            ),
-        )
+        num_files = files_for_rows(stats.get("postings_rows", 1))
     seg = f"seg-{uuid.uuid4().hex[:12]}"
     write_sorted(merged, os.path.join(path, seg), "w", num_files)
     stats["segments"] = [seg]
@@ -931,17 +904,11 @@ def _fixture_index_for(kind: str, src: str, build, valid) -> str:
     or stale layout rebuilds instead of being served silently.
     ``build(path)`` writes a fresh index to ``path``.
 
-    The cache root is per-user and 0700. A fixed world-shared /tmp name
-    is the classic predictable-tmp hazard (another local user
-    pre-plants or clobbers the path and the oracled key silently serves
-    it); a root that exists with the wrong owner or with group/other
-    permissions is REJECTED in favour of a fresh private mkdtemp for
-    this process."""
+    The cache root is per-user and 0700 (:func:`~smartpipeline_spark.
+    sources.scratch_root`)."""
     import hashlib
     import os
     import shutil
-    import stat as stat_mod
-    import tempfile
     import uuid
 
     def _ok(p: str) -> bool:
@@ -955,15 +922,7 @@ def _fixture_index_for(kind: str, src: str, build, valid) -> str:
     cached = _FIXTURE_IDX_CACHE.get((kind, tag))
     if cached and _ok(cached):
         return cached
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{kind}_idx_u{os.getuid()}")
-    try:
-        os.makedirs(root, mode=0o700, exist_ok=True)
-        rst = os.stat(root)
-        if rst.st_uid != os.getuid() or (rst.st_mode & (stat_mod.S_IRWXG | stat_mod.S_IRWXO)):
-            raise OSError("cache root not exclusively ours")
-    except OSError:
-        root = tempfile.mkdtemp(prefix=f"spark_graft_{kind}_idx_")
-    path = os.path.join(root, tag)
+    path = os.path.join(sources.scratch_root(f"{kind}_idx"), tag)
     if not _ok(path):
         # concurrent sessions (driver + sweep) may race to build the
         # same tag: build into a private dir, publish with one atomic

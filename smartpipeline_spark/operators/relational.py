@@ -92,24 +92,24 @@ def q02_sink_roundtrip(spark, sf_dir):
     re-read that touches ONLY the o_year=1997 directory (partition
     pruning — the single most important layout lever at 100 TB).
 
-    Paths are per-process under the process temp dir (``TMPDIR``) so
-    concurrent runs and checkouts don't collide on the sink directory;
-    sink dirs left behind by DEAD processes are reaped here
-    so repeated harness runs don't accumulate litter."""
+    Paths are per-process under the user's private scratch root
+    (:func:`sources.scratch_root`) so concurrent runs and checkouts
+    don't collide on the sink directory; sink dirs left behind by DEAD
+    processes are reaped here so repeated harness runs don't
+    accumulate litter."""
     import shutil
-    import tempfile
 
-    tmp_root = tempfile.gettempdir()
-    for stale in glob.glob(f"{tmp_root}/q02_sink_*"):
+    root = sources.scratch_root("q02_sink")
+    for stale in glob.glob(f"{root}/*"):
         try:
-            pid = int(stale.rsplit("_", 1)[-1])
+            pid = int(os.path.basename(stale))
             if pid != os.getpid():
                 os.kill(pid, 0)  # raises if the owner is gone
         except ProcessLookupError:
             shutil.rmtree(stale, ignore_errors=True)
         except (ValueError, PermissionError):
             pass
-    base = f"{tmp_root}/q02_sink_{os.getpid()}"
+    base = f"{root}/{os.getpid()}"
     os.makedirs(base, exist_ok=True)
     o = _t(spark, sf_dir, "orders")
 

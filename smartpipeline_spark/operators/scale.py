@@ -1,6 +1,15 @@
-"""Scale machinery: skew-salted joins and bucketed co-located joins.
+"""Scale machinery: exchange widths, skew-salted joins and bucketed
+co-located joins.
 
-These are the two levers AQE can't always pull for you at 100 TB:
+* **Exchange widths** — this module is the only one that decides the
+  width of an auto-sized exchange: :func:`resolve_exchange_width` is
+  the one ``partitions=`` contract, :func:`sample_first_estimate` the
+  one sample-first estimator, :func:`plan_size_bytes` the one read of
+  Catalyst's size statistic and :data:`TASK_TARGET_BYTES` the one
+  per-task target. Operators supply only their row estimates.
+
+Salting and bucketing are the two levers AQE can't always pull for
+you at 100 TB:
 
 * **Salting** — when one join key carries a disproportionate share of
   rows (a celebrity user, a null-ish default key), hash partitioning
@@ -26,27 +35,37 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+# The one per-task target every auto-sized width is derived from:
+# ~128 MB of serialized rows per shuffle task (exchanges) or per
+# sorted output file (index segments).
+TASK_TARGET_BYTES = 128 * 1024 * 1024
+
+
+def pressure_floor(spark: SparkSession) -> int:
+    """The width floor of every auto-sized exchange: 2 x the session's
+    ``defaultParallelism``."""
+    return 2 * spark.sparkContext.defaultParallelism
+
+
 def tuned_shuffle_partitions(
-    est_rows: int | None = None,
+    est_rows: int,
     *,
     row_bytes: int = 50,
-    working_set_bytes: int | None = None,
-    target_mb: int = 128,
     floor: int | None = None,
     ceiling: int = 8192,
     spark: SparkSession | None = None,
 ) -> int:
     """Executable form of the partition-sizing rule the SMOKE ladders
-    converged on (r9 hand-tuning, r10 idle-host adjudication): set
-    ``spark.sql.shuffle.partitions`` so each task's share of the
-    WIDEST exchange's working set is ~``target_mb`` serialized, then
-    round to the nearest power of two and clamp to
-    [2 x parallelism, ceiling].
+    converged on (r9 hand-tuning, r10 idle-host adjudication): size an
+    exchange so each task's share of the WIDEST exchange's working set
+    (``est_rows`` x ``row_bytes``) is ~:data:`TASK_TARGET_BYTES`
+    serialized, then round to the nearest power of two and clamp to
+    [:func:`pressure_floor`, ceiling].
 
-    Callers pass either ``working_set_bytes`` directly or ``est_rows``
-    (the widest shuffle's row count — e.g. a join's output cardinality
-    Sum_k n_a(k)*n_b(k), computable by one cheap pre-aggregation) with
-    ``row_bytes`` (~50 for a pair+count shuffle row).
+    ``est_rows`` is the widest shuffle's row count — e.g. a join's
+    output cardinality Sum_k n_a(k)*n_b(k), computable by one cheap
+    pre-aggregation — and ``row_bytes`` its serialized row size (~50
+    for a pair+count shuffle row).
 
     Why NEAREST, with a hard floor and no round-up-for-safety: the
     measured curve is NON-monotone in both directions —
@@ -67,46 +86,54 @@ def tuned_shuffle_partitions(
     1315M/512 = 2.57M rows ~ 128 MB serialized at ~50 B/row) — one
     target, both rungs, which is exactly the rule a 1000-executor job
     sizes reducers by."""
-    if working_set_bytes is None:
-        if est_rows is None:
-            raise ValueError("pass est_rows or working_set_bytes")
-        working_set_bytes = int(est_rows) * int(row_bytes)
-    if floor is None:
-        if spark is not None:
-            floor = 2 * spark.sparkContext.defaultParallelism
-        else:
-            from smartpipeline_spark.session import default_parallelism
-
-            floor = 2 * default_parallelism()
-    need = max(1.0, working_set_bytes / (target_mb * 1024.0 * 1024.0))
     import math
 
+    if floor is None:
+        floor = pressure_floor(spark)
+    need = max(1.0, int(est_rows) * int(row_bytes) / TASK_TARGET_BYTES)
     # nearest power of two in log space (131 -> 128, 526 -> 512)
     p = 2 ** round(math.log2(need))
     return int(min(max(p, floor), ceiling))
 
 
+# Serialized bytes of one sorted index-segment row (a posting).
+SEGMENT_ROW_BYTES = 30
+
+
+def files_for_rows(rows: int) -> int:
+    """Output file count for a sorted index segment: ~
+    :data:`TASK_TARGET_BYTES` of rows at :data:`SEGMENT_ROW_BYTES` per
+    file, capped at 8192. The r12 1024x RAG rung measured why a fixed count cannot
+    work: 8 files over ~500M postings put ~50M rows through each
+    sortWithinPartitions task, while a fixture corpus wants ~1 file so
+    a term probe opens ~1 footer."""
+    import math
+
+    return max(1, min(math.ceil(rows * SEGMENT_ROW_BYTES / TASK_TARGET_BYTES), 8192))
+
+
+def _session_width(spark: SparkSession) -> int | None:
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except Exception:
+        return None
+
+
 def should_inject_width(p: int, spark: SparkSession) -> bool:
-    """The inject-or-skip half of the ``partitions="auto"`` contract,
-    shared by every auto-sized corpus-wide exchange (pairing joins,
-    ExactSubstr, CCNet line dedup, packing, epoch shuffle): inject the
-    tuned width only when it exceeds the pressure floor
-    (2 x parallelism) — below it the measured curves are flat and an
-    explicit exchange would pin tiny jobs away from AQE's
+    """The inject-or-skip half of the ``partitions="auto"`` contract:
+    inject the tuned width only when it exceeds the pressure floor
+    (:func:`pressure_floor`) — below it the measured curves are flat
+    and an explicit exchange would pin tiny jobs away from AQE's
     broadcast/coalesce choices — EXCEPT when the session width is
     egregiously oversized (> 8 x the tuned target), which measured
     +49% wall at 1024x from per-task overhead alone; then the tuned
     width is injected as a clamp. Typical test/driver sessions (32-200
     partitions) stay under the 8 x line, so fixture plans remain
     untouched."""
-    floor = 2 * spark.sparkContext.defaultParallelism
-    if p > floor:
+    if p > pressure_floor(spark):
         return True
-    try:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return False
-    return sess > 8 * p
+    sess = _session_width(spark)
+    return sess is not None and sess > 8 * p
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -115,7 +142,8 @@ def plan_size_bytes(df: DataFrame) -> int | None:
     "unknown" sentinel (~8 EB). For a parquet scan this is the
     COMPRESSED file bytes; for a materialized cache it is the actual
     in-memory size — both usable as a conservative smallness witness
-    (callers must treat None/huge as "not small", never the reverse)."""
+    (callers must treat None/huge as "not small", never the reverse).
+    The package's only read of Catalyst's size statistic."""
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
@@ -126,24 +154,49 @@ def plan_size_bytes(df: DataFrame) -> int | None:
 
 
 # Plan-size gate under which an auto-sized operator SKIPS its estimate
-# job outright: at <= 64 MB of plan-estimated input (compressed scan
-# bytes or materialized cache bytes), every exchange these operators
-# derive from the input is in the pressure-floor region where the
-# measured width curves are flat (r10/r11 idle matrices) — the only
-# decisions the estimate could produce are "don't inject" or the 8x
-# session clamp, and the clamp precondition is checked separately
-# before bypassing. The estimate job itself, by contrast, is a real
-# cost at exactly this scale: the r12 idle bench measured the added
-# pre-pass at +62% executor CPU on ext_line_dedup (1.23 -> 1.99 s) and
-# +34% wall on ext_epoch_shuffle — fixed job overhead that buys a
-# number which changes nothing. At 16 MB the bound is tight even
-# adversarially: <= ~128 MB decompressed, and at the operators' linear
-# row multipliers (<= ~1 row / 2 raw bytes) the widest exchange's
-# working set stays ~<= the floor's 8 GB budget at 150 B/row. SMOKE
-# ladder rungs (64x+ replicated corpora, >= ~200 MB materialized) stay
-# far above the gate, so every measured injection decision is
-# unchanged.
+# job outright: at <= 16 MB of plan-estimated input (compressed scan
+# bytes or materialized cache bytes), every exchange a LINEAR-output
+# operator derives from the input is in the pressure-floor region
+# where the measured width curves are flat (r10/r11 idle matrices) —
+# the only decisions the estimate could produce are "don't inject" or
+# the 8x session clamp, and the clamp precondition is checked
+# separately before bypassing. The estimate job itself, by contrast,
+# is a real cost at exactly this scale: the r12 idle bench measured
+# the added pre-pass at +62% executor CPU on ext_line_dedup (1.23 ->
+# 1.99 s) and +34% wall on ext_epoch_shuffle — fixed job overhead that
+# buys a number which changes nothing. At 16 MB the bound is tight
+# even adversarially: <= ~128 MB decompressed, and at the operators'
+# linear row multipliers (<= ~1 row / 2 raw bytes) the widest
+# exchange's working set stays ~<= the floor's 8 GB budget at
+# 150 B/row. SMOKE ladder rungs (64x+ replicated corpora, >= ~200 MB
+# materialized) stay far above the gate, so every measured injection
+# decision is unchanged.
 ESTIMATE_BYPASS_BYTES = 16 * 1024 * 1024
+
+
+def estimate_bypassed(input_df: DataFrame) -> bool:
+    """The small-input bypass of :func:`resolve_exchange_width`: True
+    when ``input_df`` plan-estimates under :data:`ESTIMATE_BYPASS_BYTES`
+    AND the session width cannot trip the 8x clamp (``sess <= 8 x
+    floor`` — exact: the tuned width is always >= floor, so ``sess <=
+    8 x p`` for any estimate and the clamp branch of
+    :func:`should_inject_width` is provably off). Operators that pick a
+    follow-on shape by input size ask this same predicate, so the gate
+    has one definition."""
+    size = plan_size_bytes(input_df)
+    if size is None or size > ESTIMATE_BYPASS_BYTES:
+        return False
+    spark = input_df.sparkSession
+    sess = _session_width(spark)
+    return sess is not None and sess <= 8 * pressure_floor(spark)
+
+
+# Diagnostics: the most recent ``partitions="auto"`` decision —
+# ``est_rows`` and the tuned ``partitions`` (both None when the
+# small-input bypass skipped the estimate). Written only by
+# :func:`resolve_exchange_width`; read by scripts/scale_smoke.py and
+# the tests. Not part of the API contract.
+LAST_DECISION: dict = {}
 
 
 def resolve_exchange_width(
@@ -151,60 +204,101 @@ def resolve_exchange_width(
     spark: SparkSession,
     est_rows_fn,
     row_bytes: int = 50,
-    decision: dict | None = None,
     input_df: DataFrame | None = None,
 ) -> int | None:
-    """Full ``partitions`` contract for an auto-sized operator:
-    ``"auto"`` runs ``est_rows_fn()`` (the operator's one-pass estimate
-    of its widest exchange's row count — charged to the operator by
-    design), sizes it with :func:`tuned_shuffle_partitions` at
-    ``row_bytes`` per serialized row, and applies
-    :func:`should_inject_width`; an int forces that width; ``None``
-    leaves the session conf / AQE in charge. ``decision`` (optional
-    dict) receives the estimate + chosen width for smoke/bench
-    diagnostics.
+    """The ``partitions`` contract of every auto-sized exchange in the
+    package (pairing joins, ExactSubstr, line dedup, packing, epoch
+    shuffle, BM25 segment builds): ``"auto"`` runs ``est_rows_fn()``
+    (the operator's one-pass estimate of its widest exchange's row
+    count — charged to the operator by design), sizes it with
+    :func:`tuned_shuffle_partitions` at ``row_bytes`` per serialized
+    row, and applies :func:`should_inject_width`; an int forces that
+    width; ``None`` leaves the session conf / AQE in charge. Every
+    "auto" decision is recorded in :data:`LAST_DECISION`.
 
-    ``input_df`` (optional) enables the small-input bypass: when the
-    operator's input frame plan-estimates under
-    :data:`ESTIMATE_BYPASS_BYTES` AND the session width cannot trip the
-    8x clamp (``sess <= 8 x floor`` — exact: the tuned width is always
-    >= floor, so ``sess <= 8 x p`` for any estimate and the clamp
-    branch of :func:`should_inject_width` is provably off), the
-    estimate job is skipped and None returned directly. For the
-    linear-output operators this gate serves, a 16 MB input keeps the
-    widest exchange at/near the pressure floor where the measured
-    width curves are flat — so skipping costs nothing and saves the
-    estimate job, the dominant fixture-scale cost."""
+    ``input_df`` (optional) enables the small-input bypass
+    (:func:`estimate_bypassed`): the estimate job is skipped and None
+    returned directly. Only LINEAR-output operators may pass it — a
+    16 MB input keeps their widest exchange at/near the pressure floor,
+    so skipping costs nothing and saves the estimate job, the dominant
+    fixture-scale cost. The pairing joins must not: their output is
+    QUADRATIC in the input (Σ_k C(n_k, 2) pairs), so a small input
+    can still feed a join far above the floor."""
     if partitions is None:
         return None
-    if partitions == "auto":
-        if input_df is not None:
-            size = plan_size_bytes(input_df)
-            floor = 2 * spark.sparkContext.defaultParallelism
-            try:
-                sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                sess = None
-            if (
-                size is not None
-                and size <= ESTIMATE_BYPASS_BYTES
-                and sess is not None
-                and sess <= 8 * floor
-            ):
-                if decision is not None:
-                    decision.clear()
-                    decision.update(
-                        {"est_rows": None, "partitions": None,
-                         "bypass_bytes": size}
-                    )
-                return None
+    if partitions != "auto":
+        return int(partitions)
+    if input_df is not None and estimate_bypassed(input_df):
+        est = p = None
+    else:
         est = int(est_rows_fn() or 0)
         p = tuned_shuffle_partitions(est, row_bytes=row_bytes, spark=spark)
-        if decision is not None:
-            decision.clear()
-            decision.update({"est_rows": est, "partitions": p})
-        return p if should_inject_width(p, spark) else None
-    return int(partitions)
+    LAST_DECISION.clear()
+    LAST_DECISION.update({"est_rows": est, "partitions": p})
+    return p if p is not None and should_inject_width(p, spark) else None
+
+
+# The sample-first estimate's key-sample rate and its two trust gates:
+# the scaled sample is believed only when it aggregates enough keys for
+# concentration (>= _EST_MIN_SAMPLED_KEYS) AND no single key carries
+# more than _EST_MAX_KEY_SHARE of the sampled mass (a dominant key
+# means the estimate rides on a handful of hot keys, where a 1-in-16
+# key sample is Poisson-noisy — exactly the replica-ladder shape).
+_EST_SAMPLE_MOD = 16
+_EST_MIN_SAMPLED_KEYS = 4096
+_EST_MAX_KEY_SHARE = 1.0 / 16.0
+# Plan-size gate under which the sampled pre-pass is SKIPPED and the
+# exact estimate runs directly: the sample exists to make the estimate
+# cheap on BIG inputs; on a small input the exact pass is itself one
+# cheap job, while the sample almost always fails the >= 4096-key
+# trust gate and falls back — costing TWO estimate jobs where one
+# gives the same number (measured in the r12 idle bench as
+# ext_dedup_minhash +13% wall, pure fixed overhead at fixture scale).
+# 256 MB keeps every regime where sampling measurably pays (the
+# 256x/1024x ladder rungs, multi-GB materialized indexes) on the
+# sampled path.
+_EST_SAMPLE_MIN_BYTES = 256 * 1024 * 1024
+
+
+def sample_first_estimate(
+    frame: DataFrame, key_cols: list[str], per_key
+) -> int:
+    """One-pass estimate of an exchange's row count, SAMPLE-FIRST (r12):
+    ``per_key(f)`` maps a frame to one row per key with that key's
+    contribution in column ``e``; the estimate is Σ e over ``frame``.
+
+    The sample keeps 1 key in 16 (``xxhash64(keys) % 16 == 0`` — the
+    filter prunes ~15/16 of the input BEFORE any exchange ``per_key``
+    adds) and scales its sum back up by 16. A width only needs the
+    right power-of-two bucket (nearest-pow2 rounding tolerates ±41%
+    before the bucket flips, and the measured curves are flat within a
+    2x band), so a concentrated sample is plenty — but concentration
+    must be CHECKED, not assumed: the sample is trusted only when it
+    covers >= 4096 keys and its largest single-key contribution is
+    <= 1/16 of the sampled mass. Otherwise (few keys, or a mass
+    dominated by a few hot keys — where a key sample is genuinely
+    noisy) the exact pass runs, which is cheap in exactly those
+    regimes. Inputs that plan-estimate at or under 256 MB skip the
+    sample and run the exact pass alone: one job instead of two."""
+
+    def agg(f):
+        return per_key(f).agg(
+            F.sum("e").alias("r"), F.count("*").alias("k"), F.max("e").alias("m")
+        ).collect()[0]
+
+    size = plan_size_bytes(frame)
+    if size is not None and size <= _EST_SAMPLE_MIN_BYTES:
+        return int(agg(frame)["r"] or 0)
+    sampled = agg(
+        frame.filter(F.pmod(F.xxhash64(*key_cols), F.lit(_EST_SAMPLE_MOD)) == 0)
+    )
+    if (
+        (sampled["k"] or 0) >= _EST_MIN_SAMPLED_KEYS
+        and (sampled["r"] or 0) > 0
+        and sampled["m"] <= sampled["r"] * _EST_MAX_KEY_SHARE
+    ):
+        return int(sampled["r"]) * _EST_SAMPLE_MOD
+    return int(agg(frame)["r"] or 0)
 
 
 def salted_join(

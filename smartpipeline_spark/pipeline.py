@@ -303,9 +303,6 @@ class Pipeline:
             + [f"`{ERRORS_COL}` {ERRORS_DDL}", f"`{TIMINGS_COL}` {TIMINGS_DDL}"]
         )
         out_cols = list(out_fields) + [ERRORS_COL, TIMINGS_COL]
-        # advisory concurrency hint: max over the segment, if any stage
-        # asked for explicit horizontal scaling wider than the current
-        # partitioning (reference concurrency=N -> partition count)
         # Parallelism for the Python segment: the reference scaled each
         # stage with concurrency=N threads/processes; here partitions
         # are the unit. Small-file scans often arrive with fewer

@@ -16,6 +16,8 @@ column explicitly.
 from __future__ import annotations
 
 import os
+import stat
+import tempfile
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,12 +42,38 @@ TABLE_NAMES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+_FALLBACK_ROOTS: dict[str, str] = {}
+
+
+def scratch_root(name: str) -> str:
+    """The private scratch directory of one query family:
+    ``<tempdir>/spark_graft_<name>_u<uid>``, created 0700. A fixed
+    world-shared name is the classic predictable-tmp hazard (another
+    local user pre-plants or clobbers the path and an oracled key
+    silently serves it), so a root that exists with the wrong owner or
+    with group/other permissions is REJECTED in favour of a fresh
+    private ``mkdtemp`` — one per rejected root and process."""
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_u{os.getuid()}")
+    if root in _FALLBACK_ROOTS:
+        return _FALLBACK_ROOTS[root]
+    try:
+        os.makedirs(root, mode=0o700, exist_ok=True)
+        st = os.stat(root)
+        if st.st_uid != os.getuid() or st.st_mode & (stat.S_IRWXG | stat.S_IRWXO):
+            raise OSError("scratch root not exclusively ours")
+    except OSError:
+        _FALLBACK_ROOTS[root] = tempfile.mkdtemp(prefix=f"spark_graft_{name}_")
+        return _FALLBACK_ROOTS[root]
+    return root
+
+
 def parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
 def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Load one test table; normalizes events.ts nanos -> timestamp_ntz.
+    """Load one test table; events.ts comes back as TimestampType
+    (:func:`normalize_event_ts`).
 
     SESSION-WIDE SIDE EFFECT (events only): sets
     ``spark.sql.legacy.parquet.nanosAsLong=true`` on the caller's
@@ -63,23 +91,29 @@ def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataF
         # still be able to read the table.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # nanos since epoch (legacy nanosAsLong) -> microsecond
-            # TimestampType. Integer `div` (not `/`): the nano values are
-            # ~1.7e18, beyond double's 2^53 exact range, so float division
-            # would corrupt microsecond precision. Truncation matches
-            # DuckDB's ns->us cast.
-            df = df.withColumn(
-                "ts", F.expr("timestamp_micros(CAST(ts div 1000 AS LONG))")
-            )
-        elif ts_type == "timestamp_ntz":
-            # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet reads as
-            # TIMESTAMP_NTZ; the engine standardizes on TimestampType
-            # (session tz pinned to UTC in session.py, so the cast is a
-            # pure type change — the stored micros are untouched).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_event_ts(df) if name == "events" else df
+
+
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """The events ``ts`` column as TimestampType, from either legacy
+    parquet encoding — for batch reads (:func:`table`) and for stream
+    reads of the same files alike."""
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # nanos since epoch (legacy nanosAsLong) -> microsecond
+        # TimestampType. Integer `div` (not `/`): the nano values are
+        # ~1.7e18, beyond double's 2^53 exact range, so float division
+        # would corrupt microsecond precision. Truncation matches
+        # DuckDB's ns->us cast.
+        return df.withColumn(
+            "ts", F.expr("timestamp_micros(CAST(ts div 1000 AS LONG))")
+        )
+    if ts_type == "timestamp_ntz":
+        # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet reads as
+        # TIMESTAMP_NTZ; the engine standardizes on TimestampType
+        # (session tz pinned to UTC in session.py, so the cast is a
+        # pure type change — the stored micros are untouched).
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

@@ -194,20 +194,23 @@ def test_anchored_minhash_equals_filtered_full_join(spark):
 
 
 def test_resolve_pair_partitions_contract(spark):
-    """None -> None; int -> int; "auto" -> None at/below floor (the
-    injection threshold is the tuned rule's 2 x parallelism floor)."""
-    from smartpipeline_spark.functions.dedup import (
-        _resolve_pair_partitions,
-        word_shingles,
-    )
+    """The pairing joins' width through the one contract
+    (scale.resolve_exchange_width): None -> None; int -> int; "auto" ->
+    None at/below floor (the injection threshold is the tuned rule's
+    2 x parallelism floor)."""
+    from smartpipeline_spark.functions.dedup import _pair_join_width, word_shingles
+    from smartpipeline_spark.operators import scale
 
     docs = spark.createDataFrame(
         [(i, f"one two three w{i}") for i in range(10)], ["doc_id", "text"]
     )
     idx = word_shingles(docs, 3)
-    assert _resolve_pair_partitions(None, idx, ["sh"]) is None
-    assert _resolve_pair_partitions(17, idx, ["sh"]) == 17
-    assert _resolve_pair_partitions("auto", idx, ["sh"]) is None
+    assert _pair_join_width(None, idx, ["sh"]) is None
+    assert _pair_join_width(17, idx, ["sh"]) == 17
+    assert _pair_join_width("auto", idx, ["sh"]) is None
+    # "auto" records the join's exact output cardinality: the shingle
+    # "one two three" pairs all 10 docs, the rest are singletons
+    assert scale.LAST_DECISION["est_rows"] == 45
 
 
 def test_auto_partitions_clamp_down_oversized_session(spark):
@@ -215,10 +218,7 @@ def test_auto_partitions_clamp_down_oversized_session(spark):
     session width (> 8x the tuned target) "auto" must inject the
     tuned width anyway (measured +49% wall at 32x over-width), while
     a session within the 8x band stays uninjected."""
-    from smartpipeline_spark.functions.dedup import (
-        _resolve_pair_partitions,
-        word_shingles,
-    )
+    from smartpipeline_spark.functions.dedup import _pair_join_width, word_shingles
 
     docs = spark.createDataFrame(
         [(i, f"one two three w{i}") for i in range(10)], ["doc_id", "text"]
@@ -228,9 +228,9 @@ def test_auto_partitions_clamp_down_oversized_session(spark):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", str(8 * floor + 1))
-        assert _resolve_pair_partitions("auto", idx, ["sh"]) == floor
+        assert _pair_join_width("auto", idx, ["sh"]) == floor
         spark.conf.set("spark.sql.shuffle.partitions", str(8 * floor))
-        assert _resolve_pair_partitions("auto", idx, ["sh"]) is None
+        assert _pair_join_width("auto", idx, ["sh"]) is None
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 

@@ -1,5 +1,6 @@
-"""The build-once fixture-index cache (text._fixture_index_for), without
-a JVM: a fake build callable stands in for the Spark index writers and
+"""The build-once fixture-index cache (text._fixture_index_for) and the
+private scratch root under it (sources.scratch_root), without a JVM:
+a fake build callable stands in for the Spark index writers and
 ``tempfile.tempdir`` points the cache root into the test's tmp dir."""
 
 import os
@@ -8,6 +9,7 @@ import tempfile
 
 import pytest
 
+from smartpipeline_spark import sources
 from smartpipeline_spark.functions import text
 
 
@@ -19,6 +21,7 @@ def cache(tmp_path, monkeypatch):
     tmp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
     monkeypatch.setattr(text, "_FIXTURE_IDX_CACHE", {})
+    monkeypatch.setattr(sources, "_FALLBACK_ROOTS", {})
     src = tmp_path / "docs.parquet"
     src.write_bytes(b"fixture")
     built = []
@@ -72,3 +75,12 @@ def test_shared_cache_root_falls_back_to_private_mkdtemp(cache):
     assert os.path.basename(private).startswith("spark_graft_t_idx_")
     assert stat.S_IMODE(os.stat(private).st_mode) == 0o700
     assert os.listdir(root) == []
+    # the helper behind it: the same rejected root maps to the same
+    # private directory for the rest of the process (no mkdtemp per
+    # call), and a fresh name gets its own per-user 0700 root
+    assert sources.scratch_root("t_idx") == private
+    fresh = sources.scratch_root("other")
+    assert os.path.basename(fresh) == f"spark_graft_other_u{os.getuid()}"
+    assert os.path.dirname(fresh) == str(root.parent)
+    assert stat.S_IMODE(os.stat(fresh).st_mode) == 0o700
+    assert sources.scratch_root("other") == fresh

@@ -883,10 +883,6 @@ def test_tuned_shuffle_partitions_reproduces_idle_host_bests():
     # capped-minhash 256x: small working set (zero spill at any width,
     # wall flat 54-64s) -> the floor, not a scaled-up count
     assert tuned_shuffle_partitions(20_000_000, floor=64) == 64
-    # byte-direct form agrees with rows x row_bytes
-    assert tuned_shuffle_partitions(
-        working_set_bytes=328_869_744 * 50, floor=64
-    ) == 128
     # clamps: ceiling binds, floor binds
     assert tuned_shuffle_partitions(10**13, floor=64, ceiling=2048) == 2048
     assert tuned_shuffle_partitions(1, floor=64) == 64
@@ -967,6 +963,7 @@ def test_resolve_exchange_width_contract(spark):
     corpus-wide exchange (r11 verdict #2): int and None pass through
     WITHOUT running the estimate; 'auto' runs the one-pass estimate,
     records the decision, and injects only above the pressure floor."""
+    from smartpipeline_spark.operators import scale
     from smartpipeline_spark.operators.scale import (
         resolve_exchange_width,
         should_inject_width,
@@ -982,11 +979,10 @@ def test_resolve_exchange_width_contract(spark):
     assert resolve_exchange_width(17, spark, big_est) == 17
     assert calls == [], "estimate must not run for int/None"
 
-    d = {}
-    p = resolve_exchange_width("auto", spark, big_est, row_bytes=50, decision=d)
+    p = resolve_exchange_width("auto", spark, big_est, row_bytes=50)
     floor = 2 * spark.sparkContext.defaultParallelism
     assert p is not None and p > floor
-    assert d == {"est_rows": 10**12, "partitions": p}
+    assert scale.LAST_DECISION == {"est_rows": 10**12, "partitions": p}
     # tiny estimate under a sane session width -> skip
     assert resolve_exchange_width("auto", spark, lambda: 100) is None
     # the 8x-over-width session clamp
@@ -1083,20 +1079,25 @@ def test_pair_join_width_sample_first_with_trust_gates(spark, monkeypatch):
     small indexes fall back to the exact pass — where exactness is
     cheap and sampling is genuinely noisy. The gates are exercised with
     the plan-size skip disabled (these in-memory frames plan-estimate
-    tiny); the skip itself is pinned separately below."""
-    from smartpipeline_spark.functions import dedup
+    tiny); the skip itself is pinned separately below. The cases call
+    the pairing joins' estimator directly and tell a trusted sample
+    (one job) from the exact fallback (sample job + exact job) by the
+    Spark jobs it ran."""
+    from conftest import count_jobs
 
-    monkeypatch.setattr(dedup, "_EST_SAMPLE_MIN_BYTES", 0)
+    from smartpipeline_spark.functions import dedup
+    from smartpipeline_spark.operators import scale
+
+    monkeypatch.setattr(scale, "_EST_SAMPLE_MIN_BYTES", 0)
 
     # 1) concentrated: 100k keys x 2 rows, per-key C(2,2)=1 -> exact
     # sum = 100k; the sample must be trusted and land within 10%.
     wide = spark.range(200_000).select(
         (F.col("id") % 100_000).cast("string").alias("sh")
     )
-    dedup._pair_join_width(wide, ["sh"])
-    d = dict(dedup.LAST_AUTO_DECISION)
-    assert d["est_mode"] == "sampled", d
-    assert abs(d["est_join_rows"] - 100_000) <= 10_000, d
+    est, jobs = count_jobs(spark, lambda: dedup._pair_estimate(wide, ["sh"]))
+    assert jobs == 1, (est, jobs)
+    assert abs(est - 100_000) <= 10_000, (est, jobs)
 
     # 2) dominance: 100k singleton keys + ONE hot key carrying all the
     # mass (C(1000,2) = 499500). Whether or not the hot key lands in
@@ -1104,37 +1105,42 @@ def test_pair_join_width_sample_first_with_trust_gates(spark, monkeypatch):
     hot = spark.range(100_000).select(
         F.concat(F.lit("k"), F.col("id")).alias("sh")
     ).union(spark.range(1_000).select(F.lit("HOT").alias("sh")))
-    dedup._pair_join_width(hot, ["sh"])
-    d = dict(dedup.LAST_AUTO_DECISION)
-    assert d["est_mode"] == "exact_fallback", d
-    assert d["est_join_rows"] == 499_500, d
+    est, jobs = count_jobs(spark, lambda: dedup._pair_estimate(hot, ["sh"]))
+    assert jobs == 2, (est, jobs)
+    assert est == 499_500, (est, jobs)
 
     # 3) small index (< 4096 keys): exact, bit-for-bit.
     small = spark.range(30).select((F.col("id") % 10).cast("string").alias("sh"))
-    dedup._pair_join_width(small, ["sh"])
-    d = dict(dedup.LAST_AUTO_DECISION)
-    assert d["est_mode"] == "exact_fallback", d
-    assert d["est_join_rows"] == 10 * 3, d
+    est, jobs = count_jobs(spark, lambda: dedup._pair_estimate(small, ["sh"]))
+    assert jobs == 2, (est, jobs)
+    assert est == 10 * 3, (est, jobs)
 
     # 4) anchored form keeps the same contract (exact at small scale:
     # sum_k na*nb over the anchor predicate).
-    dedup._pair_join_width(small, ["sh"], anchor=F.col("sh") == "0")
-    d = dict(dedup.LAST_AUTO_DECISION)
-    assert d["est_mode"] == "exact_fallback", d
-    assert d["est_join_rows"] == 3 * 3, d
+    est, jobs = count_jobs(
+        spark,
+        lambda: dedup._pair_estimate(small, ["sh"], anchor=F.col("sh") == "0"),
+    )
+    assert jobs == 2, (est, jobs)
+    assert est == 3 * 3, (est, jobs)
 
 
 def test_pair_join_width_skips_sample_below_plan_size_gate(spark):
     """r12 idle-bench fix: on an index that plan-estimates under
-    _EST_SAMPLE_MIN_BYTES the sampled pre-pass is skipped outright
-    (est_mode == "exact", not "exact_fallback") — one estimate job,
-    the r11 cost — while the estimate itself stays bit-exact."""
+    _EST_SAMPLE_MIN_BYTES the sampled pre-pass is skipped outright —
+    one estimate job, the r11 cost, even where the sample would fail a
+    trust gate — while the estimate itself stays bit-exact."""
+    from conftest import count_jobs
+
     from smartpipeline_spark.functions import dedup
 
     wide = spark.range(200_000).select(
         (F.col("id") % 100_000).cast("string").alias("sh")
     )
-    dedup._pair_join_width(wide, ["sh"])
-    d = dict(dedup.LAST_AUTO_DECISION)
-    assert d["est_mode"] == "exact", d
-    assert d["est_join_rows"] == 100_000, d
+    est, jobs = count_jobs(spark, lambda: dedup._pair_estimate(wide, ["sh"]))
+    assert jobs == 1, (est, jobs)
+    assert est == 100_000, (est, jobs)
+    small = spark.range(30).select((F.col("id") % 10).cast("string").alias("sh"))
+    est, jobs = count_jobs(spark, lambda: dedup._pair_estimate(small, ["sh"]))
+    assert jobs == 1, (est, jobs)
+    assert est == 10 * 3, (est, jobs)
