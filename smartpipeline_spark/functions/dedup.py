@@ -125,10 +125,7 @@ def _heap_aware_level(df: DataFrame):
     try:
         sc = df.sparkSession.sparkContext
         heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        try:
-            frac = float(df.sparkSession.conf.get("spark.memory.fraction"))
-        except Exception:
-            frac = 0.6
+        frac = float(df.sparkSession.conf.get("spark.memory.fraction", "0.6"))
         pool = (heap - 300 * 1024 * 1024) * frac
     except Exception:
         return StorageLevel.MEMORY_AND_DISK
@@ -453,15 +450,17 @@ def minhash_signatures_from_sets(sets_: DataFrame) -> DataFrame:
     # form (16 separate array_min(transform(...)) columns) inlines the
     # shingle+hash subtree 16x and costs ~10s of driver-side query
     # compilation alone on first run.
-    ab = F.array(
-        *[
-            F.struct(
-                F.lit(_A[i]).cast("long").alias("a"), F.lit(_B[i]).cast("long").alias("b")
-            )
-            for i in range(_N_HASHES)
-        ]
+    # The literals are one SQL expression each: assembling them Column
+    # by Column costs hundreds of py4j round trips per build (same plan).
+    ab = F.expr(
+        "array("
+        + ", ".join(
+            f"named_struct('a', CAST({a} AS BIGINT), 'b', CAST({b} AS BIGINT))"
+            for a, b in zip(_A, _B)
+        )
+        + ")"
     )
-    init = F.array_repeat(F.lit(_P + 1).cast("long"), _N_HASHES)
+    init = F.expr(f"array_repeat(CAST({_P + 1} AS BIGINT), {_N_HASHES})")
     # 32-bit base from the first md5 half (NOT xxhash64): engine-
     # portable, which lets the ext_dedup_minhash key carry an exact
     # DuckDB oracle — same md5-determinism contract as every sampler
@@ -476,8 +475,8 @@ def minhash_signatures_from_sets(sets_: DataFrame) -> DataFrame:
         ),
     )
     sets_ = sets_.select("doc_id", sig_arr.alias("sig"))
-    return sets_.select(
-        "doc_id", *[F.element_at("sig", i + 1).alias(f"h{i}") for i in range(_N_HASHES)]
+    return sets_.selectExpr(
+        "doc_id", *[f"element_at(sig, {i + 1}) AS h{i}" for i in range(_N_HASHES)]
     )
 
 

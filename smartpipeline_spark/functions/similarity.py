@@ -20,6 +20,7 @@ over Arrow would amortize better; at dim<=1024 the built-ins win.
 
 # NOTE: no `from __future__ import annotations` here — pandas_udf must
 # evaluate the pd.Series type hints at decoration time
+import os
 import random
 
 import numpy as np
@@ -52,7 +53,7 @@ _PLANES = [
 ]
 
 
-_EMB_WIDTH: dict[str, int] = {}  # sf_dir -> repartition width (corpus is static)
+_EMB_WIDTH: dict[tuple, int] = {}  # embeddings file signature -> repartition width
 
 
 def _emb(spark, sf_dir) -> DataFrame:
@@ -65,11 +66,15 @@ def _emb(spark, sf_dir) -> DataFrame:
 
     The sizing ``count()`` is metadata-only but still schedules a job
     per call; at 100 TB with hundreds of query batches that is pure
-    driver traffic, so the width is computed ONCE per corpus path and
-    cached (the corpus is a static snapshot — an appended corpus
-    arrives under a new path/partition, not by mutating this one)."""
+    driver traffic, so the width is computed ONCE per corpus file and
+    cached under its :func:`~smartpipeline_spark.sources.file_signature`
+    (a file rewritten in place is sized again). A path with no local
+    signature (a directory, a remote store) is taken as a static
+    snapshot and keyed by path alone."""
     raw = sources.table(spark, "embeddings", sf_dir)
-    width = _EMB_WIDTH.get(sf_dir)
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    key = sources.file_signature(path) or (path,)
+    width = _EMB_WIDTH.get(key)
     if width is None:
         import math
 
@@ -84,7 +89,7 @@ def _emb(spark, sf_dir) -> DataFrame:
             max(1, min(spark.sparkContext.defaultParallelism, rows // 500)),
             math.ceil(rows / 50_000),
         )
-        _EMB_WIDTH[sf_dir] = width
+        _EMB_WIDTH[key] = width
     return raw.repartition(width).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )

@@ -63,7 +63,7 @@ def _event_stream(spark, sf_dir, stage: str):
     batch reader's schema (nanos conf set first) and the legacy ts
     encodings normalized exactly as the batch table does."""
     sources.table(spark, "events", sf_dir)  # conf side effect on purpose
-    batch_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    batch_schema = sources.parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     return sources.normalize_event_ts(
         spark.readStream.schema(batch_schema).parquet(stage)
     )

@@ -897,8 +897,10 @@ _FIXTURE_IDX_CACHE: dict[tuple[str, str], str] = {}
 def _fixture_index_for(kind: str, src: str, build, valid) -> str:
     """Build-once cache of an index saved from one fixture file.
 
-    Keyed by ``src``'s identity (path + size + mtime), so a testdata
-    regeneration rebuilds instead of serving a stale layout, and
+    Keyed by ``src``'s :func:`~smartpipeline_spark.sources.file_signature`
+    (path, inode, size, mtime; the path alone when ``src`` is not a
+    regular local file), so a testdata regeneration rebuilds instead of
+    serving a stale layout, and
     CONTENT-CHECKED on reuse: ``valid(path)`` (an exception counts as
     False) must accept a memoized or on-disk copy, so a poisoned, torn
     or stale layout rebuilds instead of being served silently.
@@ -917,8 +919,8 @@ def _fixture_index_for(kind: str, src: str, build, valid) -> str:
         except Exception:
             return False
 
-    st = os.stat(src)
-    tag = hashlib.md5(f"{src}:{st.st_size}:{st.st_mtime_ns}".encode()).hexdigest()[:16]
+    sig = sources.file_signature(src) or (src,)
+    tag = hashlib.md5(repr(sig).encode()).hexdigest()[:16]
     cached = _FIXTURE_IDX_CACHE.get((kind, tag))
     if cached and _ok(cached):
         return cached

@@ -49,6 +49,19 @@ def test_memo_hit_builds_nothing(cache):
     assert len(built) == 1
 
 
+def test_rewritten_source_rebuilds_once(cache, tmp_path):
+    index_for, built, root = cache
+    first = index_for()
+    src = tmp_path / "docs.parquet"
+    mtime = os.stat(src).st_mtime_ns
+    src.write_bytes(b"regenerated")
+    os.utime(src, ns=(mtime + 10**9, mtime + 10**9))
+    second = index_for()
+    assert second != first and os.path.dirname(second) == str(root)
+    assert index_for() == second
+    assert len(built) == 2
+
+
 def test_garbage_at_tag_path_publishes_under_fresh_name(cache, monkeypatch):
     index_for, built, root = cache
     tag_path = index_for()

@@ -1,9 +1,115 @@
 """Source/scan surface (reference helpers.py + tests/test_helpers.py)."""
 
 import os
+import shutil
+
+import pytest
 
 from smartpipeline_spark import sources
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, count_jobs
+
+
+@pytest.fixture()
+def schema_cache(monkeypatch):
+    """An empty remembered-schema cache for one test."""
+    monkeypatch.setattr(sources, "_SCHEMAS", {})
+    return sources._SCHEMAS
+
+
+def _nation_dir(tmp_path):
+    shutil.copy(os.path.join(SF_SMOKE, "nation.parquet"), tmp_path / "nation.parquet")
+    return str(tmp_path)
+
+
+def test_unchanged_file_reuses_its_schema(spark, tmp_path, schema_cache):
+    sf = _nation_dir(tmp_path)
+    first, jobs = count_jobs(spark, lambda: sources.table(spark, "nation", sf))
+    assert jobs >= 1  # footer inference
+    again, jobs = count_jobs(spark, lambda: sources.table(spark, "nation", sf))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_rewritten_file_infers_again(spark, tmp_path, schema_cache):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert sources.parquet(spark, str(path)).columns == ["a"]
+    mtime = os.stat(path).st_mtime_ns
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    df, jobs = count_jobs(spark, lambda: sources.parquet(spark, str(path)))
+    assert jobs >= 1
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_changed_converter_conf_infers_again(spark, tmp_path, schema_cache):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "bin.parquet")
+    pq.write_table(pa.table({"v": pa.array([b"ab"], pa.binary())}), path)
+    assert dict(sources.parquet(spark, path).dtypes)["v"] == "binary"
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        df, jobs = count_jobs(spark, lambda: sources.parquet(spark, path))
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert jobs >= 1
+    assert dict(df.dtypes)["v"] == "string"
+
+
+def test_self_join_of_cached_reads(spark, tmp_path, schema_cache):
+    from pyspark.sql import functions as F
+
+    sf = _nation_dir(tmp_path)
+    path = os.path.join(sf, "nation.parquet")
+
+    def pairs(a, b):
+        a, b = a.alias("a"), b.alias("b")
+        return sorted(
+            a.join(b, F.col("a.n_regionkey") == F.col("b.n_regionkey"))
+            .select(F.col("a.n_name"), F.col("b.n_name"))
+            .collect()
+        )
+
+    want = pairs(spark.read.parquet(path), spark.read.parquet(path))
+    sources.table(spark, "nation", sf)  # remember the schema
+    got = pairs(sources.table(spark, "nation", sf), sources.table(spark, "nation", sf))
+    assert got == want and len(got) > 25
+
+
+def test_cached_events_read_keeps_timestamp(spark, schema_cache):
+    sources.table(spark, "events", SF_SMOKE)
+    ev, jobs = count_jobs(spark, lambda: sources.table(spark, "events", SF_SMOKE))
+    assert jobs == 0
+    assert dict(ev.dtypes)["ts"] == "timestamp"
+
+
+def test_missing_path_raises_like_spark(spark, tmp_path, schema_cache):
+    missing = str(tmp_path / "nope.parquet")
+    with pytest.raises(Exception) as bare:
+        spark.read.parquet(missing)
+    with pytest.raises(Exception) as ours:
+        sources.parquet(spark, missing)
+    assert type(ours.value) is type(bare.value)
+    assert not schema_cache
+
+
+def test_file_signature_is_for_regular_files_only(tmp_path):
+    f = tmp_path / "f"
+    f.write_bytes(b"1")
+    sig = sources.file_signature(str(f))
+    assert sig[0] == str(f) and sig[2] == 1
+    f.write_bytes(b"22")
+    assert sources.file_signature(str(f)) != sig
+    assert sources.file_signature(str(tmp_path)) is None
+    assert sources.file_signature(str(tmp_path / "missing")) is None
+    assert sources.file_signature(str(tmp_path / "*")) is None
 
 
 def test_local_files_postfix_and_dotfile_skip(spark, tmp_path):
