@@ -1,9 +1,9 @@
 """Shared plan-fingerprint primitive.
 
-Two consumers: scripts/explain_plans.py prints one fingerprint line per
-registered key, and tests/test_scale.py compares the fingerprints and
-operator counts of two plans to pin a plan shape. Keep the format here
-so both read it the same way.
+Two consumers: ``scripts/check_oracles.py --plans`` prints one
+fingerprint line per registered key, and tests/test_scale.py compares
+the fingerprints and operator counts of two plans to pin a plan shape.
+Keep the format here so both read it the same way.
 """
 
 from __future__ import annotations
@@ -37,7 +37,7 @@ def fingerprint_of_plan(p: str) -> str:
     pushed = re.findall(r"PushedFilters: \[(.*?)\]", p)
     pushed_n = sum(1 for x in pushed if x.strip())
     nlj_note = f" NESTEDLOOP={n_nlj}" if n_nlj else ""
-    # fixed-width counts keep explain_plans.py's column aligned
+    # fixed-width counts keep check_oracles.py's --plans column aligned
     return (
         f"exch={n_exchange:2d} (reused={n_reused}) bhj={n_bhj} "
         f"smj={n_smj} codegen={n_wsc:2d} "

@@ -329,8 +329,9 @@ def ext_stream_upsert(spark, sf_dir) -> DataFrame:
     # sweep/bench call, while a reused dir must not keep a stale
     # checkpoint — a checkpoint that believes the files are already
     # processed would drain zero batches and attest an empty table).
-    # The pid suffix keeps concurrent sessions at the same sf (sweep +
-    # driver_sim) from rmtree-ing each other's in-flight stream state.
+    # The pid suffix keeps concurrent sessions at the same sf (say, an
+    # --oracle and a --driver run of scripts/check_oracles.py) from
+    # rmtree-ing each other's in-flight stream state.
     root = sources.scratch_root("stream_upsert")
     base = os.path.join(
         root, f"{sf_dir.strip('/').replace('/', '_')}_{os.getpid()}"

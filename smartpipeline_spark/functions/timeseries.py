@@ -17,7 +17,7 @@ Scale shape:
   fixed-width id.
 * ``ext_decay_trend`` anchors at the GLOBAL max timestamp — a 1-row
   aggregate attached via broadcast cross-join (the declared
-  scalar-attach pattern, see ``scripts/explain_plans.py``), then a
+  scalar-attach pattern, see ``scripts/check_oracles.py --plans``), then a
   plain partial-aggregating ``groupBy(event_type)``.
 
 Numeric contract with the DuckDB oracle: the age is computed on exact

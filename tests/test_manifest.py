@@ -166,7 +166,7 @@ def test_html_oracle_corpus_assumptions_hold(sf):
 def test_fp_gated_oracles_listed_in_audit():
     """Census for the pin-liveness gate (r10 verdict #5): every oracle
     whose pins are FINGERPRINT-gated (empty result on a corpus
-    change) must be in audit_oracle_types.PINNED_FP_KEYS, detected
+    change) must be in check_oracles.PINNED_FP_KEYS, detected
     mechanically from the committed SQL corpus — a new pinned key
     can't silently skip the liveness gate, and a graduated key can't
     linger in the list."""
@@ -176,8 +176,8 @@ def test_fp_gated_oracles_listed_in_audit():
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "audit_oracle_types",
-        os.path.join(repo, "scripts", "audit_oracle_types.py"),
+        "check_oracles",
+        os.path.join(repo, "scripts", "check_oracles.py"),
     )
     audit = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(audit)
@@ -211,8 +211,8 @@ def test_pinned_fingerprint_liveness_trips_on_perturbed_fixture(tmp_path):
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     spec = importlib.util.spec_from_file_location(
-        "audit_oracle_types",
-        os.path.join(repo, "scripts", "audit_oracle_types.py"),
+        "check_oracles",
+        os.path.join(repo, "scripts", "check_oracles.py"),
     )
     audit = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(audit)

@@ -315,7 +315,7 @@ def test_no_undeclared_nested_loop_joins_in_relational_inventory(spark, queries)
     This is the plan pathology that passes every value check on
     fixtures and becomes an O(N*M) scan at cluster scale; the per-key
     tests above pin specific shapes, this pins the inventory-wide
-    invariant (scripts/explain_plans.py --check is the full-registry
+    invariant (scripts/check_oracles.py --plans is the full-registry
     twin covering the eager ext_* keys too)."""
     for key, fn in sorted(queries.items()):
         if not key.startswith("q"):
