@@ -12,7 +12,11 @@ driver's stricter pandas comparison, on a bare session of its own (in a
 child process when combined with other checks); ``--plans`` fails on a
 nested-loop join outside ``NESTED_LOOP_ALLOWED``; ``--types`` (DuckDB
 only) fails on oracle output types the driver mishandles and on stale
-fingerprint pins. Exit 1 on any FAIL or ERROR in any check.
+fingerprint pins. Each key is built and checked inside one
+``materialize.scope``; every line ends ``left N``, the storage entries
+(persistent RDDs, cached plans) the session holds after the scope and
+did not before, and a key with N > 0 fails. Exit 1 on any FAIL or
+ERROR in any check.
 
 The runner changes into the repository root before any session starts:
 Python workers run ``python -m pyspark.daemon``, which puts the driver's
@@ -260,35 +264,62 @@ def check_types(oracles, keys, sf_dir) -> list[str]:
 SESSION_CHECKS = {"plans": _plan_check, "oracle": _oracle_check, "driver": _driver_check}
 
 
+def held(spark) -> frozenset:
+    """What the session holds in storage: its persistent RDD ids and
+    its CacheManager's cached plans (by JVM identity)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    plans = field.get(cm)
+    ident = spark._jvm.java.lang.System.identityHashCode
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().keySet()
+    return frozenset(
+        [("plan", ident(plans.apply(i))) for i in range(plans.size())]
+        + [("rdd", int(i)) for i in rdds]
+    )
+
+
 def sweep(spark, sf_dir, queries, oracles, checks, trace) -> dict[str, list[str]]:
     """Build each of ``queries`` once and run each of ``checks`` on it,
-    in order (plans first: the plan is read before the query runs); the
-    failing keys per check."""
+    in order (plans first: the plan is read before the query runs), all
+    inside one ``materialize.scope``; the failing keys per check. A key
+    also fails when the session holds more after its scope than before
+    it (``left N``)."""
+    from smartpipeline_spark.materialize import scope
+
     failed: dict[str, list[str]] = {name: [] for name in checks}
     for key, fn in queries.items():
         t0 = time.time()
-        df = error = None
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as e:
-            error = e
-        for name in checks:
+        before = held(spark)
+        lines = []
+        with scope():
+            df = error = None
             try:
-                if error is not None:
-                    raise error
-                if name != "plans" and key not in oracles:
-                    # ROWS_ONLY_ATTESTATIONS keys: a pytest attests them
-                    ok, detail = True, f"rows-only {df.count()}"
-                else:
-                    ok, detail = SESSION_CHECKS[name](key, df, oracles.get(key), sf_dir)
-                status = "PASS" if ok else "FAIL"
+                df = fn(spark, sf_dir)
             except Exception as e:
-                ok, status, detail = False, "ERROR", f"{type(e).__name__}: {e}"
-                if trace:
-                    traceback.print_exc()
+                error = e
+            for name in checks:
+                try:
+                    if error is not None:
+                        raise error
+                    if name != "plans" and key not in oracles:
+                        # ROWS_ONLY_ATTESTATIONS keys: a pytest attests them
+                        ok, detail = True, f"rows-only {df.count()}"
+                    else:
+                        ok, detail = SESSION_CHECKS[name](key, df, oracles.get(key), sf_dir)
+                    status = "PASS" if ok else "FAIL"
+                except Exception as e:
+                    ok, status, detail = False, "ERROR", f"{type(e).__name__}: {e}"
+                    if trace:
+                        traceback.print_exc()
+                lines.append((name, ok, status, time.time() - t0, detail))
+        left = len(held(spark) - before)
+        for name, ok, status, secs, detail in lines:
+            if ok and left:
+                ok, status = False, "FAIL"
             if not ok:
                 failed[name].append(key)
-            print(f"{status:5s} {name:6s} {key:32s} {time.time()-t0:6.1f}s  {detail}", flush=True)
+            print(f"{status:5s} {name:6s} {key:32s} {secs:6.1f}s  {detail}  left {left}", flush=True)
     for name, bad in failed.items():
         print(f"{name}: {len(queries) - len(bad)}/{len(queries)} PASS", flush=True)
     return failed

@@ -104,9 +104,9 @@ def main() -> None:
         # +73% wall; DISK_ONLY above ~80% of the unified pool is the
         # fix, and the rung validates it through the same helper the
         # operators use)
-        from smartpipeline_spark.functions.dedup import persist_intermediate
+        from smartpipeline_spark import materialize
 
-        docs = persist_intermediate(docs.repartition(32))
+        docs = materialize.persist(docs.repartition(32))
         counts["docs_storage_level"] = str(docs.storageLevel)
         n_docs = docs.count()
 
@@ -196,8 +196,8 @@ def main() -> None:
             jaccard_pairs,
             minhash_candidates,
             minhash_signatures,
-            release_caches,
         )
+        from smartpipeline_spark.materialize import scope
         from smartpipeline_spark.operators.scale import LAST_DECISION
 
         anchor = F.col("doc_id") % n < 2
@@ -225,7 +225,10 @@ def main() -> None:
             )
 
         def capped_jaccard():
-            try:
+            # the library persists its index frames internally; the
+            # scope releases them so the next rung starts cold
+            # (per-process measurement protocol: probes run solo)
+            with scope():
                 out = jaccard_pairs(
                     docs,
                     threshold=0.8,
@@ -233,25 +236,18 @@ def main() -> None:
                     anchor=anchor,
                     partitions="auto",
                 ).count()
-                _record("jaccard_pairs_capped2")
-                return out
-            finally:
-                # the library persists its index frames internally and
-                # tracks them; release so the next rung starts cold
-                # (per-process measurement protocol: probes run solo)
-                release_caches()
+            _record("jaccard_pairs_capped2")
+            return out
 
         def capped_minhash():
-            try:
+            with scope():
                 out = minhash_candidates(
                     minhash_signatures(docs),
                     anchor=anchor,
                     partitions="auto",
                 ).count()
-                _record("minhash_candidates_capped2")
-                return out
-            finally:
-                release_caches()
+            _record("minhash_candidates_capped2")
+            return out
 
         timed("jaccard_pairs_capped2", capped_jaccard)
         timed("minhash_candidates_capped2", capped_minhash)
@@ -459,10 +455,10 @@ def main() -> None:
         p_big = p.select(rep, "*").withColumn(
             "p_partkey", F.col("p_partkey") * n + F.col("r")
         ).drop("r")
-        from smartpipeline_spark.functions.dedup import persist_intermediate
+        from smartpipeline_spark import materialize
 
-        li_f = persist_intermediate(li_f)
-        p_big = persist_intermediate(p_big)
+        li_f = materialize.persist(li_f)
+        p_big = materialize.persist(p_big)
         counts["bigdim_lineitem_rows"] = li_f.count()
         counts["bigdim_part_rows"] = p_big.count()
 

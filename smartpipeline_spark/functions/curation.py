@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from smartpipeline_spark import sources
+from smartpipeline_spark import materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -185,8 +185,6 @@ def dedup_chunks(
     map-side before they ever concentrate; the join-back skew is the
     kind AQE skew-join does split.
     """
-    from pyspark import StorageLevel
-
     n = chunk_words
     w = df.select(
         F.col(id_col).alias("doc_id"),
@@ -201,12 +199,12 @@ def dedup_chunks(
     c = w.select(
         "doc_id", F.posexplode_outer(chunks).alias("pos", "chunk")
     ).filter(F.col("chunk").isNotNull())
-    hs = c.select(
-        "doc_id",
-        "pos",
-        F.md5("chunk").alias("h"),
-        (F.col("doc_id") * 1000000 + F.col("pos")).alias("k"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    hs = materialize.persist(
+        c.select(
+            "doc_id", "pos", F.md5("chunk").alias("h"),
+            (F.col("doc_id") * 1000000 + F.col("pos")).alias("k"),
+        )
+    )
     winners = hs.groupBy("h").agg(F.min("k").alias("k_min"))
     kept = F.col("k") == F.col("k_min")
     return (
@@ -323,8 +321,6 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     whenever it measures small. V rides in-plan as a 1-row broadcast
     crossJoin (no driver-side count job, same pattern as TF-IDF).
     """
-    from pyspark import StorageLevel
-
     w = df.select(
         F.col(id_col).alias("doc_id"),
         F.split(F.lower(F.trim(F.col(text_col))), r"\s+").alias("w"),
@@ -336,11 +332,10 @@ def bigram_lm_scores(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     # explode_outer + isNotNull: the inferred size(pairs)>0 filter
     # would re-run the bigram transform twice more per doc pre-explode
     # (see dedup.word_shingles); struct elements are never null
-    words = (
+    words = materialize.persist(
         w.select("doc_id", F.explode_outer(pairs).alias("bg"))
         .filter(F.col("bg").isNotNull())
         .select("doc_id", "bg.w1", "bg.w2")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     uni = words.groupBy("w1").agg(F.count("*").alias("cu"))
     bi = words.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
@@ -604,12 +599,11 @@ def dsir_select(
     filter) and is deliberately NOT materialized: scoring is one
     map-side projection + a dense-numpy Arrow pass, so recomputing it
     for the gate aggregate is two cheap scans of two narrow columns —
-    strictly better than the eager ``localCheckpoint`` this previously
-    used, which forced a synchronous full write+read of the
-    corpus-sized frame and dropped an optimizer barrier in front of
-    the filter (the round-5 +39% bench regression). No persist either:
-    the returned lazy frame keeps reading ``scored``, so no unpersist
-    could ever run and a CacheManager entry would leak per call."""
+    strictly better than the eager checkpoint this previously used,
+    which forced a synchronous full write+read of the corpus-sized
+    frame and dropped an optimizer barrier in front of the filter (the
+    round-5 +39% bench regression). No persist either: it would store
+    the corpus-sized frame to save a recompute that costs less."""
     lr = dsir_logratio(raw, target, m)
     scored = dsir_scores(raw, lr, m)
     th = scored.agg(F.percentile("score", 1.0 - frac).alias("gate"))
@@ -767,13 +761,8 @@ def contamination_report_bloom(
     # count, bitmap build, exact-verify join) — materialize it so the
     # benchmark side is shingled once instead of re-scanned per use
     # (small side by precondition, so the footprint is bounded).
-    # localCheckpoint, not persist: the returned aggregation keeps
-    # reading it, so an unpersist can never run and a persist would
-    # leak a CacheManager entry per invocation.
-    bench_sh = (
-        word_shingles(benchmark, n)
-        .select(F.col("doc_id").alias("bench_id"), "sh")
-        .localCheckpoint(eager=True)
+    bench_sh = materialize.checkpoint(
+        word_shingles(benchmark, n).select(F.col("doc_id").alias("bench_id"), "sh")
     )
     # sizing count: benchmark shingle ROWS (cheap count over the
     # checkpointed blocks — no distinct exchange; a whole extra job at
@@ -1766,10 +1755,9 @@ def train_text_classifier(
     full-batch gradient descent; returns {"weights": {bucket: w},
     "m": m} (bucket -1 is the bias). ``iters`` sequential jobs, each
     collecting <= m+1 gradient rows (see scale note above)."""
-    feats = docs.select(
-        F.col(label_col).cast("double").alias("y"),
-        _qc_buckets_expr(m).alias("bs"),
-    ).localCheckpoint(eager=True)
+    feats = materialize.checkpoint(
+        docs.select(F.col(label_col).cast("double").alias("y"), _qc_buckets_expr(m).alias("bs"))
+    )
     n_docs = feats.count()
     if n_docs == 0:
         return {"weights": {}, "m": m}
@@ -1926,9 +1914,9 @@ def train_langid_classifier(
         r[0] for r in docs.select(lang_col).distinct().collect()
     )
     L = len(langs)
-    feats = docs.select(
-        F.col(lang_col).alias("_y"), _qc_buckets_expr(m).alias("bs")
-    ).localCheckpoint(eager=True)
+    feats = materialize.checkpoint(
+        docs.select(F.col(lang_col).alias("_y"), _qc_buckets_expr(m).alias("bs"))
+    )
     n_docs = feats.count()
     if n_docs == 0 or L == 0:
         return {"langs": langs, "weights": [], "m": m}
@@ -2394,9 +2382,9 @@ def unimax_mixture(
         <= F.col("B"),
     )
     # the L-row frame feeds both the capped-prefix aggregate and the
-    # rate projection; localCheckpoint (bounded, like the pr_curve
+    # rate projection; a checkpoint (bounded, like the pr_curve
     # histogram) saves re-running the corpus-sized supply aggregate
-    flagged = flagged.localCheckpoint(eager=True)
+    flagged = materialize.checkpoint(flagged)
     cagg = flagged.agg(
         F.coalesce(
             F.sum(F.when(F.col("capped"), F.col("cap"))), F.lit(0.0)
@@ -2526,7 +2514,7 @@ def pr_curve(
     # aggregate; it is a bounded distinct-score frame, so
     # materializing it costs KBs and saves the SECOND corpus-sized
     # groupBy (same rationale as the zipf spectrum checkpoint)
-    hist = hist.localCheckpoint(eager=True)
+    hist = materialize.checkpoint(hist)
     tot = hist.agg(F.sum("n_pos").alias("p_total"))
     return (
         hist.withColumn("tp", F.sum("n_pos").over(win))
@@ -2948,8 +2936,6 @@ def stupid_backoff_scores(
     shuffle on gram keys, which is exactly Brants et al.'s
     distributed-LM layout. No Python, no driver transfer, no windows.
     """
-    from pyspark import StorageLevel
-
     ref = (
         F.col(ref_col) if ref_col else (F.col(id_col) % 2 == 0)
     )
@@ -2963,11 +2949,10 @@ def stupid_backoff_scores(
         "ELSE transform(sequence(1, size(w)-2), "
         "i -> struct(w[i-1] AS w1, w[i] AS w2, w[i+1] AS w3)) END"
     )
-    grams = (
+    grams = materialize.persist(
         w.select("doc_id", "_is_ref", F.explode_outer(tris).alias("g"))
         .filter(F.col("g").isNotNull())
         .select("doc_id", "_is_ref", "g.w1", "g.w2", "g.w3")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ref_grams = grams.filter("_is_ref")
     tri = ref_grams.groupBy("w1", "w2", "w3").agg(F.count("*").alias("c3"))
@@ -3102,18 +3087,13 @@ def psi_drift(
                 (mcol - F.lit(mn)) * F.lit(bins) / F.lit(mx - mn)
             ),
         ).cast("int")
-    # localCheckpoint, not persist: the returned lazy frame keeps
-    # reading this (so an unpersist could never run and a
-    # CacheManager entry would leak per call — the
-    # contamination-bloom precedent above), and the frame is BOUNDED
-    # (groups x bins count rows), so the eager materialization is one
-    # corpus groupBy job with a tiny result — nothing like the
-    # corpus-sized checkpoint the round-5 dsir regression removed.
-    q = (
+    # the frame is BOUNDED (groups x bins count rows), so the eager
+    # checkpoint is one corpus groupBy job with a tiny result — nothing
+    # like the corpus-sized checkpoint the round-5 dsir regression removed
+    q = materialize.checkpoint(
         df.select(F.col(group_col).alias("g"), bucket.alias("b"))
         .groupBy("g", "b")
         .agg(F.count("*").alias("cq"))
-        .localCheckpoint(eager=True)
     )
     p = q.groupBy("b").agg(F.sum("cq").alias("cp"))
     n_tot = q.agg(F.sum("cq").alias("n_tot"))

@@ -29,7 +29,7 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
-from smartpipeline_spark import sources
+from smartpipeline_spark import materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up
 
@@ -100,72 +100,6 @@ def _spread_width(df: DataFrame) -> int:
     if size is None:
         return dp
     return max(dp, min(math.ceil(size / TASK_TARGET_BYTES), 1 << 20))
-
-
-def _heap_aware_level(df: DataFrame):
-    """Storage level for a big intermediate persist, sized against the
-    runtime's UNIFIED memory pool: a cached frame whose plan-estimated
-    size crowds the pool evicts itself and every execution page over
-    and over (the 6.6 GB replicated-docs persist at a default 8 GB
-    heap ran minhash-1024x at 341 s vs 196.5 s on a 16 GB heap — pure
-    cache-store thrash; ``git show d3e6f62:SMOKE_r11.json``) — park
-    such frames on DISK_ONLY
-    instead, where a local-SSD columnar re-read is far cheaper than
-    storage/execution contention. Frames that comfortably fit (< ~80%
-    of the ``spark.memory.fraction`` pool) keep MEMORY_AND_DISK, so
-    fixture-scale behavior is unchanged. Any estimation failure
-    (connect mode, unknown stats) falls back to MEMORY_AND_DISK."""
-    from pyspark import StorageLevel
-
-    from smartpipeline_spark.operators.scale import plan_size_bytes
-
-    size = plan_size_bytes(df)
-    if size is None:
-        return StorageLevel.MEMORY_AND_DISK
-    try:
-        sc = df.sparkSession.sparkContext
-        heap = int(sc._jvm.java.lang.Runtime.getRuntime().maxMemory())
-        frac = float(df.sparkSession.conf.get("spark.memory.fraction", "0.6"))
-        pool = (heap - 300 * 1024 * 1024) * frac
-    except Exception:
-        return StorageLevel.MEMORY_AND_DISK
-    if size > 0.8 * pool:
-        return StorageLevel.DISK_ONLY
-    return StorageLevel.MEMORY_AND_DISK
-
-
-_TRACKED_CACHES: list[DataFrame] = []
-
-
-def persist_intermediate(df: DataFrame) -> DataFrame:
-    """Persist a frame an operator reuses across its own plan —
-    heap-aware level (:func:`_heap_aware_level`) and REGISTERED for
-    :func:`release_caches`. The operators cannot unpersist these
-    themselves: the frames they return keep referencing the cached
-    data lazily, so releasing inside the operator would defeat the
-    persist. In a long-lived session the blocks therefore accumulate;
-    call :func:`release_caches` between corpus-scale jobs (after
-    materializing results) to drop them without nuking unrelated
-    caches the way ``spark.catalog.clearCache()`` does."""
-    df = df.persist(_heap_aware_level(df))
-    _TRACKED_CACHES.append(df)
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every intermediate frame the pairing/dedup operators
-    persisted in this process (see :func:`persist_intermediate`).
-    Safe to call at any time — results already materialized are
-    unaffected; lazy result frames still holding a reference will
-    simply recompute. Returns the number of frames released."""
-    n = 0
-    while _TRACKED_CACHES:
-        try:
-            _TRACKED_CACHES.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def shingle_sets(df: DataFrame, n: int = 3) -> DataFrame:
@@ -320,10 +254,10 @@ def jaccard_pairs(
     size instead of quadratically. Jaccard values are identical to
     the full join's for the emitted pairs (sizes and common counts
     still use the whole capped universe)."""
-    raw_sh = persist_intermediate(word_shingles(docs, n))
+    raw_sh = materialize.persist(word_shingles(docs, n))
     # sh feeds three consumers (sizes + both join sides): persist so
     # the regex-shingle explode and the hot-key anti-join run once
-    sh = persist_intermediate(drop_hot_keys(raw_sh, "sh", max_df))
+    sh = materialize.persist(drop_hot_keys(raw_sh, "sh", max_df))
     p = _pair_join_width(partitions, sh, ["sh"], anchor)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     side = sh if p is None else sh.repartition(p, "sh")
@@ -517,7 +451,7 @@ def minhash_candidates(
     if partitions == "auto":
         # the estimate pass + both join sides read the banded index —
         # persist so signatures compute once
-        keyed = persist_intermediate(keyed)
+        keyed = materialize.persist(keyed)
     p = _pair_join_width(partitions, keyed, ["band_id", "band_key"], anchor)
     side = keyed if p is None else keyed.repartition(p, "band_id", "band_key")
     a = side.alias("a")
@@ -605,7 +539,7 @@ def ext_dedup_minhash(spark, sf_dir):
     joins (previously the regex-shingle pass ran twice — the single
     most expensive bench item; caching halved it)."""
     d = sources.table(spark, "documents", sf_dir)
-    sets_ = persist_intermediate(shingle_sets(d))
+    sets_ = materialize.persist(shingle_sets(d))
     cands = minhash_candidates(minhash_signatures_from_sets(sets_))
     s1 = sets_.select(F.col("doc_id").alias("d1"), F.col("sh_set").alias("sh1"))
     s2 = sets_.select(F.col("doc_id").alias("d2"), F.col("sh_set").alias("sh2"))
@@ -908,10 +842,10 @@ def connected_components(
     """
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    edges = edges.distinct().persist()
-    labels = edges.select("a").distinct().select(
-        F.col("a").alias("id"), F.col("a").alias("label")
-    ).localCheckpoint(eager=True)
+    edges = materialize.persist(edges.distinct())
+    labels = materialize.checkpoint(
+        edges.select("a").distinct().select(F.col("a").alias("id"), F.col("a").alias("label"))
+    )
 
     changed = False
     for _ in range(max_iters):
@@ -922,21 +856,21 @@ def connected_components(
         # tag self rows so min(own) is recoverable post-aggregation
         own = labels.select("id", "label", F.lit(True).alias("self"))
         nb = neighbor.select("id", "label", F.lit(False).alias("self"))
-        folded = (
+        folded = materialize.checkpoint(
             own.union(nb)
             .groupBy("id")
             .agg(
                 F.min("label").alias("label"),
                 F.min(F.when(F.col("self"), F.col("label"))).alias("old"),
             )
-        ).localCheckpoint(eager=True)
+        )
         changed = folded.agg(
             F.max(F.col("label") != F.col("old")).alias("any")
         ).collect()[0]["any"]
         labels = folded.select("id", "label")
         if not changed:
             break
-    edges.unpersist()
+    materialize.release(edges)
     if changed:
         # Partial labels would split a connected component across the
         # caller's downstream decision (e.g. a train/test boundary) —
@@ -1176,7 +1110,7 @@ def overlap_pairs(
     use the capped universe, so the ratio stays a true overlap over
     the kept fingerprints. The fp frame feeds three consumers
     (sizes + both join sides): persisted once."""
-    fp = persist_intermediate(drop_hot_keys(fp, "fp", max_df))
+    fp = materialize.persist(drop_hot_keys(fp, "fp", max_df))
     p = _pair_join_width(partitions, fp, ["fp"])
     sizes = fp.groupBy("doc_id").agg(F.count("*").alias("n"))
     side = fp if p is None else fp.repartition(p, "fp")
@@ -1283,21 +1217,17 @@ def pagerank(
     # reads it (and out_deg derives from it again) — without this the
     # upstream edge derivation (often a join + distinct) re-executes
     # per use per iteration, 2k+ times for k iterations
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
+    e = materialize.checkpoint(
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     )
-    nodes = (
+    nodes = materialize.checkpoint(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
-    ).localCheckpoint()
-    n_nodes = nodes.count()
-    out_deg = (
-        e.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint()
     )
-    ranks = nodes.select("id", F.lit(1.0).alias("rank")).localCheckpoint()
+    n_nodes = nodes.count()
+    out_deg = materialize.checkpoint(e.groupBy("src").agg(F.count("*").alias("deg")))
+    ranks = materialize.checkpoint(nodes.select("id", F.lit(1.0).alias("rank")))
     for i in range(iters):
         contribs = (
             ranks.join(out_deg, ranks.id == out_deg.src)
@@ -1324,7 +1254,7 @@ def pagerank(
             )
         )
         if (i + 1) % 4 == 0:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize.checkpoint(ranks)
     return ranks
 
 
@@ -1548,20 +1478,14 @@ def dedup_against(
     fp_new = batch_fp.filter(F.col("doc_id") == F.col("_keep")).join(
         idx_fps.select("fp"), "fp", "left_anti"
     ).select("doc_id", "text", "fp")
-    # localCheckpoint, not persist: the returned frame keeps referencing
-    # this materialization, so an unpersist can never run — a persist
-    # here would pin a CacheManager entry per invocation for the whole
-    # session (the heavy-hitters lesson). Checkpoint blocks are
-    # GC-cleaned with the frame instead. Only worth it when fp_new is
-    # consumed more than once (the near-dup legs and/or the append
-    # write-back); the exact-only single-consumer path skips the
-    # materialization job outright.
+    # only worth it when fp_new is consumed more than once (the
+    # near-dup legs and/or the append write-back)
     if near or append:
-        fp_new = fp_new.localCheckpoint(eager=True)
+        fp_new = materialize.checkpoint(fp_new)
     survivors = fp_new
     new_sigs = minhash_signatures(fp_new.select("doc_id", "text"), n)
     if near:
-        new_sigs = new_sigs.localCheckpoint(eager=True)
+        new_sigs = materialize.checkpoint(new_sigs)
         idx_sigs = spark.read.parquet(root + "/signatures").join(
             batch_ids, "doc_id", "left_anti"
         )
@@ -1780,16 +1704,9 @@ def duplicate_spans(
     below the bound the materialization is <= a few hundred MB by
     construction.
 
-    Side effects of the single-fold shape (``partitions="auto"`` on a
-    small input only): ``localCheckpoint(eager=True)`` runs a Spark
-    job at DataFrame-CONSTRUCTION time (this call is not fully lazy in
-    that regime), the checkpointed blocks stay resident on executors
-    until the returned frame is garbage-collected on the driver (long
-    sessions issuing many calls accumulate them until GC), and the
-    truncated lineage is not recoverable on executor loss — acceptable
-    for a <= few-hundred-MB fixture-scale intermediate, which is the
-    only regime the gate admits. Pass ``partitions=None`` to keep the
-    fully lazy double-fold shape."""
+    The single-fold shape runs a Spark job at construction time and
+    its checkpoint lives as :mod:`materialize` says; pass
+    ``partitions=None`` to keep the fully lazy double-fold shape."""
     from smartpipeline_spark.operators.scale import estimate_bypassed
 
     grams = positional_kgrams(docs, k)
@@ -1797,7 +1714,7 @@ def duplicate_spans(
     if p is not None:
         grams = grams.repartition(p, "g")
     elif partitions == "auto" and estimate_bypassed(docs):
-        grams = grams.localCheckpoint(eager=True)
+        grams = materialize.checkpoint(grams)
     dup = grams.groupBy("g").agg(F.count("*").alias("_cnt")).filter(
         F.col("_cnt") >= 2
     )
@@ -2287,7 +2204,7 @@ def build_cdc_index(spark, docs: DataFrame, path: str, **chunk_kw) -> dict:
     land in the index. Returns {"n_chunks", "n_fps"}."""
     # checkpoint: the per-byte python chunker is the expensive pass —
     # without it the n_chunks count below would re-chunk the corpus
-    ch = cdc_chunks(docs, **chunk_kw).localCheckpoint(eager=True)
+    ch = materialize.checkpoint(cdc_chunks(docs, **chunk_kw))
     idx = ch.groupBy("fp").agg(
         F.min("doc_id").alias("first_doc"),
         F.first("length").alias("chunk_bytes"),
@@ -2333,11 +2250,9 @@ def cdc_dedup_against(
         "first_doc",
         "left_anti",
     )
-    # localCheckpoint: chunks feed the report join, the within-batch
-    # first-occurrence agg, and the append write — chunk once. (Not
-    # persist: the returned frame keeps reading it, so no unpersist
-    # could ever run.)
-    ch = cdc_chunks(batch, **chunk_kw).localCheckpoint(eager=True)
+    # checkpoint: chunks feed the report join, the within-batch
+    # first-occurrence agg, and the append write — chunk once
+    ch = materialize.checkpoint(cdc_chunks(batch, **chunk_kw))
     first = ch.groupBy("fp").agg(F.min("doc_id").alias("batch_first"))
     # .distinct() on the probe side: the report sums chunk lengths, so
     # a duplicated index fp would double-count bytes (the sibling

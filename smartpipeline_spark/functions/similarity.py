@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from smartpipeline_spark import sources
+from smartpipeline_spark import materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -465,14 +465,12 @@ def ext_knn_lsh(spark, sf_dir):
 
     e = _emb(spark, sf_dir)
     buckets = _lsh_buckets_udf()
-    from pyspark import StorageLevel
-
     # both the probe side and the corpus side read `keyed`: persist so
     # the signature UDF runs one pass over the corpus, not two (at
     # 100 TB this persist IS the write-once (table_id, bucket) index)
-    keyed = e.select(
-        "vec_id", "emb", F.posexplode(buckets(F.col("emb"))).alias("table_id", "bucket")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    keyed = materialize.persist(
+        e.select("vec_id", "emb", F.posexplode(buckets(F.col("emb"))).alias("table_id", "bucket"))
+    )
     q = keyed.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("emb").alias("q_emb"),
@@ -914,10 +912,9 @@ def append_to_ivf_index(
     with open(os.path.join(path, "_centroids.json")) as fh:
         cents = np.array(json.load(fh))
     assign = _ivf_assign_udf(cents)
-    assigned = (
+    assigned = materialize.persist(
         new_vectors.select("vec_id", "emb", assign(F.col("emb")).alias("a"))
         .select("vec_id", "emb", F.col("a.cell").alias("cell"), F.col("a.sim").alias("sim"))
-        .persist()
     )
     stats = assigned.groupBy("cell").agg(
         F.count("*").alias("n"), F.sum("sim").alias("s")
@@ -926,7 +923,7 @@ def append_to_ivf_index(
     assigned.select("vec_id", "emb", "cell").write.mode("append").partitionBy(
         "cell"
     ).parquet(path)
-    assigned.unpersist()
+    materialize.release(assigned)
     compacted = _maybe_compact_index(spark, path, compact_threshold)
     max_frac = (max(r["n"] for r in stats) / n) if n else 0.0
     uniform = 1.0 / len(cents)
@@ -970,12 +967,10 @@ def query_ivf_index(
     # materialized: the frame is consumed twice (distinct-cells collect
     # for the partition filter, then the candidate join) — without this
     # the upstream query pipeline AND the Arrow cell-assignment UDF run
-    # as two full jobs. localCheckpoint, not persist: the returned plan
-    # keeps reading it, so a persist here could never be unpersisted
-    # and would leak a CacheManager entry per query batch.
-    q = queries.select(
-        "query_id", "q_emb", F.explode(probe(F.col("q_emb"))).alias("cell")
-    ).localCheckpoint(eager=True)
+    # as two full jobs
+    q = materialize.checkpoint(
+        queries.select("query_id", "q_emb", F.explode(probe(F.col("q_emb"))).alias("cell"))
+    )
     probed = [r.cell for r in q.select("cell").distinct().collect()]
     idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
     return _exact_topk(_ivf_candidates(idx, q, exclude_self), k=k)
@@ -1456,7 +1451,7 @@ def append_to_pq_index(
             cents = np.array(json.load(fh))
         cell = _ivf_assign_udf(cents)
         assigned = assigned.withColumn("cell", cell(F.col("emb")).getField("cell"))
-    assigned = assigned.persist()
+    assigned = materialize.persist(assigned)
     if has_cells:
         stats = assigned.groupBy("cell").agg(
             F.count("*").alias("n"), F.sum("sim").alias("s")
@@ -1471,7 +1466,7 @@ def append_to_pq_index(
         ).collect()
         n = stats[0]["n"]
         assigned.select("vec_id", "codes").write.mode("append").parquet(path)
-    assigned.unpersist()
+    materialize.release(assigned)
     compacted = _maybe_compact_index(spark, path, compact_threshold)
     mean_sim = (sum(r["s"] for r in stats) / n) if n else None
     fit_drop = (fit["mean_recon_sim"] - mean_sim) if n else 0.0
@@ -1673,12 +1668,11 @@ def ext_hybrid_search(spark, sf_dir):
         # would drag everything into ONE partition (WindowExec warns
         # exactly that).
         w_lex = Window.orderBy(F.col("bm25").desc(), F.asc("doc_id"))
-        return (
+        return materialize.checkpoint(
             lex_scored.orderBy(F.col("bm25").desc(), F.asc("doc_id"))
             .limit(HYBRID_POOL)
             .withColumn("r_lex", F.row_number().over(w_lex))
             .select("doc_id", "r_lex")
-            .localCheckpoint(eager=True)
         )
 
     def _vec_leg():
@@ -1698,12 +1692,11 @@ def ext_hybrid_search(spark, sf_dir):
             "vec_id", half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("cos")
         )
         w_vec = Window.orderBy(F.col("cos").desc(), F.asc("vec_id"))
-        return (
+        return materialize.checkpoint(
             vec_scored.orderBy(F.col("cos").desc(), F.asc("vec_id"))
             .limit(HYBRID_POOL)
             .withColumn("r_vec", F.row_number().over(w_vec))
             .select("vec_id", "r_vec")
-            .localCheckpoint(eager=True)
         )
 
     lex, vec = _overlap_legs(_lex_leg, _vec_leg)
@@ -1850,12 +1843,11 @@ def ext_hybrid_indexed(spark, sf_dir):
             )
         )
         w_lex = Window.orderBy(F.col("bm25").desc(), F.asc("doc_id"))
-        return (
+        return materialize.checkpoint(
             lex_scored.orderBy(F.col("bm25").desc(), F.asc("doc_id"))
             .limit(HYBRID_POOL)
             .withColumn("r_lex", F.row_number().over(w_lex))
             .select("doc_id", "r_lex")
-            .localCheckpoint(eager=True)
         )
 
     def _vec_leg():
@@ -1866,9 +1858,9 @@ def ext_hybrid_indexed(spark, sf_dir):
         ann = query_ivf_index(
             spark, _ivf_index_for(spark, sf_dir), q, k=HYBRID_POOL
         )
-        return ann.select(
-            F.col("neighbor_id").alias("vec_id"), F.col("rank").alias("r_vec")
-        ).localCheckpoint(eager=True)
+        return materialize.checkpoint(
+            ann.select(F.col("neighbor_id").alias("vec_id"), F.col("rank").alias("r_vec"))
+        )
 
     lex, vec = _overlap_legs(_lex_leg, _vec_leg)
 

@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from smartpipeline_spark import sources
+from smartpipeline_spark import materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -308,10 +308,8 @@ def ext_heavy_hitters(spark, sf_dir):
     )
     # explode_outer + isNotNull: the inferred size(tri)>0 filter would
     # run the whole trigram fold twice more per doc in the scan stage
-    grams = (
-        d.select(F.explode_outer(tri).alias("g"))
-        .filter(F.col("g").isNotNull())
-        .persist()
+    grams = materialize.persist(
+        d.select(F.explode_outer(tri).alias("g")).filter(F.col("g").isNotNull())
     )
     # width must beat the threshold for the CANDIDATE bound to hold:
     # CMS overestimates by up to N/width (all-colliding worst case),
@@ -326,10 +324,8 @@ def ext_heavy_hitters(spark, sf_dir):
     width, depth = 65536, 4
     try:
         # the ENTIRE query drains eagerly against the cached trigram
-        # stream, then the cache is RELEASED before returning — a long
-        # session (oracle sweep, bench reps) must not accumulate one
-        # leaked cached frame per invocation. Eager is safe because
-        # every driver-side structure is bounded: the total (1 row),
+        # stream, which is released before returning. Eager is safe
+        # because every driver-side structure is bounded: the total (1 row),
         # the CMS cells (width x depth), the candidate set (see the
         # width bound above) and the final answer (<= 5000 keys by the
         # exact threshold's pigeonhole).
@@ -349,7 +345,7 @@ def ext_heavy_hitters(spark, sf_dir):
             .collect()
         )
     finally:
-        grams.unpersist()
+        materialize.release(grams)
     return spark.createDataFrame(
         [(r["g"], r["cnt"]) for r in rows] or [], "g string, cnt bigint"
     )
@@ -1035,18 +1031,13 @@ def train_bpe(docs: DataFrame, n_merges: int = 30) -> list[tuple[str, str]]:
     deterministically on (freq desc, left, right)."""
     import pandas as pd
 
-    vocab = (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).alias("w")
-        )
+    vocab = materialize.checkpoint(
+        docs.select(F.explode(F.split(F.lower(F.trim(F.col("text"))), "\\s+")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
-        .select(
-            F.expr("transform(split(w, ''), c -> c)").alias("syms"),
-            "freq",
-        )
-    ).localCheckpoint()
+        .select(F.expr("transform(split(w, ''), c -> c)").alias("syms"), "freq")
+    )
 
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
@@ -1098,7 +1089,7 @@ def train_bpe(docs: DataFrame, n_merges: int = 30) -> list[tuple[str, str]]:
 
         vocab = vocab.select(merge_pair("syms").alias("syms"), "freq")
         if (i + 1) % 8 == 0:
-            vocab = vocab.localCheckpoint()
+            vocab = materialize.checkpoint(vocab)
     return merges
 
 
@@ -1420,9 +1411,8 @@ def ext_zipf_spectrum(spark, sf_dir):
     )
     # the spectrum is consumed twice (slope fit + output); it is a
     # bounded O(sqrt(tokens))-row frame, so materializing it costs KBs
-    # and saves the SECOND full corpus word-count chain. checkpoint,
-    # not persist — same leak rationale as dsir_select.
-    ranked = ranked.localCheckpoint(eager=True)
+    # and saves the SECOND full corpus word-count chain
+    ranked = materialize.checkpoint(ranked)
     wx = F.col("n_words") * F.log("rank_mid")
     fit = ranked.agg(
         (

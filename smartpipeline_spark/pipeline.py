@@ -30,6 +30,7 @@ from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from smartpipeline_spark import materialize
 from smartpipeline_spark.errors import ErrorManager, RetryManager, StagePolicy
 from smartpipeline_spark.item import Item, restore_item
 from smartpipeline_spark.stage import BatchStage, Source, Stage
@@ -172,7 +173,8 @@ class Pipeline:
         ``cache=True`` persists this stage's output (the reference
         roadmap's "processed items cached at stage level" — here it is
         a real cluster cache: downstream re-use and repeated ``run()``
-        calls skip recomputing everything up to this stage).
+        calls skip recomputing everything up to this stage). An
+        enclosing :func:`materialize.scope` releases it when it exits.
         ``profile_memory=True`` records the Python worker's RSS after
         each item/chunk into the timings map under ``<name>#rss_kb``
         (the roadmap's "stages can be memory profiled").
@@ -276,7 +278,7 @@ class Pipeline:
                     break
             df = self._apply_segment(df, seg)
             if cache_after:
-                df = df.persist()
+                df = materialize.persist(df)
         return df
 
     def _apply_segment(self, df: DataFrame, seg) -> DataFrame:

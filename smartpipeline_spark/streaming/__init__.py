@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from smartpipeline_spark import materialize
+
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -385,7 +387,7 @@ def continuous_rollup(
         # frames re-execute their plan per action, so persist around
         # the probe + write — otherwise every NON-empty batch pays the
         # rollup twice to save one no-op write at the end.
-        batch_df.persist()
+        materialize.persist(batch_df)
         try:
             if batch_df.isEmpty():
                 return
@@ -396,7 +398,7 @@ def continuous_rollup(
                 .parquet(path)
             )
         finally:
-            batch_df.unpersist()
+            materialize.release(batch_df)
 
     # start_query, not start_foreach_batch: upsert writes each batch as
     # it comes, with no shuffle of its own, so the state width fits it

@@ -55,9 +55,12 @@ next task's call re-reads each archive once (median 50 ms).
 from __future__ import annotations
 
 import atexit
+import functools
+import hashlib
 import logging
 import sys
 import zipimport
+from pathlib import Path
 from time import monotonic, sleep
 from typing import Callable, Iterable, Iterator, Sequence
 
@@ -331,6 +334,16 @@ class _LogCapture(logging.Handler):
         return out
 
 
+@functools.cache
+def _package_identity() -> tuple[str, str]:
+    """(directory, md5 of its ``.py`` files) of this package, once per process."""
+    root = Path(__file__).resolve().parent
+    h = hashlib.md5()
+    for path in sorted(root.rglob("*.py")):
+        h.update(str(path.relative_to(root)).encode() + b"\0" + path.read_bytes())
+    return str(root), h.hexdigest()
+
+
 def compile_chain(
     steps: Sequence[tuple[object, StagePolicy, bool]],
     payload_cols: list[str],
@@ -350,9 +363,22 @@ def compile_chain(
     ``log_acc`` (optional list-accumulator) enables log shipping: user
     stage log records captured during the chain are added to the
     accumulator and re-emitted by the driver (`Pipeline` drains it).
+
+    Its first batch fails when the worker imported another copy of the
+    package than the driver (workers import from their working
+    directory first). A cluster must install the same package on its
+    executors.
     """
+    driver_pkg = _package_identity()
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        worker_pkg = _package_identity()
+        if worker_pkg[1] != driver_pkg[1]:
+            raise RuntimeError(
+                f"the driver runs smartpipeline_spark from {driver_pkg[0]}, but "
+                f"this Python worker imported a different copy from {worker_pkg[0]}; "
+                "install the driver's package on every executor"
+            )
         error_manager.on_start()
         capture = None
         prev_root_level = None

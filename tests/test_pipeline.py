@@ -4,6 +4,11 @@ contents and stage attribution, retry counts/timing envelopes, batch
 semantics, count, and local/distributed parity.
 """
 
+import os
+import shutil
+import subprocess
+import sys
+import textwrap
 import threading
 import time
 
@@ -854,3 +859,41 @@ def test_shutdown_waits_for_in_flight_item_before_on_end():
     pipe.shutdown()
     assert stage.finished_at_on_end is True
     assert pipe.get_item(timeout=1).data == {"x": 1}
+
+
+def test_chain_fails_when_the_worker_imports_another_package_copy(tmp_path):
+    """The driver imports copy A; its Python workers start in copy B,
+    which differs by one comment, and put that directory first on their
+    ``sys.path``. The chain's first batch must fail and name both."""
+    src = os.path.join(os.path.dirname(os.path.dirname(__file__)), "smartpipeline_spark")
+    a, b = tmp_path / "a", tmp_path / "b"
+    for copy in (a, b):
+        shutil.copytree(src, copy / "smartpipeline_spark",
+                        ignore=shutil.ignore_patterns("__pycache__"))
+    with open(b / "smartpipeline_spark" / "wrapper.py", "a") as fh:
+        fh.write("# copy B\n")
+    script = textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(a)!r})
+        from smartpipeline_spark import Pipeline, Stage
+        from smartpipeline_spark.session import get_spark
+
+        class Keep(Stage):
+            def process(self, item):
+                return item
+
+        spark = get_spark("pkgcheck", master="local[1]",
+                          extra_conf={{"spark.ui.enabled": "false"}})
+        try:
+            df = spark.createDataFrame([(1, "x")], ["id", "text"])
+            list(Pipeline(spark).set_source(df).append("keep", Keep()).run())
+        finally:
+            spark.stop()
+    """)
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", script], cwd=b, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode != 0, out.stdout[-2000:]
+    msg = out.stderr
+    assert "this Python worker imported a different copy" in msg, msg[-3000:]
+    assert str(a / "smartpipeline_spark") in msg and str(b / "smartpipeline_spark") in msg

@@ -308,27 +308,23 @@ def test_dsir_scoring_is_map_side(spark):
 
 
 def test_no_undeclared_nested_loop_joins_in_relational_inventory(spark, queries):
-    """Global guard over every lazily-planned relational key (q*): no
-    CartesianProduct anywhere except the declared q49 demo, and any
-    BroadcastNestedLoopJoin must be the scalar-attach idiom (a keyless
-    `Keys: []` aggregate exists in the plan to supply the 1-row side).
-    This is the plan pathology that passes every value check on
-    fixtures and becomes an O(N*M) scan at cluster scale; the per-key
-    tests above pin specific shapes, this pins the inventory-wide
-    invariant (scripts/check_oracles.py --plans is the full-registry
-    twin covering the eager ext_* keys too)."""
+    """Global guard over every lazily-planned relational key (q*),
+    through the runner's own rule (scripts/check_oracles.py --plans,
+    which covers the eager ext_* keys too): no CartesianProduct outside
+    ``NESTED_LOOP_ALLOWED``, and no more BroadcastNestedLoopJoins than
+    keyless final-aggregate frames, so one scalar attach cannot exempt
+    a second, accidental all-pairs join. This is the plan pathology
+    that passes every value check on fixtures and becomes an O(N*M)
+    scan at cluster scale."""
+    from scripts.check_oracles import _plan_check
+
+    failing = []
     for key, fn in sorted(queries.items()):
-        if not key.startswith("q"):
-            continue  # ext_* keys build indexes eagerly; script covers them
-        if key == "q49_cross_join":
-            continue  # the declared tiny-side cartesian demo
-        p = _plan(fn(spark, SF_SMOKE))
-        assert "CartesianProduct" not in p, f"{key} plans a cartesian"
-        if "BroadcastNestedLoopJoin" in p:
-            assert re.search(r"Keys: \[\]", p), (
-                f"{key} plans a BroadcastNestedLoopJoin with no scalar "
-                "aggregate side"
-            )
+        if key.startswith("q"):
+            ok, detail = _plan_check(key, fn(spark, SF_SMOKE), None, SF_SMOKE)
+            if not ok:
+                failing.append(f"{key}: {detail}")
+    assert not failing, failing
 
 
 def test_weighted_sample_is_take_ordered_not_global_sort(spark, queries):

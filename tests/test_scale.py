@@ -888,49 +888,6 @@ def test_tuned_shuffle_partitions_reproduces_idle_host_bests():
     assert tuned_shuffle_partitions(1, floor=64) == 64
 
 
-def test_release_caches_drops_tracked_pairing_frames(spark):
-    """The pairing joins persist their index frames internally and the
-    returned lazy frame keeps referencing them, so the operator can
-    never unpersist — release_caches() is the documented cleanup hook
-    for long-lived sessions (r11 ADVICE: repeated calls accumulated
-    cached blocks with no release handle)."""
-    from smartpipeline_spark.functions import dedup
-
-    dedup.release_caches()  # start clean
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i % 3} epsilon zeta") for i in range(30)],
-        ["doc_id", "text"],
-    )
-    dedup.jaccard_pairs(docs, max_df=None).count()
-    tracked = list(dedup._TRACKED_CACHES)
-    assert tracked, "pairing join registered no caches"
-    assert any(df.storageLevel.useMemory or df.storageLevel.useDisk for df in tracked)
-    n = dedup.release_caches()
-    assert n == len(tracked)
-    assert dedup._TRACKED_CACHES == []
-    for df in tracked:
-        lvl = df.storageLevel
-        assert not (lvl.useMemory or lvl.useDisk), "frame still cached"
-    # idempotent and safe to call again
-    assert dedup.release_caches() == 0
-
-
-def test_heap_aware_level_parks_oversized_frames_on_disk(spark):
-    """A cached frame whose plan-estimated size crowds the unified
-    memory pool must go DISK_ONLY (the 8g-vs-16g thrash finding in
-    ``git show d3e6f62:SMOKE_r11.json``); frames that fit keep
-    MEMORY_AND_DISK, so fixture-scale persists are unchanged."""
-    from pyspark import StorageLevel
-
-    from smartpipeline_spark.functions.dedup import _heap_aware_level
-
-    small = spark.range(10)
-    assert _heap_aware_level(small) == StorageLevel.MEMORY_AND_DISK
-    # range(N) is estimated at 8 bytes/row -> ~800 GB, far past any pool
-    huge = spark.range(100_000_000_000)
-    assert _heap_aware_level(huge) == StorageLevel.DISK_ONLY
-
-
 def test_shingle_sets_survives_missing_rdd_handle(spark, monkeypatch):
     """Spark Connect / non-JVM plan wrappers don't expose .rdd; the
     partition-width probe must fall back to the unconditional
