@@ -12,8 +12,11 @@ Ladder (each rung trades candidate quality for scanned bytes):
 Plus the index lifecycle — for BOTH quantizers: build once
 (partitioned by cell), query with partition pruning, append
 incrementally with a drift report (IVF: cell concentration; PQ:
-codebook reconstruction fit). The saved-index query paths are pinned
-bit-equal to the inline queries in tests.
+codebook reconstruction fit). Both indexes live in the one saved-index
+store (``smartpipeline_spark.indexstore``): each append is a new
+immutable segment published by one atomic manifest replace, and the
+quantizers ride in that manifest. The saved-index query paths are
+pinned bit-equal to the inline queries in tests.
 
 Run: python examples/ann_stack.py
 """

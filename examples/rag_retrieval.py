@@ -12,7 +12,9 @@ the retrieval path shuffles document bodies. For a standing corpus,
 pre-build BOTH modalities' saved layouts once —
 ``functions.text.build_bm25_index`` (sort-clustered postings,
 footer-pruned term probes) and ``functions.similarity.build_ivf_index``
-(cell-partitioned vectors) — and serve query batches from them; the
+(cell-partitioned vectors), both segment tables of the one saved-index
+store (``smartpipeline_spark.indexstore``, appends commit by one
+manifest replace) — and serve query batches from them; the
 end-to-end indexed composition is measured as the ``rag_retrieval_qps``
 rung in ``scripts/scale_smoke.py`` (results:
 ``git show d3e6f62:SMOKE_r11.json``).

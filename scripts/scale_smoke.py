@@ -30,7 +30,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from pyspark.sql import functions as F
 
-from smartpipeline_spark import sources
+from smartpipeline_spark import indexstore, sources
 from smartpipeline_spark.session import get_spark
 
 
@@ -829,7 +829,6 @@ def main() -> None:
         from smartpipeline_spark.functions.text import (
             append_to_bm25_index,
             build_bm25_index,
-            compact_bm25_index,
             query_bm25_index,
         )
 
@@ -865,7 +864,7 @@ def main() -> None:
                     ),
                     F.concat("text", F.lit(f" atag{j}")).alias("text"),
                 )
-                segs = append_to_bm25_index(batch, idxp, compact_after=None)
+                segs = append_to_bm25_index(batch, idxp)
             return len(segs["segments"])
 
         timed("bm25_maint_appends4", _appends)
@@ -875,7 +874,7 @@ def main() -> None:
         )
 
         def _compact():
-            counts["bm25_maint_compact_report"] = compact_bm25_index(spark, idxp)
+            counts["bm25_maint_compact_report"] = indexstore.compact(spark, idxp)
             return 1
 
         timed("bm25_maint_compact", _compact)
@@ -1010,9 +1009,9 @@ def main() -> None:
                 n_in / timings["streaming_ingest_incremental"]
             )
             counts["ingest_inc_batches"] = inc_batches
-            counts["ingest_inc_index_sigs_final"] = spark.read.parquet(
-                idx + "/signatures"
-            ).count()
+            counts["ingest_inc_index_sigs_final"] = indexstore.rows(
+                indexstore.manifest(idx), "signatures"
+            )
         shutil.rmtree(work, ignore_errors=True)
 
     # file-drop source -> quality gate -> checkpointed streaming exact

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from smartpipeline_spark import materialize, sources
+from smartpipeline_spark.indexstore import write_json
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -1072,7 +1073,6 @@ def export_dataset(
     filter. One extra read-back scan is the integrity cost; at 100 TB
     run it as the same job's final stage reading the files it just
     wrote (still one pass over the output, zero over the input)."""
-    import json
     import os
 
     df.write.mode("overwrite").partitionBy(split_col).format(fmt).save(path)
@@ -1099,8 +1099,7 @@ def export_dataset(
     # underscore prefix: Spark treats non-underscore files as data, so
     # "manifest.json" in the root would break every later read of the
     # dataset with "not a Parquet file"
-    with open(os.path.join(path, "_manifest.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1, sort_keys=True)
+    write_json(os.path.join(path, "_manifest.json"), manifest, indent=1, sort_keys=True)
     return manifest
 
 
@@ -2106,23 +2105,18 @@ def ext_sample_per_group(spark, sf_dir):
 
 
 def save_classifier(model: dict, path: str) -> None:
-    """Persist a trained model as ``_classifier.json`` under ``path``
-    (same contract as the ANN indexes' ``_centroids.json`` /
-    ``_codebooks.json``): the model is a KB-scale artifact — train
-    once on a labeled slice, score every future ingest batch against
-    the saved weights without refitting."""
-    import json
+    """Persist a trained model as ``_classifier.json`` under ``path``,
+    written atomically (:func:`~smartpipeline_spark.indexstore.write_json`):
+    the model is a KB-scale artifact — train once on a labeled slice,
+    score every future ingest batch against the saved weights without
+    refitting."""
     import os
 
     os.makedirs(path, exist_ok=True)
-    with open(os.path.join(path, "_classifier.json"), "w") as fh:
-        json.dump(
-            {
-                "m": model["m"],
-                "weights": {str(b): v for b, v in model["weights"].items()},
-            },
-            fh,
-        )
+    write_json(
+        os.path.join(path, "_classifier.json"),
+        {"m": model["m"], "weights": {str(b): v for b, v in model["weights"].items()}},
+    )
 
 
 def load_classifier(path: str) -> dict:

@@ -29,7 +29,7 @@ import random
 
 from pyspark.sql import DataFrame, functions as F
 
-from smartpipeline_spark import materialize, sources
+from smartpipeline_spark import indexstore, materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up
 
@@ -843,7 +843,7 @@ def connected_components(
     e = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     edges = materialize.persist(edges.distinct())
-    labels = materialize.checkpoint(
+    labels = stored = materialize.checkpoint(
         edges.select("a").distinct().select(F.col("a").alias("id"), F.col("a").alias("label"))
     )
 
@@ -864,6 +864,10 @@ def connected_components(
                 F.min(F.when(F.col("self"), F.col("label"))).alias("old"),
             )
         )
+        # the eager checkpoint has read the previous round's labels:
+        # free them now rather than one copy per round at scope exit
+        materialize.release(stored)
+        stored = folded
         changed = folded.agg(
             F.max(F.col("label") != F.col("old")).alias("any")
         ).collect()[0]["any"]
@@ -1227,7 +1231,7 @@ def pagerank(
     )
     n_nodes = nodes.count()
     out_deg = materialize.checkpoint(e.groupBy("src").agg(F.count("*").alias("deg")))
-    ranks = materialize.checkpoint(nodes.select("id", F.lit(1.0).alias("rank")))
+    ranks = stored = materialize.checkpoint(nodes.select("id", F.lit(1.0).alias("rank")))
     for i in range(iters):
         contribs = (
             ranks.join(out_deg, ranks.id == out_deg.src)
@@ -1255,6 +1259,8 @@ def pagerank(
         )
         if (i + 1) % 4 == 0:
             ranks = materialize.checkpoint(ranks)
+            materialize.release(stored)  # read by the eager checkpoint above
+            stored = ranks
     return ranks
 
 
@@ -1344,12 +1350,13 @@ def build_dedup_index(
     is deduped AGAINST the index instead of re-scanning the corpus
     (the dedup twin of similarity.build_ivf_index).
 
-    Index layout (parquet, both tables tiny relative to the corpus —
-    ~50 bytes + 16 longs per fp-distinct doc):
+    Index layout (:mod:`~smartpipeline_spark.indexstore` tables, both
+    tiny relative to the corpus — ~50 bytes + 16 longs per fp-distinct
+    doc):
 
-    * ``<path>/fingerprints`` — (fp, keep_id): every distinct exact
+    * ``fingerprints`` — (fp, keep_id): every distinct exact
       fingerprint ever ingested and the first doc that carried it.
-    * ``<path>/signatures`` — (doc_id, h0..h15): MinHash signatures of
+    * ``signatures`` — (doc_id, h0..h15): MinHash signatures of
       every fp-distinct doc ever ingested — INCLUDING docs later
       judged near-duplicates. Keeping non-survivors makes the removal
       rule order-independent ("remove a doc iff it has a candidate
@@ -1363,16 +1370,15 @@ def build_dedup_index(
     near=False)``) — the MinHash signature pass is the expensive leg
     of the build (a window over fp plus 16 hash folds per doc) and is
     pure thrown-away work when no near-dup query will read it.
-    ``stats=False`` skips the two count jobs behind the returned
-    {"n_docs", "n_fps"} dict (two extra full jobs) for callers that
-    discard it.
+    ``stats=False`` skips the count job behind the returned
+    {"n_docs", "n_fps"} dict for callers that discard it (``n_fps`` is
+    the manifest's row count).
 
     Returns {"n_docs", "n_fps"} (None values when ``stats=False``)."""
     from pyspark.sql import Window as _W
 
     fps = docs.select("doc_id", _fp_col())
-    keepers = fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))
-    keepers.write.mode("overwrite").parquet(path.rstrip("/") + "/fingerprints")
+    tables = {"fingerprints": fps.groupBy("fp").agg(F.min("doc_id").alias("keep_id"))}
     if near:
         # signatures for the keeper (min doc_id) of each fp group
         kept_docs = (
@@ -1381,14 +1387,11 @@ def build_dedup_index(
             .filter(F.col("doc_id") == F.col("_keep"))
             .select("doc_id", "text")
         )
-        sigs = minhash_signatures(kept_docs, n)
-        sigs.write.mode("overwrite").parquet(path.rstrip("/") + "/signatures")
+        tables["signatures"] = minhash_signatures(kept_docs, n)
+    man = indexstore.build(path, tables)
     if not stats:
         return {"n_docs": None, "n_fps": None}
-    return {
-        "n_docs": docs.count(),
-        "n_fps": spark.read.parquet(path.rstrip("/") + "/fingerprints").count(),
-    }
+    return {"n_docs": docs.count(), "n_fps": indexstore.rows(man, "fingerprints")}
 
 
 def _sig_agreement_r():
@@ -1452,21 +1455,19 @@ def dedup_against(
 
     Scale: the batch (GBs) joins the index (fp + 16 longs per doc) on
     fp and on band keys — both uniformly-hashed shuffle keys; the
-    corpus text itself is never read. ``append=True`` writes the
-    batch's fp-new fingerprints/signatures back (parquet append —
-    run batches serially or externally lock, same contract as
-    append_to_ivf_index)."""
-    root = index_path.rstrip("/")
-    # exclude the batch's own doc_ids from every index read: the
-    # returned survivors frame is LAZY, so with append=True it
-    # re-reads the index AFTER the append lands and would otherwise
-    # match each batch doc against its own just-appended entry
-    # (dropping everything). The exclusion also makes the call
-    # re-entrant — re-running the same batch yields the same
-    # survivors. Requires globally unique doc_ids across ingestions,
-    # which is already the ordering contract.
+    corpus text itself is never read. ``append=True`` commits the
+    batch's fp-new fingerprints/signatures to the index as one new
+    segment per table (run batches serially or externally lock, same
+    contract as append_to_ivf_index); the survivors are then computed
+    before the append, since an append may compact away the segments
+    they read."""
+    man = indexstore.manifest(index_path)
+    # exclude the batch's own doc_ids from every index read: that
+    # makes the call re-entrant — re-running the same batch after its
+    # own append yields the same survivors. Requires globally unique
+    # doc_ids across ingestions, which is already the ordering contract.
     batch_ids = batch.select("doc_id").distinct()
-    idx_fps = spark.read.parquet(root + "/fingerprints").join(
+    idx_fps = indexstore.read(spark, index_path, "fingerprints", man).join(
         batch_ids.withColumnRenamed("doc_id", "keep_id"), "keep_id", "left_anti"
     )
     batch_fp = batch.select("doc_id", "text", _fp_col())
@@ -1486,7 +1487,7 @@ def dedup_against(
     new_sigs = minhash_signatures(fp_new.select("doc_id", "text"), n)
     if near:
         new_sigs = materialize.checkpoint(new_sigs)
-        idx_sigs = spark.read.parquet(root + "/signatures").join(
+        idx_sigs = indexstore.read(spark, index_path, "signatures", man).join(
             batch_ids, "doc_id", "left_anti"
         )
         newb = _band_keys(new_sigs)
@@ -1509,13 +1510,18 @@ def dedup_against(
         )
         dropped = vs_index.unionByName(vs_batch).distinct()
         survivors = fp_new.join(dropped, "doc_id", "left_anti")
+        if append:
+            survivors = materialize.checkpoint(survivors)
     if append:
         # index invariant: ALL fp-new docs enter the index (survivors
         # and near-dropped alike — see build_dedup_index docstring)
-        fp_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id")).write.mode(
-            "append"
-        ).parquet(root + "/fingerprints")
-        new_sigs.write.mode("append").parquet(root + "/signatures")
+        indexstore.append(
+            index_path,
+            {
+                "fingerprints": fp_new.groupBy("fp").agg(F.min("doc_id").alias("keep_id")),
+                "signatures": new_sigs,
+            },
+        )
     return survivors.select("doc_id", "text")
 
 
@@ -2199,9 +2205,10 @@ def build_cdc_index(spark, docs: DataFrame, path: str, **chunk_kw) -> dict:
     per distinct chunk fingerprint. Arriving batches are then profiled
     against this table instead of re-chunking the corpus.
 
-    Index layout: ``<path>/chunk_fps`` — (fp, first_doc, chunk_bytes),
-    16-byte md5 + two ints per distinct chunk; document bytes never
-    land in the index. Returns {"n_chunks", "n_fps"}."""
+    Index layout: one :mod:`~smartpipeline_spark.indexstore` table,
+    ``chunk_fps`` — (fp, first_doc, chunk_bytes), 16-byte md5 + two
+    ints per distinct chunk; document bytes never land in the index.
+    Returns {"n_chunks", "n_fps"}."""
     # checkpoint: the per-byte python chunker is the expensive pass —
     # without it the n_chunks count below would re-chunk the corpus
     ch = materialize.checkpoint(cdc_chunks(docs, **chunk_kw))
@@ -2209,11 +2216,8 @@ def build_cdc_index(spark, docs: DataFrame, path: str, **chunk_kw) -> dict:
         F.min("doc_id").alias("first_doc"),
         F.first("length").alias("chunk_bytes"),
     )
-    idx.write.mode("overwrite").parquet(path.rstrip("/") + "/chunk_fps")
-    return {
-        "n_chunks": ch.count(),
-        "n_fps": spark.read.parquet(path.rstrip("/") + "/chunk_fps").count(),
-    }
+    man = indexstore.build(path, {"chunk_fps": idx})
+    return {"n_chunks": ch.count(), "n_fps": indexstore.rows(man, "chunk_fps")}
 
 
 def cdc_dedup_against(
@@ -2232,20 +2236,21 @@ def cdc_dedup_against(
     near-copy with an insertion still shares most chunk fingerprints
     and is flagged — a fixed-size blocking index would miss it.
 
-    ``append=True`` writes the batch's fp-new chunks back (parquet
-    append; run batches serially, same contract as dedup_against).
-    Index rows whose first_doc is in the batch are excluded from the
-    comparison, so the LAZY report never matches a doc against its own
-    just-appended chunks and the call is re-entrant; with globally
-    increasing doc_ids (the shared ordering contract),
-    (build; append) is row-equal to build-on-concat — pytest-pinned.
+    ``append=True`` commits the batch's fp-new chunks to the index as
+    a new segment (run batches serially, same contract as
+    dedup_against), after computing the report, since an append may
+    compact away the segments it reads. Index rows whose first_doc is
+    in the batch are excluded from the comparison, so the call is
+    re-entrant; with globally increasing doc_ids (the shared ordering
+    contract), (build; append) is row-equal to build-on-concat —
+    pytest-pinned.
 
     Scale: the batch joins the index on 16-byte fps (uniform shuffle
     keys); corpus text is never re-read; the report aggregate is
     partial-agg friendly."""
-    root = index_path.rstrip("/")
+    man = indexstore.manifest(index_path)
     batch_ids = batch.select("doc_id").distinct()
-    idx = spark.read.parquet(root + "/chunk_fps").join(
+    idx = indexstore.read(spark, index_path, "chunk_fps", man).join(
         batch_ids.withColumnRenamed("doc_id", "first_doc"),
         "first_doc",
         "left_anti",
@@ -2291,13 +2296,14 @@ def cdc_dedup_against(
         .withColumn("is_dup", F.col("dup_fraction") >= F.lit(dup_threshold))
     )
     if append:
+        report = materialize.checkpoint(report)
         # the append filter checks the RAW index (no first_doc-in-batch
         # exclusion): after this batch's own append lands, its fps are
         # present there, so re-running the same call appends NOTHING —
         # the filtered view used for the report would hide them and
         # re-append duplicates on every rerun
-        raw_fps = spark.read.parquet(root + "/chunk_fps").select("fp")
-        (
+        raw_fps = indexstore.read(spark, index_path, "chunk_fps", man).select("fp")
+        new_fps = (
             ch.join(first, "fp")
             .filter(F.col("doc_id") == F.col("batch_first"))
             .join(raw_fps, "fp", "left_anti")
@@ -2306,7 +2312,6 @@ def cdc_dedup_against(
                 F.min("doc_id").alias("first_doc"),
                 F.first("length").alias("chunk_bytes"),
             )
-            .write.mode("append")
-            .parquet(root + "/chunk_fps")
         )
+        indexstore.append(index_path, {"chunk_fps": new_fps})
     return report

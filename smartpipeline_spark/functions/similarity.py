@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from smartpipeline_spark import materialize, sources
+from smartpipeline_spark import indexstore, materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -461,8 +461,6 @@ def ext_knn_lsh(spark, sf_dir):
     :func:`_lsh_oracle` (the hyperplanes are fixed literals shared
     between both engines); recall vs brute force stays pytest-pinned
     on top."""
-    from pyspark.sql.window import Window
-
     e = _emb(spark, sf_dir)
     buckets = _lsh_buckets_udf()
     # both the probe side and the corpus side read `keyed`: persist so
@@ -487,17 +485,7 @@ def ext_knn_lsh(spark, sf_dir):
         .select("query_id", "q_emb", F.col("vec_id").alias("neighbor_id"), "emb")
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= K_NEIGHBORS)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _exact_topk(cands)
 
 
 # ---------------------------------------------------------------------------
@@ -819,21 +807,21 @@ def _ivf_candidates(
 
 
 def build_ivf_index(e: DataFrame, path: str) -> None:
-    """Materialize the IVF index the inline query recomputes: corpus
-    vectors written PARTITIONED BY their nearest-centroid cell, plus
-    the trained centroids as ``_centroids.json`` in the index root.
-    This is the write-once form of the 100 TB contract: train on a
-    constant-size sample, assign the corpus in one linear pass, pay
-    the layout once — every later query batch reads only its probed
-    cell directories (verified in tests via the scan's partition
-    filters), not the corpus."""
-    import json
-    import os
-
+    """Materialize the IVF index the inline query recomputes, through
+    :mod:`~smartpipeline_spark.indexstore`: a ``cells`` table of corpus
+    vectors PARTITIONED BY their nearest-centroid cell, with the
+    trained centroids in the manifest. This is the write-once form of
+    the 100 TB contract: train on a constant-size sample, assign the
+    corpus in one linear pass, pay the layout once — every later query
+    batch reads only its probed cell directories (verified in tests
+    via the scan's partition filters), not the corpus."""
     cents = _ivf_centroids(e)
-    _ivf_keyed(e, cents).write.mode("overwrite").partitionBy("cell").parquet(path)
-    with open(os.path.join(path, "_centroids.json"), "w") as fh:
-        json.dump(cents.tolist(), fh)
+    indexstore.build(
+        path,
+        {"cells": _ivf_keyed(e, cents)},
+        {"centroids": cents.tolist()},
+        layout={"cells": {"partition": ["cell"]}},
+    )
 
 
 def _ivf_assign_udf(cents: np.ndarray):
@@ -854,36 +842,11 @@ def _ivf_assign_udf(cents: np.ndarray):
     return assign
 
 
-def _maybe_compact_index(spark, path: str, threshold: int | None) -> bool:
-    """Auto-compaction hook shared by the vector-index append APIs:
-    appends accumulate one file per (task x touched cell), so after N
-    appends a probed cell opens ~N files — open cost, not data, starts
-    to dominate the footer-pruned read. When any single directory's
-    data-file count exceeds ``threshold``, run
-    :func:`~smartpipeline_spark.operators.scale.compact` (reader-safe
-    swap; partition layout and the root ``_*.json`` sidecars are
-    preserved) so probes return to ~1 file per cell.
-    ``threshold=None`` disables (external maintenance)."""
-    import os
-    from collections import Counter
-
-    from smartpipeline_spark.operators.scale import _data_files, compact
-
-    if threshold is None:
-        return False
-    per_dir = Counter(os.path.dirname(f) for f in _data_files(path))
-    if not per_dir or max(per_dir.values()) <= threshold:
-        return False
-    compact(spark, path)
-    return True
-
-
 def append_to_ivf_index(
     spark,
     path: str,
     new_vectors: DataFrame,
     concentration_factor: float = 4.0,
-    compact_threshold: int | None = 8,
 ) -> dict:
     """Incremental IVF maintenance: real corpora APPEND, and a rebuild
     per append is the anti-pattern a 100 TB index exists to avoid. New
@@ -902,15 +865,10 @@ def append_to_ivf_index(
     ``concentration_factor`` x the uniform share — the signal to
     retrain + re-layout, which is a new index build, not a mutation.
 
-    Appends accumulate files per cell; once any cell exceeds
-    ``compact_threshold`` data files the standing maintenance job
-    (:func:`_maybe_compact_index`) compacts the layout inline so
+    Each append commits one new segment; past
+    ``indexstore.COMPACT_AFTER`` segments the store compacts inline so
     probed cells keep opening ~1 file."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_centroids.json")) as fh:
-        cents = np.array(json.load(fh))
+    cents = np.array(indexstore.manifest(path)["meta"]["centroids"])
     assign = _ivf_assign_udf(cents)
     assigned = materialize.persist(
         new_vectors.select("vec_id", "emb", assign(F.col("emb")).alias("a"))
@@ -920,11 +878,10 @@ def append_to_ivf_index(
         F.count("*").alias("n"), F.sum("sim").alias("s")
     ).collect()
     n = sum(r["n"] for r in stats)
-    assigned.select("vec_id", "emb", "cell").write.mode("append").partitionBy(
-        "cell"
-    ).parquet(path)
-    materialize.release(assigned)
-    compacted = _maybe_compact_index(spark, path, compact_threshold)
+    try:
+        compacted = indexstore.append(path, {"cells": assigned.select("vec_id", "emb", "cell")})[1]
+    finally:
+        materialize.release(assigned)
     max_frac = (max(r["n"] for r in stats) / n) if n else 0.0
     uniform = 1.0 / len(cents)
     return {
@@ -958,11 +915,8 @@ def query_ivf_index(
     id namespace (ids minted outside the index) must pass
     ``exclude_self=False`` — otherwise a query whose id coincidentally
     equals an unrelated corpus vec_id silently loses that neighbor."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_centroids.json")) as fh:
-        cents = np.array(json.load(fh))
+    man = indexstore.manifest(path)
+    cents = np.array(man["meta"]["centroids"])
     probe = _ivf_cells_udf(cents, nprobe if nprobe is not None else _IVF_NPROBE)
     # materialized: the frame is consumed twice (distinct-cells collect
     # for the partition filter, then the candidate join) — without this
@@ -972,33 +926,21 @@ def query_ivf_index(
         queries.select("query_id", "q_emb", F.explode(probe(F.col("q_emb"))).alias("cell"))
     )
     probed = [r.cell for r in q.select("cell").distinct().collect()]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probed))
+    idx = indexstore.read(spark, path, "cells", man).filter(F.col("cell").isin(probed))
     return _exact_topk(_ivf_candidates(idx, q, exclude_self), k=k)
 
 
 def _ivf_index_for(spark, sf_dir: str) -> str:
-    """The saved IVF layout of a fixture corpus, built once through
-    ``text._fixture_index_for``: valid when the centroids file exists
-    and the layout's total row count equals the embeddings file's
-    footer row count."""
-    import os
-
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    from smartpipeline_spark.functions.text import _fixture_index_for
-
-    src = os.path.join(sf_dir, "embeddings.parquet")
-
-    def _valid(p: str) -> bool:
-        n_src = pq.ParquetFile(src).metadata.num_rows
-        n_idx = ds.dataset(p, format="parquet", partitioning="hive").count_rows()
-        return os.path.exists(os.path.join(p, "_centroids.json")) and n_idx == n_src
-
-    # the kind names the trainer: a layout saved before the 1e-12
-    # centroid snap lives under "ivf" and is never served
-    return _fixture_index_for(
-        "ivf12", src, lambda p: build_ivf_index(_emb(spark, sf_dir), p), _valid
+    """The saved IVF layout of a fixture corpus, built once: valid when
+    the layout's row count equals the embeddings file's footer row
+    count. The kind names the trainer and the format: a layout saved
+    before the 1e-12 centroid snap ("ivf") or before the segment store
+    ("ivf12") is never served."""
+    return indexstore.fixture_index(
+        "ivf12_seg",
+        os.path.join(sf_dir, "embeddings.parquet"),
+        lambda p: build_ivf_index(_emb(spark, sf_dir), p),
+        lambda man: indexstore.rows(man, "cells"),
     )
 
 
@@ -1352,36 +1294,33 @@ def _pq_encode_sim_udf(books: np.ndarray):
 
 
 def build_pq_index(e: DataFrame, path: str, with_cells: bool = False) -> dict:
-    """Materialize the PQ index the inline queries recompute: the
+    """Materialize the PQ index the inline queries recompute, through
+    :mod:`~smartpipeline_spark.indexstore`: a ``codes`` table of the
     encoded corpus (vec_id, codes — m bytes of scoring payload per
-    row) written once, plus the trained codebooks as
-    ``_codebooks.json`` in the index root. ``with_cells=True`` builds
-    the composed IVFPQ layout instead (the FAISS IVFADC architecture):
-    rows additionally carry their nearest coarse centroid and the
-    parquet is PARTITIONED BY cell (with ``_centroids.json``), so a
-    query batch's scan opens only its probed cell directories.
+    row) written once, with the trained codebooks in the manifest.
+    ``with_cells=True`` builds the composed IVFPQ layout instead (the
+    FAISS IVFADC architecture): rows additionally carry their nearest
+    coarse centroid, the table is PARTITIONED BY cell and the manifest
+    holds the centroids too, so a query batch's scan opens only its
+    probed cell directories.
 
     This is the write-once form of the PQ 100 TB contract, mirroring
     :func:`build_ivf_index`: codebooks (and centroids) train on a
     constant-size deterministic sample, the corpus is encoded in one
     linear pass, and every later query reads m-byte codes instead of
-    float vectors. ``_pq_fit.json`` records the training sample's mean
-    reconstruction cosine — the fit reference the append path's drift
-    report compares against. Returns the recorded fit stats."""
-    import json
-    import os
-
+    float vectors. The manifest's ``pq_fit`` records the training
+    sample's mean reconstruction cosine — the fit reference the append
+    path's drift report compares against. Returns the recorded fit
+    stats."""
     books = _pq_codebooks(e)
     enc = _pq_encode_udf(books)
+    meta = {"codebooks": books.tolist()}
     if with_cells:
         cents = _ivf_centroids(e)
-        _ivf_keyed(e, cents).select(
-            "vec_id", "cell", enc(F.col("emb")).alias("codes")
-        ).write.mode("overwrite").partitionBy("cell").parquet(path)
+        meta["centroids"] = cents.tolist()
+        codes = _ivf_keyed(e, cents).select("vec_id", "cell", enc(F.col("emb")).alias("codes"))
     else:
-        e.select("vec_id", enc(F.col("emb")).alias("codes")).write.mode(
-            "overwrite"
-        ).parquet(path)
+        codes = e.select("vec_id", enc(F.col("emb")).alias("codes"))
     # fit reference on a HELD-OUT deterministic stride (disjoint from
     # the % 7 == 0 training sample): k-means with k near the sample
     # size memorizes training points (recon sim -> 1.0 at small
@@ -1399,13 +1338,12 @@ def build_pq_index(e: DataFrame, path: str, with_cells: bool = False) -> dict:
     m = np.array([r["emb"] for r in sample], dtype=np.float64)
     m /= np.linalg.norm(m, axis=1, keepdims=True) + 1e-12
     stats = {"mean_recon_sim": float(_pq_recon_sims(m, books).mean())}
-    with open(os.path.join(path, "_codebooks.json"), "w") as fh:
-        json.dump(books.tolist(), fh)
-    if with_cells:
-        with open(os.path.join(path, "_centroids.json"), "w") as fh:
-            json.dump(cents.tolist(), fh)
-    with open(os.path.join(path, "_pq_fit.json"), "w") as fh:
-        json.dump(stats, fh)
+    indexstore.build(
+        path,
+        {"codes": codes},
+        {**meta, "pq_fit": stats},
+        layout={"codes": {"partition": ["cell"] if with_cells else []}},
+    )
     return stats
 
 
@@ -1415,7 +1353,6 @@ def append_to_pq_index(
     new_vectors: DataFrame,
     fit_drop_threshold: float = 0.05,
     concentration_factor: float = 4.0,
-    compact_threshold: int | None = 8,
 ) -> dict:
     """Incremental PQ maintenance, mirroring :func:`append_to_ivf_index`:
     new vectors are encoded with the SAVED codebooks (existing codes
@@ -1428,18 +1365,10 @@ def append_to_pq_index(
     concentration signal fires too (hottest cell >
     ``concentration_factor`` x uniform share). Either trips
     ``retrain_recommended`` — the signal for a new build, not a
-    mutation. File accumulation is handled like the IVF side: any
-    directory exceeding ``compact_threshold`` data files triggers the
-    inline reader-safe compaction (:func:`_maybe_compact_index`)."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_codebooks.json")) as fh:
-        books = np.array(json.load(fh))
-    with open(os.path.join(path, "_pq_fit.json")) as fh:
-        fit = json.load(fh)
-    cents_path = os.path.join(path, "_centroids.json")
-    has_cells = os.path.exists(cents_path)
+    mutation. Segments accumulate and compact like the IVF side."""
+    meta = indexstore.manifest(path)["meta"]
+    books, fit = np.array(meta["codebooks"]), meta["pq_fit"]
+    has_cells = "centroids" in meta
     enc = _pq_encode_sim_udf(books)
     assigned = new_vectors.select(
         "vec_id", "emb", enc(F.col("emb")).alias("p")
@@ -1447,8 +1376,7 @@ def append_to_pq_index(
         "vec_id", "emb", F.col("p.codes").alias("codes"), F.col("p.sim").alias("sim")
     )
     if has_cells:
-        with open(cents_path) as fh:
-            cents = np.array(json.load(fh))
+        cents = np.array(meta["centroids"])
         cell = _ivf_assign_udf(cents)
         assigned = assigned.withColumn("cell", cell(F.col("emb")).getField("cell"))
     assigned = materialize.persist(assigned)
@@ -1457,17 +1385,17 @@ def append_to_pq_index(
             F.count("*").alias("n"), F.sum("sim").alias("s")
         ).collect()
         n = sum(r["n"] for r in stats)
-        assigned.select("vec_id", "cell", "codes").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(path)
+        codes = assigned.select("vec_id", "cell", "codes")
     else:
         stats = assigned.agg(
             F.count("*").alias("n"), F.sum("sim").alias("s")
         ).collect()
         n = stats[0]["n"]
-        assigned.select("vec_id", "codes").write.mode("append").parquet(path)
-    materialize.release(assigned)
-    compacted = _maybe_compact_index(spark, path, compact_threshold)
+        codes = assigned.select("vec_id", "codes")
+    try:
+        compacted = indexstore.append(path, {"codes": codes})[1]
+    finally:
+        materialize.release(assigned)
     mean_sim = (sum(r["s"] for r in stats) / n) if n else None
     fit_drop = (fit["mean_recon_sim"] - mean_sim) if n else 0.0
     max_frac = (
@@ -1515,19 +1443,14 @@ def query_pq_index(
     EXTERNAL id namespace must pass ``exclude_self=False`` — otherwise
     a query id coincidentally colliding with an unrelated corpus
     vec_id silently loses that neighbor."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_codebooks.json")) as fh:
-        books = np.array(json.load(fh))
+    man = indexstore.manifest(path)
+    books = np.array(man["meta"]["codebooks"])
     qids, qm = _query_matrix(queries, "query_id", "q_emb")
     tables = _adc_tables(qm, books)
-    idx = spark.read.parquet(path)
+    idx = indexstore.read(spark, path, "codes", man)
     probed_sets = None
-    cents_path = os.path.join(path, "_centroids.json")
-    if os.path.exists(cents_path):
-        with open(cents_path) as fh:
-            cents = np.array(json.load(fh))
+    if "centroids" in man["meta"]:
+        cents = np.array(man["meta"]["centroids"])
         probed_sets, all_probed = _probe_cells(
             qm, qids, cents, nprobe if nprobe is not None else _IVF_NPROBE
         )
@@ -2283,24 +2206,25 @@ def _hnsw_n_shards(e: DataFrame) -> int:
 
 
 def build_hnsw_index(e: DataFrame, path: str) -> None:
-    """Materialize the sharded-HNSW layout: ``path/graphs`` holds one
-    row per shard graph (ids + normalized vectors + adjacency —
+    """Materialize the sharded-HNSW layout through
+    :mod:`~smartpipeline_spark.indexstore`: the ``graphs`` table holds
+    one row per shard graph (ids + normalized vectors + adjacency —
     self-contained, a query batch never touches the raw corpus),
-    ``path/vectors`` the (vec_id, emb) table the exact re-score tail
-    joins back to. Write-once: graphs are immutable; growth appends
-    NEW shards (append_to_hnsw_index), never mutates built ones —
-    the same never-mutate contract as the IVF/PQ indexes."""
-    import os
-
+    ``vectors`` the (vec_id, emb) table the exact re-score tail joins
+    back to, and the manifest the next free shard id. Write-once:
+    graphs are immutable; growth appends NEW shards
+    (append_to_hnsw_index), never mutates built ones — the same
+    never-mutate contract as the IVF/PQ indexes."""
     n_shards = _hnsw_n_shards(e)
     graphs = (
         _spread_groups(_hnsw_sharded(e, n_shards), n_shards, "shard")
         .groupBy("shard")
         .applyInPandas(_hnsw_shard_kernel, _HNSW_GRAPH_SCHEMA)
     )
-    graphs.write.mode("overwrite").parquet(os.path.join(path, "graphs"))
-    e.select("vec_id", "emb").write.mode("overwrite").parquet(
-        os.path.join(path, "vectors")
+    indexstore.build(
+        path,
+        {"graphs": graphs, "vectors": e.select("vec_id", "emb")},
+        {"next_shard": n_shards},
     )
 
 
@@ -2310,16 +2234,10 @@ def append_to_hnsw_index(spark, path: str, new_vectors: DataFrame) -> dict:
     mean a rebuild — new shards preserve the write-once contract; a
     compaction that rebuilds many small shards into fewer large ones
     is the maintenance move, same as parquet small-file compaction).
-    Returns {"new_shards": n, "n_appended": rows}."""
-    import os
-
-    graphs_path = os.path.join(path, "graphs")
-    base = (
-        spark.read.parquet(graphs_path)
-        .agg(F.max("shard").alias("m"))
-        .collect()[0]["m"]
-        + 1
-    )
+    Graphs and vectors publish in one manifest commit, so a reader
+    never sees one without the other. Returns {"new_shards": n,
+    "n_appended": rows}."""
+    base = indexstore.manifest(path)["meta"]["next_shard"]
     n_shards = _hnsw_n_shards(new_vectors)
     n_rows = new_vectors.count()
     graphs = (
@@ -2329,9 +2247,10 @@ def append_to_hnsw_index(spark, path: str, new_vectors: DataFrame) -> dict:
         .groupBy("shard")
         .applyInPandas(_hnsw_shard_kernel, _HNSW_GRAPH_SCHEMA)
     )
-    graphs.write.mode("append").parquet(graphs_path)
-    new_vectors.select("vec_id", "emb").write.mode("append").parquet(
-        os.path.join(path, "vectors")
+    indexstore.append(
+        path,
+        {"graphs": graphs, "vectors": new_vectors.select("vec_id", "emb")},
+        {"next_shard": base + n_shards},
     )
     return {"new_shards": n_shards, "n_appended": n_rows}
 
@@ -2339,11 +2258,10 @@ def append_to_hnsw_index(spark, path: str, new_vectors: DataFrame) -> dict:
 def query_hnsw_index(spark, path: str, q: DataFrame, k: int = K_NEIGHBORS) -> DataFrame:
     """Query the saved layout: each graph row searches the broadcast
     query batch locally (one kernel call per shard — no graph ever
-    crosses an executor boundary), candidates join back to
-    ``path/vectors`` for the family's shared exact re-score top-k.
-    ``q``: (query_id, q_emb) — the query batch, bounded by contract."""
-    import os
-
+    crosses an executor boundary), candidates join back to the
+    ``vectors`` table of the same manifest snapshot for the family's
+    shared exact re-score top-k. ``q``: (query_id, q_emb) — the query
+    batch, bounded by contract."""
     import pandas as pd
 
     q_rows = q.collect()  # bounded BY CONTRACT: the query batch only
@@ -2374,29 +2292,16 @@ def query_hnsw_index(spark, path: str, q: DataFrame, k: int = K_NEIGHBORS) -> Da
                         out_n.append(nid)
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
 
-    graphs = spark.read.parquet(os.path.join(path, "graphs"))
+    man = indexstore.manifest(path)
+    graphs = indexstore.read(spark, path, "graphs", man)
     cand_pairs = graphs.mapInPandas(kernel, "query_id long, neighbor_id long")
-    vectors = spark.read.parquet(os.path.join(path, "vectors"))
+    vectors = indexstore.read(spark, path, "vectors", man)
     qdf = q.select("query_id", F.col("q_emb").cast("array<double>").alias("q_emb"))
     cands = cand_pairs.join(
         vectors.select(F.col("vec_id").alias("neighbor_id"), "emb"),
         "neighbor_id",
     ).join(F.broadcast(qdf), "query_id")
-    from pyspark.sql.window import Window
-
-    scored = cands.select(
-        "query_id",
-        "neighbor_id",
-        half_up(cosine_expr(F.col("q_emb"), F.col("emb")), 4).alias("score"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return _exact_topk(cands, k=k)
 
 
 # ------------------------------------------- int8 embedding quantization

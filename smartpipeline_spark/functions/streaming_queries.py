@@ -78,15 +78,16 @@ def _staged_event_stream(spark, sf_dir):
     return _event_stream(spark, sf_dir, stage)
 
 
-def _run_to_memory(spark, agg, sink_name: str) -> DataFrame:
-    """Execute a streaming aggregation to completion (availableNow,
-    complete mode so the final trigger emits every window) into a
-    memory sink and return its table."""
+def _run_to_memory(spark, stream, sink_name: str, mode: str = "complete") -> DataFrame:
+    """Drain ``stream`` to completion (availableNow) into the memory
+    sink ``sink_name`` in output ``mode`` — complete by default, so an
+    aggregation's final trigger emits every window — and return the
+    sink's table. A still-running query of the same name is stopped
+    first."""
     for q in spark.streams.active:
         if q.name == sink_name:
             q.stop()
-    q = start_memory_sink(agg, sink_name, "complete")
-    q.awaitTermination()
+    start_memory_sink(stream, sink_name, mode).awaitTermination()
     return spark.table(sink_name)
 
 
@@ -198,15 +199,10 @@ def ext_stream_join(spark, sf_dir) -> DataFrame:
     joined = interval_join(
         clicks, views, key="user_id", ts_col="ts", within="10 minutes"
     ).select("l.click_id", "r.view_id")
-    for q in spark.streams.active:
-        if q.name == _JOIN_SINK:
-            q.stop()
     # a stream-stream join commits FOUR state stores per partition per
     # trigger — the widest fixed cost in the streaming family (see the
     # width table in streaming.start_query's rule)
-    q = start_memory_sink(joined, _JOIN_SINK, "append")
-    q.awaitTermination()
-    return spark.table(_JOIN_SINK)
+    return _run_to_memory(spark, joined, _JOIN_SINK, "append")
 
 
 @ext_query(
@@ -230,12 +226,7 @@ def ext_stream_dedup(spark, sf_dir) -> DataFrame:
     deduped = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    for q in spark.streams.active:
-        if q.name == _DEDUP_SINK:
-            q.stop()
-    q = start_memory_sink(deduped, _DEDUP_SINK, "append")
-    q.awaitTermination()
-    return spark.table(_DEDUP_SINK)
+    return _run_to_memory(spark, deduped, _DEDUP_SINK, "append")
 
 
 @ext_query(
@@ -492,12 +483,9 @@ def ext_stream_outer_join(spark, sf_dir) -> DataFrame:
         ),
         "leftOuter",
     ).select("l.click_id", "r.view_id")
-    for q in spark.streams.active:
-        if q.name == _OUTER_JOIN_SINK:
-            q.stop()
-    q = start_memory_sink(joined, _OUTER_JOIN_SINK, "append")
-    q.awaitTermination()
-    return spark.table(_OUTER_JOIN_SINK).filter(F.col("click_id") >= 0)
+    return _run_to_memory(spark, joined, _OUTER_JOIN_SINK, "append").filter(
+        F.col("click_id") >= 0
+    )
 
 
 # ------------------------------- stream-static enrichment join (class 8)
@@ -539,12 +527,7 @@ def ext_stream_enrich(spark, sf_dir) -> DataFrame:
         F.col("c_mktsegment").alias("mktsegment"),
         F.col("c_name").alias("cust_name"),
     )
-    for q in spark.streams.active:
-        if q.name == _ENRICH_SINK:
-            q.stop()
-    q = start_memory_sink(joined, _ENRICH_SINK, "append")
-    q.awaitTermination()
-    return spark.table(_ENRICH_SINK)
+    return _run_to_memory(spark, joined, _ENRICH_SINK, "append")
 
 
 # ----------------------- custom stateful operator (class 9, arbitrary state)
@@ -578,13 +561,8 @@ def ext_stream_stateful(spark, sf_dir) -> DataFrame:
 
     stream = _staged_event_stream(spark, sf_dir)
     counts = stateful_user_counts(stream, key="user_id")
-    for q in spark.streams.active:
-        if q.name == _STATEFUL_SINK:
-            q.stop()
-    q = start_memory_sink(counts, _STATEFUL_SINK, "update")
-    q.awaitTermination()
     return (
-        spark.table(_STATEFUL_SINK)
+        _run_to_memory(spark, counts, _STATEFUL_SINK, "update")
         .groupBy("user_id")
         .agg(F.max("n_events").cast("long").alias("n_events"))
     )
@@ -619,9 +597,6 @@ def ext_stream_stateful_tws(spark, sf_dir) -> DataFrame:
 
     stream = _staged_event_stream(spark, sf_dir)
     counts = stateful_user_counts_tws(stream, key="user_id")
-    for q in spark.streams.active:
-        if q.name == _STATEFUL_TWS_SINK:
-            q.stop()
     prov_key = "spark.sql.streaming.stateStore.providerClass"
     prev = spark.conf.get(prov_key, None)
     spark.conf.set(
@@ -638,15 +613,13 @@ def ext_stream_stateful_tws(spark, sf_dir) -> DataFrame:
     # leaves Python stateful operators there, since their state stage
     # does per-row Python work.
     try:
-        q = start_memory_sink(counts, _STATEFUL_TWS_SINK, "update")
-        q.awaitTermination()
+        table = _run_to_memory(spark, counts, _STATEFUL_TWS_SINK, "update")
     finally:
         if prev is None:
             spark.conf.unset(prov_key)
         else:
             spark.conf.set(prov_key, prev)
     return (
-        spark.table(_STATEFUL_TWS_SINK)
-        .groupBy("user_id")
+        table.groupBy("user_id")
         .agg(F.max("n_events").cast("long").alias("n_events"))
     )

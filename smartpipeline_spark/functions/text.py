@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from smartpipeline_spark import materialize, sources
+from smartpipeline_spark import indexstore, materialize, sources
 from smartpipeline_spark.functions import ext_query
 from smartpipeline_spark.rounding import half_up, np_half_up
 
@@ -590,59 +590,6 @@ def _bm25_postings(docs: DataFrame, partitions: int | None = None) -> DataFrame:
     return tf.select("w", "doc_id", "tf", dl.alias("dl"))
 
 
-def _bm25_manifest(path: str) -> dict:
-    """Load the index manifest (``_stats.json``). Pre-r12 layouts carry
-    only the two stats integers; normalize them to the manifest form by
-    adopting the flat ``postings`` dir as the sole segment."""
-    import json
-    import os
-
-    with open(os.path.join(path, "_stats.json")) as fh:
-        stats = json.load(fh)
-    if "segments" not in stats:
-        stats["segments"] = ["postings"]
-    return stats
-
-
-def _bm25_commit(path: str, stats: dict) -> None:
-    """Publish a new index state — THE single commit point. The manifest
-    (corpus stats + segment list) is written to a private temp file,
-    fsynced, and ``os.replace``d over ``_stats.json``: readers resolve
-    the segment list through the manifest, so at every instant a reader
-    sees exactly the old state or the new one, never a torn mix (the
-    r11-verdict reader-atomicity defect: postings used to become
-    visible before the stats rolled forward)."""
-    import json
-    import os
-    import uuid
-
-    tmp = os.path.join(path, f"._stats-{os.getpid()}-{uuid.uuid4().hex[:8]}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(stats, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(path, "_stats.json"))
-
-
-def _bm25_segment_stats(spark, seg_path: str) -> tuple[int, int, int]:
-    """(n_docs, sum_dl, postings_rows) derived from a written segment's
-    own postings — no second pass over the raw corpus. ``sum_dl`` is
-    SUM(tf) (total word occurrences) and ``n_docs`` is the distinct
-    doc count; both EXACT integers, identical to aggregating the
-    exploded words directly (every non-null document yields >= 1
-    posting — an empty string splits to the single token '')."""
-    row = (
-        spark.read.parquet(seg_path)
-        .agg(
-            F.count_distinct("doc_id").alias("n_docs"),
-            F.sum("tf").alias("sum_dl"),
-            F.count("*").alias("rows"),
-        )
-        .collect()[0]
-    )
-    return int(row["n_docs"] or 0), int(row["sum_dl"] or 0), int(row["rows"])
-
-
 def _bm25_word_estimate(docs: DataFrame) -> int:
     """Word-count estimate (upper bound on postings rows) — the sizing
     input for both the segment file count and the build parallelism.
@@ -661,11 +608,8 @@ def _bm25_word_estimate(docs: DataFrame) -> int:
     return sample_first_estimate(docs, ["doc_id"], lambda f: f.select(wc.alias("e")))
 
 
-def _bm25_new_segment(docs: DataFrame, path: str, num_files) -> str:
-    """Write one immutable sort-clustered postings segment under a
-    fresh name. Invisible to readers until a manifest commit references
-    it; a crash here leaves only an orphan dir that
-    :func:`compact_bm25_index` garbage-collects.
+def _bm25_new_segment(docs: DataFrame, num_files) -> tuple[DataFrame, int]:
+    """The postings of ``docs`` and the file count of their segment.
 
     ``num_files="auto"`` runs the one-pass word estimate and derives
     BOTH knobs from it: the segment file count (~128 MB per sorted
@@ -674,13 +618,9 @@ def _bm25_new_segment(docs: DataFrame, path: str, num_files) -> str:
     explicit widths for the index build's two corpus-wide exchanges, so
     AQE's compressed-bytes coalescing can't overshoot executor memory
     at corpus scale while fixture-scale plans stay untouched."""
-    import os
-    import uuid
-
     from smartpipeline_spark.operators.scale import (
         files_for_rows,
         resolve_exchange_width,
-        write_sorted,
     )
 
     width = None
@@ -690,11 +630,37 @@ def _bm25_new_segment(docs: DataFrame, path: str, num_files) -> str:
         width = resolve_exchange_width(
             "auto", docs.sparkSession, lambda: words, row_bytes=120
         )
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
-    write_sorted(
-        _bm25_postings(docs, width), os.path.join(path, seg), "w", int(num_files)
-    )
-    return seg
+    return _bm25_postings(docs, width), int(num_files)
+
+
+def _bm25_stats(new: dict, old: dict) -> dict:
+    """The corpus stats ``old`` rolled forward by a new postings
+    segment, derived from the segment's own postings — no second pass
+    over the raw corpus. ``sum_dl`` is SUM(tf) (total word occurrences)
+    and ``n_docs`` the distinct doc count; both EXACT integers,
+    identical to aggregating the exploded words directly (every
+    non-null document yields >= 1 posting — an empty string splits to
+    the single token '')."""
+    n_docs = sum_dl = 0
+    if "postings" in new:
+        row = (
+            new["postings"]
+            .agg(F.count_distinct("doc_id").alias("n"), F.sum("tf").alias("s"))
+            .collect()[0]
+        )
+        n_docs, sum_dl = int(row["n"] or 0), int(row["s"] or 0)
+    return {
+        "n_docs": old.get("n_docs", 0) + n_docs,
+        "sum_dl": old.get("sum_dl", 0) + sum_dl,
+    }
+
+
+def _bm25_report(man: dict) -> dict:
+    return {
+        **man["meta"],
+        "postings_rows": indexstore.rows(man, "postings"),
+        "segments": indexstore.segments(man, "postings"),
+    }
 
 
 def build_bm25_index(docs: DataFrame, path: str, num_files: int | str = "auto") -> dict:
@@ -703,122 +669,51 @@ def build_bm25_index(docs: DataFrame, path: str, num_files: int | str = "auto") 
     vector layouts): pay the corpus pass once, then every query batch
     reads only the probed terms' postings.
 
-    Layout: immutable SEGMENT dirs (``path/seg-*``), each holding
-    (w, doc_id, tf, dl) written SORT-CLUSTERED on ``w``
-    (``write_sorted`` — disjoint per-file term ranges within a
-    segment), so a ``w IN (...)`` probe prunes all but ~one file per
-    term PER SEGMENT at the parquet-footer level before any IO.
-    ``path/_stats.json`` is the manifest and single atomic commit
-    point: the segment list plus the corpus constants the scorer needs
-    (``n_docs``, ``sum_dl`` — both EXACT integers, so
-    ``avgdl = sum_dl / n_docs`` reproduces Spark's in-plan AVG
-    bit-for-bit and the indexed scorer stays bit-identical to
-    :func:`bm25_scores`) and ``postings_rows`` (torn-layout detector
-    for ``query_bm25_index(verify=True)``). Term document frequencies
-    are NOT materialized: a query derives df for its probed terms from
-    their own postings (always correct after appends). Returns the
-    stats dict."""
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    seg = _bm25_new_segment(docs, path, num_files)
-    n_docs, sum_dl, rows = _bm25_segment_stats(docs.sparkSession, os.path.join(path, seg))
-    stats = {
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "postings_rows": rows,
-        "segments": [seg],
-    }
-    _bm25_commit(path, stats)
-    return stats
+    Layout (:mod:`~smartpipeline_spark.indexstore`): one ``postings``
+    table of immutable segments, each holding (w, doc_id, tf, dl)
+    written SORT-CLUSTERED on ``w`` (``write_sorted`` — disjoint
+    per-file term ranges within a segment), so a ``w IN (...)`` probe
+    prunes all but ~one file per term PER SEGMENT at the
+    parquet-footer level before any IO. The manifest carries the
+    corpus constants the scorer needs (``n_docs``, ``sum_dl`` — both
+    EXACT integers, so ``avgdl = sum_dl / n_docs`` reproduces Spark's
+    in-plan AVG bit-for-bit and the indexed scorer stays bit-identical
+    to :func:`bm25_scores`). Term document frequencies are NOT
+    materialized: a query derives df for its probed terms from their
+    own postings (always correct after appends). Returns the stats
+    (``n_docs``, ``sum_dl``, ``postings_rows``, ``segments``)."""
+    postings, n = _bm25_new_segment(docs, num_files)
+    return _bm25_report(
+        indexstore.build(
+            path,
+            {"postings": postings},
+            _bm25_stats,
+            layout={"postings": {"sort": "w"}},
+            files={"postings": n},
+        )
+    )
 
 
-def append_to_bm25_index(
-    docs_new: DataFrame,
-    path: str,
-    num_files: int | str = "auto",
-    compact_after: int | None = 16,
-) -> dict:
+def append_to_bm25_index(docs_new: DataFrame, path: str, num_files: int | str = "auto") -> dict:
     """Incremental maintenance, reader-atomic: the new batch's postings
     land as a NEW immutable segment (internally w-sorted, so footer
-    pruning still skips its files per term), then ONE
-    ``os.replace`` of the manifest publishes the segment and the
-    rolled-forward exact integer stats together. A concurrent
-    :func:`query_bm25_index` therefore scores against exactly the old
-    index or exactly the new one — never enlarged postings with stale
-    ``n_docs``/``sum_dl`` — and a crash between the two phases leaves
-    the published index untouched (the orphan segment is invisible and
-    reaped at the next compaction). (build; append) is row-equal to
-    build-on-concat and the indexed scorer stays exact — pinned in
-    tests.
-
-    Segments accumulate per append; when their count exceeds
-    ``compact_after`` the standing maintenance job
-    (:func:`compact_bm25_index`, itself a reader-safe manifest flip)
-    runs inline so probe cost stays ~1 file per term instead of one
-    per append. Pass ``compact_after=None`` to manage compaction
-    externally. Assumes ``docs_new`` carries NEW doc_ids (the dedup
-    contract upstream); re-appending an existing document would double
-    its postings, same as every append-only index here."""
-    import os
-
-    stats = _bm25_manifest(path)
-    seg = _bm25_new_segment(docs_new, path, num_files)
-    n_docs, sum_dl, rows = _bm25_segment_stats(
-        docs_new.sparkSession, os.path.join(path, seg)
+    pruning still skips its files per term), and the store's one
+    manifest commit publishes the segment and the rolled-forward exact
+    integer stats together. A concurrent :func:`query_bm25_index`
+    therefore scores against exactly the old index or exactly the new
+    one, and a crash before the commit leaves the published index
+    untouched. (build; append) is row-equal to build-on-concat and the
+    indexed scorer stays exact — pinned in tests. Past
+    ``indexstore.COMPACT_AFTER`` segments the append compacts inline,
+    so probe cost stays ~1 file per term. Assumes ``docs_new`` carries
+    NEW doc_ids (the dedup contract upstream); re-appending an
+    existing document would double its postings, same as every
+    append-only index here."""
+    postings, n = _bm25_new_segment(docs_new, num_files)
+    man, _ = indexstore.append(
+        path, {"postings": postings}, _bm25_stats, files={"postings": n}
     )
-    stats["n_docs"] += n_docs
-    stats["sum_dl"] += sum_dl
-    stats["postings_rows"] = stats.get("postings_rows", 0) + rows
-    stats["segments"] = list(stats["segments"]) + [seg]
-    _bm25_commit(path, stats)
-    if compact_after is not None and len(stats["segments"]) > compact_after:
-        compact_bm25_index(docs_new.sparkSession, path)
-        stats = _bm25_manifest(path)
-    return stats
-
-
-def compact_bm25_index(spark, path: str, num_files: int | str = "auto") -> dict:
-    """Merge all live segments into one freshly sort-clustered segment
-    and flip the manifest — the standing maintenance job for the
-    append-accumulating layout, reader-safe end to end: readers keep
-    resolving the old manifest (old segments stay on disk) until the
-    single ``os.replace`` publishes the merged segment, after which the
-    replaced segments AND any orphans from crashed appends are
-    garbage-collected. On a real cluster, delay the GC by a retention
-    window longer than any in-flight query (the Delta VACUUM contract);
-    single-writer fixtures reap immediately. Stats are carried over
-    unchanged (postings rows are order-free). Returns a before/after
-    report."""
-    import os
-    import shutil
-    import uuid
-
-    from smartpipeline_spark.operators.scale import files_for_rows, write_sorted
-
-    stats = _bm25_manifest(path)
-    before = list(stats["segments"])
-    merged = spark.read.parquet(*[os.path.join(path, s) for s in before])
-    if num_files == "auto":
-        # the manifest already knows the exact postings row count —
-        # size ~128 MB/file with no estimate job at all
-        num_files = files_for_rows(stats.get("postings_rows", 1))
-    seg = f"seg-{uuid.uuid4().hex[:12]}"
-    write_sorted(merged, os.path.join(path, seg), "w", num_files)
-    stats["segments"] = [seg]
-    _bm25_commit(path, stats)
-    live = {seg}
-    reaped = 0
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if os.path.isdir(full) and (d.startswith("seg-") or d == "postings") and d not in live:
-            shutil.rmtree(full, ignore_errors=True)
-            reaped += 1
-    return {
-        "segments_before": len(before),
-        "segments_after": 1,
-        "dirs_reaped": reaped,
-    }
+    return _bm25_report(man)
 
 
 def query_bm25_index(
@@ -834,33 +729,14 @@ def query_bm25_index(
     :func:`bm25_scores` arithmetic (fixed-order per-term sum), and
     optionally top-k via TakeOrderedAndProject. Corpus cost at query
     time: ZERO rows outside the probed postings. ``verify=True``
-    additionally sums the segments' parquet-footer row counts against
-    the manifest's ``postings_rows`` (torn-layout detector — costs one
-    footer read per file, skip it in per-query hot loops)."""
-    import os
-
+    additionally runs the store's torn-layout check
+    (:func:`~smartpipeline_spark.indexstore.verify` — one footer read
+    per file, skip it in per-query hot loops)."""
     terms = list(terms)
-    stats = _bm25_manifest(path)
-    seg_paths = [os.path.join(path, s) for s in stats["segments"]]
-    if verify and "postings_rows" in stats:
-        import pyarrow.parquet as pq
-
-        from smartpipeline_spark.operators.scale import _data_files
-
-        actual = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for sp in seg_paths
-            for f in _data_files(sp)
-            if f.endswith(".parquet")
-        )
-        if actual != stats["postings_rows"]:
-            raise ValueError(
-                f"bm25 index at {path} is torn: manifest says "
-                f"{stats['postings_rows']} postings, segments hold {actual}"
-            )
-    n = stats["n_docs"]
-    avgdl = stats["sum_dl"] / stats["n_docs"]
-    p = spark.read.parquet(*seg_paths).filter(F.col("w").isin(terms))
+    man = indexstore.verify(path) if verify else indexstore.manifest(path)
+    n = man["meta"]["n_docs"]
+    avgdl = man["meta"]["sum_dl"] / n
+    p = indexstore.read(spark, path, "postings", man).filter(F.col("w").isin(terms))
     dfreq = p.groupBy("w").agg(F.count_distinct("doc_id").alias("df"))
     k1, b = F.lit(BM25_K1), F.lit(BM25_B)
     idf = F.log((F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
@@ -887,78 +763,17 @@ def query_bm25_index(
     return out
 
 
-_FIXTURE_IDX_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _fixture_index_for(kind: str, src: str, build, valid) -> str:
-    """Build-once cache of an index saved from one fixture file.
-
-    Keyed by ``src``'s :func:`~smartpipeline_spark.sources.file_signature`
-    (path, inode, size, mtime; the path alone when ``src`` is not a
-    regular local file), so a testdata regeneration rebuilds instead of
-    serving a stale layout, and
-    CONTENT-CHECKED on reuse: ``valid(path)`` (an exception counts as
-    False) must accept a memoized or on-disk copy, so a poisoned, torn
-    or stale layout rebuilds instead of being served silently.
-    ``build(path)`` writes a fresh index to ``path``.
-
-    The cache root is per-user and 0700 (:func:`~smartpipeline_spark.
-    sources.scratch_root`)."""
-    import hashlib
-    import os
-    import shutil
-    import uuid
-
-    def _ok(p: str) -> bool:
-        try:
-            return bool(valid(p))
-        except Exception:
-            return False
-
-    sig = sources.file_signature(src) or (src,)
-    tag = hashlib.md5(repr(sig).encode()).hexdigest()[:16]
-    cached = _FIXTURE_IDX_CACHE.get((kind, tag))
-    if cached and _ok(cached):
-        return cached
-    path = os.path.join(sources.scratch_root(f"{kind}_idx"), tag)
-    if not _ok(path):
-        # concurrent sessions (driver + sweep) may race to build the
-        # same tag: build into a private dir, publish with one atomic
-        # rename; the loser keeps the winner's copy — unless the
-        # winner's copy fails the content check (pre-existing garbage
-        # at the tag path), in which case publish under a fresh name.
-        staging = f"{path}.build-{os.getpid()}"
-        try:
-            build(staging)
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        try:
-            os.rename(staging, path)
-        except OSError:
-            if _ok(path):
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                path = f"{path}-{uuid.uuid4().hex[:8]}"
-                os.rename(staging, path)
-    _FIXTURE_IDX_CACHE[(kind, tag)] = path
-    return path
-
-
 def _bm25_index_for(spark, sf_dir: str) -> str:
     """The saved BM25 index of a fixture corpus, built once: valid
     when the manifest's exact ``n_docs`` equals the documents file's
     footer row count."""
     import os
 
-    import pyarrow.parquet as pq
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    return _fixture_index_for(
-        "bm25",
-        src,
+    return indexstore.fixture_index(
+        "bm25_seg",
+        os.path.join(sf_dir, "documents.parquet"),
         lambda p: build_bm25_index(sources.table(spark, "documents", sf_dir), p),
-        lambda p: _bm25_manifest(p)["n_docs"] == pq.ParquetFile(src).metadata.num_rows,
+        lambda man: man["meta"]["n_docs"],
     )
 
 

@@ -795,17 +795,12 @@ def compact(
     are re-applied on write and rows are first clustered by them so
     directory pruning survives compaction and each partition lands in
     ~one file instead of one per task. Finishes with the crash-safe
-    directory swap of :func:`_atomic_swap`. Root-level ``_*.json``
-    metadata sidecars (a saved index's ``_centroids.json`` /
-    ``_codebooks.json`` / fit stats) are carried across the swap —
-    they describe the SAME rows, and losing them would brick the
-    index the compaction is maintaining. Returns before/after file
+    directory swap of :func:`_atomic_swap`. Returns before/after file
     counts. On object stores, point the temp at the same bucket so
     the final rename is a metadata op."""
     import math
     import os
     import re
-    import shutil
 
     before = _data_files(path)
     total_bytes = sum(os.path.getsize(f) for f in before)
@@ -829,11 +824,6 @@ def compact(
     else:
         writer = df.coalesce(n_out).write.mode("overwrite")
     writer.format(fmt).save(tmp)
-    for f in os.listdir(path):
-        if f.startswith("_") and f.endswith(".json") and os.path.isfile(
-            os.path.join(path, f)
-        ):
-            shutil.copy2(os.path.join(path, f), os.path.join(tmp, f))
     _atomic_swap(tmp, path)
     return {"files_before": len(before), "files_after": len(_data_files(path)), "bytes": total_bytes}
 

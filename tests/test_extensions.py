@@ -288,8 +288,7 @@ def test_hnsw_append_adds_disjoint_shards_and_finds_planted_twin(
     """Appending writes NEW shard graphs (disjoint id range, built
     ones immutable byte-for-byte) and appended vectors are findable:
     a planted near-duplicate of query 0 lands at rank 1."""
-    import os
-
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.similarity import (
         N_QUERIES,
         _emb,
@@ -303,7 +302,7 @@ def test_hnsw_append_adds_disjoint_shards_and_finds_planted_twin(
     build_hnsw_index(e, path)
     graphs_before = {
         r["shard"]: (r["entry"], tuple(r["ids"]))
-        for r in spark.read.parquet(os.path.join(path, "graphs")).collect()
+        for r in indexstore.read(spark, path, "graphs").collect()
     }
     q0 = e.filter(F.col("vec_id") == 0).collect()[0]["emb"]
     twin = [v + (0.001 if i == 0 else 0.0) for i, v in enumerate(q0)]
@@ -326,7 +325,7 @@ def test_hnsw_append_adds_disjoint_shards_and_finds_planted_twin(
     assert rep["n_appended"] == 40 and rep["new_shards"] >= 1
     after = {
         r["shard"]: (r["entry"], tuple(r["ids"]))
-        for r in spark.read.parquet(os.path.join(path, "graphs")).collect()
+        for r in indexstore.read(spark, path, "graphs").collect()
     }
     for shard, sig in graphs_before.items():
         assert after[shard] == sig, "built shards must be immutable"
@@ -905,15 +904,17 @@ def test_ivf_append_equals_rebuild_and_flags_drift(spark, tmp_path):
     assert rep2["retrain_recommended"] is True
 
 
-def test_ivf_append_auto_compacts_cells(spark, tmp_path):
-    """Verdict r11 #4: appends accumulate one file per (task x cell);
-    once a cell exceeds compact_threshold data files the append APIs
-    trigger the reader-safe compaction inline. After N appends the
-    layout must be back to ~1 file per cell (pyarrow/file-count
-    asserted), the _centroids.json sidecar must survive the swap, and
-    (build; append*) must still query-equal the rebuild."""
+def test_ivf_append_auto_compacts_cells(spark, tmp_path, monkeypatch):
+    """Verdict r11 #4: appends accumulate one segment (one file per
+    task x cell) each; once the segments pass the store's
+    COMPACT_AFTER the append APIs trigger the reader-safe compaction
+    inline. After N appends the layout must be back to ~1 file per
+    cell (file-count asserted), the centroids must survive in the
+    manifest, and (build; append*) must still query-equal the
+    rebuild."""
     import os
 
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.similarity import (
         N_QUERIES,
         _emb,
@@ -926,9 +927,11 @@ def test_ivf_append_auto_compacts_cells(spark, tmp_path):
     def max_files_per_cell(path):
         from collections import Counter
 
-        per = Counter(os.path.dirname(f) for f in _data_files(path))
+        # a probe of one cell opens its files in every live segment
+        per = Counter(os.path.basename(os.path.dirname(f)) for f in _data_files(path))
         return max(per.values())
 
+    monkeypatch.setattr(indexstore, "COMPACT_AFTER", 2)
     e = _emb(spark, SF_SMOKE)
     hold = e.filter((F.col("vec_id") % 7 != 0) & (F.col("vec_id") % 11 == 3))
     base = e.join(hold.select("vec_id"), "vec_id", "left_anti")
@@ -940,12 +943,12 @@ def test_ivf_append_auto_compacts_cells(spark, tmp_path):
     slices = [hold.filter(F.col("vec_id") % 5 == i) for i in range(5)]
     compact_seen = False
     for s in slices:
-        rep = append_to_ivf_index(spark, incr, s, compact_threshold=2)
+        rep = append_to_ivf_index(spark, incr, s)
         compact_seen = compact_seen or rep["compacted"]
     assert compact_seen, "threshold never tripped the inline compaction"
     # last append may have re-accumulated at most threshold files
     assert max_files_per_cell(incr) <= 2 + 1
-    assert os.path.exists(os.path.join(incr, "_centroids.json"))
+    assert "centroids" in indexstore.manifest(incr)["meta"]
 
     queries = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
@@ -955,12 +958,12 @@ def test_ivf_append_auto_compacts_cells(spark, tmp_path):
     assert got == want
 
 
-def test_pq_append_auto_compacts_and_keeps_sidecars(spark, tmp_path):
+def test_pq_append_auto_compacts_and_keeps_sidecars(spark, tmp_path, monkeypatch):
     """Same contract on the PQ side (flat layout): threshold-tripped
-    inline compaction, _codebooks.json/_pq_fit.json survive, and the
-    compacted index queries identically to build-on-concat."""
-    import os
-
+    inline compaction, the codebooks and the fit reference survive in
+    the manifest, and the compacted index queries identically to
+    build-on-concat."""
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.similarity import (
         N_QUERIES,
         _emb,
@@ -970,6 +973,7 @@ def test_pq_append_auto_compacts_and_keeps_sidecars(spark, tmp_path):
     )
     from smartpipeline_spark.operators.scale import _data_files
 
+    monkeypatch.setattr(indexstore, "COMPACT_AFTER", 2)
     e = _emb(spark, SF_SMOKE)
     hold = e.filter((F.col("vec_id") % 7 != 0) & (F.col("vec_id") % 11 == 3))
     base = e.join(hold.select("vec_id"), "vec_id", "left_anti")
@@ -979,14 +983,12 @@ def test_pq_append_auto_compacts_and_keeps_sidecars(spark, tmp_path):
 
     compact_seen = False
     for i in range(5):
-        rep = append_to_pq_index(
-            spark, incr, hold.filter(F.col("vec_id") % 5 == i), compact_threshold=2
-        )
+        rep = append_to_pq_index(spark, incr, hold.filter(F.col("vec_id") % 5 == i))
         compact_seen = compact_seen or rep["compacted"]
     assert compact_seen
     assert len(_data_files(incr)) <= 2 + 1
-    for sidecar in ("_codebooks.json", "_pq_fit.json"):
-        assert os.path.exists(os.path.join(incr, sidecar)), sidecar
+    for key in ("codebooks", "pq_fit"):
+        assert key in indexstore.manifest(incr)["meta"], key
 
     queries = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
@@ -1244,7 +1246,7 @@ def test_dedup_index_append_equals_rebuild(spark, tmp_path):
     """(build corpus; append batch) must leave the index in exactly
     the state build-on-concat produces — the ingestion contract
     (mirrors append_to_ivf_index's append-vs-rebuild pin)."""
-    from smartpipeline_spark import sources
+    from smartpipeline_spark import indexstore, sources
     from smartpipeline_spark.functions.dedup import (
         build_dedup_index,
         dedup_against,
@@ -1262,10 +1264,10 @@ def test_dedup_index_append_equals_rebuild(spark, tmp_path):
     def state(root):
         fps = {
             (r.fp, r.keep_id)
-            for r in spark.read.parquet(root + "/fingerprints").collect()
+            for r in indexstore.read(spark, root, "fingerprints").collect()
         }
         sigs = {
-            tuple(r) for r in spark.read.parquet(root + "/signatures").collect()
+            tuple(r) for r in indexstore.read(spark, root, "signatures").collect()
         }
         return fps, sigs
 
@@ -1791,6 +1793,7 @@ def test_cdc_index_append_equals_rebuild(spark, tmp_path):
     ingestion contract, byte-level edition."""
     import random
 
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.dedup import (
         build_cdc_index,
         cdc_dedup_against,
@@ -1810,8 +1813,8 @@ def test_cdc_index_append_equals_rebuild(spark, tmp_path):
     p_all = str(tmp_path / "all")
     build_cdc_index(spark, A.unionByName(B), p_all)
 
-    inc = {tuple(r) for r in spark.read.parquet(p_inc + "/chunk_fps").collect()}
-    allr = {tuple(r) for r in spark.read.parquet(p_all + "/chunk_fps").collect()}
+    inc = {tuple(r) for r in indexstore.read(spark, p_inc, "chunk_fps").collect()}
+    allr = {tuple(r) for r in indexstore.read(spark, p_all, "chunk_fps").collect()}
     assert inc == allr and inc
 
 
@@ -1852,6 +1855,7 @@ def test_cdc_rerun_appends_nothing_and_empty_docs_get_report_rows(spark, tmp_pat
     """Re-running the same batch must leave the index row count
     unchanged (idempotent append), and a zero-chunk (empty-text) batch
     doc must still appear in the report with total_bytes=0."""
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.dedup import (
         build_cdc_index,
         cdc_dedup_against,
@@ -1867,13 +1871,13 @@ def test_cdc_rerun_appends_nothing_and_empty_docs_get_report_rows(spark, tmp_pat
         "doc_id long, text string",
     )
     rep1 = {r.doc_id: tuple(r) for r in cdc_dedup_against(spark, p, B).collect()}
-    n1 = spark.read.parquet(p + "/chunk_fps").count()
+    n1 = indexstore.read(spark, p, "chunk_fps").count()
     rep2 = {r.doc_id: tuple(r) for r in cdc_dedup_against(spark, p, B).collect()}
-    n2 = spark.read.parquet(p + "/chunk_fps").count()
+    n2 = indexstore.read(spark, p, "chunk_fps").count()
     assert n1 == n2, "rerun appended duplicate fps"
     assert rep1 == rep2
     assert 12 in rep1 and rep1[12][1] == 0 and not rep1[12][-1]
-    fps = [r.fp for r in spark.read.parquet(p + "/chunk_fps").collect()]
+    fps = [r.fp for r in indexstore.read(spark, p, "chunk_fps").collect()]
     assert len(fps) == len(set(fps)), "index holds duplicate fps"
 
 
@@ -3124,14 +3128,10 @@ def test_bm25_index_lifecycle(spark, tmp_path):
         query_bm25_index,
     )
 
-    from smartpipeline_spark.functions.text import _bm25_manifest
+    from smartpipeline_spark import indexstore
 
     def seg_postings(path):
-        return {
-            tuple(r)
-            for s in _bm25_manifest(path)["segments"]
-            for r in spark.read.parquet(f"{path}/{s}").collect()
-        }
+        return {tuple(r) for r in indexstore.read(spark, path, "postings").collect()}
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
@@ -3175,9 +3175,9 @@ def test_bm25_index_lifecycle(spark, tmp_path):
         .toString()
     )
     assert "In(w, [" in plan, "term probe not pushed to the scan"
-    for seg in _bm25_manifest(inc)["segments"]:
+    for seg in indexstore.segments(indexstore.manifest(inc), "postings"):
         ranges = []
-        pdir = f"{inc}/{seg}"
+        pdir = f"{inc}/postings/seg={seg}"
         for f in sorted(os.listdir(pdir)):
             if not f.endswith(".parquet"):
                 continue
@@ -3192,7 +3192,7 @@ def test_bm25_index_lifecycle(spark, tmp_path):
 
 def test_bm25_index_survives_compaction(spark, tmp_path):
     """The standing maintenance story for the append-heavy lexical
-    index: after appends accumulate segments, compact_bm25_index must
+    index: after appends accumulate segments, indexstore.compact must
     merge them into ONE segment via a reader-safe manifest flip, reap
     the replaced dirs, and leave the indexed scorer EXACT (stats carry
     over unchanged; postings rows are order-free). The merged segment
@@ -3202,42 +3202,42 @@ def test_bm25_index_survives_compaction(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.text import (
         BM25_TERMS,
-        _bm25_manifest,
         append_to_bm25_index,
         build_bm25_index,
-        compact_bm25_index,
         query_bm25_index,
     )
+
+    def segs(path):
+        return indexstore.segments(indexstore.manifest(path), "postings")
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     path = str(tmp_path / "idx")
     build_bm25_index(docs.filter("doc_id % 3 = 0"), path)
-    append_to_bm25_index(docs.filter("doc_id % 3 = 1"), path, compact_after=None)
-    append_to_bm25_index(docs.filter("doc_id % 3 = 2"), path, compact_after=None)
-    assert len(_bm25_manifest(path)["segments"]) == 3
+    append_to_bm25_index(docs.filter("doc_id % 3 = 1"), path)
+    append_to_bm25_index(docs.filter("doc_id % 3 = 2"), path)
+    assert len(segs(path)) == 3
     before = {
         r["doc_id"]: r["raw"]
         for r in query_bm25_index(spark, path, BM25_TERMS).collect()
     }
-    report = compact_bm25_index(spark, path)
+    report = indexstore.compact(spark, path)
     assert report["segments_before"] == 3 and report["segments_after"] == 1
     assert report["dirs_reaped"] == 3
-    man = _bm25_manifest(path)
-    assert len(man["segments"]) == 1
+    assert len(segs(path)) == 1
     # only the live segment remains on disk
-    seg_dirs = [d for d in os.listdir(path) if d.startswith("seg-")]
-    assert seg_dirs == man["segments"]
+    assert os.listdir(os.path.join(path, "postings")) == [f"seg={segs(path)[0]}"]
     after = {
         r["doc_id"]: r["raw"]
         for r in query_bm25_index(spark, path, BM25_TERMS, verify=True).collect()
     }
     assert after == before
     # merged segment is sort-clustered again: disjoint per-file ranges
-    pdir = os.path.join(path, man["segments"][0])
+    pdir = os.path.join(path, "postings", f"seg={segs(path)[0]}")
     ranges = []
     for f in sorted(os.listdir(pdir)):
         if not f.endswith(".parquet"):
@@ -3251,13 +3251,11 @@ def test_bm25_index_survives_compaction(spark, tmp_path):
         assert hi1 <= lo2
 
 
-def test_bm25_append_reader_atomic(spark, tmp_path):
-    """The r11-verdict defect, pinned closed: a reader interleaved
-    BETWEEN the two append phases (segment written, manifest not yet
-    committed) must see EXACTLY the old index — never enlarged
-    postings scored with stale n_docs/sum_dl. The probe runs inside a
-    monkeypatched _bm25_commit, i.e. at the worst possible instant."""
-    from smartpipeline_spark.functions import text as text_mod
+def test_bm25_append_auto_compacts(spark, tmp_path, monkeypatch):
+    """Once segments exceed the store's COMPACT_AFTER the append APIs
+    trigger the reader-safe compaction inline, so probe cost returns
+    to ~1 file per term without an external maintenance job."""
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.text import (
         BM25_TERMS,
         append_to_bm25_index,
@@ -3266,133 +3264,17 @@ def test_bm25_append_reader_atomic(spark, tmp_path):
         query_bm25_index,
     )
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old_docs = docs.filter("doc_id % 2 = 0")
-    new_docs = docs.filter("doc_id % 2 = 1")
-    path = str(tmp_path / "idx")
-    build_bm25_index(old_docs, path)
-    old_scores = {r["doc_id"]: r["raw"] for r in bm25_scores(old_docs).collect()}
-    full_scores = {r["doc_id"]: r["raw"] for r in bm25_scores(docs).collect()}
-
-    mid_append = {}
-    real_commit = text_mod._bm25_commit
-
-    def probing_commit(p, stats):
-        mid_append["scores"] = {
-            r["doc_id"]: r["raw"]
-            for r in query_bm25_index(spark, p, BM25_TERMS).collect()
-        }
-        real_commit(p, stats)
-
-    text_mod._bm25_commit = probing_commit
-    try:
-        append_to_bm25_index(new_docs, path)
-    finally:
-        text_mod._bm25_commit = real_commit
-
-    # mid-append reader saw exactly the OLD index...
-    assert mid_append["scores"] == old_scores
-    # ...and a post-commit reader sees exactly the NEW one
-    after = {
-        r["doc_id"]: r["raw"]
-        for r in query_bm25_index(spark, path, BM25_TERMS, verify=True).collect()
-    }
-    assert after == full_scores
-
-
-def test_bm25_append_crash_atomic(spark, tmp_path):
-    """A crash between segment write and manifest commit must leave the
-    published index bit-untouched (the orphan segment is invisible), a
-    retried append must converge to exactly the rebuild result, and the
-    next compaction must reap the orphan."""
-    import os
-
-    from smartpipeline_spark.functions import text as text_mod
-    from smartpipeline_spark.functions.text import (
-        BM25_TERMS,
-        _bm25_manifest,
-        append_to_bm25_index,
-        bm25_scores,
-        build_bm25_index,
-        compact_bm25_index,
-        query_bm25_index,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    old_docs = docs.filter("doc_id % 2 = 0")
-    new_docs = docs.filter("doc_id % 2 = 1")
-    path = str(tmp_path / "idx")
-    build_bm25_index(old_docs, path)
-    old_scores = {r["doc_id"]: r["raw"] for r in bm25_scores(old_docs).collect()}
-
-    real_commit = text_mod._bm25_commit
-
-    def crashing_commit(p, stats):
-        raise OSError("simulated crash before manifest commit")
-
-    text_mod._bm25_commit = crashing_commit
-    try:
-        import pytest as _pytest
-
-        with _pytest.raises(OSError, match="simulated crash"):
-            append_to_bm25_index(new_docs, path)
-    finally:
-        text_mod._bm25_commit = real_commit
-
-    # published index unchanged; orphan segment exists but is invisible
-    assert _bm25_manifest(path)["segments"] != []
-    assert len(_bm25_manifest(path)["segments"]) == 1
-    assert len([d for d in os.listdir(path) if d.startswith("seg-")]) == 2
-    crashed = {
-        r["doc_id"]: r["raw"]
-        for r in query_bm25_index(spark, path, BM25_TERMS, verify=True).collect()
-    }
-    assert crashed == old_scores
-
-    # retried append converges exactly; compaction reaps the orphan
-    append_to_bm25_index(new_docs, path)
-    full_scores = {r["doc_id"]: r["raw"] for r in bm25_scores(docs).collect()}
-    retried = {
-        r["doc_id"]: r["raw"]
-        for r in query_bm25_index(spark, path, BM25_TERMS).collect()
-    }
-    assert retried == full_scores
-    compact_bm25_index(spark, path)
-    assert len([d for d in os.listdir(path) if d.startswith("seg-")]) == 1
-    final = {
-        r["doc_id"]: r["raw"]
-        for r in query_bm25_index(spark, path, BM25_TERMS, verify=True).collect()
-    }
-    assert final == full_scores
-
-
-def test_bm25_append_auto_compacts(spark, tmp_path):
-    """compact_after: once segments exceed the threshold the append
-    APIs trigger the reader-safe compaction inline, so probe cost
-    returns to ~1 file per term without an external maintenance job."""
-    from smartpipeline_spark.functions.text import (
-        BM25_TERMS,
-        _bm25_manifest,
-        append_to_bm25_index,
-        bm25_scores,
-        build_bm25_index,
-        query_bm25_index,
-    )
-
+    monkeypatch.setattr(indexstore, "COMPACT_AFTER", 2)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
         "doc_id", "text"
     )
     path = str(tmp_path / "idx")
     build_bm25_index(docs.filter("doc_id % 4 = 0"), path)
-    append_to_bm25_index(docs.filter("doc_id % 4 = 1"), path, compact_after=2)
-    stats = append_to_bm25_index(docs.filter("doc_id % 4 = 2"), path, compact_after=2)
+    append_to_bm25_index(docs.filter("doc_id % 4 = 1"), path)
+    stats = append_to_bm25_index(docs.filter("doc_id % 4 = 2"), path)
     # third segment crossed the threshold -> compacted back to one
     assert len(stats["segments"]) == 1
-    assert len(_bm25_manifest(path)["segments"]) == 1
+    assert len(indexstore.segments(indexstore.manifest(path), "postings")) == 1
     part = docs.filter("doc_id % 4 < 3")
     expected = {r["doc_id"]: r["raw"] for r in bm25_scores(part).collect()}
     got = {

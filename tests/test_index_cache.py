@@ -1,41 +1,48 @@
-"""The build-once fixture-index cache (text._fixture_index_for) and the
-private scratch root under it (sources.scratch_root), without a JVM:
-a fake build callable stands in for the Spark index writers and
-``tempfile.tempdir`` points the cache root into the test's tmp dir."""
+"""The build-once fixture-index cache (indexstore.fixture_index) and
+the private scratch root under it (sources.scratch_root), without a
+JVM: a fake build callable that commits a table-less store manifest
+stands in for the Spark index writers and ``tempfile.tempdir`` points
+the cache root into the test's tmp dir."""
 
 import os
 import stat
 import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
-from smartpipeline_spark import sources
-from smartpipeline_spark.functions import text
+from smartpipeline_spark import indexstore, sources
+
+
+def _write_fixture(src, n):
+    pq.write_table(pa.table({"doc_id": list(range(n))}), str(src))
 
 
 @pytest.fixture()
 def cache(tmp_path, monkeypatch):
     """A private tempdir and memo, a fixture file, and a counting fake
-    build whose output is valid iff it holds the ``ok`` marker."""
+    build whose manifest records the fixture's current row count, so
+    a copy is valid iff it was built from the fixture as it is now."""
     tmp = tmp_path / "tmp"
     tmp.mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(tmp))
-    monkeypatch.setattr(text, "_FIXTURE_IDX_CACHE", {})
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
     monkeypatch.setattr(sources, "_FALLBACK_ROOTS", {})
     src = tmp_path / "docs.parquet"
-    src.write_bytes(b"fixture")
+    _write_fixture(src, 3)
     built = []
 
     def build(path):
         built.append(path)
         os.makedirs(path)
-        open(os.path.join(path, "ok"), "w").close()
-
-    def valid(path):
-        return os.path.exists(os.path.join(path, "ok"))
+        n = pq.ParquetFile(str(src)).metadata.num_rows
+        indexstore._commit(path, {"tables": {}, "meta": {"rows": n}})
 
     def index_for():
-        return text._fixture_index_for("t", str(src), build, valid)
+        return indexstore.fixture_index(
+            "t", str(src), build, lambda man: man["meta"]["rows"]
+        )
 
     root = tmp / f"spark_graft_t_idx_u{os.getuid()}"
     return index_for, built, root
@@ -54,7 +61,7 @@ def test_rewritten_source_rebuilds_once(cache, tmp_path):
     first = index_for()
     src = tmp_path / "docs.parquet"
     mtime = os.stat(src).st_mtime_ns
-    src.write_bytes(b"regenerated")
+    _write_fixture(src, 5)
     os.utime(src, ns=(mtime + 10**9, mtime + 10**9))
     second = index_for()
     assert second != first and os.path.dirname(second) == str(root)
@@ -62,20 +69,35 @@ def test_rewritten_source_rebuilds_once(cache, tmp_path):
     assert len(built) == 2
 
 
-def test_garbage_at_tag_path_publishes_under_fresh_name(cache, monkeypatch):
+def test_garbage_at_tag_path_is_replaced(cache, monkeypatch):
+    """A fresh process (empty memo) that finds an invalid layout at the
+    tag path rebuilds it IN PLACE, so the process after it is served
+    the rebuilt copy and builds nothing, and no copy leaks beside it."""
     index_for, built, root = cache
     tag_path = index_for()
-    # a fresh process (empty memo) finds garbage planted at the tag path
-    os.remove(os.path.join(tag_path, "ok"))
+    os.remove(os.path.join(tag_path, indexstore.MANIFEST))
     with open(os.path.join(tag_path, "junk"), "w") as fh:
         fh.write("garbage")
-    monkeypatch.setattr(text, "_FIXTURE_IDX_CACHE", {})
-    fresh = index_for()
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
+    assert index_for() == tag_path
     assert len(built) == 2
-    assert fresh != tag_path and fresh.startswith(tag_path + "-")
-    assert os.path.exists(os.path.join(fresh, "ok"))
-    assert os.listdir(tag_path) == ["junk"]
-    assert not [p for p in os.listdir(root) if ".build-" in p]
+    assert os.listdir(tag_path) == [indexstore.MANIFEST]
+    assert os.listdir(root) == [os.path.basename(tag_path)]
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
+    assert index_for() == tag_path
+    assert len(built) == 2, "a second process rebuilt a valid copy"
+
+
+def test_torn_copy_at_tag_path_is_rebuilt(cache, monkeypatch):
+    """A layout whose manifest no longer matches its fixture (a stale
+    row count) fails validation and is rebuilt in place too."""
+    index_for, built, root = cache
+    tag_path = index_for()
+    indexstore._commit(tag_path, {"tables": {}, "meta": {"rows": 99}})
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
+    assert index_for() == tag_path
+    assert len(built) == 2
+    assert indexstore.manifest(tag_path)["meta"]["rows"] == 3
 
 
 def test_shared_cache_root_falls_back_to_private_mkdtemp(cache):

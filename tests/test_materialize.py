@@ -199,3 +199,40 @@ def test_scope_frees_what_each_materializing_key_built(spark):
         assert not after - before, f"{key} left {sorted(after - before)}"
         assert plans(after) == plans(before), f"{key} freed a plan it did not cache"
     assert built, "the scopes held nothing to free"
+
+
+def test_iterations_hold_one_round_checkpoint(spark):
+    """connected_components checkpoints its labels every round and
+    pagerank its ranks every 4 rounds; each frees the previous round's
+    checkpoint once the next one is stored, so inside a scope, before
+    it closes, one label or rank checkpoint is held, not one per
+    round."""
+    from smartpipeline_spark import materialize
+    from smartpipeline_spark.functions import dedup
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+
+    def held_checkpoints(cols):
+        return [
+            df
+            for df in materialize._SCOPES[-1]
+            if set(df.columns) >= cols
+            and rdds().containsKey(df._jdf.queryExecution().analyzed().rdd().id())
+        ]
+
+    # a chain of 8 nodes: label 0 walks one hop per round (8 rounds)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(7)], "d1 long, d2 long")
+    with materialize.scope():
+        labels = dedup.connected_components(chain)
+        assert {r.cluster_id for r in labels.collect()} == {0}
+        assert len([df for df in materialize._SCOPES[-1] if "label" in df.columns]) >= 5
+        assert len(held_checkpoints({"id", "label"})) == 1
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5)], "src long, dst long"
+    )
+    with materialize.scope():
+        ranks = dedup.pagerank(edges, iters=12)
+        assert abs(sum(r["rank"] for r in ranks.collect()) - 5.0) < 1e-9
+        assert len([df for df in materialize._SCOPES[-1] if "rank" in df.columns]) == 4
+        assert len(held_checkpoints({"id", "rank"})) == 1

@@ -481,6 +481,7 @@ def test_streaming_cdc_ingest_index_equals_batch_build(spark, tmp_path):
     and every doc must be reported exactly once across batches. This
     is the storage-side ingestion composition: content-defined
     chunking + persisted fingerprint index + streaming arrival."""
+    from smartpipeline_spark import indexstore
     from smartpipeline_spark.functions.dedup import (
         build_cdc_index,
         cdc_dedup_against,
@@ -532,11 +533,11 @@ def test_streaming_cdc_ingest_index_equals_batch_build(spark, tmp_path):
     build_cdc_index(spark, docs, p_batch)
     got = {
         (r.fp, r.chunk_bytes)
-        for r in spark.read.parquet(p_stream + "/chunk_fps").collect()
+        for r in indexstore.read(spark, p_stream, "chunk_fps").collect()
     }
     want = {
         (r.fp, r.chunk_bytes)
-        for r in spark.read.parquet(p_batch + "/chunk_fps").collect()
+        for r in indexstore.read(spark, p_batch, "chunk_fps").collect()
     }
     assert got == want and got
 
