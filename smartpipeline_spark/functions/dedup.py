@@ -1344,6 +1344,7 @@ def build_dedup_index(
     n: int = 3,
     near: bool = True,
     stats: bool = True,
+    meta: dict | None = None,
 ) -> dict:
     """Persist the dedup INDEX for a corpus — the production ingestion
     shape: a 100 TB corpus is deduped once, then every arriving batch
@@ -1372,7 +1373,8 @@ def build_dedup_index(
     pure thrown-away work when no near-dup query will read it.
     ``stats=False`` skips the count job behind the returned
     {"n_docs", "n_fps"} dict for callers that discard it (``n_fps`` is
-    the manifest's row count).
+    the manifest's row count). ``meta`` is stored as the manifest's
+    metadata.
 
     Returns {"n_docs", "n_fps"} (None values when ``stats=False``)."""
     from pyspark.sql import Window as _W
@@ -1388,7 +1390,7 @@ def build_dedup_index(
             .select("doc_id", "text")
         )
         tables["signatures"] = minhash_signatures(kept_docs, n)
-    man = indexstore.build(path, tables)
+    man = indexstore.build(path, tables, meta)
     if not stats:
         return {"n_docs": None, "n_fps": None}
     return {"n_docs": docs.count(), "n_fps": indexstore.rows(man, "fingerprints")}
@@ -1546,24 +1548,37 @@ def ext_dedup_incremental(spark, sf_dir):
     new to both the index and the earlier part of the batch. The
     near-dup stage is exercised with planted duplicates in pytest
     (signature-estimate verification has no SQL mirror)."""
+    from smartpipeline_spark.functions.curation import assign_split
+
+    s = assign_split(sources.table(spark, "documents", sf_dir))
+    batch = s.filter(F.col("split") == "test").select("doc_id", "text")
+    out = dedup_against(spark, _dedup_index_for(spark, sf_dir), batch, near=False, append=False)
+    return out.select("doc_id", _fp_col())
+
+
+def _dedup_index_for(spark, sf_dir: str) -> str:
+    """The fingerprints-only dedup index of a fixture corpus's train and
+    val splits (the standing corpus of ``ext_dedup_incremental``), built
+    once: valid when the manifest's ``n_src``, the documents counted
+    when the split was drawn, equals the documents file's footer row
+    count. The key exercises EXACT dedup only (the near leg is
+    pytest-pinned with planted duplicates), so the build skips the
+    signatures and the stats jobs."""
     import os
 
     from smartpipeline_spark.functions.curation import assign_split
 
-    d = sources.table(spark, "documents", sf_dir)
-    s = assign_split(d)
-    corpus = s.filter(F.col("split") != "test").select("doc_id", "text")
-    batch = s.filter(F.col("split") == "test").select("doc_id", "text")
-    root = os.path.join(
-        sources.scratch_root("dedup_index"), sf_dir.strip("/").replace("/", "_")
+    def build(path: str) -> None:
+        d = sources.table(spark, "documents", sf_dir)
+        corpus = assign_split(d).filter(F.col("split") != "test").select("doc_id", "text")
+        build_dedup_index(spark, corpus, path, near=False, stats=False, meta={"n_src": d.count()})
+
+    return indexstore.fixture_index(
+        "dedup_fp_seg",
+        os.path.join(sf_dir, "documents.parquet"),
+        build,
+        lambda man: man["meta"]["n_src"],
     )
-    # the declared key only exercises EXACT dedup (near=False below;
-    # the near leg is pytest-pinned with planted duplicates): build
-    # the fingerprints-only index and skip the stats jobs the dict of
-    # which is discarded — guide §1.2, don't compute what's thrown away
-    build_dedup_index(spark, corpus, root, near=False, stats=False)
-    out = dedup_against(spark, root, batch, near=False, append=False)
-    return out.select("doc_id", _fp_col())
 
 
 # ------------------------------------------------ exact substring dedup

@@ -242,22 +242,16 @@ class Pipeline:
             return self.spark.createDataFrame(rows)
         return src(self.spark)
 
-    @staticmethod
-    def _ensure_companions(df: DataFrame) -> DataFrame:
-        if ERRORS_COL not in df.columns:
-            df = df.withColumn(
-                ERRORS_COL, F.lit(None).cast(ERRORS_DDL)
-            ).withColumn(ERRORS_COL, F.coalesce(F.col(ERRORS_COL), F.array()))
-        if TIMINGS_COL not in df.columns:
-            df = df.withColumn(TIMINGS_COL, F.lit(None).cast(TIMINGS_DDL))
-        return df
-
     def _compile(self) -> DataFrame:
+        """The source frame through every step. Each run of consecutive
+        stages becomes one ``mapInPandas`` segment whose output carries
+        the ``_errors``/``_timings`` companions; the first segment mints
+        them when its input has none, so nothing constant crosses into
+        Python. A transform placed before the first stage sees no
+        companions (unless the source already carries them, as a
+        previous pipeline's output does)."""
         df = self._source_df()
         i, n = 0, len(self._steps)
-        has_stages = any(s.kind == "stage" for s in self._steps)
-        if has_stages:
-            df = self._ensure_companions(df)
         while i < n:
             step = self._steps[i]
             if step.kind == "transform":

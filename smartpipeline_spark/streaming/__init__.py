@@ -18,13 +18,15 @@ equivalence against the batch results under an availableNow trigger).
 from __future__ import annotations
 
 import os
+import time
 from typing import Callable
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from smartpipeline_spark import materialize
+from smartpipeline_spark import materialize, wrapper
 
 EVENTS_STREAM_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
@@ -135,11 +137,16 @@ def stateful_user_counts(df: DataFrame, key: str = "user_id") -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def fn(key_tuple, pdf_iter, state: GroupState):
-        n = state.get[0] if state.exists else 0
-        for pdf in pdf_iter:
-            n += len(pdf)
-        state.update((n,))
-        yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n]})
+        try:
+            n = state.get[0] if state.exists else 0
+            for pdf in pdf_iter:
+                n += len(pdf)
+            state.update((n,))
+            yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n]})
+        finally:
+            # a state task runs no stage wrapper, which would drop them
+            # (see the wrapper module's docstring)
+            wrapper._drop_archive_internal_importers()
 
     return df.groupBy(key).applyInPandasWithState(
         fn,
@@ -258,6 +265,79 @@ def _with_trigger(
     return writer
 
 
+# --- checkpoint file manager of local checkpoints ----------------------
+#
+# Spark's default checkpoint file manager works through Hadoop's
+# FileContext. Without libhadoop, FileContext on a local path forks a
+# `readlink` for every link-status lookup (on `file:/...` strings, where
+# it always fails) and a `chmod` for every file it creates. One 4-batch
+# stream_ingest drain (seed 7, JFR jdk.ProcessStart, 4-core VM) forked
+# 379 processes: 280 readlink and 99 chmod, 189 on the stream thread
+# (offset, commit, source and sink metadata logs) and 160 in the state
+# store. The FileSystem-based manager writes the same files in the same
+# format and forks no readlink: 99 spawns, all chmod (45 and 32). Only
+# local checkpoints were measured, so an HDFS or object-store checkpoint
+# keeps Spark's default, and so does a session that sets the key itself.
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CKPT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+_CKPT_LOCATION_KEY = "spark.sql.streaming.checkpointLocation"
+
+
+def _is_local(location: str | None, default_fs: str | None) -> bool:
+    """Whether a checkpoint at ``location`` resolves to the local file
+    system: by the location's own scheme, or, for a path without one
+    (None stands for Spark's temp directory), by ``default_fs``'s, the
+    way Hadoop qualifies a path; no file system is opened."""
+    scheme = urlsplit(location or "").scheme or urlsplit(default_fs or "file:///").scheme
+    return scheme == "file"
+
+
+def _checkpoint_confs(spark: SparkSession, checkpoint: str | None) -> dict[str, str]:
+    """The checkpoint-manager conf a stream of ``spark`` starts with:
+    the FileSystem-based manager when the session is a classic one, has
+    no value of its own for the key, and the checkpoint resolves to the
+    local file system. The checkpoint is ``checkpoint``, else the
+    session's ``spark.sql.streaming.checkpointLocation``, else Spark's
+    temp directory."""
+    jsc = getattr(spark, "_jsc", None)
+    if jsc is None or spark.conf.get(_CKPT_MANAGER_KEY, None) is not None:
+        return {}
+    location = checkpoint or spark.conf.get(_CKPT_LOCATION_KEY, None)
+    if not _is_local(location, jsc.hadoopConfiguration().get("fs.defaultFS")):
+        return {}
+    return {_CKPT_MANAGER_KEY: _CKPT_MANAGER}
+
+
+def _start(writer: DataStreamWriter, confs: dict[str, str]) -> StreamingQuery:
+    """``writer.start()`` with ``confs`` set on the session around it:
+    the one place a stream starts. start() clones the session conf into
+    the query, but the query builds its sources on its own thread after
+    start() has returned, and a file source opens its log with the
+    caller's session, not the clone. So the session gets its prior
+    values back once the query has built its sources or ended, and also
+    when start() raises; from then on each value holds for the whole
+    run."""
+    conf = writer._df.sparkSession.conf
+    prev = {k: conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        conf.set(k, v)
+    try:
+        query = writer.start()
+        if confs:
+            execution = query._jsq.streamingQuery()
+            while execution.sources().isEmpty() and query.isActive:
+                time.sleep(0.001)
+        return query
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                conf.unset(k)
+            else:
+                conf.set(k, v)
+
+
 def start_query(
     writer: DataStreamWriter,
     checkpoint: str | None = None,
@@ -266,22 +346,18 @@ def start_query(
 ) -> StreamingQuery:
     """Start a stream whose sink is already chosen (a caller's
     foreachBatch callback goes through :func:`start_foreach_batch`): the
-    one place the state width is set. An ``available_now`` drain starts at the width
-    :func:`_state_width` gives it, if any; ``processing_time`` and the
-    default trigger are as in :func:`_with_trigger`."""
+    one place the state width is set. An ``available_now`` drain starts
+    at the width :func:`_state_width` gives it, if any; a local
+    checkpoint gets the manager of :func:`_checkpoint_confs`;
+    ``processing_time`` and the default trigger are as in
+    :func:`_with_trigger`."""
+    df = writer._df
     writer = _with_trigger(writer, checkpoint, available_now, processing_time)
-    width = _state_width(writer._df) if available_now else None
-    if width is None:
-        return writer.start()
-    # start() clones the session conf into the query, so the width
-    # holds for the whole drain once start() has returned
-    conf = writer._df.sparkSession.conf
-    prev = conf.get(_WIDTH_KEY)
-    conf.set(_WIDTH_KEY, str(width))
-    try:
-        return writer.start()
-    finally:
-        conf.set(_WIDTH_KEY, prev)
+    confs = _checkpoint_confs(df.sparkSession, checkpoint)
+    width = _state_width(df) if available_now else None
+    if width is not None:
+        confs[_WIDTH_KEY] = str(width)
+    return _start(writer, confs)
 
 
 def start_foreach_batch(
@@ -296,9 +372,11 @@ def start_foreach_batch(
     the streaming sink pattern for external systems (the reference's
     Elasticsearch ``Indexer`` stage maps here). It runs at the session
     width: ``batch_df`` runs in the query's session, so every shuffle
-    ``fn`` runs on it gets the width the query started with."""
+    ``fn`` runs on it gets the width the query started with. A local
+    checkpoint gets the manager of :func:`_checkpoint_confs`."""
     writer = df.writeStream.foreachBatch(fn).outputMode(output_mode)
-    return _with_trigger(writer, checkpoint, available_now, processing_time).start()
+    writer = _with_trigger(writer, checkpoint, available_now, processing_time)
+    return _start(writer, _checkpoint_confs(df.sparkSession, checkpoint))
 
 
 def start_memory_sink(
@@ -456,11 +534,14 @@ def stateful_user_counts_tws(df: DataFrame, key: str = "user_id") -> DataFrame:
             self._n = handle.getValueState("n", "n bigint")
 
         def handleInputRows(self, key_tuple, rows, timer_values):
-            n = self._n.get()[0] if self._n.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._n.update((n,))
-            yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n]})
+            try:
+                n = self._n.get()[0] if self._n.exists() else 0
+                for pdf in rows:
+                    n += len(pdf)
+                self._n.update((n,))
+                yield pd.DataFrame({key: [key_tuple[0]], "n_events": [n]})
+            finally:
+                wrapper._drop_archive_internal_importers()
 
         def close(self) -> None:
             pass

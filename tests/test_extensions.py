@@ -1317,6 +1317,41 @@ def test_dedup_against_planted_duplicates(spark, tmp_path):
     assert out2 == {10, 11, 12}
 
 
+
+def test_dedup_incremental_builds_its_index_once(spark, tmp_path, monkeypatch):
+    """ext_dedup_incremental serves its corpus index through the
+    build-once fixture cache: the first call builds it under the cache
+    root (a manifest recording the documents it was drawn from), a
+    second call with an empty memo builds nothing and returns the same
+    survivors."""
+    import os
+    import tempfile
+
+    from smartpipeline_spark import indexstore, sources
+    from smartpipeline_spark.functions import dedup
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
+    builds = []
+    real_build = dedup.build_dedup_index
+    monkeypatch.setattr(
+        dedup, "build_dedup_index", lambda *a, **kw: builds.append(a[2]) or real_build(*a, **kw)
+    )
+
+    first = sorted(tuple(r) for r in dedup.ext_dedup_incremental(spark, SF_SMOKE).collect())
+    (staging,) = builds
+    path = dedup._dedup_index_for(spark, SF_SMOKE)  # a memo hit
+    assert len(builds) == 1
+    assert os.path.dirname(path) == os.path.dirname(staging) == sources.scratch_root("dedup_fp_seg_idx")
+    man = indexstore.manifest(path)
+    assert man["meta"]["n_src"] == sources.table(spark, "documents", SF_SMOKE).count()
+    assert set(man["tables"]) == {"fingerprints"}
+
+    monkeypatch.setattr(indexstore, "_FIXTURE_IDX_CACHE", {})
+    second = sorted(tuple(r) for r in dedup.ext_dedup_incremental(spark, SF_SMOKE).collect())
+    assert len(builds) == 1
+    assert first == second and first
+
 # ------------------------------------------------ exact substring dedup
 
 

@@ -897,3 +897,40 @@ def test_chain_fails_when_the_worker_imports_another_package_copy(tmp_path):
     msg = out.stderr
     assert "this Python worker imported a different copy" in msg, msg[-3000:]
     assert str(a / "smartpipeline_spark") in msg and str(b / "smartpipeline_spark") in msg
+
+
+def _map_in_pandas_inputs(df) -> list:
+    """The input column names of each MapInPandas node of ``df``'s
+    analyzed plan, from the root down."""
+    found, nodes = [], [df._jdf.queryExecution().analyzed()]
+    while nodes:
+        node = nodes.pop(0)
+        children = node.children()
+        if node.getClass().getSimpleName() == "MapInPandas":
+            out = node.child().output()
+            found.append([out.apply(i).name() for i in range(out.size())])
+        nodes.extend(children.apply(i) for i in range(children.size()))
+    return found
+
+
+def test_first_segment_gets_no_companion_columns(spark, items_df):
+    """Nothing constant crosses into Python: the first stage segment's
+    input has no _errors/_timings (the wrapper mints them), and items
+    still come out with an empty error list. A source that already
+    carries companions, such as a previous pipeline's output, keeps its
+    errors through the next segment."""
+    first = Pipeline(spark).set_source(items_df).append("softfail", SoftFailEven())
+    (inputs,) = _map_in_pandas_inputs(first.dataframe())
+    assert "_errors" not in inputs and "_timings" not in inputs
+    items = _run(first)
+    assert [it.error_entries == [] for it in items] == [it.data["count"] % 2 == 1 for it in items]
+
+    second = Pipeline(spark).set_source(first.dataframe()).append("duplicator", TextDuplicator())
+    inputs = _map_in_pandas_inputs(second.dataframe())
+    assert len(inputs) == 2 and {"_errors", "_timings"} <= set(inputs[0])
+    items = _run(second)
+    assert len(items) == 100
+    for it in items:
+        assert [e["stage"] for e in it.error_entries] == (["softfail"] if it.data["count"] % 2 == 0 else [])
+        assert it.data["text_copy"] == it.data["text"]
+        assert sorted(it.timed_stages()) == ["duplicator", "softfail"]

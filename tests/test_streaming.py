@@ -919,3 +919,199 @@ def test_foreach_batch_callback_keeps_the_session_width(spark, tmp_path):
         assert spark.conf.get(key) == "4"
     finally:
         spark.conf.set(key, prev)
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _log_managers(q) -> dict:
+    """The checkpoint file manager class of each metadata log of a file
+    source -> file sink query: its offset, commit, source and sink logs."""
+    ex = q._jsq.streamingQuery()
+
+    def private_log(obj, field):
+        f = obj.getClass().getDeclaredField(field)
+        f.setAccessible(True)
+        return f.get(obj)
+
+    logs = {
+        "offsets": ex.offsetLog(),
+        "commits": ex.commitLog(),
+        "sources": private_log(ex.sources().apply(0), "metadataLog"),
+        "sink": private_log(ex.sink(), "fileLog"),
+    }
+    return {k: log.fileManager().getClass().getSimpleName() for k, log in logs.items()}
+
+
+def test_local_checkpoint_uses_the_filesystem_manager(spark, tmp_path):
+    """A stream whose checkpoint is local runs every metadata log on the
+    FileSystem-based checkpoint file manager (no `readlink` fork per
+    lookup without libhadoop), through Pipeline.start_stream and
+    start_foreach_batch alike; the session has no value for the key once
+    start() has returned."""
+    schema = "doc_id bigint, text string"
+    src = str(tmp_path / "drop")
+    spark.createDataFrame([(i, f"text {i % 30}") for i in range(60)], schema).coalesce(1).write.parquet(src)
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+
+    out = str(tmp_path / "out")
+    q = _dedup_pipeline(spark, src, schema).start_stream(str(tmp_path / "ckpt"), sink=out, available_now=True)
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    _drain(q)
+    assert q.exception() is None
+    assert _log_managers(q) == dict.fromkeys(
+        ("offsets", "commits", "sources", "sink"), "FileSystemBasedCheckpointFileManager"
+    )
+    assert spark.read.parquet(out).count() == 30
+
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = streaming.start_foreach_batch(stream, lambda df, _i: None, f"file:{tmp_path}/ckpt_fb", available_now=True)
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+    _drain(q)
+    ex = q._jsq.streamingQuery()
+    assert ex.offsetLog().fileManager().getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def test_session_manager_is_left_alone_and_restart_crosses_managers(spark, tmp_path):
+    """A session value for the checkpoint-manager key wins and stays set;
+    a checkpoint that Spark's default manager wrote restarts under the
+    FileSystem-based one exactly once (same files, same format)."""
+    schema = "doc_id bigint, text string"
+    src = tmp_path / "drop"
+
+    def drop(batch: int) -> None:
+        rows = [(batch * 100 + i, f"text {batch * 10 + i}") for i in range(20)]
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
+
+    default = _CHECKPOINTING + "FileContextBasedCheckpointFileManager"
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    drop(0)
+    drop(1)
+    spark.conf.set(_MANAGER_KEY, default)
+    try:
+        q = _dedup_pipeline(spark, str(src), schema).start_stream(ckpt, sink=out, available_now=True)
+        assert spark.conf.get(_MANAGER_KEY) == default
+        _drain(q)
+        assert q.exception() is None
+        assert set(_log_managers(q).values()) == {"FileContextBasedCheckpointFileManager"}
+    finally:
+        spark.conf.unset(_MANAGER_KEY)
+
+    drop(2)
+    q = _dedup_pipeline(spark, str(src), schema).start_stream(ckpt, sink=out, available_now=True)
+    _drain(q)
+    assert q.exception() is None
+    assert set(_log_managers(q).values()) == {"FileSystemBasedCheckpointFileManager"}
+    digests = [r.digest for r in spark.read.parquet(out).select("digest").collect()]
+    assert len(digests) == len(set(digests)) == 40, "the restart re-emitted or lost a digest"
+
+
+def test_checkpoint_manager_conf_is_restored_when_start_raises(spark, tmp_path):
+    """The key is on the session inside start() only, and gone again
+    after a start() that raises."""
+    from pyspark.sql.streaming import DataStreamWriter
+
+    seen = []
+
+    class FailingStart(DataStreamWriter):
+        def start(self, *args, **kwargs):
+            seen.append(spark.conf.get(_MANAGER_KEY, None))
+            raise RuntimeError("sink down")
+
+    stream = spark.readStream.schema("x long").parquet(str(tmp_path))
+    with pytest.raises(RuntimeError, match="sink down"):
+        streaming.start_query(FailingStart(stream), str(tmp_path / "ckpt"))
+    with pytest.raises(RuntimeError, match="sink down"):
+        streaming.start_query(FailingStart(stream), "hdfs://nn:8020/ckpt")
+    assert seen == [_CHECKPOINTING + "FileSystemBasedCheckpointFileManager", None]
+    assert spark.conf.get(_MANAGER_KEY, None) is None
+
+
+def test_checkpoint_locality(spark, tmp_path):
+    """Only a checkpoint that resolves to the file scheme gets the
+    FileSystem-based manager: a scheme of its own decides, else
+    fs.defaultFS's; no file system is opened."""
+    from smartpipeline_spark.streaming import _checkpoint_confs, _is_local
+
+    for default_fs in ("file:///", None):
+        assert _is_local("/tmp/c", default_fs)
+        assert _is_local("file:/tmp/c", default_fs)
+        assert _is_local("file:///tmp/c", default_fs)
+        assert _is_local("ckpt", default_fs)
+        assert _is_local(None, default_fs)
+        assert not _is_local("hdfs://nn:8020/c", default_fs)
+        assert not _is_local("s3a://b/c", default_fs)
+    assert not _is_local("/tmp/c", "hdfs://nn:8020")
+    assert not _is_local(None, "hdfs://nn:8020")
+    assert _is_local("file:/tmp/c", "hdfs://nn:8020")
+
+    local = {_MANAGER_KEY: _CHECKPOINTING + "FileSystemBasedCheckpointFileManager"}
+    assert _checkpoint_confs(spark, str(tmp_path)) == local
+    assert _checkpoint_confs(spark, None) == local
+    assert _checkpoint_confs(spark, "s3a://b/c") == {}
+    key = "spark.sql.streaming.checkpointLocation"
+    spark.conf.set(key, "hdfs://nn:8020/ckpts")
+    try:
+        assert _checkpoint_confs(spark, None) == {}
+        assert _checkpoint_confs(spark, str(tmp_path)) == local
+    finally:
+        spark.conf.unset(key)
+
+
+# --- one place starts a stream (an AST guard in the style of
+# tests/test_materialize.py) ---------------------------------------------
+_PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "smartpipeline_spark")
+_STARTER = os.path.join("streaming", "__init__.py")
+
+
+def stream_starts(source: str, filename: str) -> list:
+    """``file:line`` of every ``.start(...)`` method call, except those in
+    the body of ``_start`` in the streaming module. The package starts no
+    thread and reads no match offset through ``.start()``, so every such
+    call is a stream writer's."""
+    import ast
+
+    allowed = set()
+    tree = ast.parse(source, filename)
+    if filename == _STARTER:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "_start":
+                allowed |= {id(n) for n in ast.walk(node)}
+    lines = {
+        node.lineno
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "start"
+        and id(node) not in allowed
+    }
+    return [f"{filename}:{n}" for n in sorted(lines)]
+
+
+def test_guard_flags_planted_stream_starts():
+    src = (
+        "q = df.writeStream.format('noop').start()\n"
+        "q = _with_trigger(writer, ckpt, True, None).start(path)\n"
+        "def start_query(writer):\n"
+        "    return writer.start()\n"
+        "def _start(writer, confs):\n"
+        "    return writer.start()\n"
+        "doc = 'writer.start()'\n"
+        "started = start(writer)\n"
+    )
+    planted = ["m.py:1", "m.py:2", "m.py:4", "m.py:6"]
+    assert stream_starts(src, "m.py") == planted
+    assert stream_starts(src, _STARTER) == [p.replace("m.py", _STARTER) for p in planted[:3]]
+
+
+def test_only_streaming_start_starts_a_stream():
+    hits = []
+    for root, _dirs, files in os.walk(_PKG):
+        for f in sorted(files):
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, _PKG)
+            if f.endswith(".py") and not rel.startswith("vendor"):
+                with open(path) as fh:
+                    hits += stream_starts(fh.read(), rel)
+    assert not hits, f"start a stream through streaming.start_query or start_foreach_batch: {hits}"

@@ -7,6 +7,7 @@ import importlib
 import sys
 import zipfile
 import zipimport
+from types import SimpleNamespace
 
 import pandas as pd
 import pytest
@@ -323,3 +324,82 @@ def test_chain_end_drops_archive_internal_importers(zip_package, ending):
     _write_archive(archive, ["pkg/sub/mod.py", "pkg/sub/new.py"])
     importlib.invalidate_caches()
     assert importlib.import_module("pkg.sub.new").VALUE == 1
+
+
+class _StatefulCapture:
+    """Stands in for a streaming DataFrame: keeps the group function or
+    the stateful processor a Python stateful operator is built with."""
+
+    def __init__(self):
+        self.sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(environment={}))
+
+    def groupBy(self, _key):
+        return self
+
+    def applyInPandasWithState(self, fn, **_kw):
+        self.fn = fn
+        return self
+
+    def transformWithStateInPandas(self, statefulProcessor, **_kw):
+        self.processor = statefulProcessor
+        return self
+
+
+class _ValueState:
+    def __init__(self):
+        self.value = None
+
+    def exists(self):
+        return self.value is not None
+
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _group_function(operator):
+    """``(key_tuple, pdf_iter) -> output frames`` of the named Python
+    stateful operator of ``streaming``, on fresh state."""
+    from smartpipeline_spark import streaming
+
+    df = _StatefulCapture()
+    if operator == "applyInPandasWithState":
+        streaming.stateful_user_counts(df)
+        state = SimpleNamespace(exists=False, update=lambda value: None)
+        return lambda key, pdfs: df.fn(key, pdfs, state)
+    streaming.stateful_user_counts_tws(df)
+    df.processor.init(SimpleNamespace(getValueState=lambda _name, _schema: _ValueState()))
+    return lambda key, pdfs: df.processor.handleInputRows(key, pdfs, None)
+
+
+@pytest.mark.parametrize("ending", ["exhausted", "closed", "raising"])
+@pytest.mark.parametrize("operator", ["applyInPandasWithState", "transformWithState"])
+def test_stateful_group_end_drops_archive_internal_importers(zip_package, operator, ending):
+    """The state tasks of the Python stateful operators run no stage
+    wrapper; their group function drops the archive-internal
+    zipimporters itself when it ends — exhausted, closed early or
+    raising — so a reused worker's next task does not re-read them."""
+    archive = zip_package
+    assert sorted(_archive_importers(archive).values()) == ["", "pkg/", "pkg/sub/"]
+    fn = _group_function(operator)
+
+    def frames():
+        yield pd.DataFrame({"user_id": [7, 7]})
+        if ending == "raising":
+            raise ValueError("input lost")
+        yield pd.DataFrame({"user_id": [7]})
+
+    out = fn((7,), frames())
+    if ending == "exhausted":
+        (pdf,) = list(out)
+        assert pdf.to_dict("records") == [{"user_id": 7, "n_events": 3}]
+    elif ending == "closed":
+        assert len(next(out)) == 1
+        out.close()  # the consumer stops before the function returns
+    else:
+        with pytest.raises(ValueError, match="input lost"):
+            next(out)
+
+    assert _archive_importers(archive) == {archive: ""}
