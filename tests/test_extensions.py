@@ -1317,7 +1317,6 @@ def test_dedup_against_planted_duplicates(spark, tmp_path):
     assert out2 == {10, 11, 12}
 
 
-
 def test_dedup_incremental_builds_its_index_once(spark, tmp_path, monkeypatch):
     """ext_dedup_incremental serves its corpus index through the
     build-once fixture cache: the first call builds it under the cache
@@ -1351,6 +1350,7 @@ def test_dedup_incremental_builds_its_index_once(spark, tmp_path, monkeypatch):
     second = sorted(tuple(r) for r in dedup.ext_dedup_incremental(spark, SF_SMOKE).collect())
     assert len(builds) == 1
     assert first == second and first
+
 
 # ------------------------------------------------ exact substring dedup
 
